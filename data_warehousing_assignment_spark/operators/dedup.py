@@ -305,101 +305,99 @@ def ngram_jaccard_pairs(
 
 # -- SimHash ----------------------------------------------------------------
 
-SIMHASH_BITS = 48  # keep the fingerprint positive in an int64 across engines
+SIMHASH_BITS = 48  # one word, so the fingerprint stays a positive int64
 
 
 def _hex_nibble(h: Column, pos: int) -> Column:
     """Value 0-15 of hex digit `pos` (0-based) of md5 hex string `h` —
     via strpos on the hex alphabet (portable to DuckDB, no conv()).
 
-    The ORACLE-side formulation (and the engine-side reference the
-    packed-chunk fast path below is tested against): per bit it costs a
+    The ORACLE-side formulation, kept engine-side as the reference the
+    packed-chunk parse below is tested against: per bit it costs a
     substring + strpos per ROW, which at 48-128 bits per token
     dominated the simhash map side (r14 optimization round)."""
     ch = F.substring(h, pos + 1, 1)
     return F.instr(F.lit("0123456789abcdef"), ch) - F.lit(1)
 
 
-def _packed_hex_chunks(h: Column, n_nibbles: int) -> list[Column]:
-    """The first ``n_nibbles`` hex digits of ``h`` parsed into int64
-    chunks of ≤12 nibbles (48 bits — conv() of 12 hex chars fits int64
-    exactly). Chunk c covers digit positions [12c, 12c+L); digit p of
-    chunk c sits at bit 4·(L−1−(p−12c)) (most-significant-first), so
-
-        nibble(p) bit b  ==  (chunk[p div 12] >> shift) & 1
-
-    with ``shift = _packed_bit_shift(p, b, n_nibbles)``. Value-identical
-    to :func:`_hex_nibble` per bit (pinned in tests/test_dedup.py), at
-    one string parse per 12 nibbles instead of one per BIT."""
+def _packed_hex_chunks(h: str, n_nibbles: int) -> list[str]:
+    """SQL select items parsing the first ``n_nibbles`` hex digits of
+    column ``h`` into int64 chunks ``_p{c}`` of ≤12 nibbles (48 bits —
+    conv() of 12 hex chars fits int64 exactly): one string parse per 12
+    nibbles instead of one per BIT."""
     return [
-        F.conv(F.substring(h, c0 + 1, min(12, n_nibbles - c0)), 16, 10)
-        .cast("bigint")
-        .alias(f"_p{c0 // 12}")
+        f"CAST(conv(substring({h}, {c0 + 1}, {min(12, n_nibbles - c0)}), 16, 10)"
+        f" AS BIGINT) AS _p{c0 // 12}"
         for c0 in range(0, n_nibbles, 12)
     ]
 
 
-def _packed_bit_shift(pos: int, bit: int, n_nibbles: int) -> int:
-    """Bit offset of ``_hex_nibble(h, pos) & (1 << bit)`` inside its
-    :func:`_packed_hex_chunks` chunk."""
+def _md5_bit(j: int, n_nibbles: int) -> str:
+    """SQL for md5 bit ``j`` (bit j%4 of nibble j//4) as 0/1, read from
+    its :func:`_packed_hex_chunks` chunk: digit p of the chunk starting
+    at digit c0 (length L) sits at bit 4·(c0+L−1−p), most significant
+    first. Value-identical to ``_hex_nibble(h, j//4) & (1 << j%4)``
+    (pinned in tests/test_dedup.py)."""
+    pos = j // 4
     c0 = 12 * (pos // 12)
-    chunk_len = min(12, n_nibbles - c0)
-    return 4 * (c0 + chunk_len - 1 - pos) + bit
+    shift = 4 * (c0 + min(12, n_nibbles - c0) - 1 - pos) + j % 4
+    return f"(shiftright(_p{pos // 12}, {shift}) & 1)"
 
 
-def _packed_votes(bits: int) -> list[Column]:
-    """±1 SimHash vote per md5 bit j (nibble j//4, bit j%4), reading the
-    pre-projected ``_p{c}`` chunk columns of :func:`_packed_hex_chunks`
-    — integer shift+mask per bit on the aggregation map side."""
-    n_nib = bits // 4
+def simhash_words(bits: int) -> list[str]:
+    """Word columns of a ``bits``-bit :func:`simhash`: ``simhash`` when
+    the fingerprint fits one int64, else ``simhash_0``, ``simhash_1``, …
+    (64 bits each, lowest bits first)."""
+    n = -(-bits // 64)
+    return ["simhash"] if n == 1 else [f"simhash_{w}" for w in range(n)]
+
+
+def simhash_word_sql(bits: int) -> list[str]:
+    """SQL select items packing the vote columns ``_v0..`` into the
+    :func:`simhash_words`: bit k of word w is set when vote 64w+k is
+    positive, and bit 63 adds −2⁶³ (two's complement — +2⁶³ does not
+    exist in int64). Plain CASE/CAST/+, so the DuckDB oracles share it
+    and xor/bit_count agree across engines."""
     out = []
-    for j in range(bits):
-        pos = j // 4
-        shift = _packed_bit_shift(pos, j % 4, n_nib)
-        out.append(
-            F.when(
-                F.shiftright(F.col(f"_p{pos // 12}"), shift)
-                .bitwiseAND(F.lit(1)) > 0,
-                F.lit(1),
-            ).otherwise(F.lit(-1))
-        )
+    for w, name in enumerate(simhash_words(bits)):
+        terms = [
+            f"CASE WHEN _v{j} > 0 THEN CAST("
+            f"{-(1 << 63) if j % 64 == 63 else 1 << (j % 64)} AS BIGINT) ELSE 0 END"
+            for j in range(64 * w, min(64 * w + 64, bits))
+        ]
+        out.append(" + ".join(terms) + f" AS {name}")
     return out
 
 
 def simhash(
     df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS
 ) -> DataFrame:
-    """SimHash fingerprint: per token, md5 supplies `bits` pseudo-random
-    bits; each bit votes ±1; the sign of the per-document vote sum forms
-    the fingerprint. Near-identical docs differ in few bits (Hamming).
+    """SimHash fingerprint: per token, md5 supplies `bits` (≤ 128)
+    pseudo-random bits; each bit votes ±1; the sign of the per-document
+    vote sum forms the fingerprint, packed into the int64
+    :func:`simhash_words` (one 48-bit word by default, two signed words
+    at 128). Near-identical docs differ in few bits (Hamming).
 
     Plan shape: one explode(tokens) + one wide groupBy aggregation (bits
     SUM columns, map-side combined) — a single shuffle keyed by doc id;
-    then the fingerprint assembles row-locally. At 100 TB this is the
-    same cost as any per-doc token aggregate."""
+    then the words assemble row-locally. At 100 TB this is the same cost
+    as any per-doc token aggregate. The md5 digits are parsed ONCE per
+    token into int64 chunks (a dedicated Project so each conv() runs
+    once per row); each vote is then a shift+mask. Every per-bit
+    expression is a generated SQL string, so building the plan costs a
+    few py4j calls per bit instead of a few dozen."""
+    n_nib = bits // 4
     tok = scale_out(df.select(id_col, text_col)).select(
         F.col(id_col), F.explode(tokens(text_col)).alias("_tok")
     ).withColumn("_h", F.md5("_tok"))
-    # Parse the needed md5 digits ONCE per token into int64 chunks (a
-    # dedicated Project so each conv() runs once per row), then each
-    # per-bit vote is a shift+mask — value-identical to the original
-    # per-bit _hex_nibble extraction (pinned in tests/test_dedup.py)
-    # at 1/`bits` the map-side string work (guide §1.2 per-task work).
-    packed = tok.select(
-        F.col(id_col), *_packed_hex_chunks(F.col("_h"), bits // 4)
-    )
+    packed = tok.selectExpr(f"`{id_col}`", *_packed_hex_chunks("_h", n_nib))
     votes = [
-        F.sum(v).alias(f"_v{j}")
-        for j, v in enumerate(_packed_votes(bits))
+        F.expr(f"SUM(CASE WHEN {_md5_bit(j, n_nib)} > 0 THEN 1 ELSE -1 END) AS _v{j}")
+        for j in range(bits)
     ]
-    agg = packed.groupBy(id_col).agg(*votes)
-    fp = None
-    for j in range(bits):
-        bit = F.when(F.col(f"_v{j}") > 0, F.lit(1).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        ) * F.lit(1 << j).cast("bigint")
-        fp = bit if fp is None else fp + bit
-    return agg.select(F.col(id_col), fp.alias("simhash"))
+    return packed.groupBy(id_col).agg(*votes).selectExpr(
+        f"`{id_col}`", *simhash_word_sql(bits)
+    )
 
 
 def near_dup_clusters(
@@ -464,37 +462,41 @@ def near_dup_clusters(
     ).select(id_col, F.col("component").alias("cluster_id"))
 
 
-def simhash_neardup_pairs(
-    df: DataFrame,
+def banded_hamming_pairs(
+    fp: DataFrame,
     id_col: str,
-    text_col: str,
-    bits: int = SIMHASH_BITS,
+    words: list[str],
+    bits: int,
     bands: int = 4,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """All document pairs whose SimHash fingerprints differ in at most
-    ``max_hamming`` bits — EXACTLY, but without an all-pairs join.
+    """All pairs of ``fp`` rows whose ``bits``-bit fingerprints, packed
+    into the int64 ``words`` columns (``bits / len(words)`` bits each),
+    differ in at most ``max_hamming`` bits — EXACTLY, but without an
+    all-pairs join. The one banded-Hamming self-join of the package:
+    SimHash at 48 and 128 bits (:func:`simhash_neardup_pairs`) and the
+    64-bit aHash media fingerprint.
 
-    Banding argument (pigeonhole): split the ``bits``-bit fingerprint
-    into ``bands`` contiguous bands. Two fingerprints within Hamming
-    distance d < bands must agree on at least one whole band (d flipped
-    bits can touch at most d bands), so a hash self-join on
+    Banding argument (pigeonhole): split the fingerprint into ``bands``
+    contiguous bands, none straddling a word. Two fingerprints within
+    Hamming distance d < bands must agree on at least one whole band (d
+    flipped bits can touch at most d bands), so a hash self-join on
     (band_index, band_value) has recall 1.0 for d <= bands-1; the
-    residual ``bit_count(xor) <= d`` filter restores precision. Cost is
-    O(Σ band-bucket²) — duplicate-density-bounded like MinHash-LSH,
-    never O(n²) over the corpus.
+    residual ``Σ bit_count(x.w ^ y.w) <= d`` filter restores precision.
+    Cost is O(Σ band-bucket²) — duplicate-density-bounded like
+    MinHash-LSH, never O(n²) over the corpus. Band width sets the
+    bucket count: 12-bit bands saturate at 4,096 buckets and go
+    O(n²/4096) (measured r11 at the 100× synthesis: 500k docs → ~250M
+    candidates, 58 GB of shuffle spill), 32-bit bands keep collisions
+    content-driven at any realistic corpus size.
 
     First-agreeing-band dedup (r14, guide §2.4 remove shuffles
     outright): the band self-join finds a qualifying pair once per
-    AGREEING band; the old shape collapsed those duplicates with a
-    DISTINCT exchange over the full candidate volume and then re-joined
-    the fingerprint table TWICE to score. The keyed frame now carries
-    the fingerprint (8-16 extra bytes over a doc×bands-row frame), so
-    each candidate row can (a) keep itself only when its band is the
-    pair's FIRST agreeing band — exactly one surviving row per
-    qualifying pair, the same set DISTINCT produced — and (b) score the
-    Hamming distance inline. Zero exchanges between the band join and
-    the output.
+    AGREEING band. The keyed frame carries the words, so each candidate
+    row (a) keeps itself only when its band is the pair's FIRST
+    agreeing band — exactly one surviving row per qualifying pair, the
+    set a DISTINCT would produce — and (b) scores the Hamming distance
+    inline. Zero exchanges between the band join and the output.
 
     Returns ``(doc_a, doc_b, hamming)`` with doc_a < doc_b."""
     if max_hamming >= bands:
@@ -504,165 +506,60 @@ def simhash_neardup_pairs(
         )
     if bits % bands:
         raise ValueError(f"bands must divide bits ({bits} % {bands})")
-    width = bits // bands
-    fp = pin(simhash(df, id_col, text_col, bits))
+    width, word_bits = bits // bands, bits // len(words)
+    if word_bits % width:
+        raise ValueError(f"bands must not straddle a word ({word_bits} % {width})")
 
-    def _bv(side: str, b: int) -> Column:
-        return F.shiftright(F.col(f"{side}.simhash"), b * width).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
+    def band(side: str, b: int) -> str:
+        w, shift = divmod(b * width, word_bits)
+        v = f"shiftright({side}`{words[w]}`, {shift})"
+        return v if width == 64 else f"{v} & {(1 << width) - 1}"
 
-    band_vals = F.array(*[
-        F.shiftright(F.col("simhash"), b * width)
-        .bitwiseAND(F.lit((1 << width) - 1))
-        for b in range(bands)
-    ])
-    keyed = fp.select(
-        F.col(id_col), F.col("simhash"),
-        F.posexplode(band_vals).alias("_band", "_val"),
+    keyed = fp.selectExpr(
+        f"`{id_col}`", *[f"`{w}`" for w in words],
+        f"posexplode(array({', '.join(band('', b) for b in range(bands))}))"
+        " AS (_band, _val)",
     )
-    first_band = F.when(_bv("x", 0) == _bv("y", 0), F.lit(0))
-    for b in range(1, bands - 1):
-        first_band = first_band.when(_bv("x", b) == _bv("y", b), F.lit(b))
-    first_band = first_band.otherwise(F.lit(bands - 1))
-    ham = F.bit_count(
-        F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))
-    ).cast("bigint")
+    first_band = " ".join(
+        f"WHEN {band('x.', b)} = {band('y.', b)} THEN {b}" for b in range(bands - 1)
+    )
+    ham = " + ".join(f"bit_count(x.`{w}` ^ y.`{w}`)" for w in words)
     return (
         keyed.alias("x")
         .join(
             keyed.alias("y"),
-            (F.col("x._band") == F.col("y._band"))
-            & (F.col("x._val") == F.col("y._val"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
+            F.expr(
+                f"x._band = y._band AND x._val = y._val"
+                f" AND x.`{id_col}` < y.`{id_col}`"
+            ),
         )
-        .filter(F.col("x._band") == first_band)
-        .select(
-            F.col(f"x.{id_col}").alias("doc_a"),
-            F.col(f"y.{id_col}").alias("doc_b"),
-            ham.alias("hamming"),
+        .filter(f"x._band = CASE {first_band} ELSE {bands - 1} END")
+        .selectExpr(
+            f"x.`{id_col}` AS doc_a",
+            f"y.`{id_col}` AS doc_b",
+            f"CAST({ham} AS BIGINT) AS hamming",
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(f"hamming <= {max_hamming}")
     )
 
 
-def _sign_bit_votes(agg, lo_j: int) -> Column:
-    """Assemble one signed-int64 half of a wide SimHash from 64 vote
-    columns ``_v{lo_j}.._v{lo_j+63}``: bits 0-62 add their power of two;
-    bit 63 adds −2⁶³ (two's complement — +2⁶³ doesn't exist in int64).
-    Both engines share the representation, so xor/bit_count agree."""
-    half = None
-    for k in range(63):
-        bit = F.when(
-            F.col(f"_v{lo_j + k}") > 0, F.lit(1 << k).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-        half = bit if half is None else half + bit
-    sign = F.when(
-        F.col(f"_v{lo_j + 63}") > 0,
-        F.lit(-9223372036854775808).cast("bigint"),
-    ).otherwise(F.lit(0).cast("bigint"))
-    return half + sign
-
-
-def simhash128(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """128-bit SimHash as two signed int64 halves (``lo``, ``hi``) —
-    md5 supplies all 32 nibbles, so this is :func:`simhash` with the
-    full hash instead of its first 48 bits. Same plan shape: one
-    explode + one wide (128-column) map-side-combined aggregation,
-    a single shuffle keyed by doc id."""
-    tok = scale_out(df.select(id_col, text_col)).select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("_tok")
-    ).withColumn("_h", F.md5("_tok"))
-    # chunked md5 parse + shift/mask votes — see simhash() (the 128-bit
-    # variant reads all 32 nibbles as three ≤12-digit chunks).
-    packed = tok.select(
-        F.col(id_col), *_packed_hex_chunks(F.col("_h"), 32)
-    )
-    votes = [
-        F.sum(v).alias(f"_v{j}")
-        for j, v in enumerate(_packed_votes(128))
-    ]
-    agg = packed.groupBy(id_col).agg(*votes)
-    return agg.select(
-        F.col(id_col),
-        _sign_bit_votes(agg, 0).alias("lo"),
-        _sign_bit_votes(agg, 64).alias("hi"),
-    )
-
-
-def simhash_neardup_pairs_wide(
+def simhash_neardup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
+    bits: int = SIMHASH_BITS,
+    bands: int = 4,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """SCALE twin of :func:`simhash_neardup_pairs`: same banded
-    pigeonhole (4 bands, d ≤ 3 flips leave ≥ 1 band clean) over a
-    128-bit fingerprint, so each band key is 32 bits — 2³² buckets
-    instead of the 48-bit version's 2¹². Band-join cost is
-    Σ_bucket |bucket|² with buckets ≈ min(n, 2³²): the 12-bit bands
-    saturate at a few thousand buckets and go O(n²/4096) — measured
-    r11 at the 100× synthesis (500k docs → ~250M candidates, 58 GB of
-    shuffle spill, disk-full); 32-bit bands keep collisions
-    content-driven (true near-dups plus 2⁻³²-rate noise) at any
-    realistic corpus size. Hamming is over the full 128 bits
-    (bit_count of both xor'd halves), so this is a DIFFERENT (finer)
-    fingerprint than the 48-bit op — the 48-bit op stays the pinned
-    small-scale anchor; this is the 100 TB operating point.
-
-    First-agreeing-band dedup + inline verify, exactly like
-    :func:`simhash_neardup_pairs` (r14): the keyed frame carries both
-    fingerprint halves, each qualifying pair survives only at its FIRST
-    agreeing band (≡ the former DISTINCT of all agreeing bands), and
-    the 128-bit Hamming distance scores inline — no candidate DISTINCT
-    exchange, no fingerprint re-joins. At the 100× synthesis the former
-    shape pushed ~4× the distinct pair volume through an exchange and
-    then shuffled the pair frame twice more for scoring.
-
-    Returns ``(doc_a, doc_b, hamming)`` with doc_a < doc_b."""
-    fp = pin(simhash128(df, id_col, text_col))
-    band_vals = F.array(
-        F.col("lo").bitwiseAND(F.lit(4294967295).cast("bigint")),
-        F.shiftright(F.col("lo"), 32)
-        .bitwiseAND(F.lit(4294967295).cast("bigint")),
-        F.col("hi").bitwiseAND(F.lit(4294967295).cast("bigint")),
-        F.shiftright(F.col("hi"), 32)
-        .bitwiseAND(F.lit(4294967295).cast("bigint")),
-    )
-    keyed = fp.select(
-        F.col(id_col), F.col("lo"), F.col("hi"),
-        F.posexplode(band_vals).alias("_band", "_val"),
-    )
-
-    def _bv(side: str, b: int) -> Column:
-        src = F.col(f"{side}.lo") if b < 2 else F.col(f"{side}.hi")
-        return F.shiftright(src, 32 * (b % 2)).bitwiseAND(
-            F.lit(4294967295).cast("bigint")
-        )
-
-    first_band = F.when(_bv("x", 0) == _bv("y", 0), F.lit(0))
-    for b in (1, 2):
-        first_band = first_band.when(_bv("x", b) == _bv("y", b), F.lit(b))
-    first_band = first_band.otherwise(F.lit(3))
-    ham = (
-        F.bit_count(F.col("x.lo").bitwiseXOR(F.col("y.lo")))
-        + F.bit_count(F.col("x.hi").bitwiseXOR(F.col("y.hi")))
-    ).cast("bigint")
-    return (
-        keyed.alias("x")
-        .join(
-            keyed.alias("y"),
-            (F.col("x._band") == F.col("y._band"))
-            & (F.col("x._val") == F.col("y._val"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .filter(F.col("x._band") == first_band)
-        .select(
-            F.col(f"x.{id_col}").alias("doc_a"),
-            F.col(f"y.{id_col}").alias("doc_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    """SimHash near-duplicate pairs: :func:`banded_hamming_pairs` over
+    the pinned :func:`simhash` words (both join sides read the
+    fingerprint). At 48 bits the 4 bands are 12 bits wide — the pinned
+    small-scale anchor; at 128 bits they are 32 bits wide, the 100 TB
+    operating point, and Hamming runs over the full 128 bits, a finer
+    (DIFFERENT) statistic. Returns ``(doc_a, doc_b, hamming)``."""
+    fp = pin(simhash(df, id_col, text_col, bits))
+    return banded_hamming_pairs(
+        fp, id_col, simhash_words(bits), bits, bands, max_hamming
     )
 
 

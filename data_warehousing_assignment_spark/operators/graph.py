@@ -105,7 +105,9 @@ def connected_components(
     # the seed comparison could never fire and its one extra driver
     # round-trip + full labels pass per CC run bought nothing. A
     # self-loop-only graph now converges in 2 rounds instead of 1 —
-    # same result, one cheap extra round on a degenerate input.
+    # same result, one cheap extra round on a degenerate input. A graph
+    # with no edges has an empty label set whose Σ is NULL both rounds,
+    # so it stops after round 2 as well.
     prev_sum = None
     for i in range(max_iter):
         # One exchange per round (r14; was join → groupBy → left-join =
@@ -156,7 +158,7 @@ def connected_components(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
         labels = updated
-        if prev_sum is not None and cur_sum == prev_sum:
+        if i > 0 and cur_sum == prev_sum:
             break
         prev_sum = cur_sum
 

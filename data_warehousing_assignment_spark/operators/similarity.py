@@ -117,31 +117,25 @@ def _plane_coeffs(plane: int, dim: int) -> list[int]:
     ]
 
 
-def hyperplane_signs(
-    vec_col: Column | str, n_planes: int = 8, dim: int = 64
-) -> Column:
-    """Random-hyperplane LSH bucket id: sign pattern of <v, h_p> for
-    n_planes fixed pseudo-random hyperplanes (see _plane_coeffs).
+def hyperplane_signs(vec_col: str, n_planes: int = 8, dim: int = 64) -> str:
+    """SQL for the random-hyperplane LSH bucket id: sign pattern of
+    <v, h_p> over the quantized vector for n_planes fixed pseudo-random
+    hyperplanes (see _plane_coeffs), an int in [0, 2^n_planes).
 
     Row-local; per row the cost is n_planes exact int64 dot products
     against literal coefficient arrays (zero hashing at execution time).
-    The bucket id is an int in [0, 2^n_planes)."""
-    v = quantize(vec_col)
-    bucket = None
-    for p in range(n_planes):
-        coeffs = F.array(
-            *[F.lit(c).cast("bigint") for c in _plane_coeffs(p, dim)]
-        )
-        # transform-with-index (not zip_with: it null-pads the shorter
-        # side) — iterates the vector's own length; requires dim ≥ len(v)
-        proj = F.aggregate(
-            F.transform(v, lambda x, i: x * F.element_at(coeffs, i + F.lit(1))),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(proj > 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(1 << p)
-        bucket = bit if bucket is None else bucket + bit
-    return bucket
+    One SQL string — each builder parses it once with ``F.expr`` and
+    uses the Column on both join sides, instead of rebuilding n_planes ×
+    dim literal Columns per side."""
+    v = f"transform(`{vec_col}`, x -> floor(CAST(x AS DOUBLE) * {QUANT}D))"
+    # transform-with-index (not zip_with: it null-pads the shorter
+    # side) — iterates the vector's own length; requires dim ≥ len(v)
+    return " + ".join(
+        f"CASE WHEN aggregate(transform({v}, (x, i) -> x * element_at(array("
+        f"{', '.join(f'{c}L' for c in _plane_coeffs(p, dim))}), i + 1)),"
+        f" 0L, (acc, x) -> acc + x) > 0 THEN 1 ELSE 0 END * {1 << p}"
+        for p in range(n_planes)
+    )
 
 
 def lsh_cosine_topk(
@@ -162,19 +156,16 @@ def lsh_cosine_topk(
     bucket id, so candidate work is O(probed bucket sizes). Recall is
     tunable via n_planes (fewer planes → bigger buckets → higher
     recall)."""
+    bucket = F.expr(hyperplane_signs(vec_col, n_planes)).alias("bucket")
     qbase = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantize(vec_col).alias("qv"),
-        hyperplane_signs(vec_col, n_planes).alias("bucket"),
+        F.col(id_col).alias("query_id"), quantize(vec_col).alias("qv"), bucket
     ).withColumn("_nq", F.sqrt(int_dot(F.col("qv"), F.col("qv")).cast("double")))
     if probe_all:
         # every bucket probed ⇒ every corpus row scored exactly once
         # (each row lives in exactly one sign bucket) ⇒ provably equal to
         # brute_force_cosine_topk — the exactness anchor for the bucket
         # machinery, used by op-ext-ann-lsh-fullprobe's oracle check.
-        probes = F.array(
-            *[F.lit(b).cast("int") for b in range(1 << n_planes)]
-        )
+        probes = F.expr(f"array({', '.join(map(str, range(1 << n_planes)))})")
         q = qbase.select(
             "query_id", "qv", "_nq", F.explode(probes).alias("bucket")
         )
@@ -191,9 +182,7 @@ def lsh_cosine_topk(
     # per-row norms hoisted out of the pair join (see
     # brute_force_cosine_topk) — score expression bit-identical.
     c = scale_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        quantize(vec_col).alias("cv"),
-        hyperplane_signs(vec_col, n_planes).alias("bucket"),
+        F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv"), bucket
     ).withColumn("_nc", F.sqrt(int_dot(F.col("cv"), F.col("cv")).cast("double")))
     dot = int_dot(F.col("qv"), F.col("cv")).cast("double")
     scored = (
@@ -256,17 +245,14 @@ def embedding_near_dup_pairs(
     score only within buckets, keep pairs above threshold. Same
     O(Σ bucket²) guarantee as minhash-LSH — never all-pairs."""
     corpus = scale_out(corpus)
+    bucket = F.expr(hyperplane_signs(vec_col, n_planes)).alias("bucket")
     # per-row norms hoisted out of the bucket pair join (see
     # brute_force_cosine_topk) — cosine expression bit-identical.
     c = corpus.select(
-        F.col(id_col).alias("doc_a"),
-        quantize(vec_col).alias("va"),
-        hyperplane_signs(vec_col, n_planes).alias("bucket"),
+        F.col(id_col).alias("doc_a"), quantize(vec_col).alias("va"), bucket
     ).withColumn("_na", F.sqrt(int_dot(F.col("va"), F.col("va")).cast("double")))
     c2 = corpus.select(
-        F.col(id_col).alias("doc_b"),
-        quantize(vec_col).alias("vb"),
-        hyperplane_signs(vec_col, n_planes).alias("bucket"),
+        F.col(id_col).alias("doc_b"), quantize(vec_col).alias("vb"), bucket
     ).withColumn("_nb", F.sqrt(int_dot(F.col("vb"), F.col("vb")).cast("double")))
     dot = int_dot(F.col("va"), F.col("vb")).cast("double")
     return (

@@ -108,7 +108,11 @@ def month_starts_in_intervals(
     starts for 1-to-4-digit years (the spine contract).
 
     NULL starts produce NULL sequences and explode to zero rows —
-    exactly the join formulation's behavior (NULL never joins)."""
+    exactly the join formulation's behavior (NULL never joins). An input
+    that already has a ``_m`` column is rejected: the output would carry
+    two ambiguous ``_m`` columns."""
+    if "_m" in intervals.columns:
+        raise ValueError("intervals already has a _m column")
     s = F.col(start_col)
     d1 = F.date_sub(F.col(end_col), 1)
     first_m = (

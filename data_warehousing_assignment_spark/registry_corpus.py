@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.operators import dedup as dd
 from data_warehousing_assignment_spark.operators import similarity as sim
 from data_warehousing_assignment_spark.operators.ivf import build_ivf_index
 from data_warehousing_assignment_spark.operators.text import (
@@ -760,8 +761,8 @@ def op_ext_mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate MEDIA detection: payload pairs whose perceptual
     hashes differ in ≤3 of 64 bits — the image-dedup pass of a
     multimodal curation pipeline (the visual twin of the text ops:
-    simhash for tokens, THIS for pixels). Engine side is the
-    pigeonhole-banded join (4×16-bit bands; Hamming ≤3 < 4 bands
+    simhash for tokens, THIS for pixels). Engine side is
+    dedup.banded_hamming_pairs (4×16-bit bands; Hamming ≤3 < 4 bands
     guarantees one clean band — op-ext-simhash-neardup's exactness
     argument), so candidates are O(Σ band-bucket²), never all-pairs;
     the ORACLE is the naive all-pairs xor+bit_count join — the banded
@@ -770,59 +771,9 @@ def op_ext_mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehousing_assignment_spark.operators import multimodal as mm
 
     docs = mm.with_media_columns(t(spark, sf_dir, "documents"))
-    h = mm.average_hash(docs)
-    bands = h.select(
-        "doc_id",
-        "h1",
-        "h2",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band"),
-                    (F.col("h1") % 65536).alias("val"),
-                ),
-                F.struct(
-                    F.lit(1).alias("band"),
-                    (F.col("h1") / 65536).cast("bigint").alias("val"),
-                ),
-                F.struct(
-                    F.lit(2).alias("band"),
-                    (F.col("h2") % 65536).alias("val"),
-                ),
-                F.struct(
-                    F.lit(3).alias("band"),
-                    (F.col("h2") / 65536).cast("bigint").alias("val"),
-                ),
-            )
-        ).alias("b"),
-    ).select("doc_id", "h1", "h2", F.col("b.band").alias("band"),
-             F.col("b.val").alias("val"))
-    a = bands.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("h1").alias("a1"),
-        F.col("h2").alias("a2"),
-        "band",
-        "val",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("h1").alias("b1"),
-        F.col("h2").alias("b2"),
-        "band",
-        "val",
-    )
-    cand = (
-        a.join(b, ["band", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "a1", "a2", "b1", "b2")
-        .distinct()
-    )
-    ham = F.expr("bit_count(a1 ^ b1) + bit_count(a2 ^ b2)")
-    return (
-        cand.withColumn("hamming", ham.cast("bigint"))
-        .filter(F.col("hamming") <= 3)
-        .select("id_a", "id_b", "hamming")
-    )
+    return dd.banded_hamming_pairs(
+        mm.average_hash(docs), "doc_id", ["h1", "h2"], 64
+    ).selectExpr("doc_a AS id_a", "doc_b AS id_b", "hamming")
 
 
 # --------------------------------------------------------------------------

@@ -219,14 +219,14 @@ def op_ext_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_oracle(bits: int = dd.SIMHASH_BITS) -> str:
+    """Oracle twin of operators/dedup.simhash: one vote sum per md5 bit,
+    read per nibble through strpos (independent of the engine's packed
+    chunk parse), packed into the same int64 words
+    (dedup.simhash_word_sql)."""
     votes = ", ".join(
         "SUM(CASE WHEN ((strpos('0123456789abcdef', "
         f"substr(md5(tok), {j // 4 + 1}, 1)) - 1) & {1 << (j % 4)}) > 0 "
-        f"THEN 1 ELSE -1 END) AS v{j}"
-        for j in range(bits)
-    )
-    fp = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
+        f"THEN 1 ELSE -1 END) AS _v{j}"
         for j in range(bits)
     )
     return f"""
@@ -236,7 +236,7 @@ def _simhash_oracle(bits: int = dd.SIMHASH_BITS) -> str:
     ), votes AS (
       SELECT doc_id, {votes} FROM toks GROUP BY doc_id
     )
-    SELECT doc_id, {fp} AS simhash FROM votes
+    SELECT doc_id, {", ".join(dd.simhash_word_sql(bits))} FROM votes
     """
 
 
@@ -2496,13 +2496,10 @@ def op_ext_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round 5: simhash near-dup pairs, corpus vocab, BM25, hourly gap-fill
 # --------------------------------------------------------------------------
 
-_SIMHASH_FP_CTE = _simhash_oracle()
-
-
 @query(
     "op-ext-simhash-neardup",
     oracle=f"""
-    WITH fp AS ({_SIMHASH_FP_CTE}),
+    WITH fp AS ({_simhash_oracle()}),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
@@ -2527,56 +2524,22 @@ def op_ext_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash128_oracle() -> str:
-    """All-pairs oracle twin of operators/dedup.simhash128: 128 vote
-    sums from every md5 nibble, assembled into two signed-int64 halves
-    (bit 63 of each half adds −2⁶³ — two's complement, shared bit
-    pattern with Spark so xor/bit_count agree)."""
-    votes = ", ".join(
-        "SUM(CASE WHEN ((strpos('0123456789abcdef', "
-        f"substr(md5(tok), {j // 4 + 1}, 1)) - 1) & {1 << (j % 4)}) > 0 "
-        f"THEN 1 ELSE -1 END) AS v{j}"
-        for j in range(128)
-    )
-
-    def half(lo_j: int) -> str:
-        parts = [
-            f"(CASE WHEN v{lo_j + k} > 0 THEN CAST({1 << k} AS BIGINT)"
-            " ELSE 0 END)"
-            for k in range(63)
-        ]
-        parts.append(
-            f"(CASE WHEN v{lo_j + 63} > 0"
-            " THEN CAST(-9223372036854775808 AS BIGINT) ELSE 0 END)"
-        )
-        return " + ".join(parts)
-
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, t.tok FROM (
-        SELECT doc_id, {_TOKS} AS tk FROM documents) d, unnest(d.tk) AS t(tok)
-    ), votes AS (
-      SELECT doc_id, {votes} FROM toks GROUP BY doc_id
-    )
-    SELECT doc_id, {half(0)} AS lo, {half(64)} AS hi FROM votes
-    """
-
-
 @query(
     "op-ext-simhash-neardup-scaled",
     oracle=f"""
-    WITH fp AS ({_simhash128_oracle()}),
+    WITH fp AS ({_simhash_oracle(128)}),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST(bit_count(xor(a.lo, b.lo))
-                  + bit_count(xor(a.hi, b.hi)) AS BIGINT) AS hamming
+             CAST(bit_count(xor(a.simhash_0, b.simhash_0))
+                  + bit_count(xor(a.simhash_1, b.simhash_1)) AS BIGINT)
+               AS hamming
       FROM fp a JOIN fp b ON a.doc_id < b.doc_id)
     SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3
     """,
 )
 def op_ext_simhash_neardup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCALE twin of op-ext-simhash-neardup: 4 bands of 32 bits over a
-    128-bit two-half SimHash (dedup.simhash_neardup_pairs_wide). Same
+    128-bit two-word SimHash (dedup.simhash_neardup_pairs). Same
     pigeonhole exactness (3 flips leave ≥ 1 of 4 bands clean), but
     band keys draw from 2³² values instead of 2¹² — bucket collisions
     stay content-driven (true near-dups + 2⁻³²-rate noise) instead of
@@ -2585,8 +2548,9 @@ def op_ext_simhash_neardup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame
     DIFFERENT statistic than the 48-bit anchor (128-bit Hamming ≤ 3 is
     strictly rarer); the oracle is the literal all-pairs definition at
     sf0.01."""
-    return dd.simhash_neardup_pairs_wide(
-        t(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=3
+    return dd.simhash_neardup_pairs(
+        t(spark, sf_dir, "documents"), "doc_id", "text", bits=128,
+        max_hamming=3,
     )
 
 

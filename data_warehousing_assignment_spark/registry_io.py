@@ -4,9 +4,9 @@ verifiable queries, plus the explicit anti-join entry.
 The reference's IO surface is pandas ``read_excel``/``to_sql`` and dbt
 seeds/materializations; Spark-side the equivalent capability is
 schema-on-read file scans and mode-controlled table writes. Each query
-here performs the real write/read round-trip under
-``/root/repo/.scratch/<op>/`` (idempotent: overwritten or recreated per
-run) and returns the read-back contents, which the DuckDB oracle checks
+here performs the real write/read round-trip under ``.scratch/<op>/``
+at the repository root (idempotent: overwritten or recreated per run)
+and returns the read-back contents, which the DuckDB oracle checks
 against the parquet source of truth — so the *semantics* of
 replace/append/insert-select/incremental are what's verified, not just
 the API call.
@@ -25,7 +25,9 @@ from data_warehousing_assignment_spark.sources.readers import read_csv
 from data_warehousing_assignment_spark.sources.xlsx import read_excel, write_xlsx
 from data_warehousing_assignment_spark.sources.writers import create_view, write_table
 
-_SCRATCH = "/root/repo/.scratch"
+_SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 
 
 def _scratch(op: str) -> str:

@@ -7,6 +7,7 @@ from __future__ import annotations
 import hashlib
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.operators import dedup as dd
@@ -136,10 +137,11 @@ def test_simhash_near_dups_have_small_hamming_distance(spark):
     assert ham(fps[0], fps[1]) < ham(fps[0], fps[2])
 
 def test_packed_hex_chunks_equal_per_nibble_extraction(spark):
-    """The r14 packed-chunk md5-bit fast path must be value-identical to
-    the per-bit _hex_nibble extraction (the oracle-side formulation) for
-    EVERY bit of both fingerprint widths — 48 (12 nibbles, one chunk)
-    and 128 (32 nibbles, two 12-digit chunks + one 8-digit tail)."""
+    """The packed-chunk md5-bit parse (the SQL strings simhash emits)
+    must be value-identical to the per-bit _hex_nibble extraction (the
+    oracle-side formulation) for EVERY bit of both fingerprint widths —
+    48 (12 nibbles, one chunk) and 128 (32 nibbles, two 12-digit chunks
+    + one 8-digit tail)."""
     hashes = spark.createDataFrame(
         [(hashlib.md5(f"tok{i}".encode()).hexdigest(),) for i in range(64)]
         + [("0" * 32,), ("f" * 32,), ("fedcba9876543210" * 2,)],
@@ -147,22 +149,14 @@ def test_packed_hex_chunks_equal_per_nibble_extraction(spark):
     )
     for bits in (48, 128):
         n_nib = bits // 4
-        packed = hashes.select(
-            "h", *dd._packed_hex_chunks(F.col("h"), n_nib)
-        )
+        packed = hashes.selectExpr("h", *dd._packed_hex_chunks("h", n_nib))
         checks = []
         for j in range(bits):
-            pos = j // 4
             old = (
-                dd._hex_nibble(F.col("h"), pos)
+                dd._hex_nibble(F.col("h"), j // 4)
                 .bitwiseAND(F.lit(1 << (j % 4))) > 0
             )
-            new = (
-                F.shiftright(
-                    F.col(f"_p{pos // 12}"),
-                    dd._packed_bit_shift(pos, j % 4, n_nib),
-                ).bitwiseAND(F.lit(1)) > 0
-            )
+            new = F.expr(f"{dd._md5_bit(j, n_nib)} > 0")
             checks.append((old == new).alias(f"b{j}"))
         bad = packed.select(checks).filter(
             ~F.forall(
@@ -234,29 +228,47 @@ def test_simhash_neardup_pairs_equals_all_pairs(spark):
     assert (0, 3, 0) in banded  # exact dup mod case/ws → distance 0
 
 
-def test_simhash_neardup_first_band_emits_each_pair_once(spark):
-    """The r14 first-agreeing-band filter replaces the candidate
-    DISTINCT: a pair agreeing on SEVERAL bands (exact dups agree on
-    all of them) must still come out exactly once, in both widths.
-    Set-equality tests cannot see double emission — this one counts."""
+def _ahash_pairs(docs):
+    from data_warehousing_assignment_spark.operators import multimodal as mm
+
+    fp = mm.average_hash(mm.with_media_columns(docs))
+    return dd.banded_hamming_pairs(fp, "doc_id", ["h1", "h2"], 64)
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        lambda docs: dd.simhash_neardup_pairs(docs, "doc_id", "text"),
+        lambda docs: dd.simhash_neardup_pairs(docs, "doc_id", "text", bits=128),
+        _ahash_pairs,
+    ],
+    ids=["simhash48", "simhash128", "ahash"],
+)
+def test_simhash_neardup_first_band_emits_each_pair_once(spark, pairs):
+    """The first-agreeing-band filter replaces the candidate DISTINCT:
+    a pair agreeing on SEVERAL bands (exact dups agree on all of them)
+    must still come out exactly once, for each fingerprint the banded
+    join serves. Set-equality tests cannot see double emission — this
+    one counts."""
     from tests.conftest import SF_SMALL
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "text"
     )
-    for fn in (dd.simhash_neardup_pairs, dd.simhash_neardup_pairs_wide):
-        rows = fn(docs, "doc_id", "text").select("doc_a", "doc_b").collect()
-        pairs = [(r.doc_a, r.doc_b) for r in rows]
-        assert len(pairs) == len(set(pairs)), fn.__name__
-        assert pairs, fn.__name__  # corpus has near-dups by construction
+    rows = pairs(docs).select("doc_a", "doc_b").collect()
+    got = [(r.doc_a, r.doc_b) for r in rows]
+    assert len(got) == len(set(got))
+    assert got  # corpus has near-dups by construction
 
 
 def test_simhash_neardup_rejects_lossy_banding(spark):
     df = docs_df(spark)
-    import pytest
-
     with pytest.raises(ValueError):
         dd.simhash_neardup_pairs(df, "doc_id", "text", bands=4, max_hamming=4)
+    with pytest.raises(ValueError, match="divide"):
+        dd.simhash_neardup_pairs(df, "doc_id", "text", bands=5, max_hamming=3)
+    with pytest.raises(ValueError, match="straddle"):
+        dd.banded_hamming_pairs(df, "doc_id", ["a", "b"], 64, bands=1, max_hamming=0)
 
 
 def _naive_jaccard_pairs(sets: dict[int, set], threshold: float):
@@ -282,9 +294,6 @@ def _prefix_join_pairs(spark, sets: dict[int, set], threshold: float):
             df, "doc_id", "s", threshold
         ).collect()
     }
-
-
-import pytest
 
 
 @pytest.mark.parametrize(
@@ -473,10 +482,11 @@ def test_simhash128_wide_pairs_match_bruteforce(spark):
     assert want  # 15 pairs on the pinned sf0.001 corpus — never 0=0
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dd.simhash_neardup_pairs_wide(
+        for r in dd.simhash_neardup_pairs(
             spark.read.parquet(f"{SF_SMALL}/documents.parquet"),
             "doc_id",
             "text",
+            bits=128,
             max_hamming=3,
         ).collect()
     }

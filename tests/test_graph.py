@@ -4,20 +4,34 @@ cluster-summary rollup."""
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.operators import graph as gr
 
 
+def _cc_jobs(spark, node_ids, edge_pairs):
+    """(labels, Spark jobs connected_components ran while building) —
+    counted through a job group and statusTracker."""
+    sc = spark.sparkContext
+    group = f"cc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        nodes = spark.createDataFrame([(i,) for i in node_ids], "id bigint")
+        edges = spark.createDataFrame(
+            edge_pairs or [(None, None)], "src bigint, dst bigint"
+        ).filter(F.col("src").isNotNull())
+        out = gr.connected_components(nodes, edges)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return {r.id: r.component for r in out.collect()}, jobs
+
+
 def _cc(spark, node_ids, edge_pairs):
-    nodes = spark.createDataFrame([(i,) for i in node_ids], "id bigint")
-    edges = spark.createDataFrame(
-        edge_pairs or [(None, None)], "src bigint, dst bigint"
-    )
-    if not edge_pairs:
-        edges = edges.filter(F.col("src").isNotNull())
-    out = gr.connected_components(nodes, edges)
-    return {r.id: r.component for r in out.collect()}
+    return _cc_jobs(spark, node_ids, edge_pairs)[0]
 
 
 def test_two_components_and_singleton(spark):
@@ -33,8 +47,13 @@ def test_chain_propagates_beyond_one_hop(spark):
 
 
 def test_no_edges_all_singletons(spark):
-    got = _cc(spark, [7, 8, 9], [])
+    """An empty graph stops after two rounds (its Σ probe is NULL both
+    times), not after all max_iter rounds: it runs no more jobs than a
+    one-edge graph, which converges in exactly two."""
+    got, jobs = _cc_jobs(spark, [7, 8, 9], [])
     assert got == {7: 7, 8: 8, 9: 9}
+    two_rounds = _cc_jobs(spark, [1, 2], [(1, 2)])[1]
+    assert 0 < jobs <= two_rounds
 
 
 def test_edge_direction_irrelevant(spark):

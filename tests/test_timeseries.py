@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.operators import timeseries as tsr
@@ -88,6 +89,16 @@ def test_month_starts_in_intervals_matches_join_formulation(spark):
         (4, D(2024, 1, 1)), (4, D(2024, 2, 1)), (4, D(2024, 3, 1))
     }                                          # spine clamp
     assert all(p[0] not in (6, 7) for p in got)
+
+
+def test_month_starts_in_intervals_rejects_reserved_m_column(spark):
+    intervals = spark.createDataFrame(
+        [(1, D(2024, 1, 1), D(2024, 2, 1))], "_m int, s date, e date"
+    )
+    with pytest.raises(ValueError, match="_m"):
+        tsr.month_starts_in_intervals(
+            intervals, "s", "e", "2024-01-01", "2024-03-01"
+        )
 
 
 def test_cascade_levels_reaggregate_exactly(spark):

@@ -54,8 +54,9 @@ import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_ITERS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "5")))
-SF1_DIR = "/root/repo/.scratch/sf1"
-SF10_DIR = "/root/repo/.scratch/sf10"
+ROOT = os.path.dirname(os.path.abspath(__file__))
+SF1_DIR = os.path.join(ROOT, ".scratch", "sf1")
+SF10_DIR = os.path.join(ROOT, ".scratch", "sf10")
 
 # Headline set: one per workload family, weighted toward the shapes that
 # dominate at 100 TB (star joins, wide aggs, SCD2 merge, incremental fact

@@ -8,107 +8,135 @@ O(n_probe · corpus / n_clusters) per query instead of O(corpus).
 
 Everything is deterministic (no RNG): initial centroids are the
 ``n_clusters`` lowest-id vectors, and Lloyd iterations are pure
-DataFrame computation — assignment is an argmin over a broadcast
-centroid table (min_by), the update step is an element-wise mean via
-posexplode + two hash aggregations. Iteration happens driver-side over
-a lazy plan per round (standard Spark iterative-algorithm shape; at
-scale you checkpoint between rounds to cut lineage).
+DataFrame computation — assignment is a row-local argmin over the
+broadcast centroid array, the update step is the exact integer
+element-wise mean via posexplode + two hash aggregations. Iteration
+happens driver-side over a lazy plan per round (standard Spark
+iterative-algorithm shape; at scale you checkpoint between rounds to
+cut lineage).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.caching import pin
 from data_warehousing_assignment_spark.operators.similarity import (
+    dot_sql,
     int_dot,
+    norm,
     quantize,
 )
 
 
-def _l2sq(a, b):
-    """Exact integer squared-L2 between two quantized vectors."""
-    diff = F.zip_with(a, b, lambda x, y: x - y)
+def _l2sq(a: Column | str, b: Column | str) -> Column:
+    """Exact integer squared-L2 between two quantized vectors — the
+    plain distance the kernel's norm-decomposed argmin is pinned
+    against (tests/test_ivf.py, tests/test_pq.py)."""
     return F.aggregate(
-        F.transform(diff, lambda d: d * d),
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
 
 
-def _assign(corpus: DataFrame, centroids: DataFrame, n_probe: int = 1) -> DataFrame:
-    """(id, vec, cluster) for each corpus row — or the n_probe nearest
-    clusters per row when n_probe > 1 (used on the query side).
+# --------------------------------------------------------------------------
+# The exact-integer vector kernel shared by IVF cells, PQ codebooks and
+# nearest-centroid classification: one broadcast book, one row-local
+# argmin, one integer-mean update — all SQL text.
+# --------------------------------------------------------------------------
 
-    Ordering key: argmin over centroids of ‖a−b‖² = ‖a‖² − 2a·b + ‖b‖²
-    only needs the per-row-RELATIVE part ‖b‖² − 2a·b (‖a‖² is constant
-    within a row's candidate set and both forms are exact int64, so the
-    order AND every tie are identical). ‖b‖² is precomputed once per
-    centroid; per (row × centroid) the cost is one dot product instead
-    of the 3-pass zip/square/sum of a materialized difference vector.
 
-    n_probe == 1 (the corpus-assignment path, every build/extend pass):
-    the argmin is ROW-LOCAL (r14, guide §2.4 remove shuffles outright /
-    §1.2 algorithm first): the k centroids are collapsed into ONE
-    broadcast 1-row array; each corpus row computes one (d, cluster)
-    struct per centroid (``transform``) and takes ``array_min`` — the
-    lexicographic struct min ⇒ exactly the previous
-    MIN(struct(_d, cluster)) ⇒ exactly row_number().orderBy(_d,
-    cluster) rank 1 (pinned in tests/test_ivf.py). The r14-interim
-    MIN(struct) aggregation already collapsed the exchange to n rows,
-    but still materialized n·k joined rows (each copying the
-    64-element qvec) and shuffled the corpus once per pass; this
-    formulation materializes n rows and shuffles NOTHING — every Lloyd
-    round's assignment is a pure map stage.
+def books(
+    frame: DataFrame, id_col: str, cw_col: str, key: str | None = None
+) -> DataFrame:
+    """ONE-row broadcast frame whose ``book`` column holds the centroid
+    (or codeword) table as an array of ``struct(id, cw, nn = ‖cw‖²)`` —
+    k·d int64s, a few KB even at the 100 TB sizing, so every argmin
+    against it is row-local (no n·k joined rows, no exchange of the
+    corpus). ‖cw‖² is computed once per codeword, never per row.
 
-    n_probe > 1 (query-side probing, Q rows): window ranking unchanged.
-    """
-    if n_probe == 1:
-        # (cluster, centroid, ‖b‖²) structs as ONE 1-row broadcast array
-        # — k·d int64s, a few KB even at the 100 TB sizing. (If the
-        # centroid frame were ever empty with a non-empty corpus the
-        # row-local argmin would yield NULL clusters where the join
-        # formulation yielded zero rows — unreachable here: every
-        # caller derives centroids from the same non-empty corpus.)
-        cent_arr = F.broadcast(
-            centroids.select(
-                F.struct(
-                    F.col("cluster"),
-                    F.col("centroid"),
-                    int_dot(F.col("centroid"), F.col("centroid")).alias(
-                        "_nb2"
-                    ),
-                ).alias("_c")
-            ).agg(F.collect_list("_c").alias("_cents"))
+    With ``key`` (PQ's subspace ``m``, dense 0..M−1) ``book`` is the
+    key-sorted array of the per-key arrays: ``element_at(book, m + 1)``
+    is subspace m's codebook."""
+    entry = f"struct({id_col} AS id, {cw_col} AS cw, {dot_sql(cw_col, cw_col)} AS nn)"
+    if key is None:
+        out = frame.agg(F.expr(f"collect_list({entry}) AS book"))
+    else:
+        out = (
+            frame.groupBy(key)
+            .agg(F.expr(f"struct({key} AS k, collect_list({entry}) AS b) AS kb"))
+            .agg(F.expr("transform(array_sort(collect_list(kb)), p -> p.b) AS book"))
         )
-        # One dot per centroid (transform), then array_min over the
-        # (d, cluster) structs = lexicographic min = exactly the old
-        # MIN(struct(_d, cluster)) / row_number rank-1 tie-break.
-        best = F.array_min(
-            F.transform(
-                F.col("_cents"),
-                lambda c: F.struct(
-                    (
-                        c["_nb2"] - 2 * int_dot(F.col("qvec"), c["centroid"])
-                    ).alias("_d"),
-                    c["cluster"].alias("cluster"),
-                ),
+    return F.broadcast(out)
+
+
+def nearest_sql(book: str, v: str) -> str:
+    """SQL for the row-local argmin of quantized vector ``v`` over a
+    ``book`` array: the least ``struct(d, id, nn)`` with
+    d = nn − 2·v·cw. ‖v−cw‖² = ‖v‖² + d and ‖v‖² is constant within a
+    row's candidates, so the order and every tie equal the squared-L2
+    order (all exact int64); the lexicographic struct min breaks ties to
+    the lower id — exactly row_number().orderBy(‖v−cw‖², id) rank 1
+    (pinned in tests/test_ivf.py and tests/test_pq.py). ``nn`` rides
+    behind the unique id, so it never decides; it carries the chosen
+    codeword's norm to callers that need it."""
+    return (
+        f"array_min(transform({book}, e -> struct("
+        f"e.nn - 2 * {dot_sql(v, 'e.cw')} AS d, e.id AS id, e.nn AS nn)))"
+    )
+
+
+def lloyd_means(
+    assigned: DataFrame, keys: list[str], vec: str, out: str
+) -> DataFrame:
+    """``(*keys, out)``: the element-wise EXACT integer mean of the
+    quantized ``vec`` arrays per key — posexplode, one map-side-combined
+    (keys, pos) int64 sum/count, reassembled in pos order. Rounds half
+    away from zero in pure integer arithmetic: a DOUBLE avg accumulates
+    in a partition order that is not deterministic, so a last-ulp drift
+    could flip a rounded coordinate between runs; integer s/n is
+    order-independent and bit-identical in any engine, which is what
+    makes every index built on it SQL-oracle-able."""
+    return (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "v"))
+        .groupBy(*keys, "pos")
+        .agg(F.expr("sum(v) AS s"), F.expr("count(1) AS n"))
+        .groupBy(*keys)
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(pos,"
+                " CASE WHEN s >= 0 THEN (2*s + n) div (2*n)"
+                " ELSE -((2*(-s) + n) div (2*n)) END AS m))),"
+                f" p -> p.m) AS {out}"
             )
         )
-        return corpus.crossJoin(cent_arr).select(
-            corpus["*"], best["cluster"].alias("cluster")
-        )
-    cent = F.broadcast(
-        centroids.withColumn(
-            "_nb2", int_dot(F.col("centroid"), F.col("centroid"))
-        )
     )
+
+
+def _assign(corpus: DataFrame, centroids: DataFrame, n_probe: int = 1) -> DataFrame:
+    """(corpus columns…, cluster) for each corpus row's nearest centroid
+    (``qvec`` against ``centroids(cluster, centroid)``) — or the
+    n_probe nearest clusters per row when n_probe > 1 (the query side).
+
+    n_probe == 1 (every build/extend pass) is the kernel's row-local
+    argmin over the broadcast book: a pure map stage, nothing shuffled.
+    (If the centroid frame were ever empty with a non-empty corpus the
+    argmin would yield NULL clusters — unreachable here: every caller
+    derives centroids from the same non-empty corpus.)
+
+    n_probe > 1 (query-side probing, Q rows): window ranking over the
+    same norm-decomposed key and tie-break."""
+    if n_probe == 1:
+        return corpus.crossJoin(books(centroids, "cluster", "centroid")).select(
+            corpus["*"], F.expr(f"{nearest_sql('book', 'qvec')}.id AS cluster")
+        )
+    cent = F.broadcast(centroids.withColumn("_nb2", int_dot("centroid", "centroid")))
     scored = corpus.crossJoin(cent).select(
         corpus["*"],
         F.col("cluster"),
-        (F.col("_nb2") - 2 * int_dot(F.col("qvec"), F.col("centroid")))
-        .alias("_d"),
+        F.expr(f"_nb2 - 2 * {dot_sql('qvec', 'centroid')} AS _d"),
     )
     w = Window.partitionBy(*[c for c in corpus.columns if c != "qvec"]).orderBy(
         "_d", "cluster"
@@ -193,10 +221,10 @@ def build_ivf_index(
     """Returns (centroids(cluster, centroid), assignments(id, cluster)).
 
     Init: the n_clusters lowest-id vectors (deterministic). Each Lloyd
-    round: argmin-assign against broadcast centroids, then per-cluster
-    element-wise mean via posexplode → (cluster, pos) avg → re-assembled
-    array. Two hash aggregations per round, no RNG, no collect of the
-    corpus (only the k centroids ever reach the driver's broadcast).
+    round: row-local argmin against the broadcast centroids
+    (:func:`nearest_sql`), then :func:`lloyd_means` per cluster. Two
+    hash aggregations per round, no RNG, no collect of the corpus (only
+    the k centroids ever reach the driver's broadcast).
 
     ``checkpoint_every=N`` truncates the centroid lineage with an eager
     ``localCheckpoint`` every N Lloyd rounds: without it the plan doubles
@@ -216,37 +244,8 @@ def build_ivf_index(
     )
 
     for i in range(n_iters):
-        assigned = _assign(vecs, centroids)
-        # Exact integer mean (r8): int64 sum + count, then round-half-
-        # away-from-zero via pure integer arithmetic. The previous
-        # round(avg(v)) accumulated the sum in DOUBLE, whose partition
-        # order is not deterministic — a last-ulp drift could flip the
-        # rounded centroid coordinate and silently change cell
-        # membership between runs. Integer s/n is order-independent,
-        # bit-identical on any engine, and makes the whole index
-        # SQL-oracle-able.
-        centroids = (
-            assigned.select("cluster", F.posexplode("qvec").alias("pos", "v"))
-            .groupBy("cluster", "pos")
-            .agg(
-                F.sum("v").cast("bigint").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "cluster",
-                "pos",
-                F.expr(
-                    "CASE WHEN s >= 0 THEN (2*s + n) div (2*n)"
-                    " ELSE -((2*(-s) + n) div (2*n)) END"
-                ).alias("m"),
-            )
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"].cast("bigint"),
-                ).alias("centroid")
-            )
+        centroids = lloyd_means(
+            _assign(vecs, centroids), ["cluster"], "qvec", "centroid"
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
             centroids = centroids.localCheckpoint(eager=True)
@@ -455,7 +454,7 @@ def ivf_cosine_topk(
     # corpus-side norm rides the pinned cell frame.
     cells = pin(
         corpus.select(F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv"))
-        .withColumn("_nc", F.sqrt(int_dot(F.col("cv"), F.col("cv")).cast("double")))
+        .withColumn("_nc", norm("cv"))
         .join(
             assignments.withColumnRenamed(id_col, "neighbor_id"), on="neighbor_id"
         )
@@ -463,7 +462,7 @@ def ivf_cosine_topk(
     q = queries.select(F.col(id_col).alias("query_id"), quantize(vec_col).alias("qvec"))
     probes = _assign(q, centroids, n_probe=n_probe).select(
         F.col("query_id"), F.col("qvec").alias("qv"), "cluster"
-    ).withColumn("_nq", F.sqrt(int_dot(F.col("qv"), F.col("qv")).cast("double")))
+    ).withColumn("_nq", norm("qv"))
 
     # Probe scan: per-(cell, query) top-k via the cogrouped numpy GEMM
     # stage (bit-identical scores and order — see _probe_cell_topk_np);

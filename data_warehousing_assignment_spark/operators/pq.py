@@ -30,16 +30,21 @@ has an identical operand order in both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.caching import pin
 from data_warehousing_assignment_spark.operators.ivf import (
     _assign,
+    books,
     build_ivf_index,
+    lloyd_means,
+    nearest_sql,
 )
 from data_warehousing_assignment_spark.operators.similarity import (
+    dot_sql,
     int_dot,
+    norm,
     quantize,
 )
 
@@ -54,78 +59,14 @@ PQ_K = 64  # codewords per subspace — codes fit 6 bits
 # bits), so the codes stay 6 bits instead of the paper's default 8.
 
 
-def subvectors(
-    df: DataFrame, id_col: str, vec_col: str, pre_quantized: bool = False
-) -> DataFrame:
-    """(_id, m, sv): quantized micro-unit subvector slices, one row per
-    (vector, subspace). Row-local explode — no shuffle.
-    ``pre_quantized`` skips the float→micro-unit cast for inputs that
-    are already integer arrays (the residual path)."""
-    qv = F.col(vec_col) if pre_quantized else quantize(vec_col)
-    return (
-        df.select(F.col(id_col).alias("_id"), qv.alias("_qv"))
-        .withColumn(
-            "m", F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1)))
-        )
-        .select(
-            "_id",
-            "m",
-            F.expr(f"slice(_qv, m * {PQ_DSUB} + 1, {PQ_DSUB})").alias("sv"),
-        )
-    )
+def _sub_sql(qv: str) -> str:
+    """SQL for subspace ``m``'s slice of quantized vector ``qv`` (``m``
+    is a column or an enclosing lambda variable)."""
+    return f"slice({qv}, m * {PQ_DSUB} + 1, {PQ_DSUB})"
 
 
-def _sub_l2sq(a, b):
-    """Exact int64 squared-L2 between two quantized subvectors."""
-    diff = F.zip_with(a, b, lambda x, y: x - y)
-    return F.aggregate(
-        F.transform(diff, lambda d: d * d),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _nearest_code(sv_df: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """(_id, m, sv, code): each subvector's nearest codeword in its OWN
-    subspace (exact integer distance, code-id tiebreak). The codebook is
-    M·K rows — always broadcast.
-
-    r14 v2 (same rewrite as operators/ivf._assign's row-local path,
-    guide §2.4): each subspace's codewords collapse into ONE array row
-    (M broadcast rows total); a subvector row joins its subspace's
-    array and takes ``array_min`` over the per-codeword (d, code)
-    structs — zero exchanges and zero n·M·K row materialization, where
-    the interim MIN(struct) aggregation still built n·M·K joined rows
-    and shuffled n·M. Ordering key is the norm-decomposed
-    ‖cw‖² − 2·sv·cw (exact int64; ‖sv‖² is constant within a row's
-    candidate set so order and ties match ‖sv−cw‖² exactly, and ties
-    break on the lower code id — lexicographic struct min ≡
-    row_number().orderBy(_d, code) rank 1). Pinned equal to the window
-    formulation in tests/test_pq.py."""
-    percell = F.broadcast(
-        codebooks.select(
-            "m",
-            F.struct(
-                F.col("code"),
-                F.col("cw"),
-                int_dot(F.col("cw"), F.col("cw")).alias("_ncw2"),
-            ).alias("_e"),
-        )
-        .groupBy("m")
-        .agg(F.collect_list("_e").alias("_cb"))
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("_cb"),
-            lambda e: F.struct(
-                (e["_ncw2"] - 2 * int_dot(F.col("sv"), e["cw"])).alias("_d"),
-                e["code"].alias("code"),
-            ),
-        )
-    )
-    return sv_df.join(percell, "m").select(
-        "_id", "m", "sv", best["code"].alias("code")
-    )
+#: every subspace index 0..M−1, the lambda domain of the per-m arrays
+_MS = f"sequence(0, {PQ_M - 1})"
 
 
 def pq_codebooks(
@@ -133,16 +74,18 @@ def pq_codebooks(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_iters: int = 2,
-    pre_quantized: bool = False,
 ) -> DataFrame:
     """Train the M per-subspace codebooks: (m, code, cw).
 
     Seeds: the PQ_K lowest-id vectors' subvectors (code = id rank), so
     every subspace seeds from the same K rows — the SQL oracle derives
-    the identical seed set with one LIMIT. Each Lloyd round is one
-    broadcast-join argmin + one map-side-combined integer-mean agg;
-    nothing data-sized crosses the driver."""
-    sv = pin(subvectors(corpus, id_col, vec_col, pre_quantized))
+    the identical seed set with one LIMIT. Each Lloyd round encodes
+    every vector row-locally (:func:`pq_encode`), posexplodes its M
+    codes and takes :func:`~ivf.lloyd_means` per (m, code); nothing
+    data-sized crosses the driver."""
+    vecs = pin(
+        corpus.select(F.col(id_col).alias("_id"), quantize(vec_col).alias("_qv"))
+    )
     low = (
         corpus.select(F.col(id_col).alias("_id"))
         .orderBy("_id")
@@ -152,136 +95,37 @@ def pq_codebooks(
             (F.row_number().over(Window.orderBy("_id")) - 1).alias("code"),
         )
     )
-    codebooks = sv.join(F.broadcast(low), "_id").select(
-        "m", "code", F.col("sv").alias("cw")
+    slices = f"transform({_MS}, m -> {_sub_sql('_qv')})"
+    codebooks = vecs.join(F.broadcast(low), "_id").select(
+        "code", F.expr(f"posexplode({slices}) AS (m, cw)")
     )
     for _ in range(n_iters):
-        assigned = _nearest_code(sv, codebooks)
-        codebooks = (
-            assigned.select("m", "code", F.posexplode("sv").alias("pos", "v"))
-            .groupBy("m", "code", "pos")
-            .agg(
-                F.sum("v").cast("bigint").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "m",
-                "code",
-                "pos",
-                F.expr(
-                    "CASE WHEN s >= 0 THEN (2*s + n) div (2*n)"
-                    " ELSE -((2*(-s) + n) div (2*n)) END"
-                ).alias("mv"),
-            )
-            .groupBy("m", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                    lambda s: s["mv"].cast("bigint"),
-                ).alias("cw")
-            )
+        assigned = (
+            pq_encode(vecs, codebooks)
+            .select("_qv", F.expr("posexplode(codes) AS (m, code)"))
+            .select("m", "code", F.expr(_sub_sql("_qv")).alias("sv"))
         )
+        codebooks = lloyd_means(assigned, ["m", "code"], "sv", "cw")
     return codebooks
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pre_quantized: bool = False,
-) -> DataFrame:
-    """(_id, m, code): the M-byte PQ representation of every vector —
-    the ONLY per-corpus-row state the query path ever reads."""
-    sv = subvectors(corpus, id_col, vec_col, pre_quantized)
-    return _nearest_code(sv, codebooks).select("_id", "m", "code")
+def pq_encode(vecs: DataFrame, codebooks: DataFrame, qv: str = "_qv") -> DataFrame:
+    """``vecs`` plus ``codes`` (its M PQ codes, codes[m+1] = subspace m's)
+    and ``nx`` — the exact reconstruction norm ‖x̃‖² = Σₘ‖cw_codeₘ‖²,
+    an order-free int64 sum — for the quantized vector column ``qv``.
 
-
-def _codebook_arrays(codebooks: DataFrame) -> DataFrame:
-    """ONE-row broadcast frame ``(_cbs)``: an M-element array (indexed
-    by m+1) of code-sorted ``(code, cw, _ncw2)`` struct arrays — the
-    whole codebook as a row-local lookup structure (M·K·d int64s, a few
-    KB; the same collapse as ivf._assign's centroid array)."""
-    return F.broadcast(
-        codebooks.select(
-            "m",
-            F.struct(
-                F.col("code"),
-                F.col("cw"),
-                int_dot(F.col("cw"), F.col("cw")).alias("_ncw2"),
-            ).alias("_e"),
-        )
-        .groupBy("m")
-        .agg(F.array_sort(F.collect_list("_e")).alias("_cb"))
-        .select(F.struct("m", "_cb").alias("_p"))
-        .agg(F.array_sort(F.collect_list("_p")).alias("_ps"))
-        .select(F.transform("_ps", lambda p: p["_cb"]).alias("_cbs"))
-    )
-
-
-def _best_struct_expr(qv: Column | str) -> Column:
-    """Per-subspace argmin against the broadcast ``_cbs`` arrays: an
-    M-element array of the chosen ``(_d, code, _nn)`` structs for the
-    quantized vector column ``qv``. The struct min compares (_d, code)
-    exactly like :func:`_nearest_code` — ``_nn`` (the chosen codeword's
-    ‖cw‖²) sits BEHIND code in the struct, reachable only on a
-    (_d, code) tie, impossible because codes are unique per subspace —
-    so the chosen code per (vector, m) is identical to pq_encode's."""
-    qcol = F.col(qv) if isinstance(qv, str) else qv
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-        lambda m: F.array_min(
-            F.transform(
-                F.element_at(F.col("_cbs"), m + 1),
-                lambda e: F.struct(
-                    (
-                        e["_ncw2"]
-                        - 2
-                        * int_dot(
-                            F.slice(qcol, m * PQ_DSUB + 1, F.lit(PQ_DSUB)),
-                            e["cw"],
-                        )
-                    ).alias("_d"),
-                    e["code"].alias("code"),
-                    e["_ncw2"].alias("_nn"),
-                ),
-            )
-        ),
-    )
-
-
-def pq_encode_packed(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(_id, codes, nx): every vector's M PQ codes as ONE array column
-    plus its exact non-residual reconstruction norm
-    ‖x̃‖² = Σₘ‖cw_codeₘ‖² — the packed, fully ROW-LOCAL form of
-    :func:`pq_encode` + the xnrm aggregation (r14, guide §2.4 remove
-    shuffles outright): the per-subspace argmin runs inside one
-    ``transform`` over the broadcast codebook arrays instead of the
-    n·M-row subvector explode + join + per-vector aggregation, so the
-    encode never crosses an exchange. codes[m+1] is subspace m's code;
-    nx is the int64 sum of the chosen codewords' norms (order-free,
-    exact). Pinned value-equal to pq_encode + the ‖cw‖² sum in
-    tests/test_pq.py."""
-    best = _best_struct_expr("_qv")
+    Fully ROW-LOCAL: each subspace's argmin is the kernel's
+    :func:`~ivf.nearest_sql` over its codebook in the one broadcast
+    book, so the encode never crosses an exchange."""
+    best = nearest_sql("element_at(book, m + 1)", _sub_sql(qv))
+    cols = vecs.columns
     return (
-        corpus.select(
-            F.col(id_col).alias("_id"), quantize(vec_col).alias("_qv")
-        )
-        .crossJoin(_codebook_arrays(codebooks))
-        .select("_id", best.alias("_best"))
+        vecs.crossJoin(books(codebooks, "code", "cw", key="m"))
+        .select(*cols, F.expr(f"transform({_MS}, m -> {best}) AS _best"))
         .select(
-            "_id",
-            F.transform(F.col("_best"), lambda b: b["code"]).alias("codes"),
-            F.aggregate(
-                F.col("_best"),
-                F.lit(0).cast("bigint"),
-                lambda a, b: a + b["_nn"],
-            ).alias("nx"),
+            *cols,
+            F.expr("transform(_best, b -> b.id) AS codes"),
+            F.expr("aggregate(_best, 0L, (a, b) -> a + b.nn) AS nx"),
         )
     )
 
@@ -295,7 +139,6 @@ def ivf_pq_cosine_topk(
     n_clusters: int = 16,
     n_probe: int = 8,
     rerank: int = 100,
-    residual: bool = False,
 ) -> DataFrame:
     """IVF-ADC+R approximate cosine top-k (Jégou et al. §V): IVF cells
     bound the candidate set (n_probe/n_clusters of the corpus per
@@ -306,25 +149,19 @@ def ivf_pq_cosine_topk(
     (query_id, neighbor_id, rank, score) with exact cosine scores.
 
     Scale shape: codebooks and the per-query LUT are O(M·K) and
-    O(Q·M·K) — broadcast-sized; the candidate scan carries (id, m,
-    code) ints only; raw vectors are touched for just Q·rerank rows at
-    query time (a semi-join fetch), so the memory-bandwidth term the
-    compression exists to kill stays killed. ``rerank=0`` disables the
-    re-rank and returns raw ADC scores (score = dot̃(q,x)/(‖q‖·‖x̃‖),
-    with ‖x̃‖² = Σₘ‖cwₘ‖² exact by subspace orthogonality).
+    O(Q·M·K) — broadcast-sized; the candidate scan carries (id, cluster,
+    codes, ‖x̃‖²) ints only; raw vectors are touched for just Q·rerank
+    rows at query time (a semi-join fetch), so the memory-bandwidth
+    term the compression exists to kill stays killed. The corpus makes
+    ONE row-local pass — cluster (the same argmin the assignments table
+    holds, recomputed in-row so codes attach without an n⋈n join),
+    packed codes and ‖x̃‖² — and each candidate row scores with M map
+    lookups into a broadcast per-query LUT: zero exchanges between the
+    scan and the ADC window. Every quantity is exact int64 and the
+    score divides the same operands in the same order as the oracle's
+    SQL replay, which stays hash-exact.
 
-    ``residual=True`` is the Jégou § IV.A residual variant (r11 verdict
-    #2): codebooks quantize x − centroid(cell(x)) instead of x, so the
-    K codewords spend their resolution on the within-cell spread rather
-    than re-encoding cell position. ADC then scores
-    dot(q, c) + Σₘ LUT[m, codeₘ] (the dot(q, centroid) term is one
-    broadcast-sized per-(query, probed-cell) lookup) and the
-    reconstruction norm gains the exact cross terms
-    ‖c + r̃‖² = ‖c‖² + Σₘ(2·cₘ·cwₘ + ‖cwₘ‖²) from a
-    clusters×M×K broadcast table. Same determinism contract — residuals
-    are exact int64 differences.
-
-    MEASURED (tools/pq_experiment.py, r12, recall@5 vs brute force):
+    MEASURED (r12, recall@5 vs brute force):
       500 vectors (sf0.001), ceiling 0.48@4probes / 0.80@8: residual
         = ceiling at both (non-residual drops to 0.68 at 8).
       2000 vectors (sf0.1), ceiling 0.61@4 / 0.80@8, rerank sweep at 8:
@@ -333,242 +170,61 @@ def ivf_pq_cosine_topk(
     Conclusions shipped: (1) n_probe 4→8 lifts the ceiling 0.61→0.80
     and is nearly free (the candidate scan doubles but stays a code
     scan); (2) rerank 25→100 recovers most of the ADC shortlist loss
-    for ~Q·75 extra raw-vector fetches; (3) residual buys only
-    +0.02–0.07 recall at the same rerank for ~2× wall on this corpus
-    (the extra residual encode joins dominate at these sizes) — a
-    NEGATIVE result at benchmark scale, kept as the ``residual=True``
-    path because at production scale with fine cells (k ≈ √n, small
-    per-cell spread) residual coding is the standard operating point.
+    for ~Q·75 extra raw-vector fetches; (3) residual coding (Jégou
+    § IV.A: codebooks over x − centroid(cell(x))) bought only
+    +0.02–0.07 recall at the same rerank for ~2× wall on this corpus —
+    a negative result at benchmark scale, so that path was removed.
     The registered op therefore ships non-residual, n_probe=8,
     rerank=100 (recall@5 0.72 vs the old 0.42 at 2000 vectors)."""
-    centroids, assignments = build_ivf_index(corpus, id_col, vec_col, n_clusters)
+    if rerank < 1:
+        raise ValueError(f"rerank must be >= 1, got {rerank}")
+    centroids, _ = build_ivf_index(corpus, id_col, vec_col, n_clusters)
     q = queries.select(
         F.col(id_col).alias("query_id"), quantize(vec_col).alias("qvec")
     )
-    probes = _assign(q, centroids, n_probe=n_probe).select(
-        "query_id", "qvec", "cluster"
+    probes = _assign(q, centroids, n_probe=n_probe).select("query_id", "cluster")
+    codebooks = pin(pq_codebooks(corpus, id_col, vec_col))
+    vecs = corpus.select(
+        F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("qvec")
     )
-    if residual:
-        asg = assignments.select(F.col(id_col).alias("_id"), "cluster")
-        rvecs = pin(
-            corpus.select(
-                F.col(id_col).alias("_id"), quantize(vec_col).alias("_qv")
-            )
-            .join(asg, "_id")
-            .join(F.broadcast(centroids), "cluster")
-            .select(
-                "_id",
-                "cluster",
-                F.zip_with("_qv", "centroid", lambda x, y: x - y).alias("rv"),
-            )
+    # pinned: cluster+codes+norm ARE the stored index at production —
+    # ~30 B/row vs the 256 B raw vector — and every query batch
+    # re-probes them without re-encoding the corpus.
+    base = pin(
+        pq_encode(_assign(vecs, centroids), codebooks, "qvec").select(
+            "neighbor_id", "cluster", "codes", "nx"
         )
-        codebooks = pin(
-            pq_codebooks(rvecs, id_col="_id", vec_col="rv", pre_quantized=True)
-        )
-        codes = pin(
-            pq_encode(rvecs, codebooks, id_col="_id", vec_col="rv",
-                      pre_quantized=True)
-        )
-        cand = (
-            assignments.select(
-                F.col(id_col).alias("neighbor_id"), "cluster"
-            )
-            .join(F.broadcast(probes.select("query_id", "cluster")), "cluster")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id", "cluster")
-        )
-
-        # ADC lookup table: exact query subvector · codeword, M·K cells
-        qsv = subvectors(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-            "query_id",
-            vec_col,
-        ).select(F.col("_id").alias("query_id"), "m", "sv")
-        lut = qsv.join(F.broadcast(codebooks), "m").select(
-            "query_id",
-            "m",
-            "code",
-            int_dot(F.col("sv"), F.col("cw")).alias("dot"),
-        )
-
-        # reconstruction norms (exact): the residual form adds the
-        # centroid norm and the exact centroid·codeword cross terms
-        # from broadcast-sized tables to the per-code ‖cw‖² sum.
-        cw_nrm = codebooks.select(
-            "m", "code", int_dot(F.col("cw"), F.col("cw")).alias("nn")
-        )
-        csv = subvectors(
-            centroids.select("cluster", "centroid"), "cluster", "centroid",
-            pre_quantized=True,
-        ).select(F.col("_id").alias("cluster"), "m", F.col("sv").alias("csv"))
-        ccross = csv.join(F.broadcast(codebooks), "m").select(
-            "cluster", "m", "code",
-            int_dot(F.col("csv"), F.col("cw")).alias("cx"),
-        )
-        cnn = centroids.select(
-            "cluster", int_dot(F.col("centroid"), F.col("centroid")).alias("cc")
-        )
-        xnrm = (
-            codes.join(
-                assignments.select(F.col(id_col).alias("_id"), "cluster"),
-                "_id",
-            )
-            .join(F.broadcast(ccross), ["cluster", "m", "code"])
-            .join(F.broadcast(cw_nrm), ["m", "code"])
-            .groupBy("_id", "cluster")
-            .agg(
-                F.sum(2 * F.col("cx") + F.col("nn")).cast("bigint").alias("_r")
-            )
-            .join(F.broadcast(cnn), "cluster")
-            .select(
-                F.col("_id").alias("neighbor_id"),
-                (F.col("cc") + F.col("_r")).alias("nx"),
-            )
-        )
-        # per-(query, probed cell) exact centroid dot — the coarse term
-        # ADC adds back because codes now encode x − c, not x.
-        qc = probes.join(F.broadcast(centroids), "cluster").select(
-            "query_id", "cluster",
-            int_dot(F.col("qvec"), F.col("centroid")).alias("_qc"),
-        )
-        qn = q.select(
-            "query_id", int_dot(F.col("qvec"), F.col("qvec")).alias("nq")
-        )
-        adc = (
-            cand.join(
-                codes.select(F.col("_id").alias("neighbor_id"), "m", "code"),
-                "neighbor_id",
-            )
-            .join(F.broadcast(lut), ["query_id", "m", "code"])
-            .groupBy("query_id", "neighbor_id", "cluster")
-            .agg(F.sum("dot").cast("bigint").alias("adot"))
-            .join(F.broadcast(qc), ["query_id", "cluster"])
-            .select(
-                "query_id", "neighbor_id",
-                (F.col("adot") + F.col("_qc")).alias("adot"),
-            )
-        )
-        scored = (
-            adc.join(F.broadcast(qn), "query_id")
-            .join(xnrm, "neighbor_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.col("nq"),
-                (
-                    F.col("adot").cast("double")
-                    / (
-                        F.sqrt(F.col("nq").cast("double"))
-                        * F.sqrt(F.col("nx").cast("double"))
-                    )
-                ).alias("score"),
-            )
-        )
-    else:
-        # r14 packed path (guide §2.4 remove shuffles outright, §2.3
-        # shuffle fewer bytes): the old shape joined the n·M-row code
-        # table onto every candidate (×M row blowup), re-aggregated the
-        # M lookups per (query, neighbor) through an exchange, and then
-        # SHUFFLED the whole Q·(n·n_probe/k)-row ADC result on
-        # neighbor_id to attach the reconstruction norms. Here the
-        # corpus makes ONE row-local pass — cluster (the identical
-        # argmin the assignments table holds; recomputed in-row so
-        # codes/norms attach without an n⋈n join), packed codes, and
-        # ‖x̃‖² — and each candidate row scores with M map lookups into
-        # a broadcast per-query LUT: zero exchanges between the scan
-        # and the top-k window. Every quantity is the same exact int64
-        # (adot = the same M dots summed; nx = the same M ‖cw‖² summed;
-        # integer addition is order-free), and the final score divides
-        # the same operands in the same order → bit-identical scores,
-        # identical ranks. Oracle replays the whole pipeline in SQL and
-        # stays hash-exact; the packed encode is pinned value-equal to
-        # pq_encode in tests/test_pq.py.
-        codebooks = pin(pq_codebooks(corpus, id_col, vec_col))
-        cbs = _codebook_arrays(codebooks)
-        vecs = corpus.select(
-            F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("qvec")
-        )
-        # pinned like the code table it replaces (pq_encode was pinned
-        # here before): cluster+codes+norm ARE the stored index at
-        # production — ~30 B/row vs the 256 B raw vector — and every
-        # query batch re-probes them without re-encoding the corpus.
-        base = pin(
-            _assign(vecs, centroids)
-            .crossJoin(cbs)
-            .select(
-                "neighbor_id", "cluster", _best_struct_expr("qvec").alias("_best")
-            )
-            .select(
-                "neighbor_id",
-                "cluster",
-                F.transform(F.col("_best"), lambda b: b["code"]).alias("codes"),
-                F.aggregate(
-                    F.col("_best"),
-                    F.lit(0).cast("bigint"),
-                    lambda a, b: a + b["_nn"],
-                ).alias("nx"),
-            )
-        )
-        # per-query LUT: M maps code → (query subvector · codeword),
-        # exact int64 — Q rows, broadcast (M·K entries each).
-        qlut = q.crossJoin(cbs).select(
-            "query_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-                lambda m: F.map_from_entries(
-                    F.transform(
-                        F.element_at(F.col("_cbs"), m + 1),
-                        lambda e: F.struct(
-                            e["code"].alias("key"),
-                            int_dot(
-                                F.slice(
-                                    F.col("qvec"),
-                                    m * PQ_DSUB + 1,
-                                    F.lit(PQ_DSUB),
-                                ),
-                                e["cw"],
-                            ).alias("value"),
-                        ),
-                    )
-                ),
-            ).alias("_luts"),
-            int_dot(F.col("qvec"), F.col("qvec")).alias("nq"),
-        )
-        cand = (
-            base.join(F.broadcast(probes.select("query_id", "cluster")), "cluster")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-        )
-        adot = F.aggregate(
-            F.sequence(F.lit(1), F.lit(PQ_M)),
-            F.lit(0).cast("bigint"),
-            lambda acc, i: acc
-            + F.element_at(
-                F.element_at(F.col("_luts"), i), F.element_at(F.col("codes"), i)
-            ),
-        )
-        scored = cand.join(F.broadcast(qlut), "query_id").select(
+    )
+    # per-query LUT: M maps code → (query subvector · codeword), exact
+    # int64 — Q rows, broadcast (M·K entries each).
+    lut = (
+        f"map_from_entries(transform(element_at(book, m + 1), e -> struct("
+        f"e.id AS key, {dot_sql(_sub_sql('qvec'), 'e.cw')} AS value)))"
+    )
+    qlut = q.crossJoin(books(codebooks, "code", "cw", key="m")).select(
+        "query_id",
+        F.expr(f"transform({_MS}, m -> {lut}) AS _luts"),
+        int_dot("qvec", "qvec").alias("nq"),
+    )
+    adot = (
+        f"aggregate(sequence(1, {PQ_M}), 0L, (acc, i) -> acc"
+        " + element_at(element_at(_luts, i), element_at(codes, i)))"
+    )
+    scored = (
+        base.join(F.broadcast(probes), "cluster")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .join(F.broadcast(qlut), "query_id")
+        .select(
             "query_id",
             "neighbor_id",
-            F.col("nq"),
-            (
-                adot.cast("double")
-                / (
-                    F.sqrt(F.col("nq").cast("double"))
-                    * F.sqrt(F.col("nx").cast("double"))
-                )
-            ).alias("score"),
+            "nq",
+            F.expr(
+                f"CAST({adot} AS DOUBLE)"
+                " / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(nx AS DOUBLE))) AS score"
+            ),
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
     )
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", F.col("rank").cast("int"), "score"
-            )
-        )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("neighbor_id"))
     shortlist = (
         scored.withColumn("_ar", F.row_number().over(w))
         .filter(F.col("_ar") <= rerank)
@@ -585,21 +241,13 @@ def ivf_pq_cosine_topk(
             "query_id",
             "neighbor_id",
             (
-                int_dot(F.col("qvec"), F.col("cv")).cast("double")
-                / (
-                    F.sqrt(F.col("nq").cast("double"))
-                    * F.sqrt(
-                        int_dot(F.col("cv"), F.col("cv")).cast("double")
-                    )
-                )
+                int_dot("qvec", "cv").cast("double")
+                / (F.sqrt(F.col("nq").cast("double")) * norm("cv"))
             ).alias("score"),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
     return (
-        exact.withColumn("rank", F.row_number().over(w2))
+        exact.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", F.col("rank").cast("int"), "score")
     )

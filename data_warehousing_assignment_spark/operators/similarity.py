@@ -27,34 +27,45 @@ from data_warehousing_assignment_spark.operators.dedup import scale_out
 QUANT = 1_000_000.0
 
 
-def quantize(col: Column | str) -> Column:
-    """array<float> → array<bigint> micro-units: floor(x·10⁶). floor (not
-    round) because floor of a double is exact and identical everywhere,
-    while round-half rules differ across engines."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: F.floor(x.cast("double") * F.lit(QUANT)))
+def quantize_sql(vec: str) -> str:
+    """SQL for array<float> → array<bigint> micro-units: floor(x·10⁶).
+    floor (not round) because floor of a double is exact and identical
+    everywhere, while round-half rules differ across engines. ``vec`` is
+    a column name or SQL expression."""
+    return f"transform({vec}, x -> floor(CAST(x AS DOUBLE) * {QUANT}D))"
 
 
-def int_dot(a: Column, b: Column) -> Column:
-    """Exact int64 dot product of two quantized vectors — row-local
-    zip_with + aggregate, order-independent because integer addition is
-    associative and exact."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+def dot_sql(a: str, b: str) -> str:
+    """SQL for the exact int64 dot product of two quantized vectors —
+    row-local zip_with + aggregate, order-independent because integer
+    addition is associative and exact."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
+
+
+def quantize(vec: str) -> Column:
+    return F.expr(quantize_sql(vec))
+
+
+def int_dot(a: str, b: str) -> Column:
+    return F.expr(dot_sql(a, b))
+
+
+def norm(vec: str) -> Column:
+    """‖v‖ of a quantized vector as a double: sqrt of the exact int64
+    ‖v‖² — the per-row factor of every cosine denominator."""
+    return F.expr(f"sqrt(CAST({dot_sql(vec, vec)} AS DOUBLE))")
+
+
+def cosine_similarity_col(a: str, b: str) -> Column:
+    """Deterministic cosine of two array<float> columns (names or SQL
+    expressions) via quantized integer dot/norms; the single double
+    expression at the end is bit-identical across engines."""
+    qa, qb = quantize_sql(a), quantize_sql(b)
+    return F.expr(
+        f"CAST({dot_sql(qa, qb)} AS DOUBLE)"
+        f" / (sqrt(CAST({dot_sql(qa, qa)} AS DOUBLE))"
+        f" * sqrt(CAST({dot_sql(qb, qb)} AS DOUBLE)))"
     )
-
-
-def cosine_similarity_col(a: Column, b: Column) -> Column:
-    """Deterministic cosine of two array<float> columns via quantized
-    integer dot/norms; the single double expression at the end is
-    bit-identical across engines."""
-    qa, qb = quantize(a), quantize(b)
-    dot = int_dot(qa, qb).cast("double")
-    na = F.sqrt(int_dot(qa, qa).cast("double"))
-    nb = F.sqrt(int_dot(qb, qb).cast("double"))
-    return dot / (na * nb)
 
 
 def brute_force_cosine_topk(
@@ -79,11 +90,11 @@ def brute_force_cosine_topk(
     # multiplied in the same order — so scores stay bit-identical.
     q = queries.select(
         F.col(id_col).alias("query_id"), quantize(vec_col).alias("qv")
-    ).withColumn("_nq", F.sqrt(int_dot(F.col("qv"), F.col("qv")).cast("double")))
+    ).withColumn("_nq", norm("qv"))
     c = scale_out(corpus).select(
         F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv")
-    ).withColumn("_nc", F.sqrt(int_dot(F.col("cv"), F.col("cv")).cast("double")))
-    dot = int_dot(F.col("qv"), F.col("cv")).cast("double")
+    ).withColumn("_nc", norm("cv"))
+    dot = int_dot("qv", "cv").cast("double")
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -127,7 +138,7 @@ def hyperplane_signs(vec_col: str, n_planes: int = 8, dim: int = 64) -> str:
     One SQL string — each builder parses it once with ``F.expr`` and
     uses the Column on both join sides, instead of rebuilding n_planes ×
     dim literal Columns per side."""
-    v = f"transform(`{vec_col}`, x -> floor(CAST(x AS DOUBLE) * {QUANT}D))"
+    v = quantize_sql(f"`{vec_col}`")
     # transform-with-index (not zip_with: it null-pads the shorter
     # side) — iterates the vector's own length; requires dim ≥ len(v)
     return " + ".join(
@@ -159,7 +170,7 @@ def lsh_cosine_topk(
     bucket = F.expr(hyperplane_signs(vec_col, n_planes)).alias("bucket")
     qbase = queries.select(
         F.col(id_col).alias("query_id"), quantize(vec_col).alias("qv"), bucket
-    ).withColumn("_nq", F.sqrt(int_dot(F.col("qv"), F.col("qv")).cast("double")))
+    ).withColumn("_nq", norm("qv"))
     if probe_all:
         # every bucket probed ⇒ every corpus row scored exactly once
         # (each row lives in exactly one sign bucket) ⇒ provably equal to
@@ -183,8 +194,8 @@ def lsh_cosine_topk(
     # brute_force_cosine_topk) — score expression bit-identical.
     c = scale_out(corpus).select(
         F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv"), bucket
-    ).withColumn("_nc", F.sqrt(int_dot(F.col("cv"), F.col("cv")).cast("double")))
-    dot = int_dot(F.col("qv"), F.col("cv")).cast("double")
+    ).withColumn("_nc", norm("cv"))
+    dot = int_dot("qv", "cv").cast("double")
     scored = (
         c.join(F.broadcast(q), on="bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -219,11 +230,11 @@ def exact_near_dup_pairs(
     # brute_force_cosine_topk) — cosine expression bit-identical.
     c = scale_out(corpus).select(
         F.col(id_col).alias("doc_a"), quantize(vec_col).alias("va")
-    ).withColumn("_na", F.sqrt(int_dot(F.col("va"), F.col("va")).cast("double")))
+    ).withColumn("_na", norm("va"))
     c2 = corpus.select(
         F.col(id_col).alias("doc_b"), quantize(vec_col).alias("vb")
-    ).withColumn("_nb", F.sqrt(int_dot(F.col("vb"), F.col("vb")).cast("double")))
-    dot = int_dot(F.col("va"), F.col("vb")).cast("double")
+    ).withColumn("_nb", norm("vb"))
+    dot = int_dot("va", "vb").cast("double")
     return (
         c.join(F.broadcast(c2), F.col("doc_a") < F.col("doc_b"))
         .select(
@@ -250,11 +261,11 @@ def embedding_near_dup_pairs(
     # brute_force_cosine_topk) — cosine expression bit-identical.
     c = corpus.select(
         F.col(id_col).alias("doc_a"), quantize(vec_col).alias("va"), bucket
-    ).withColumn("_na", F.sqrt(int_dot(F.col("va"), F.col("va")).cast("double")))
+    ).withColumn("_na", norm("va"))
     c2 = corpus.select(
         F.col(id_col).alias("doc_b"), quantize(vec_col).alias("vb"), bucket
-    ).withColumn("_nb", F.sqrt(int_dot(F.col("vb"), F.col("vb")).cast("double")))
-    dot = int_dot(F.col("va"), F.col("vb")).cast("double")
+    ).withColumn("_nb", norm("vb"))
+    dot = int_dot("va", "vb").cast("double")
     return (
         c.join(c2, on="bucket")
         .filter(F.col("doc_a") < F.col("doc_b"))

@@ -93,110 +93,20 @@ def _load_driver_verified() -> dict[str, int]:
 DRIVER_VERIFIED_ROUND: dict[str, int] = _load_driver_verified()
 
 
-#: VERDICT r6 "Next round #1" rotation backlog: the queries the judge
-#: explicitly asked to see driver-green, which the never-verified queue
-#: (110 deep vs the ~50-query window) would otherwise push past yet
-#: another round. Self-expiring — once a name lands in a CORRECTNESS
-#: artifact, DRIVER_VERIFIED_ROUND wins first in _driver_rank and this
-#: set stops mattering; stale entries are harmless by construction.
-_VERDICT_ROTATION = frozenset({
-    # r14 (r13 verdict #3): drain the LAST ≤r06 evidence cohort to zero —
-    # the 27 r06-era relational/analytics ops below are the only
-    # registered queries whose last external green predates r07. All
-    # green on the full local gate every round since; this refresh makes
-    # the external ledger current.
-    "op-ext-asof-tolerance",
-    "op-ext-bigrams",
-    "op-ext-cdc-apply",
-    "op-ext-cohort-retention",
-    "op-ext-copurchase",
-    "op-ext-first-last",
-    "op-ext-funnel",
-    "op-ext-fuzzy-join",
-    "op-ext-interval-overlap",
-    "op-ext-json-extract",
-    "op-ext-lead-lag",
-    "op-ext-median",
-    "op-ext-minmax-by",
-    "op-ext-mode",
-    "op-ext-percent-rank",
-    "op-ext-range-frame",
-    "op-ext-regex-extract-all",
-    "op-ext-rolling-dau",
-    "op-ext-share-of-total",
-    "op-ext-stream-enrich",
-    "op-ext-string-agg",
-    "op-ext-transitions",
-    "op-ext-weighted-avg",
-    "op-ext-zscore-outliers",
-    "op-join-semi",
-    "op-scan-jsonl",
-    "op-union-all",
-    # r14 (r13 verdict #6): the two documented rows-only ops have never
-    # produced a green driver row (last sampled r9 as `err: no_oracle`,
-    # which IS their full check passing — but the ledger should show the
-    # driver's rows-only path succeeding at least once). Expected r14
-    # artifact: rows_match+schema_match true, err "no_oracle".
-    "op-ext-dp-counts",
-    "op-ext-mllib-minhash",
-    # r14 (r13 verdict #1): the BM25 family after the corpus-broadcast
-    # hint removal, plus fusion-baseline/hybrid after the cost-balanced
-    # k* sizing (#2) and the metrics-tail join-strategy fix (#7). No
-    # value change anywhere (k* floors at 16 at Q=100; hints are
-    # strategy-only) — but the judge asked for fresh hash-exact
-    # attestation of exactly these oracles, so they front the window.
-    "op-ext-bm25",
-    "op-ext-hybrid-fusion",
-    "op-ext-fusion-gain",
-    "op-ext-fusion-baseline",
-})
-
-#: Rotation entries verified BEFORE this round carry a stale contract
-#: (see _driver_rank); bump when refreshing _VERDICT_ROTATION.
-_CONTRACT_CHANGED_ROUND = 14
-
-#: Ops registered AFTER this round's driver window was already exactly
-#: full (r9: 48 never-sampled + 1 rotation + 1 oldest-green = the whole
-#: 50-slot window). A brand-new rank-0 entry would displace a query the
-#: judge explicitly asked to see drained (r8 verdict #1), so
-#: new-this-round ops hold back to rank 2.5 — they ride behind every
-#: pre-existing never-sampled query and become the natural front of the
-#: NEXT round's window once the backlog is empty. Self-expiring like
-#: _VERDICT_ROTATION: a green driver row promotes them to rank 3.
-_HOLDBACK_NEW: frozenset[str] = frozenset({
-    # r10: empty at round start — the 19 r9 holdbacks moved up to
-    # _VERDICT_ROTATION (the judge's explicit drain ask). New ops
-    # registered this round rank 0 behind the rotation, which is fine:
-    # 19 rotation + new ops still fit the 50-slot window.
-})
-
-
 def _driver_rank(name: str) -> tuple[int, int]:
-    """Sort key for the driver's truncated correctness window.
+    """Sort key for the driver's truncated correctness window, derived
+    from the registry and the driver's own artifacts only.
 
-    (-1, _) = judge-requested rotation backlog, not yet verified;
     (0, _) = never driver-verified, oracle-backed (highest value/slot);
     (1, _) = near-duplicate oracle-backed variants (the 8 KPI views share
         one plan shape — one representative rides in rank 0);
     (2, 0) = never driver-verified, rows-only (weaker check, still a row);
-    (2, 5) = registered after this round's window filled (_HOLDBACK_NEW);
     (3, r) = green in round r — oldest green first, so long-unchecked
         queries rotate back through the window and regressions in old
         greens remain externally detectable.
     """
-    if name in _VERDICT_ROTATION and (
-        name not in DRIVER_VERIFIED_ROUND
-        or DRIVER_VERIFIED_ROUND[name] < _CONTRACT_CHANGED_ROUND
-    ):
-        # rotation outranks a stale green row: entries whose output
-        # contract changed this round (new oracle, new column) need a
-        # FRESH driver check — their old green verified a different
-        # contract.
-        return (-1, 0)
     if name in DRIVER_VERIFIED_ROUND:
         return (3, DRIVER_VERIFIED_ROUND[name])
-    if name in _HOLDBACK_NEW:
-        return (2, 5)
     if name not in ORACLES:
         return (2, 0)
     if name.startswith("op-pipe-kpi-") and name != "op-pipe-kpi-gross-monthly":

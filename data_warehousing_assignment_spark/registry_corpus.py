@@ -457,10 +457,7 @@ def semantic_dedup_frame(emb: DataFrame) -> DataFrame:
     vecs = emb.select(
         "vec_id", sim.quantize("embedding").alias("qv")
     ).join(assign, "vec_id")
-    vecs = vecs.withColumn(
-        "nrm",
-        F.sqrt(sim.int_dot(F.col("qv"), F.col("qv")).cast("double")),
-    )
+    vecs = vecs.withColumn("nrm", sim.norm("qv"))
     a = vecs.select(
         F.col("vec_id").alias("id_a"),
         F.col("qv").alias("qa"),
@@ -477,7 +474,7 @@ def semantic_dedup_frame(emb: DataFrame) -> DataFrame:
         a.join(b, "cluster")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
-            sim.int_dot(F.col("qa"), F.col("qb")).cast("double")
+            sim.int_dot("qa", "qb").cast("double")
             / (F.col("na") * F.col("nb"))
             >= 0.5
         )

@@ -1170,12 +1170,7 @@ def _pq_lloyd_round(n: int) -> str:
 
 
 _PQ_ORACLE = f"""
-    {_ivf_cand_ctes('''
-    c0 AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster,
-             v AS centroid
-      FROM (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT 16)
-    )''', n_probe=8)},
+    {_ivf_cand_ctes(_seed16_c0('emb'), n_probe=8)},
     i8 AS (SELECT unnest(range(1, 9)) AS i),
     sv AS (
       SELECT vec_id, msp.m, v[msp.m * 8 + 1 : msp.m * 8 + 8] AS sv
@@ -1292,16 +1287,16 @@ def op_ext_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, ADC tables, reconstruction norms, shortlist, exact re-rank,
     and the top-5 — and hash-matches; the candidate CTEs are shared
     with the exact-scoring IVF oracles (_ivf_cand_ctes, n_probe the
-    only parameter). Operating point RE-MEASURED r12 (r11 verdict #2,
-    tools/pq_experiment.py, full table in operators/pq.py): the old
-    4-probe/rerank-25 point sat on a 0.61 candidate ceiling and its
-    shortlist lost a further 0.19 at 2000 vectors (recall@5 0.42);
-    8 probes lift the ceiling to 0.80 and rerank=100 recovers the
-    shortlist loss → recall@5 0.72. The residual-PQ variant (Jégou
-    § IV.A) was implemented and measured: +0.02–0.07 recall at ~2×
-    wall on this corpus — negative result here, shipped as the
-    ``residual=True`` flag for fine-cell production indexes. Recall
-    floor and the compression contract are pinned in tests/test_pq.py."""
+    only parameter). Operating point RE-MEASURED r12 (r11 verdict #2;
+    the full recall table is in the operators/pq.ivf_pq_cosine_topk
+    docstring): the old 4-probe/rerank-25 point sat on a 0.61 candidate
+    ceiling and its shortlist lost a further 0.19 at 2000 vectors
+    (recall@5 0.42); 8 probes lift the ceiling to 0.80 and rerank=100
+    recovers the shortlist loss → recall@5 0.72. The residual-PQ
+    variant (Jégou § IV.A) was implemented and measured: +0.02–0.07
+    recall at ~2× wall on this corpus — a negative result here, so the
+    path was removed. Recall floor and the compression contract are
+    pinned in tests/test_pq.py."""
     corpus = t(spark, sf_dir, "embeddings")
     queries = corpus.filter(F.col("vec_id") % 100 == 0)
     return pqm.ivf_pq_cosine_topk(
@@ -1310,12 +1305,7 @@ def op_ext_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RRF_ORACLE = f"""
-    {_ivf_cand_ctes('''
-    c0 AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster,
-             v AS centroid
-      FROM (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT 16)
-    )''')},
+    {_ivf_cand_ctes(_seed16_c0('emb'))},
     nrms AS (
       SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
       FROM emb, idx GROUP BY 1
@@ -1398,18 +1388,14 @@ def op_ext_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe/corpus row, not per pair) — same expression, bit-identical.
     probes = iv._assign(q, centroids, n_probe=4).select(
         "query_id", "qvec", "cluster"
-    ).withColumn(
-        "_nq", F.sqrt(sim.int_dot(F.col("qvec"), F.col("qvec")).cast("double"))
-    )
+    ).withColumn("_nq", sim.norm("qvec"))
     cells = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         sim.quantize("embedding").alias("cv"),
-    ).withColumn(
-        "_nc", F.sqrt(sim.int_dot(F.col("cv"), F.col("cv")).cast("double"))
-    ).join(
+    ).withColumn("_nc", sim.norm("cv")).join(
         assignments.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
     )
-    dot = sim.int_dot(F.col("qvec"), F.col("cv"))
+    dot = sim.int_dot("qvec", "cv")
     scored = (
         cells.join(F.broadcast(probes), "cluster")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -2885,12 +2871,7 @@ def op_ext_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _RECALL_SURFACE_ORACLE = f"""
-    {_ivf_cand_ctes('''
-    c0 AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster,
-             v AS centroid
-      FROM (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT 16)
-    )''', n_probe=8, query_mod=50)},
+    {_ivf_cand_ctes(_seed16_c0('emb'), n_probe=8, query_mod=50)},
     nrms AS (
       SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
       FROM emb, idx GROUP BY 1
@@ -2964,11 +2945,11 @@ def op_ext_ann_recall_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic query sample (vec_id % 50 — 10+ queries at every SF,
     a denser audit spine than the %100 ANN ops so the oracle compares
     a non-trivial row set) turns that into a numeric, regressable
-    surface — this op is the monitored-metric form of
-    tools/pq_experiment.py. recall_ppm is an exact integer
-    (1e6·hits // 5): hits are set-intersection counts of two
-    deterministically-ranked top-5 lists, so the whole surface is
-    hash-exact cross-engine. SCALE CONTRACT (r12 advice): this
+    surface — this op is the monitored-metric form of the r12 recall
+    table in the operators/pq.ivf_pq_cosine_topk docstring. recall_ppm
+    is an exact integer (1e6·hits // 5): hits are set-intersection
+    counts of two deterministically-ranked top-5 lists, so the whole
+    surface is hash-exact cross-engine. SCALE CONTRACT (r12 advice): this
     registered form samples queries by vec_id % 50 — a MODULUS spine
     whose Q grows linearly with the corpus, making the brute-force
     ground truth O(C²/50); it is the small-SF DISCRIMINATING anchor
@@ -3593,18 +3574,14 @@ def hybrid_fused_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe/corpus row, not per pair) — same expression, bit-identical.
     probes = iv._assign(q, centroids, n_probe=4).select(
         "query_id", "qvec", "cluster"
-    ).withColumn(
-        "_nq", F.sqrt(sim.int_dot(F.col("qvec"), F.col("qvec")).cast("double"))
-    )
+    ).withColumn("_nq", sim.norm("qvec"))
     cells = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         sim.quantize("embedding").alias("cv"),
-    ).withColumn(
-        "_nc", F.sqrt(sim.int_dot(F.col("cv"), F.col("cv")).cast("double"))
-    ).join(
+    ).withColumn("_nc", sim.norm("cv")).join(
         assignments.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
     )
-    dot = sim.int_dot(F.col("qvec"), F.col("cv"))
+    dot = sim.int_dot("qvec", "cv")
     dscored = (
         cells.join(F.broadcast(probes), "cluster")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -4214,19 +4191,15 @@ def _filtered_aware_top(
     # probe/corpus row, not per pair) — same expression, bit-identical.
     probes = iv._assign(q, centroids, n_probe=_FILT_NPROBE).select(
         "query_id", "qvec", "cluster", "nband"
-    ).withColumn(
-        "_nq", F.sqrt(sim.int_dot(F.col("qvec"), F.col("qvec")).cast("double"))
-    )
+    ).withColumn("_nq", sim.norm("qvec"))
     cells = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         sim.quantize("embedding").alias("cv"),
         F.expr(f"label div {band}").alias("nband"),
-    ).withColumn(
-        "_nc", F.sqrt(sim.int_dot(F.col("cv"), F.col("cv")).cast("double"))
-    ).join(
+    ).withColumn("_nc", sim.norm("cv")).join(
         assignments.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
     )
-    dot = sim.int_dot(F.col("qvec"), F.col("cv"))
+    dot = sim.int_dot("qvec", "cv")
     scored = (
         cells.join(F.broadcast(probes), ["cluster", "nband"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -4540,17 +4513,13 @@ def _filtered_truth_hits(
     )
     # per-row norms hoisted out of the label-keyed pair join (computed
     # once per query/corpus row, not per pair) — bit-identical scores.
-    qs = qs.withColumn(
-        "_nq", F.sqrt(sim.int_dot(F.col("qvec"), F.col("qvec")).cast("double"))
-    )
+    qs = qs.withColumn("_nq", sim.norm("qvec"))
     cand = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         sim.quantize("embedding").alias("cv"),
         F.expr(f"label div {band}").alias("_lb"),
-    ).withColumn(
-        "_nc", F.sqrt(sim.int_dot(F.col("cv"), F.col("cv")).cast("double"))
-    ).join(F.broadcast(qs), "_lb")
-    dot = sim.int_dot(F.col("qvec"), F.col("cv"))
+    ).withColumn("_nc", sim.norm("cv")).join(F.broadcast(qs), "_lb")
+    dot = sim.int_dot("qvec", "cv")
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.col("neighbor_id")
     )

@@ -840,7 +840,7 @@ def op_ext_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     to its ACTUAL accuracy — the per-bin |acc − conf| gaps are the ECE
     summands (weight n_b/N to get the scalar). The classifier under
     test is nearest-centroid over the embeddings (exact-integer
-    centroid means, the ivf.build_ivf_index formulation, one argmin
+    centroid means, operators/ivf.lloyd_means, one argmin
     over |labels| broadcast centroids); its confidence is the margin
     ratio d₂/(d₁+d₂) ∈ [0.5, 1] over milli-scaled integer distances
     (the `// 1000` keeps 1e6·d₂ inside int64 — raw d can reach 2.6e14
@@ -856,43 +856,20 @@ def op_ext_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine. Scale shape: one broadcast-centroid argmin pass
     (row-local), one 5-group map-side-combined aggregate; nothing
     data-sized shuffles."""
-    from data_warehousing_assignment_spark.operators.ivf import _l2sq
-    from data_warehousing_assignment_spark.operators.similarity import (
-        quantize,
-    )
+    from data_warehousing_assignment_spark.operators.ivf import _l2sq, lloyd_means
+    from data_warehousing_assignment_spark.operators.similarity import quantize
 
     emb = t(spark, sf_dir, "embeddings").select(
         "vec_id", "label", quantize("embedding").alias("qv")
     )
-    cvec = (
-        emb.select("label", F.posexplode("qv").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(
-            F.sum("v").cast("bigint").alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "label",
-            "pos",
-            F.expr(
-                "CASE WHEN s >= 0 THEN (2*s + n) div (2*n)"
-                " ELSE -((2*(-s) + n) div (2*n)) END"
-            ).alias("mv"),
-        )
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                lambda st: st["mv"].cast("bigint"),
-            ).alias("c")
-        )
-        .select(F.col("label").alias("clabel"), "c")
+    cvec = lloyd_means(emb, ["label"], "qv", "c").select(
+        F.col("label").alias("clabel"), "c"
     )
     dd = emb.crossJoin(F.broadcast(cvec)).select(
         "vec_id",
         "label",
         "clabel",
-        _l2sq(F.col("qv"), F.col("c")).alias("d"),
+        _l2sq("qv", "c").alias("d"),
     )
     w = Window.partitionBy("vec_id").orderBy("d", "clabel")
     rk = dd.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= 2)

@@ -1,7 +1,8 @@
-"""Build-cost guard for the sign-bit fingerprint and hyperplane-LSH ops:
-building each one sends fewer than BUDGET py4j call commands, so a
-builder that goes back to one literal Column per bit or coefficient
-(thousands of JVM round trips before any data moves) fails here."""
+"""Build-cost guard for the sign-bit fingerprint, hyperplane-LSH and
+IVF/PQ ops: building each one sends fewer than BUDGET py4j call
+commands, so a builder that goes back to one literal Column per bit or
+coefficient, or to Python-lambda Column trees per Lloyd round
+(thousands of JVM round trips before any data moves), fails here."""
 
 from __future__ import annotations
 
@@ -24,6 +25,11 @@ BUDGET = 1000
         "op-ext-ann-lsh",
         "op-ext-ann-lsh-fullprobe",
         "op-ext-embed-neardup",
+        "op-ext-ann-ivf",
+        "op-ext-ann-ivf-pq",
+        "op-ext-ann-ivf-incremental",
+        "op-ext-ann-cell-drift",
+        "op-ext-ann-postfilter",
     ],
 )
 def test_build_sends_few_py4j_calls(spark, op):

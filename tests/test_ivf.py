@@ -415,3 +415,51 @@ def test_probe_cell_topk_np_matches_join_formulation(spark):
     # the zero-norm candidate lands LAST for query 1, with a NULL score
     q1_last = next(r for r in got if r[0] == 1 and r[2] == 5)
     assert q1_last[1] == 12 and q1_last[3] is None
+
+
+def test_lloyd_means_rounds_half_away_from_zero(spark):
+    """The kernel's one integer-mean update (IVF cells, PQ codebooks,
+    nearest-centroid labels) against a pure-Python Decimal replay:
+    negative sums, exact halves on both signs, one key and the PQ
+    two-key (m, code) grouping."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    rows = [
+        (0, 1, [1, -1, 3, 2]),
+        (0, 1, [2, -2, -4, 0]),
+        (0, 2, [-5, 0, 7, 1]),
+        (0, 2, [0, 0, 0, -1]),
+        (0, 2, [1, 1, 1, 0]),
+        (1, 1, [1, -1, -3, 5]),
+        (1, 1, [0, 0, 0, 0]),
+        (1, 1, [1, -1, -3, 0]),
+        (1, 1, [0, 0, 0, -6]),
+    ]
+    df = spark.createDataFrame(rows, "m int, code int, sv array<bigint>")
+
+    def expect(keyfn):
+        groups = {}
+        for r in rows:
+            groups.setdefault(keyfn(r), []).append(r[2])
+        return {
+            k: [
+                int((Decimal(sum(col)) / len(vs)).quantize(
+                    Decimal(1), rounding=ROUND_HALF_UP))
+                for col in zip(*vs)
+            ]
+            for k, vs in groups.items()
+        }
+
+    two = {
+        (r.m, r.code): list(r.cw)
+        for r in ivf.lloyd_means(df, ["m", "code"], "sv", "cw").collect()
+    }
+    assert two == expect(lambda r: (r[0], r[1]))
+    one = {
+        r.code: list(r.cw)
+        for r in ivf.lloyd_means(df, ["code"], "sv", "cw").collect()
+    }
+    assert one == expect(lambda r: r[1])
+    # the halves really are exercised: ±1.5 and −0.5 for (0, 1),
+    # ±0.5 and −1.5 for (1, 1)
+    assert two[(0, 1)][:3] == [2, -2, -1] and two[(1, 1)][:3] == [1, -1, -2]

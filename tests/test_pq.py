@@ -8,8 +8,10 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.operators import pq
+from data_warehousing_assignment_spark.operators.ivf import _l2sq
 from data_warehousing_assignment_spark.operators.similarity import (
     brute_force_cosine_topk,
+    quantize,
 )
 from tests.conftest import SF_SMALL
 
@@ -73,80 +75,103 @@ def test_codebooks_match_numpy_replay(spark):
     assert got == exp_flat
 
 
-def test_nearest_code_agg_path_matches_window_ranking(spark):
-    """The r14 MIN(struct(_d, code)) fast path must reproduce the window
-    formulation's rank-1 codeword exactly — including the code-id
-    tie-break and the ‖cw‖²−2·sv·cw ≡ ‖sv−cw‖² order equivalence."""
+def _qvecs(corpus):
+    return corpus.select(
+        F.col("vec_id").alias("_id"), quantize("embedding").alias("_qv")
+    )
+
+
+def _slices(vecs):
+    """(_id, m, sv): every vector's M subvector slices, one row each."""
+    return vecs.select(
+        "_id",
+        F.expr(
+            f"posexplode(transform(sequence(0, {pq.PQ_M - 1}),"
+            f" m -> slice(_qv, m * {pq.PQ_DSUB} + 1, {pq.PQ_DSUB}))) AS (m, sv)"
+        ),
+    )
+
+
+def _window_codes(vecs, books):
+    """Reference argmin: explicit squared-L2 per (vector, subspace,
+    codeword) + row_number over (distance, code)."""
     from pyspark.sql import Window
 
-    corpus = emb(spark).limit(120)
-    sv = pq.subvectors(corpus, "vec_id", "embedding")
-    books = pq.pq_codebooks(corpus.limit(80), n_iters=1)
-    fast = {
-        (r._id, r.m): r.code
-        for r in pq._nearest_code(sv, books).collect()
-    }
-    scored = sv.join(F.broadcast(books), "m").select(
-        "_id", "m", "code",
-        pq._sub_l2sq(F.col("sv"), F.col("cw")).alias("_d"),
+    scored = _slices(vecs).join(F.broadcast(books), "m").select(
+        "_id", "m", "code", _l2sq("sv", "cw").alias("_d")
     )
     w = Window.partitionBy("_id", "m").orderBy("_d", "code")
-    ref = {
+    return {
         (r._id, r.m): r.code
         for r in scored.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
         .collect()
     }
-    assert fast == ref
+
+
+def test_nearest_code_agg_path_matches_window_ranking(spark):
+    """pq_encode's row-local argmin (the kernel's nearest_sql over the
+    broadcast book) must reproduce the window formulation's rank-1
+    codeword exactly — the ‖cw‖²−2·sv·cw ≡ ‖sv−cw‖² order equivalence
+    and the code-id tie-break — and its nx must equal the sum of the
+    chosen codewords' ‖cw‖². Real vectors are encoded against a
+    codebook trained on a PREFIX, so assignments are non-trivial for
+    the held-out rows; a hand-built book adds an exact tie."""
+    corpus = emb(spark).limit(120)
+    trained = pq.pq_codebooks(corpus.limit(80), n_iters=1)
+    # every subspace: vec 1 sits exactly between codes 0 and 1 (tie →
+    # code 0), vec 2 is nearer code 1, vec 3 nearest code 2.
+    d = pq.PQ_DSUB
+    unit = lambda x, y: [x, y] + [0] * (d - 2)
+    tie_vecs = spark.createDataFrame(
+        [(1, unit(5, 0) * pq.PQ_M), (2, unit(9, 1) * pq.PQ_M),
+         (3, unit(90, 90) * pq.PQ_M)],
+        "_id bigint, _qv array<bigint>",
+    )
+    tie_books = spark.createDataFrame(
+        [(m, c, cw) for m in range(pq.PQ_M)
+         for c, cw in enumerate([unit(0, 0), unit(10, 0), unit(100, 100)])],
+        "m int, code int, cw array<bigint>",
+    )
+    for vecs, books in ((_qvecs(corpus), trained), (tie_vecs, tie_books)):
+        nn = {
+            (r.m, r.code): sum(int(x) * int(x) for x in r.cw)
+            for r in books.collect()
+        }
+        ref = _window_codes(vecs, books)
+        got = pq.pq_encode(vecs, books).select("_id", "codes", "nx").collect()
+        assert len(got) == vecs.count()
+        for r in got:
+            assert len(r.codes) == pq.PQ_M
+            for m, code in enumerate(r.codes):
+                assert ref[(r._id, m)] == code
+            assert r.nx == sum(nn[(m, c)] for m, c in enumerate(r.codes))
+    got = {r._id: list(r.codes) for r in pq.pq_encode(tie_vecs, tie_books).collect()}
+    assert got == {1: [0] * pq.PQ_M, 2: [1] * pq.PQ_M, 3: [2] * pq.PQ_M}
 
 
 def test_training_reduces_quantization_error(spark):
     """Lloyd monotonicity on exact integers: total squared quantization
     error after 2 rounds must not exceed the seed codebook's error."""
     corpus = emb(spark)
-    sv = pq.subvectors(corpus, "vec_id", "embedding")
+    vecs = _qvecs(corpus)
 
     def total_err(codebooks):
-        assigned = pq._nearest_code(sv, codebooks).join(
-            F.broadcast(codebooks), ["m", "code"]
-        )
-        return (
-            assigned.select(
-                pq._sub_l2sq(F.col("sv"), F.col("cw")).alias("e")
+        chosen = (
+            pq.pq_encode(vecs, codebooks)
+            .select("_qv", F.expr("posexplode(codes) AS (m, code)"))
+            .select(
+                "m", "code",
+                F.expr(f"slice(_qv, m * {pq.PQ_DSUB} + 1, {pq.PQ_DSUB})")
+                .alias("sv"),
             )
-            .agg(F.sum("e"))
-            .first()[0]
+            .join(F.broadcast(codebooks), ["m", "code"])
         )
+        return chosen.select(_l2sq("sv", "cw").alias("e")).agg(F.sum("e")).first()[0]
 
     seeds = pq.pq_codebooks(corpus, n_iters=0)
     trained = pq.pq_codebooks(corpus, n_iters=2)
     assert total_err(trained) <= total_err(seeds)
-
-
-def test_packed_encode_matches_rowwise_encode_and_norms(spark):
-    """The r14 packed row-local encode (pq_encode_packed) must reproduce
-    pq_encode's per-(vector, subspace) codes EXACTLY (same argmin key,
-    same code tie-break) and its nx must equal the sum of the chosen
-    codewords' ‖cw‖² — the xnrm the ADC scorer previously attached via
-    an n-row join. Codebook trained on a PREFIX so assignments are
-    non-trivial for the held-out rows."""
-    corpus = emb(spark).limit(150)
-    books = pq.pq_codebooks(corpus.limit(80), n_iters=1)
-    ref_codes = {
-        (r._id, r.m): r.code
-        for r in pq.pq_encode(corpus, books).collect()
-    }
-    nn = {
-        (r.m, r.code): sum(int(x) * int(x) for x in r.cw)
-        for r in books.collect()
-    }
-    packed = pq.pq_encode_packed(corpus, books).collect()
-    assert len(packed) == corpus.count()
-    for r in packed:
-        assert len(r.codes) == pq.PQ_M
-        for m, code in enumerate(r.codes):
-            assert ref_codes[(r._id, m)] == code
-        assert r.nx == sum(nn[(m, c)] for m, c in enumerate(r.codes))
 
 
 def test_codes_are_compact_and_total(spark):
@@ -154,12 +179,15 @@ def test_codes_are_compact_and_total(spark):
     32x-compression contract (8 small ints per 64-dim float vector)."""
     corpus = emb(spark)
     books = pq.pq_codebooks(corpus)
-    codes = pq.pq_encode(corpus, books)
+    codes = pq.pq_encode(_qvecs(corpus), books)
     n = corpus.count()
-    assert codes.count() == n * pq.PQ_M
+    assert codes.count() == n
     assert codes.select("_id").distinct().count() == n
     bad = codes.filter(
-        (F.col("code") < 0) | (F.col("code") >= pq.PQ_K)
+        F.expr(
+            f"size(codes) <> {pq.PQ_M}"
+            f" OR exists(codes, c -> c < 0 OR c >= {pq.PQ_K})"
+        )
     ).count()
     assert bad == 0
 
@@ -200,29 +228,3 @@ def test_ivf_pq_recall_matches_ivf_exact(spark):
         assert ranks == [1, 2, 3, 4, 5]
         scores = [x.score for x in sorted(rs, key=lambda x: x.rank)]
         assert scores == sorted(scores, reverse=True)
-
-
-def test_residual_pq_no_worse_at_narrow_shortlist(spark):
-    """The residual variant's reason to exist: at a NARROW shortlist
-    (rerank=25) where non-residual ADC demonstrably loses candidates
-    (measured 0.68 vs the 0.80 ceiling at 8 probes on sf0.001),
-    residual coding must rank no worse. Also pins output-contract
-    parity: 5 ranked rows per query, descending scores."""
-    corpus = emb(spark)
-    queries = corpus.filter(F.col("vec_id") % 100 == 0)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_cosine_topk(corpus, queries, k=5).collect()
-    }
-
-    def recall(residual):
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in pq.ivf_pq_cosine_topk(
-                corpus, queries, k=5, n_clusters=16, n_probe=8,
-                rerank=25, residual=residual,
-            ).collect()
-        }
-        return len(got & exact) / len(exact)
-
-    assert recall(True) >= recall(False)

@@ -38,9 +38,7 @@ def test_cosine_matches_numpy_quantized(spark):
     out = df.select(
         F.col("a.vec_id").alias("ia"),
         F.col("b.vec_id").alias("ib"),
-        sim.cosine_similarity_col(F.col("a.embedding"), F.col("b.embedding")).alias(
-            "c"
-        ),
+        sim.cosine_similarity_col("a.embedding", "b.embedding").alias("c"),
     ).collect()
     by_pair = {(r.ia, r.ib): r.c for r in out}
     for (ia, va), (ib, vb) in [(VECS[i], VECS[j]) for i in range(4) for j in range(4)]:

@@ -30,11 +30,13 @@ Usage: python tools/determinism_check.py [--aqe] [sf_dir] [only ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 NONDETERMINISTIC_BY_CONTRACT: set[str] = set()
 

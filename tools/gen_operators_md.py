@@ -6,9 +6,11 @@ implementing module, first docstring line. Run after registry changes:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -37,7 +39,7 @@ def main() -> int:
         check = "oracle" if name in oracles else "rows-only"
         lines.append(f"| `{name}` | {check} | {summary} |")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/OPERATORS.md", "w") as f:
+    with open(os.path.join(ROOT, "OPERATORS.md"), "w") as f:
         f.write(out)
     print(f"wrote OPERATORS.md: {len(qs)} queries")
     return 0

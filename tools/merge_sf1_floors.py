@@ -13,9 +13,11 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-FLOORS = "/root/repo/bench_floors.json"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FLOORS = os.path.join(ROOT, "bench_floors.json")
 
 
 def main() -> int:

@@ -14,9 +14,11 @@ Intentional exceptions (documented where they occur):
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Queries where a flagged pattern is the documented, size-bounded choice.
 ALLOWED = {

@@ -13,10 +13,12 @@ the per-wave BASELINE.md scale-probe sections (same method as rounds
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402  (SparkSession factory + force + synthesize_sf1)
 

@@ -16,10 +16,12 @@ sf_dir defaults to the synthesized 100× corpus at .scratch/sf10
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -34,7 +36,7 @@ def main() -> int:
 
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     ab = "--prefilter-ab" in sys.argv
-    sf_dir = args[0] if args else "/root/repo/.scratch/sf10"
+    sf_dir = args[0] if args else os.path.join(ROOT, ".scratch", "sf10")
 
     spark = get_spark()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

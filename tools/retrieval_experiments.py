@@ -27,9 +27,11 @@ Usage: python tools/retrieval_experiments.py [sf_dir ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def blockmax_reduction(spark, sf_dir: str, mode: str) -> dict:

@@ -30,10 +30,12 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # parquet reader only — see module docstring
 from pyspark.sql import functions as F
@@ -48,8 +50,8 @@ from data_warehousing_assignment_spark.registry_advanced import (
     _POIS_T,
 )
 
-SF = "/root/repo/.scratch/sf10"
-OUT = "/root/repo/SCALE_PINS.json"
+SF = os.path.join(ROOT, ".scratch", "sf10")
+OUT = os.path.join(ROOT, "SCALE_PINS.json")
 
 
 def _pq(sf_dir: str, table: str) -> str:

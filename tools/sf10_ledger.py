@@ -49,9 +49,10 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-LEDGER = "/root/repo/SF10_SWEEP.json"
+LEDGER = os.path.join(ROOT, "SF10_SWEEP.json")
 
 #: Prior-round batches, transcribed from BASELINE.md. Family-level
 #: claims ("all 22 TPC-H queries", "all 8 KPI views", "the row-local
@@ -211,7 +212,7 @@ EXCLUSIONS = {
 
 
 def all_ops() -> dict[str, str]:
-    d = "/root/repo/data_warehousing_assignment_spark"
+    d = os.path.join(ROOT, "data_warehousing_assignment_spark")
     out = {}
     for f in sorted(os.listdir(d)):
         if f.startswith("registry") and f.endswith(".py"):

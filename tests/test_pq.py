@@ -113,8 +113,7 @@ def test_nearest_code_agg_path_matches_window_ranking(spark):
     """pq_encode's row-local argmin (the kernel's nearest_sql over the
     broadcast book) must reproduce the window formulation's rank-1
     codeword exactly — the ‖cw‖²−2·sv·cw ≡ ‖sv−cw‖² order equivalence
-    and the code-id tie-break — and its nx must equal the sum of the
-    chosen codewords' ‖cw‖². Real vectors are encoded against a
+    and the code-id tie-break. Real vectors are encoded against a
     codebook trained on a PREFIX, so assignments are non-trivial for
     the held-out rows; a hand-built book adds an exact tie."""
     corpus = emb(spark).limit(120)
@@ -134,20 +133,45 @@ def test_nearest_code_agg_path_matches_window_ranking(spark):
         "m int, code int, cw array<bigint>",
     )
     for vecs, books in ((_qvecs(corpus), trained), (tie_vecs, tie_books)):
-        nn = {
-            (r.m, r.code): sum(int(x) * int(x) for x in r.cw)
-            for r in books.collect()
-        }
         ref = _window_codes(vecs, books)
-        got = pq.pq_encode(vecs, books).select("_id", "codes", "nx").collect()
-        assert len(got) == vecs.count()
-        for r in got:
-            assert len(r.codes) == pq.PQ_M
-            for m, code in enumerate(r.codes):
-                assert ref[(r._id, m)] == code
-            assert r.nx == sum(nn[(m, c)] for m, c in enumerate(r.codes))
+        got = {
+            (r._id, m): code
+            for r in pq.pq_encode(vecs, books).collect()
+            for m, code in enumerate(r.codes)
+        }
+        assert got == ref
     got = {r._id: list(r.codes) for r in pq.pq_encode(tie_vecs, tie_books).collect()}
     assert got == {1: [0] * pq.PQ_M, 2: [1] * pq.PQ_M, 3: [2] * pq.PQ_M}
+
+
+def test_packed_encode_matches_rowwise_encode_and_norms(spark):
+    """pq_encode's packed row (codes array + nx) must reproduce a
+    long-form encode — one row per (vector, subspace), argmin by
+    MIN(struct(‖sv−cw‖², code)) — EXACTLY, and its nx must equal the
+    sum of the chosen codewords' ‖cw‖². Codebook trained on a PREFIX so
+    assignments are non-trivial for the held-out rows."""
+    corpus = emb(spark).limit(150)
+    books = pq.pq_codebooks(corpus.limit(80), n_iters=1)
+    vecs = _qvecs(corpus)
+    rowwise = (
+        _slices(vecs)
+        .join(F.broadcast(books), "m")
+        .groupBy("_id", "m")
+        .agg(F.min(F.struct(_l2sq("sv", "cw").alias("d"), "code")).alias("b"))
+    )
+    ref_codes = {(r._id, r.m): r.b.code for r in rowwise.collect()}
+    nn = {
+        (r.m, r.code): sum(int(x) * int(x) for x in r.cw)
+        for r in books.collect()
+    }
+    packed = pq.pq_encode(vecs, books).select("_id", "codes", "nx").collect()
+    assert len(packed) == corpus.count()
+    assert len(ref_codes) == len(packed) * pq.PQ_M
+    for r in packed:
+        assert len(r.codes) == pq.PQ_M
+        for m, code in enumerate(r.codes):
+            assert ref_codes[(r._id, m)] == code
+        assert r.nx == sum(nn[(m, c)] for m, c in enumerate(r.codes))
 
 
 def test_training_reduces_quantization_error(spark):

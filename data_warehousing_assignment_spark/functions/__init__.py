@@ -1,10 +1,8 @@
 """Scalar column functions (SURVEY.md §2.8) + text-analysis extensions."""
 
 from data_warehousing_assignment_spark.functions.cleaning import (
-    abs_repair,
     blank_to_null,
     dedup_sentinels,
-    fallback_id,
     group_mean_impute,
     lenient_decimal,
     normalize_upper_trim,
@@ -21,10 +19,8 @@ from data_warehousing_assignment_spark.functions.dates import (
 )
 
 __all__ = [
-    "abs_repair",
     "blank_to_null",
     "dedup_sentinels",
-    "fallback_id",
     "group_mean_impute",
     "lenient_decimal",
     "normalize_upper_trim",

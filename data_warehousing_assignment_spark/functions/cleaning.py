@@ -1,22 +1,26 @@
-"""Composable Column-level cleaning functions (SURVEY.md §2.8).
+"""Composable cleaning functions (SURVEY.md §2.8), each one SQL text.
 
 Every repair the reference performs row-at-a-time in pandas (``.apply``
 lambdas, ``iterrows`` loops — ref ``02_Extract_and_transform_raw_data/
 A2_hr_etl.py:21-93``, ``ET_combined.py:59-76``) is re-expressed here as a
-pure built-in Column expression. That keeps the whole cleaning stage inside
-JVM whole-stage codegen — no Python boundary in the hot path, which is the
+built-in SQL expression. That keeps the whole cleaning stage inside JVM
+whole-stage codegen — no Python boundary in the hot path, which is the
 difference between O(rows) Python-interpreter time and vectorized columnar
 execution at 100 TB.
 
+Each helper takes a column name or SQL expression and returns SQL text, so
+one rule is written once and can be nested into another, shared between a
+cleaned column and its DQ predicate, and handed to ``selectExpr`` whole;
+a caller that needs a Column wraps the text in ``F.expr``.
+
 No Python UDF is semantically required anywhere (SURVEY.md §2.10);
 ``tests/test_udf_variant.py`` demonstrates the UDF surface by pinning a
-pandas-UDF re-implementation of one cleaner against the native Column
-version (and documents why the native version is the hot-path choice).
+pandas-UDF re-implementation of one cleaner against the native version
+(and documents why the native version is the hot-path choice).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Sentinel strings the reference treats as missing (ref A2_hr_etl.py:22,
@@ -27,9 +31,12 @@ from pyspark.sql import functions as F
 _NULL_SENTINELS = ("", "nan", "null")
 
 
-def blank_to_null(
-    col: Column | str, extra_sentinels: tuple[str, ...] = ()
-) -> Column:
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def blank_to_null(col: str, extra_sentinels: tuple[str, ...] = ()) -> str:
     """op-fn-nullif-coalesce (null-ing half): blank/sentinel strings → NULL.
 
     Reference: ``coalesce(nullif(trim(x),''), ...)`` (ref
@@ -39,84 +46,74 @@ def blank_to_null(
     'none') pass them via ``extra_sentinels``.
     """
     sentinels = _NULL_SENTINELS + tuple(s.lower() for s in extra_sentinels)
-    c = F.trim(F.col(col) if isinstance(col, str) else col)
-    return F.when(F.lower(c).isin(*sentinels), F.lit(None)).otherwise(c)
+    listed = ", ".join(sql_str(s) for s in sentinels)
+    return f"CASE WHEN lower(trim({col})) IN ({listed}) THEN NULL ELSE trim({col}) END"
 
 
-def dedup_sentinels(
-    col: Column | str, default: str, extra_sentinels: tuple[str, ...] = ()
-) -> Column:
+def dedup_sentinels(col: str, default: str, extra_sentinels: tuple[str, ...] = ()) -> str:
     """Sentinel/blank → fixed default (e.g. 'UNASSIGNED_DEPT', ref
     ``A2_hr_etl.py:21-23``; 'UNKNOWN_PROCESS', ref ``C2_ops_etl.py:35-38``)."""
-    return F.coalesce(blank_to_null(col, extra_sentinels), F.lit(default))
+    return f"coalesce({blank_to_null(col, extra_sentinels)}, {sql_str(default)})"
 
 
-def normalize_upper_trim(col: Column | str) -> Column:
+def normalize_upper_trim(col: str) -> str:
     """op-fn-upper-trim: ``UPPER(TRIM(x))`` normalization (ref
     ``03_load_into_fact_and_dim_tables/A3_load_dim_emp.sql:16``;
     pandas ``.str.strip().str.upper()`` ref ``A2_hr_etl.py:21``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.upper(F.trim(c))
+    return f"upper(trim({col}))"
 
 
-def title_case(col: Column | str) -> Column:
+def title_case(col: str) -> str:
     """op-fn-initcap: ``initcap`` / pandas ``.str.title()`` (ref
     ``B2_finance_etl.py:17``, ``stg_finance_expense.sql:17``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.initcap(F.trim(c))
+    return f"initcap(trim({col}))"
 
 
-def remap_values(col: Column | str, mapping: dict[str, str], default: Column | None = None) -> Column:
-    """op-fn-replace-map: value remap via a when/otherwise chain (pandas
-    ``.replace`` — gender map ref ``A2_hr_etl.py:28-30``, ``Travell→Travel``
-    ref ``B2_finance_etl.py:18``). Case-insensitive on the match side, like
+def remap_values(col: str, mapping: dict[str, str], default: str | None = None) -> str:
+    """op-fn-replace-map: value remap via a CASE chain (pandas ``.replace``
+    — gender map ref ``A2_hr_etl.py:28-30``, ``Travell→Travel`` ref
+    ``B2_finance_etl.py:18``). Case-insensitive on the match side, like
     the reference's upper-cased CASE arms (``stg_hr_employee.sql:16-20``).
+    Unmapped values pass through unless ``default`` (SQL text) is given.
     """
+    assert mapping, "mapping must be non-empty"
     c = normalize_upper_trim(col)
-    expr: Column | None = None
-    for raw, clean in mapping.items():
-        cond = c == raw.upper()
-        expr = F.when(cond, F.lit(clean)) if expr is None else expr.when(cond, F.lit(clean))
-    assert expr is not None, "mapping must be non-empty"
-    orig = F.col(col) if isinstance(col, str) else col
-    return expr.otherwise(default if default is not None else orig)
+    arms = " ".join(
+        f"WHEN {c} = {sql_str(raw.upper())} THEN {sql_str(clean)}"
+        for raw, clean in mapping.items()
+    )
+    return f"CASE {arms} ELSE {col if default is None else default} END"
 
 
-def whitelist(col: Column | str, allowed: dict[str, str], fallback: str) -> Column:
+def whitelist(col: str, allowed: dict[str, str], fallback: str) -> str:
     """Whitelist semantics (ref Q10, ``A2_hr_etl.py:66-68``): normalized
     value must map into `allowed` (upper-key → canonical), else `fallback`
     — NOT passthrough."""
-    return remap_values(col, allowed, default=F.lit(fallback))
+    return remap_values(col, allowed, default=sql_str(fallback))
 
 
-def strip_float_suffix(col: Column | str) -> Column:
+def strip_float_suffix(col: str) -> str:
     """op-fn-split-part: repair float-strings like ``'2002.0'`` → ``'2002'``
     (ref ``B2_finance_etl.py:51-53``; regex guard + split_part in
     ``stg_finance_expense.sql:32-33``). Non-matching values pass through."""
-    c = F.trim(F.col(col) if isinstance(col, str) else col)
-    return F.when(c.rlike(r"^\d+\.0$"), F.split(c, r"\.").getItem(0)).otherwise(c)
+    c = f"trim({col})"
+    return (
+        rf"CASE WHEN {c} RLIKE '^\\d+\\.0$' THEN split({c}, '\\.')[0] ELSE {c} END"
+    )
 
 
-def lenient_decimal(col: Column | str, precision: int = 12, scale: int = 2) -> Column:
+def lenient_decimal(col: str, precision: int = 12, scale: int = 2) -> str:
     """op-fn-tonumeric: lenient numeric cast — unparseable → NULL, matching
     ``pd.to_numeric(errors='coerce')`` (ref ``A2_hr_etl.py:57``). Uses
     try_cast so the behavior holds even under ANSI mode."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast(f"decimal({precision},{scale})")
-
-
-def abs_repair(col: Column | str) -> Column:
-    """op-fn-abs: negative-value repair ``abs(salary)`` (ref
-    ``A2_hr_etl.py:63``, ``stg_hr_employee.sql:29``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.abs(c)
+    return f"try_cast({col} AS decimal({precision},{scale}))"
 
 
 def parse_date_multi(
-    col: Column | str,
+    col: str,
     formats: tuple[str, ...] = ("yyyy-MM-dd", "dd-MM-yyyy"),
     fallback: str | None = None,
-) -> Column:
+) -> str:
     """op-fn-date-parse-multi: tolerant multi-format date parse by ordered
     trial parsing — try each format in order, first success wins;
     unparseable → `fallback` (Ops uses ``'1957-01-01'``, ref
@@ -126,47 +123,25 @@ def parse_date_multi(
     semantics use :func:`...functions.dates.date_safe_dispatch`.
     try_to_date keeps this ANSI-safe (bad input → NULL, never a throw).
     """
-    c = F.trim(F.col(col) if isinstance(col, str) else col)
-    attempts = [F.try_to_date(c, fmt) for fmt in formats]
-    if fallback is not None:
-        attempts.append(F.to_date(F.lit(fallback)))
-    return F.coalesce(*attempts)
+    attempts = ", ".join(f"try_to_date(trim({col}), {sql_str(fmt)})" for fmt in formats)
+    parsed = f"coalesce({attempts})"
+    return parsed if fallback is None else f"coalesce({parsed}, to_date({sql_str(fallback)}))"
 
 
-def fallback_id(col: Column | str, prefix: str, order_col: Column) -> Column:
-    """op-win-rownumber-unordered support: fabricate ``TEMP_<n>`` ids for
-    missing natural keys (ref ``A2_hr_etl.py:80-86``, ``stg_hr_employee.
-    sql:42``). The caller supplies a deterministic order column.
-
-    SCALE WARNING: the global row_number forces a single-partition
-    exchange — acceptable only on dim-sized frames. Fact-sized pipelines
-    use :func:`fallback_id_hash` (no exchange, stable across runs).
-    """
-    from pyspark.sql import Window
-
-    c = blank_to_null(col)
-    rn = F.row_number().over(Window.orderBy(order_col))
-    return F.coalesce(c, F.concat(F.lit(prefix), rn.cast("string")))
-
-
-def fallback_id_hash(
-    col: Column | str, prefix: str, attrs: list[Column | str]
-) -> Column:
-    """Scale-path fabricated id: ``<prefix><md5 of stable attributes>``
+def fallback_id_hash(col: str, prefix: str, attrs: list[str]) -> str:
+    """Fabricated id for a missing natural key (ref ``A2_hr_etl.py:80-86``,
+    ``stg_hr_employee.sql:42``): ``<prefix><md5 of stable attributes>``
     instead of a global row number — fully parallel (no exchange) and
     stable across reruns, so a re-load of the same batch fabricates the
-    SAME id (the row_number variant renumbers on every run, breaking
-    SCD2/fact idempotency for the fabricated keys). Callers dedup rows
-    first; identical attribute tuples intentionally collapse to one id.
+    SAME id and SCD2/fact loads stay idempotent for the fabricated keys.
+    Callers dedup rows first; identical attribute tuples intentionally
+    collapse to one id.
     """
-    c = blank_to_null(col)
-    parts = [
-        F.coalesce(
-            (F.col(a) if isinstance(a, str) else a).cast("string"), F.lit("\x00")
-        )
-        for a in attrs
-    ]
-    return F.coalesce(c, F.concat(F.lit(prefix), F.md5(F.concat_ws("::", *parts))))
+    parts = ", ".join(f"coalesce(CAST({a} AS STRING), '\\u0000')" for a in attrs)
+    return (
+        f"coalesce({blank_to_null(col)}, "
+        f"concat({sql_str(prefix)}, md5(concat_ws('::', {parts}))))"
+    )
 
 
 def group_mean_impute(

@@ -4,37 +4,20 @@ Reference: insert-only-unseen-members anti-join upsert (ref
 ``03_load_into_fact_and_dim_tables/A3_load_dim_emp.sql:14-19``,
 ``C3_load_dim_ops.sql:14-34``) with SERIAL surrogate ids.
 
-Spark has no SERIAL; two strategies, chosen by dim size:
-
-* **row_number continuation** (here): new members get
-  ``max(existing_id) + row_number()`` ordered by the natural key —
-  deterministic and gap-free, but the unpartitioned window is a
-  single-partition exchange. Correct choice ONLY for dim-sized inputs
-  (the distinct-members set, thousands of rows).
-* **hash surrogate** (:func:`hash_surrogate_key`): md5 of the natural key,
-  like the dbt variant (ref ``snapshots/scd2_dim_employee.sql:14``) —
-  fully parallel, the right choice for fact-sized or high-cardinality
-  keys at 100 TB.
+Spark has no SERIAL: new members get ``max(existing_id) + row_number()``
+ordered by the natural key — deterministic and gap-free, but the
+unpartitioned window is a single-partition exchange. Correct choice ONLY
+for dim-sized inputs (the distinct-members set, thousands of rows).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.functions.cleaning import (
     normalize_upper_trim,
 )
-
-
-def hash_surrogate_key(cols: list[str | Column], out: str = "sk") -> Column:
-    """Scale-path surrogate key: md5 over the natural key — no exchange,
-    stable across runs and engines (ref dbt generate_surrogate_key)."""
-    parts = [
-        F.coalesce((F.col(c) if isinstance(c, str) else c).cast("string"), F.lit(""))
-        for c in cols
-    ]
-    return F.md5(F.concat_ws("::", *parts)).alias(out)
 
 
 def upsert_dim(
@@ -53,7 +36,7 @@ def upsert_dim(
     existing member list when dim-sized; new-member numbering continues
     from max(existing_id).
     """
-    norm = normalize_upper_trim if normalize else (lambda c: F.col(c))
+    norm = (lambda c: F.expr(normalize_upper_trim(c))) if normalize else F.col
 
     batch_distinct = (
         batch_members.select(F.trim(F.col(member_col)).alias(member_col))

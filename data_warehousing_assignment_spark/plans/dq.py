@@ -8,8 +8,8 @@ with rows_processed / rows_failed / status ∈ {success, partial, failed}
 (ref ``A2_hr_etl.py:103-119``, ``B3_load_fin_facts.sql:106-126``).
 
 Spark-first: the reference builds these logs row-at-a-time inside Python
-loops; here each issue class is one filtered projection and the log is a
-union — the issue scan is the same columnar pass as the cleaning itself,
+loops; here every issue class of a table is one element of a single
+generator projection — one scan of the raw batch for the whole log —
 and the audit counts are plan-side aggregates (no driver collect)."""
 
 from __future__ import annotations
@@ -17,36 +17,40 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions.cleaning import sql_str
+
 DQ_COLUMNS = ("table_name", "column_name", "row_reference", "original_value", "issue")
 
 
-def dq_issues(
+def dq_log(
     df: DataFrame,
     table_name: str,
-    column_name: str,
-    row_ref: str | Column,
-    predicate: Column,
-    issue: str,
+    row_ref: str,
+    rules: list[tuple[str, str, str]],
 ) -> DataFrame:
-    """One DQ-log slice: rows of ``df`` where ``predicate`` holds, shaped
-    to the reference's data_quality_log schema (ref
-    ``combined_dw_schema.sql:133-142``; job_id is stamped by the caller —
-    it is per-run, not per-issue)."""
-    ref = F.col(row_ref) if isinstance(row_ref, str) else row_ref
-    return df.filter(predicate).select(
-        F.lit(table_name).alias("table_name"),
-        F.lit(column_name).alias("column_name"),
-        ref.cast("string").alias("row_reference"),
-        F.col(column_name).cast("string").alias("original_value"),
-        F.lit(issue).alias("issue"),
+    """The DQ log of ``df`` in one projection: one row per (row, rule)
+    whose SQL predicate holds, shaped to the reference's
+    data_quality_log schema (ref ``combined_dw_schema.sql:133-142``;
+    job_id is stamped by the caller — it is per-run, not per-issue).
+
+    ``rules`` are ``(column_name, predicate SQL, issue)``; the logged
+    ``original_value`` is the raw ``column_name`` cell and
+    ``row_reference`` the ``row_ref`` cell, both as strings. Every rule
+    is one ``IF(pred, struct, NULL)`` element of a per-row array that
+    ``inline`` expands after ``array_compact`` drops the misses, so the
+    frame is scanned once however many rules there are (a NULL
+    predicate logs nothing, as a filter would). ``array_compact``, not
+    ``filter(..., x -> x IS NOT NULL)``: its array is typed null-free,
+    so the literal fields stay non-nullable in the log's schema."""
+    entries = ", ".join(
+        f"IF({pred}, named_struct('table_name', {sql_str(table_name)}, "
+        f"'column_name', {sql_str(column)}, "
+        f"'row_reference', CAST(`{row_ref}` AS STRING), "
+        f"'original_value', CAST(`{column}` AS STRING), "
+        f"'issue', {sql_str(issue)}), NULL)"
+        for column, pred, issue in rules
     )
-
-
-def union_dq(*slices: DataFrame) -> DataFrame:
-    out = slices[0]
-    for s in slices[1:]:
-        out = out.unionByName(s)
-    return out
+    return df.selectExpr(f"inline(array_compact(array({entries})))")
 
 
 def audit_frame(

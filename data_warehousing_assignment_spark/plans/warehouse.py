@@ -23,13 +23,13 @@ Ops to 1957-01-01; Q7 gender keeps the full 'UNKNOWN' string.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.functions import cleaning as cl
 from data_warehousing_assignment_spark.functions.dates import build_dim_time
 from data_warehousing_assignment_spark.operators.dedup import duplicate_rows
-from data_warehousing_assignment_spark.plans.dq import audit_frame, dq_issues, union_dq
+from data_warehousing_assignment_spark.plans.dq import audit_frame, dq_log
 from data_warehousing_assignment_spark.plans.dims import upsert_dim
 from data_warehousing_assignment_spark.plans.facts import incremental_fact_insert
 from data_warehousing_assignment_spark.plans.scd2 import merge_scd2
@@ -43,149 +43,111 @@ EMP_ATTRS = ["name", "gender", "date_of_joining", "manager_id", "department"]
 # Extract + Transform (ref ET_combined.py / A2+B2+C2)
 # --------------------------------------------------------------------------
 
+#: One rule per cleaned column: (column, SQL over the raw batch, the DQ
+#: entry its repair logs or None). A DQ entry is (raw column, predicate
+#: SQL, issue), as :func:`~.dq.dq_log` takes it. Each parse is one named
+#: SQL fragment that the cleaned column and its predicate share, so a
+#: repair and its log entry cannot drift apart.
+Rule = tuple[str, str, tuple[str, str, str] | None]
+
+# Fabricated employee ids use the hash path (TEMP_<md5 of attributes>) —
+# no single-partition exchange, and the SAME id on a re-load of the same
+# batch, which keeps SCD2 and the snapshot fact idempotent even for rows
+# whose natural key was missing.
+_EMP_ID = cl.fallback_id_hash(
+    "EmployeeID", "TEMP_",
+    ["Name", "Department", "Gender", "DateOfJoining", "ManagerID", "Salary", "Status"],
+)
+_DEPARTMENT = cl.dedup_sentinels(cl.normalize_upper_trim("Department"), "UNASSIGNED_DEPT")
+_JOINED = cl.parse_date_multi("DateOfJoining")
+_SALARY = cl.lenient_decimal("Salary")
+_MANAGER = cl.blank_to_null(cl.strip_float_suffix("ManagerID"))
+_GENDERS = ", ".join(cl.sql_str(k) for k in GENDER_MAP)
+
+HR_RULES: tuple[Rule, ...] = (
+    ("employee_id", _EMP_ID, None),
+    ("name", f"coalesce({cl.blank_to_null('Name')}, concat('EMP_', {_EMP_ID}))", None),
+    ("department", _DEPARTMENT, None),
+    ("gender", cl.whitelist("Gender", GENDER_MAP, "UNKNOWN"),
+     ("Gender", f"{cl.normalize_upper_trim('Gender')} NOT IN ({_GENDERS})",
+      "invalid gender set to UNKNOWN")),
+    ("date_of_joining", _JOINED,
+     ("DateOfJoining", f"{_JOINED} IS NULL AND {cl.blank_to_null('DateOfJoining')} IS NOT NULL",
+      "unparseable date set to NULL")),
+    ("manager_id", f"coalesce({_MANAGER}, 'UNKNOWN')",
+     ("ManagerID", f"{_MANAGER} IS NULL", "missing manager set to UNKNOWN")),
+    ("salary", f"abs({_SALARY})",
+     ("Salary", f"{_SALARY} < 0", "negative salary repaired with abs()")),
+    ("status", cl.whitelist("Status", STATUS_MAP, "Unknown"), None),
+)
+
+_AMOUNT = cl.lenient_decimal("ExpenseAmount")
+_APPROVER = cl.blank_to_null(cl.strip_float_suffix("ApprovedBy"))
+
+FINANCE_RULES: tuple[Rule, ...] = (
+    ("employee_id", "trim(EmployeeID)", None),
+    ("expense_type", cl.title_case(cl.remap_values(
+        cl.dedup_sentinels("ExpenseType", "Unknown"), {"Travell": "Travel"})), None),
+    ("expense_amount", _AMOUNT, None),
+    ("is_refund", f"{_AMOUNT} < 0",
+     ("ExpenseAmount", f"{_AMOUNT} < 0", "negative amount flagged as refund")),
+    ("expense_date", cl.parse_date_multi("ExpenseDate"), None),
+    ("approved_by", f"coalesce({_APPROVER}, 'UNKNOWN')",
+     ("ApprovedBy", f"{_APPROVER} IS NULL", "missing approver set to UNKNOWN")),
+)
+
+_HOURS = cl.lenient_decimal("DowntimeHours", 10, 2)
+_PROCESSED = cl.parse_date_multi("ProcessDate")
+
+OPS_RULES: tuple[Rule, ...] = (
+    ("department", _DEPARTMENT, None),
+    ("process_name", cl.dedup_sentinels("ProcessName", "UNKNOWN_PROCESS"), None),
+    ("location", "trim(Location)", None),
+    # NULL here is imputed by clean_ops from its group mean
+    ("downtime_hours", f"CAST({_HOURS} AS DOUBLE)",
+     ("DowntimeHours", f"{_HOURS} IS NULL", "missing downtime imputed")),
+    ("process_date", cl.parse_date_multi("ProcessDate", fallback="1957-01-01"),
+     ("ProcessDate", f"{_PROCESSED} IS NULL", "invalid date set to 1957-01-01")),
+)
+
+
+def apply_rules(
+    raw: DataFrame, table_name: str, row_ref: str, rules: tuple[Rule, ...]
+) -> tuple[DataFrame, DataFrame]:
+    """(clean, dq_log) of one raw batch from its rule table: the clean
+    frame is the deduplicated batch in one projection of every rule, the
+    log one projection of every rule's DQ entry over the raw batch (so a
+    duplicated dirty row logs once per copy)."""
+    clean = raw.dropDuplicates().selectExpr(*(f"{sql} AS {col}" for col, sql, _ in rules))
+    return clean, dq_log(raw, table_name, row_ref, [dq for _, _, dq in rules if dq])
+
 
 def clean_hr(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """HR cleaning (ref ``A2_hr_etl.py:14-93``): returns (clean, dq_log).
-
-    Fabricated employee ids use the hash path (TEMP_<md5 of attributes>)
-    — no single-partition exchange, and the SAME id on a re-load of the
-    same batch, which keeps SCD2 and the snapshot fact idempotent even
-    for rows whose natural key was missing.
-    """
-    df = raw
-    dq = union_dq(
-        dq_issues(
-            df, "staging_employee", "Gender", "EmployeeID",
-            ~cl.normalize_upper_trim("Gender").isin(*GENDER_MAP), "invalid gender set to UNKNOWN",
-        ),
-        dq_issues(
-            df, "staging_employee", "DateOfJoining", "EmployeeID",
-            cl.parse_date_multi("DateOfJoining").isNull()
-            & cl.blank_to_null("DateOfJoining").isNotNull(),
-            "unparseable date set to NULL",
-        ),
-        dq_issues(
-            df, "staging_employee", "Salary", "EmployeeID",
-            cl.lenient_decimal("Salary") < 0, "negative salary repaired with abs()",
-        ),
-        dq_issues(
-            df, "staging_employee", "ManagerID", "EmployeeID",
-            cl.blank_to_null("ManagerID").isNull(), "missing manager set to UNKNOWN",
-        ),
-        duplicate_rows(df).select(
-            F.lit("staging_employee").alias("table_name"),
-            F.lit("*").alias("column_name"),
-            F.col("EmployeeID").cast("string").alias("row_reference"),
-            F.col("n_rows").cast("string").alias("original_value"),
-            F.lit("exact duplicate rows dropped").alias("issue"),
-        ),
+    """HR cleaning (ref ``A2_hr_etl.py:14-93``): returns (clean, dq_log);
+    the log also reports each set of exact duplicate rows dropped."""
+    clean, dq = apply_rules(raw, "staging_employee", "EmployeeID", HR_RULES)
+    duplicates = duplicate_rows(raw).select(
+        F.lit("staging_employee").alias("table_name"),
+        F.lit("*").alias("column_name"),
+        F.col("EmployeeID").cast("string").alias("row_reference"),
+        F.col("n_rows").cast("string").alias("original_value"),
+        F.lit("exact duplicate rows dropped").alias("issue"),
     )
-    clean = (
-        df.dropDuplicates()
-        .withColumn(
-            "employee_id",
-            cl.fallback_id_hash(
-                "EmployeeID", "TEMP_",
-                ["Name", "Department", "Gender", "DateOfJoining",
-                 "ManagerID", "Salary", "Status"],
-            ),
-        )
-        .withColumn(
-            "department", cl.dedup_sentinels(cl.normalize_upper_trim("Department"), "UNASSIGNED_DEPT")
-        )
-        .withColumn("gender", cl.whitelist("Gender", GENDER_MAP, "UNKNOWN"))
-        .withColumn("date_of_joining", cl.parse_date_multi("DateOfJoining"))
-        .withColumn(
-            "manager_id",
-            F.coalesce(cl.blank_to_null(cl.strip_float_suffix("ManagerID")), F.lit("UNKNOWN")),
-        )
-        .withColumn("salary", F.abs(cl.lenient_decimal("Salary")))
-        .withColumn("status", cl.whitelist("Status", STATUS_MAP, "Unknown"))
-        .withColumn(
-            "name",
-            F.coalesce(
-                cl.blank_to_null("Name"),
-                F.concat(F.lit("EMP_"), F.col("employee_id")),
-            ),
-        )
-        .select(
-            "employee_id", "name", "department", "gender",
-            "date_of_joining", "manager_id", "salary", "status",
-        )
-    )
-    return clean, dq
+    return clean, dq.unionByName(duplicates)
 
 
 def clean_finance(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Finance cleaning (ref ``B2_finance_etl.py:12-76``)."""
-    df = raw
-    dq = union_dq(
-        dq_issues(
-            df, "staging_finance", "ExpenseAmount", "EmployeeID",
-            cl.lenient_decimal("ExpenseAmount") < 0, "negative amount flagged as refund",
-        ),
-        dq_issues(
-            df, "staging_finance", "ApprovedBy", "EmployeeID",
-            cl.blank_to_null("ApprovedBy").isNull(), "missing approver set to UNKNOWN",
-        ),
-    )
-    clean = (
-        df.dropDuplicates()
-        .withColumn("employee_id", F.trim("EmployeeID"))
-        .withColumn(
-            "expense_type",
-            cl.title_case(
-                cl.remap_values(
-                    cl.dedup_sentinels("ExpenseType", "Unknown"), {"Travell": "Travel"}
-                )
-            ),
-        )
-        .withColumn("expense_amount", cl.lenient_decimal("ExpenseAmount"))
-        .withColumn("is_refund", F.col("expense_amount") < 0)
-        .withColumn("expense_date", cl.parse_date_multi("ExpenseDate"))
-        .withColumn(
-            "approved_by",
-            F.coalesce(cl.blank_to_null(cl.strip_float_suffix("ApprovedBy")), F.lit("UNKNOWN")),
-        )
-        .select(
-            "employee_id", "expense_type", "expense_amount",
-            "is_refund", "expense_date", "approved_by",
-        )
-    )
-    return clean, dq
+    return apply_rules(raw, "staging_finance", "EmployeeID", FINANCE_RULES)
 
 
 def clean_ops(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Operations cleaning (ref ``C2_ops_etl.py:12-113``): group-mean
     imputation for missing downtime, 1957 date fallback."""
-    df = raw
-    dq = union_dq(
-        dq_issues(
-            df, "staging_operations", "DowntimeHours", "ProcessName",
-            cl.lenient_decimal("DowntimeHours").isNull(), "missing downtime imputed",
-        ),
-        dq_issues(
-            df, "staging_operations", "ProcessDate", "ProcessName",
-            cl.parse_date_multi("ProcessDate").isNull(), "invalid date set to 1957-01-01",
-        ),
-    )
-    staged = (
-        df.dropDuplicates()
-        .withColumn(
-            "department", cl.dedup_sentinels(cl.normalize_upper_trim("Department"), "UNASSIGNED_DEPT")
-        )
-        .withColumn("process_name", cl.dedup_sentinels("ProcessName", "UNKNOWN_PROCESS"))
-        .withColumn("location", F.trim("Location"))
-        .withColumn(
-            "downtime_hours", cl.lenient_decimal("DowntimeHours", 10, 2).cast("double")
-        )
-        .withColumn(
-            "process_date", cl.parse_date_multi("ProcessDate", fallback="1957-01-01")
-        )
-    )
+    staged, dq = apply_rules(raw, "staging_operations", "ProcessName", OPS_RULES)
     clean = cl.group_mean_impute(
         staged, "downtime_hours", ["department", "process_name", "location"]
-    ).select("department", "process_name", "location", "downtime_hours", "process_date")
+    )
     return clean, dq
 
 
@@ -193,18 +155,28 @@ def clean_ops(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
 # Transform + Load (ref TL_combine.sql)
 # --------------------------------------------------------------------------
 
-
-def empty_dim(spark: SparkSession, id_col: str, member_col: str) -> DataFrame:
-    return spark.createDataFrame([], f"{id_col} int, {member_col} string")
-
-
-def empty_scd2_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [],
+#: Schema of each incremental state table, for the empty prior of a key
+#: an initial load has no prior for.
+STATE_SCHEMAS = {
+    "dim_department": "department_id int, department_name string",
+    "dim_expense_type": "expense_type_id int, expense_type_name string",
+    "dim_process": "process_id int, process_name string",
+    "dim_location": "location_id int, location_name string",
+    "dim_employee": (
         "employee_id string, name string, gender string, date_of_joining date, "
         "manager_id string, department string, row_hash string, "
-        "valid_from date, valid_to date, is_current boolean",
-    )
+        "valid_from date, valid_to date, is_current boolean"
+    ),
+    "fact_employee": "employee_id string, time_id int, salary decimal(12,2), status string",
+    "fact_expenses": (
+        "employee_id string, expense_type_id int, expense_amount decimal(12,2), "
+        "approved_by string, time_id int, is_refund boolean"
+    ),
+    "fact_downtime": (
+        "department_id int, process_id int, location_id int, time_id int, "
+        "downtime_hours decimal(10,2)"
+    ),
+}
 
 
 def load_warehouse(
@@ -222,9 +194,16 @@ def load_warehouse(
     """
     prior = prior or {}
 
+    def prior_of(key: str) -> DataFrame:
+        # an empty frame only for a key the prior lacks: a default
+        # argument to prior.get would be built on every load
+        if key in prior:
+            return prior[key]
+        return spark.createDataFrame([], STATE_SCHEMAS[key])
+
     dim_department = upsert_dim(
         upsert_dim(
-            prior.get("dim_department", empty_dim(spark, "department_id", "department_name")),
+            prior_of("dim_department"),
             hr_clean.select(F.col("department").alias("department_name")),
             "department_name", "department_id",
         ),
@@ -232,22 +211,22 @@ def load_warehouse(
         "department_name", "department_id",
     )
     dim_expense_type = upsert_dim(
-        prior.get("dim_expense_type", empty_dim(spark, "expense_type_id", "expense_type_name")),
+        prior_of("dim_expense_type"),
         fin_clean.select(F.col("expense_type").alias("expense_type_name")),
         "expense_type_name", "expense_type_id",
     )
     dim_process = upsert_dim(
-        prior.get("dim_process", empty_dim(spark, "process_id", "process_name")),
+        prior_of("dim_process"),
         ops_clean.select("process_name"), "process_name", "process_id",
     )
     dim_location = upsert_dim(
-        prior.get("dim_location", empty_dim(spark, "location_id", "location_name")),
+        prior_of("dim_location"),
         ops_clean.select(F.col("location").alias("location_name")),
         "location_name", "location_id",
     )
 
     dim_employee = merge_scd2(
-        prior.get("dim_employee", empty_scd2_dim(spark)),
+        prior_of("dim_employee"),
         hr_clean.select("employee_id", *EMP_ATTRS),
         "employee_id", EMP_ATTRS, load_date,
     )
@@ -268,22 +247,17 @@ def load_warehouse(
         .crossJoin(F.broadcast(time_today.select("time_id")))
         .select("employee_id", "time_id", "salary", "status")
     )
-    fact_employee_prior = prior.get(
-        "fact_employee",
-        spark.createDataFrame(
-            [], "employee_id string, time_id int, salary decimal(12,2), status string"
-        ),
-    )
+    fact_employee_prior = prior_of("fact_employee")
     fact_employee = fact_employee_prior.unionByName(
         incremental_fact_insert(fact_employee_prior, snapshot_batch)
     )
 
     # Expense fact (ref B3_load_fin_facts.sql:67-126): orphan FKs DQ'd and
     # dropped by the inner dim join; full-row NOT EXISTS dedup.
-    fk_dq = dq_issues(
+    fk_dq = dq_log(
         fin_clean.join(emp_current, on="employee_id", how="left_anti"),
-        "fact_expenses", "employee_id", "employee_id",
-        F.lit(True), "unmatched employee FK dropped",
+        "fact_expenses", "employee_id",
+        [("employee_id", "true", "unmatched employee FK dropped")],
     )
     expense_batch = (
         fin_clean.join(emp_current.select("employee_id"), on="employee_id")
@@ -300,14 +274,7 @@ def load_warehouse(
             "approved_by", "time_id", "is_refund",
         )
     )
-    fact_expenses_prior = prior.get(
-        "fact_expenses",
-        spark.createDataFrame(
-            [],
-            "employee_id string, expense_type_id int, expense_amount decimal(12,2), "
-            "approved_by string, time_id int, is_refund boolean",
-        ),
-    )
+    fact_expenses_prior = prior_of("fact_expenses")
     fact_expenses = fact_expenses_prior.unionByName(
         incremental_fact_insert(fact_expenses_prior, expense_batch)
     )
@@ -332,14 +299,7 @@ def load_warehouse(
             F.col("downtime_hours").cast("decimal(10,2)").alias("downtime_hours"),
         )
     )
-    fact_downtime_prior = prior.get(
-        "fact_downtime",
-        spark.createDataFrame(
-            [],
-            "department_id int, process_id int, location_id int, time_id int, "
-            "downtime_hours decimal(10,2)",
-        ),
-    )
+    fact_downtime_prior = prior_of("fact_downtime")
     fact_downtime = fact_downtime_prior.unionByName(
         incremental_fact_insert(fact_downtime_prior, downtime_batch)
     )
@@ -387,5 +347,5 @@ def run_etl(
     fin, fin_dq = clean_finance(fin_raw)
     ops, ops_dq = clean_ops(ops_raw)
     state = load_warehouse(spark, hr, fin, ops, load_date, prior)
-    state["dq"] = union_dq(hr_dq, fin_dq, ops_dq, state.pop("fk_dq"))
+    state["dq"] = hr_dq.unionByName(fin_dq).unionByName(ops_dq).unionByName(state.pop("fk_dq"))
     return state

@@ -35,89 +35,6 @@ from data_warehousing_assignment_spark.session import apply_runtime_confs
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-def _load_driver_verified() -> dict[str, int]:
-    """``{query name: latest round with a green external row}`` derived at
-    import time from the driver's own ``CORRECTNESS_r*.json`` artifacts
-    (repo root, committed every round).
-
-    Why derived, not hardcoded: the driver's gate samples only the first
-    ~50 registered queries per round, so ``all_queries`` yields
-    never-driver-verified queries FIRST (each round's window extends
-    cumulative external coverage) and re-samples the LONGEST-unverified
-    greens next (an externally-visible regression in an old green stays
-    detectable instead of being frozen out forever). A hand-maintained
-    frozenset here went stale the round after it was written.
-
-    Green = the driver recorded a row with no error and no explicit
-    ``False`` on any match field (rows-only checks record ``None`` for
-    the hash/schema fields — that IS their full check passing).
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r0*(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue  # unreadable artifact — skip, never fail import
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            # "no_oracle" is the driver's label for a COMPLETED rows-only
-            # check, not a failure — treating it as an error kept the
-            # rows-only ops permanently "never verified" and they hogged
-            # an early window slot every single round (r4 and r5 both
-            # re-sampled the same five).
-            if row.get("err") and row.get("err") != "no_oracle":
-                continue
-            if any(
-                row.get(k) is False
-                for k in ("rows_match", "schema_match", "hash_match")
-            ):
-                continue
-            if row.get("spark_rows") is None:
-                continue  # never actually ran
-            latest[name] = max(rnd, latest.get(name, 0))
-    return latest
-
-
-DRIVER_VERIFIED_ROUND: dict[str, int] = _load_driver_verified()
-
-
-def _driver_rank(name: str) -> tuple[int, int]:
-    """Sort key for the driver's truncated correctness window, derived
-    from the registry and the driver's own artifacts only.
-
-    (0, _) = never driver-verified, oracle-backed (highest value/slot);
-    (1, _) = near-duplicate oracle-backed variants (the 8 KPI views share
-        one plan shape — one representative rides in rank 0);
-    (2, 0) = never driver-verified, rows-only (weaker check, still a row);
-    (3, r) = green in round r — oldest green first, so long-unchecked
-        queries rotate back through the window and regressions in old
-        greens remain externally detectable.
-    """
-    if name in DRIVER_VERIFIED_ROUND:
-        return (3, DRIVER_VERIFIED_ROUND[name])
-    if name not in ORACLES:
-        return (2, 0)
-    if name.startswith("op-pipe-kpi-") and name != "op-pipe-kpi-gross-monthly":
-        return (1, 0)
-    return (0, 0)
-
-
-def _driver_ordered(d: dict) -> dict:
-    # sorted() is stable: registration order is preserved within each rank.
-    return {k: d[k] for k in sorted(d, key=_driver_rank)}
-
 
 def query(name: str, oracle: str | None = None) -> Callable:
     """Register a (spark, sf_dir) -> DataFrame callable, optionally with its
@@ -275,10 +192,12 @@ def import_all_registries() -> None:
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query, in registration order."""
     import_all_registries()
-    return _driver_ordered(QUERIES)
+    return dict(QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
+    """Every registered oracle, in registration order."""
     import_all_registries()
-    return _driver_ordered(ORACLES)
+    return dict(ORACLES)

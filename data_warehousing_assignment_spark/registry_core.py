@@ -33,7 +33,6 @@ from data_warehousing_assignment_spark.registry import (
     t,
 )
 from data_warehousing_assignment_spark.functions.cleaning import (
-    blank_to_null,
     lenient_decimal,
     normalize_upper_trim,
     parse_date_multi,
@@ -43,6 +42,7 @@ from data_warehousing_assignment_spark.functions.cleaning import (
     whitelist,
 )
 from data_warehousing_assignment_spark.functions.dates import date_safe_dispatch
+from data_warehousing_assignment_spark.plans.kpi import _month_key, _month_label
 from data_warehousing_assignment_spark.operators.joins import (
     anti_join,
     case_insensitive_join,
@@ -392,9 +392,7 @@ def op_join_inner_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         # group on the int yyyy·100+MM key, format the handful of
         # post-agg groups (plans/kpi._month_key rationale — bijective
         # key, label value-identical to date_format 'yyyy-MM')
-        .groupBy(
-            "n_name", (F.year("o_orderdate") * 100 + F.month("o_orderdate")).alias("_ym")
-        )
+        .groupBy("n_name", _month_key("o_orderdate"))
         .agg(
             (
                 F.sum((pc * (F.lit(100) - dc)).cast("decimal(38,0)")).cast(
@@ -403,14 +401,7 @@ def op_join_inner_star(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 10000.0
             ).alias("revenue")
         )
-        .select(
-            "n_name",
-            F.expr(
-                "lpad(CAST(_ym DIV 100 AS STRING), 4, '0') || '-' ||"
-                " lpad(CAST(_ym % 100 AS STRING), 2, '0')"
-            ).alias("order_month"),
-            "revenue",
-        )
+        .select("n_name", _month_label(), "revenue")
     )
 
 
@@ -856,8 +847,8 @@ def op_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def op_fn_upper_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPPER(TRIM(x)) (ref A3_load_dim_emp.sql:16)."""
     cust = t(spark, sf_dir, "customer")
-    messy = F.concat(F.lit(" "), F.col("c_name"), F.lit(" "))
-    return cust.select("c_custkey", normalize_upper_trim(messy).alias("name_norm"))
+    messy = "concat(' ', c_name, ' ')"
+    return cust.select("c_custkey", F.expr(normalize_upper_trim(messy)).alias("name_norm"))
 
 
 @query(
@@ -873,7 +864,7 @@ def op_fn_initcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """initcap / .str.title() (ref B2_finance_etl.py:17). DuckDB has no
     initcap; the oracle titles the single-word segment manually."""
     cust = t(spark, sf_dir, "customer")
-    return cust.select("c_custkey", title_case("c_mktsegment").alias("segment_title"))
+    return cust.select("c_custkey", F.expr(title_case("c_mktsegment")).alias("segment_title"))
 
 
 @query(
@@ -952,13 +943,11 @@ def op_fn_split_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """split_part float-string repair '2002.0'→'2002' (ref
     stg_finance_expense.sql:32-33); non-matching strings pass through."""
     part = t(spark, sf_dir, "part")
-    raw = F.when(
-        F.col("p_partkey") % 2 == 0,
-        F.concat(F.col("p_size").cast("string"), F.lit(".0")),
-    ).otherwise(F.concat(F.col("p_size").cast("string"), F.lit(".5")))
-    return part.select(
-        "p_partkey", strip_float_suffix(raw).alias("size_clean")
+    raw = (
+        "CASE WHEN p_partkey % 2 = 0 THEN concat(CAST(p_size AS STRING), '.0')"
+        " ELSE concat(CAST(p_size AS STRING), '.5') END"
     )
+    return part.select("p_partkey", F.expr(strip_float_suffix(raw)).alias("size_clean"))
 
 
 @query(
@@ -1001,8 +990,8 @@ def op_fn_replace_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = t(spark, sf_dir, "customer")
     return cust.select(
         "c_custkey",
-        remap_values(
-            "c_mktsegment", {"BUILDING": "Bldg", "AUTOMOBILE": "Auto"}
+        F.expr(
+            remap_values("c_mktsegment", {"BUILDING": "Bldg", "AUTOMOBILE": "Auto"})
         ).alias("segment_short"),
     )
 
@@ -1024,10 +1013,12 @@ def op_fn_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
-        whitelist(
-            "o_orderstatus",
-            {"F": "Finished", "O": "Open", "P": "Pending"},
-            "Unknown",
+        F.expr(
+            whitelist(
+                "o_orderstatus",
+                {"F": "Finished", "O": "Open", "P": "Pending"},
+                "Unknown",
+            )
         ).alias("status_label"),
     )
 
@@ -1081,13 +1072,11 @@ def op_fn_date_parse_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     A2_hr_etl.py:39-51 HR/Finance semantics)."""
     o = t(spark, sf_dir, "orders")
     raw = (
-        F.when(F.col("o_orderkey") % 3 == 0, F.date_format("o_orderdate", "dd-MM-yyyy"))
-        .when(F.col("o_orderkey") % 3 == 1, F.date_format("o_orderdate", "yyyy-MM-dd"))
-        .otherwise(F.lit("not-a-date"))
+        "CASE WHEN o_orderkey % 3 = 0 THEN date_format(o_orderdate, 'dd-MM-yyyy')"
+        " WHEN o_orderkey % 3 = 1 THEN date_format(o_orderdate, 'yyyy-MM-dd')"
+        " ELSE 'not-a-date' END"
     )
-    return o.select(
-        "o_orderkey", _ds(parse_date_multi(raw)).alias("parsed_date")
-    )
+    return o.select("o_orderkey", _ds(F.expr(parse_date_multi(raw))).alias("parsed_date"))
 
 
 @query(
@@ -1270,12 +1259,11 @@ def op_fn_tonumeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     pd.to_numeric(errors='coerce'))."""
     part = t(spark, sf_dir, "part")
     raw = (
-        F.when(F.col("p_partkey") % 3 == 0, F.lit("abc"))
-        .when(F.col("p_partkey") % 3 == 1, F.lit("123.45"))
-        .otherwise(F.lit("-7.1"))
+        "CASE WHEN p_partkey % 3 = 0 THEN 'abc'"
+        " WHEN p_partkey % 3 = 1 THEN '123.45' ELSE '-7.1' END"
     )
     return part.select(
-        "p_partkey", lenient_decimal(raw).cast("double").alias("amount")
+        "p_partkey", F.expr(lenient_decimal(raw)).cast("double").alias("amount")
     )
 
 

@@ -31,11 +31,7 @@ from data_warehousing_assignment_spark.plans.facts import (
     snapshot_fact,
 )
 from data_warehousing_assignment_spark.plans import kpi
-from data_warehousing_assignment_spark.plans.dq import (
-    audit_frame,
-    dq_issues,
-    union_dq,
-)
+from data_warehousing_assignment_spark.plans.dq import audit_frame, dq_log
 
 
 def _ds(col) -> F.Column:
@@ -433,30 +429,19 @@ def _dirty_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def op_pipe_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DQ logging (ref A2_hr_etl.py:32-36,58-62): one log row per repair,
-    built as filtered projections + union — the same columnar pass as the
-    cleaning itself, not the reference's per-row Python loop.
+    every rule one element of a single generator projection — one
+    columnar pass over the batch, not the reference's per-row Python loop.
 
     Fixture: customer dirtied by key arithmetic (blank names %11,
     sentinel segments %5, plus naturally negative balances)."""
-    dirty = _dirty_customer(spark, sf_dir)
-    float_str = F.col("acctbal").cast("string")
-    return union_dq(
-        dq_issues(
-            dirty.withColumn("acctbal", float_str),
-            "staging_customer", "acctbal", "c_custkey",
-            F.col("acctbal").cast("double") < 0,
-            "negative balance repaired with abs()",
-        ),
-        dq_issues(
-            dirty, "staging_customer", "segment", "c_custkey",
-            F.lower(F.trim("segment")).isin("", "nan", "null"),
-            "null-like sentinel replaced",
-        ),
-        dq_issues(
-            dirty, "staging_customer", "name", "c_custkey",
-            F.trim("name") == "",
-            "blank name -> fallback id",
-        ),
+    return dq_log(
+        _dirty_customer(spark, sf_dir), "staging_customer", "c_custkey",
+        [
+            ("acctbal", "acctbal < 0", "negative balance repaired with abs()"),
+            ("segment", "lower(trim(segment)) IN ('', 'nan', 'null')",
+             "null-like sentinel replaced"),
+            ("name", "trim(name) = ''", "blank name -> fallback id"),
+        ],
     )
 
 

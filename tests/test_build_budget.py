@@ -1,8 +1,10 @@
 """Build-cost guard for the sign-bit fingerprint, hyperplane-LSH and
-IVF/PQ ops: building each one sends fewer than BUDGET py4j call
-commands, so a builder that goes back to one literal Column per bit or
-coefficient, or to Python-lambda Column trees per Lloyd round
-(thousands of JVM round trips before any data moves), fails here."""
+IVF/PQ ops and for the warehouse ETL: building each one sends fewer
+than its budget of py4j call commands, so a builder that goes back to
+one literal Column per bit or coefficient, to Python-lambda Column
+trees per Lloyd round, or to one Column chain and one filtered DQ slice
+per cleaning rule (thousands of JVM round trips before any data moves),
+fails here."""
 
 from __future__ import annotations
 
@@ -13,6 +15,23 @@ from data_warehousing_assignment_spark.registry import all_queries
 from perfbench.trace import Py4jCounter
 
 BUDGET = 1000
+#: one run_etl load: clean + DQ of three domains, 4 dim upserts, SCD2,
+#: 3 incremental facts, audit
+ETL_BUDGET = 3200
+
+
+def _build_calls(build) -> int:
+    """py4j call commands sent while ``build()`` runs."""
+    counter = Py4jCounter()
+    counter.install()
+    try:
+        counter.active = True
+        build()
+    finally:
+        counter.active = False
+        counter.uninstall()
+        release_unscoped()
+    return counter.calls
 
 
 @pytest.mark.parametrize(
@@ -36,13 +55,24 @@ def test_build_sends_few_py4j_calls(spark, op):
     from tests.conftest import SF_SMALL
 
     build = all_queries()[op]
-    counter = Py4jCounter()
-    counter.install()
-    try:
-        counter.active = True
-        build(spark, SF_SMALL)
-    finally:
-        counter.active = False
-        counter.uninstall()
-        release_unscoped()
-    assert counter.calls < BUDGET, f"{op}: {counter.calls} py4j calls"
+    calls = _build_calls(lambda: build(spark, SF_SMALL))
+    assert calls < BUDGET, f"{op}: {calls} py4j calls"
+
+
+def test_run_etl_builds_in_few_py4j_calls(spark):
+    """Both loads of the golden warehouse fixtures: the initial one and
+    an incremental one on its state."""
+    from data_warehousing_assignment_spark.plans.warehouse import run_etl
+    from tests.test_warehouse import (
+        FIN_COLS, FIN_ROWS, HR_COLS, HR_ROWS, OPS_COLS, OPS_ROWS,
+    )
+
+    raw = [
+        spark.createDataFrame(rows, cols)
+        for rows, cols in ((HR_ROWS, HR_COLS), (FIN_ROWS, FIN_COLS), (OPS_ROWS, OPS_COLS))
+    ]
+    states: list[dict] = []
+    for load_date in ("2024-02-01", "2024-02-02"):
+        prior = states[-1] if states else None
+        calls = _build_calls(lambda: states.append(run_etl(spark, *raw, load_date, prior)))
+        assert calls < ETL_BUDGET, f"run_etl {load_date}: {calls} py4j calls"

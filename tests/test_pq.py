@@ -116,8 +116,8 @@ def test_nearest_code_agg_path_matches_window_ranking(spark):
     and the code-id tie-break. Real vectors are encoded against a
     codebook trained on a PREFIX, so assignments are non-trivial for
     the held-out rows; a hand-built book adds an exact tie."""
-    corpus = emb(spark).limit(120)
-    trained = pq.pq_codebooks(corpus.limit(80), n_iters=1)
+    corpus = emb(spark).orderBy("vec_id").limit(120)
+    trained = pq.pq_codebooks(corpus.orderBy("vec_id").limit(80), n_iters=1)
     # every subspace: vec 1 sits exactly between codes 0 and 1 (tie →
     # code 0), vec 2 is nearer code 1, vec 3 nearest code 2.
     d = pq.PQ_DSUB
@@ -150,8 +150,8 @@ def test_packed_encode_matches_rowwise_encode_and_norms(spark):
     MIN(struct(‖sv−cw‖², code)) — EXACTLY, and its nx must equal the
     sum of the chosen codewords' ‖cw‖². Codebook trained on a PREFIX so
     assignments are non-trivial for the held-out rows."""
-    corpus = emb(spark).limit(150)
-    books = pq.pq_codebooks(corpus.limit(80), n_iters=1)
+    corpus = emb(spark).orderBy("vec_id").limit(150)
+    books = pq.pq_codebooks(corpus.orderBy("vec_id").limit(80), n_iters=1)
     vecs = _qvecs(corpus)
     rowwise = (
         _slices(vecs)

@@ -49,8 +49,8 @@ def test_date_parsers_are_total(spark, values):
     """Any input → a date, the fallback, or NULL — never an exception."""
     df = spark.createDataFrame([(v,) for v in values], "x string")
     out = df.select(
-        cl.parse_date_multi("x").alias("multi"),
-        cl.parse_date_multi("x", fallback="1957-01-01").alias("multi_fb"),
+        F.expr(cl.parse_date_multi("x")).alias("multi"),
+        F.expr(cl.parse_date_multi("x", fallback="1957-01-01")).alias("multi_fb"),
         date_safe_dispatch("x").alias("dispatch"),
     ).collect()
     for r in out:

@@ -28,8 +28,8 @@ def test_pandas_udf_matches_native_column(spark):
         [(i, v) for i, v in enumerate(["active", " RESIGNED ", "Active", "wat", "", "nan"])],
         "id int, status string",
     )
-    native = cl.whitelist(
-        "status", {"ACTIVE": "Active", "RESIGNED": "Resigned"}, "Unknown"
+    native = F.expr(
+        cl.whitelist("status", {"ACTIVE": "Active", "RESIGNED": "Resigned"}, "Unknown")
     )
     out = df.select(
         "id",

@@ -5,6 +5,7 @@ SCD2 day-2 batch, and incremental idempotency."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -150,3 +151,114 @@ def test_scd2_day2_and_idempotency(spark, state):
     assert by_cur[False].valid_to == dt.date(2024, 2, 3)
     assert by_cur[True].department == "FINANCE"
     assert by_cur[True].valid_from == dt.date(2024, 2, 3)
+
+
+# --------------------------------------------------------------------------
+# DQ log vs a reference union of filtered slices
+# --------------------------------------------------------------------------
+
+_SENTINELS = ("", "nan", "null")
+
+
+def _ref_slice(df, table, column, ref, pred, issue):
+    return df.filter(pred).select(
+        F.lit(table).alias("table_name"),
+        F.lit(column).alias("column_name"),
+        F.col(ref).cast("string").alias("row_reference"),
+        F.col(column).cast("string").alias("original_value"),
+        F.lit(issue).alias("issue"),
+    )
+
+
+def _parsed_date(c):
+    t = F.trim(c)
+    return F.coalesce(F.try_to_date(t, "yyyy-MM-dd"), F.try_to_date(t, "dd-MM-yyyy"))
+
+
+def _blank(c):
+    return F.col(c).isNull() | F.lower(F.trim(c)).isin(*_SENTINELS)
+
+
+def _reference_dq(hr, fin, ops):
+    """The three domain DQ logs written as one filter per repair over the
+    raw batches, with plain Column expressions, plus HR's duplicate
+    rows — the per-slice form the rule tables replace."""
+    emp, fn, op = "staging_employee", "staging_finance", "staging_operations"
+    dups = (
+        hr.groupBy(*hr.columns).count().filter(F.col("count") > 1)
+        .select(
+            F.lit(emp).alias("table_name"), F.lit("*").alias("column_name"),
+            F.col("EmployeeID").cast("string").alias("row_reference"),
+            F.col("count").cast("string").alias("original_value"),
+            F.lit("exact duplicate rows dropped").alias("issue"),
+        )
+    )
+    slices = [
+        _ref_slice(hr, emp, "Gender", "EmployeeID",
+                   ~F.upper(F.trim("Gender")).isin("M", "MALE", "F", "FEMALE"),
+                   "invalid gender set to UNKNOWN"),
+        _ref_slice(hr, emp, "DateOfJoining", "EmployeeID",
+                   _parsed_date("DateOfJoining").isNull() & ~_blank("DateOfJoining"),
+                   "unparseable date set to NULL"),
+        _ref_slice(hr, emp, "Salary", "EmployeeID",
+                   F.col("Salary").try_cast("decimal(12,2)") < 0,
+                   "negative salary repaired with abs()"),
+        _ref_slice(hr, emp, "ManagerID", "EmployeeID", _blank("ManagerID"),
+                   "missing manager set to UNKNOWN"),
+        dups,
+        _ref_slice(fin, fn, "ExpenseAmount", "EmployeeID",
+                   F.col("ExpenseAmount").try_cast("decimal(12,2)") < 0,
+                   "negative amount flagged as refund"),
+        _ref_slice(fin, fn, "ApprovedBy", "EmployeeID", _blank("ApprovedBy"),
+                   "missing approver set to UNKNOWN"),
+        _ref_slice(ops, op, "DowntimeHours", "ProcessName",
+                   F.col("DowntimeHours").try_cast("decimal(10,2)").isNull(),
+                   "missing downtime imputed"),
+        _ref_slice(ops, op, "ProcessDate", "ProcessName",
+                   _parsed_date("ProcessDate").isNull(),
+                   "invalid date set to 1957-01-01"),
+    ]
+    out = slices[0]
+    for s in slices[1:]:
+        out = out.unionByName(s)
+    return out
+
+
+def _domain_dq(hr, fin, ops):
+    return (
+        wh.clean_hr(hr)[1]
+        .unionByName(wh.clean_finance(fin)[1])
+        .unionByName(wh.clean_ops(ops)[1])
+    )
+
+
+def _assert_same_multiset(got, want):
+    assert got.schema == want.schema  # nullability included
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert got.count() == want.count()
+
+
+def test_dq_log_matches_filtered_slices_on_golden_fixtures(spark):
+    hr = spark.createDataFrame(HR_ROWS, HR_COLS)
+    fin = spark.createDataFrame(FIN_ROWS, FIN_COLS)
+    ops = spark.createDataFrame(OPS_ROWS, OPS_COLS)
+    want = _reference_dq(hr, fin, ops)
+    assert want.count() == 9  # one golden row per slice
+    _assert_same_multiset(_domain_dq(hr, fin, ops), want)
+
+
+def test_dq_log_matches_filtered_slices_on_generated_day(spark, tmp_path):
+    from perfbench import gen
+
+    from data_warehousing_assignment_spark.sources.readers import read_csv
+
+    data_dir, meta = gen.etl_batches(str(tmp_path), 7, 1, 60, 120, 60)
+    hr, fin, ops = (
+        read_csv(spark, os.path.join(data_dir, "day0", f"{f}.csv"))
+        for f in ("hr", "finance", "ops")
+    )
+    _assert_same_multiset(_domain_dq(hr, fin, ops), _reference_dq(hr, fin, ops))
+    # with the orphan-FK slice, the log holds exactly the planted rows
+    state = wh.run_etl(spark, hr, fin, ops, meta["days"][0]["load_date"])
+    assert state["dq"].count() == meta["days"][0]["dq_rows"]

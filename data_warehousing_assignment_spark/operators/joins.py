@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions.cleaning import normalize_upper_trim
+
 
 def anti_join(left: DataFrame, right: DataFrame, on: list[str] | Column) -> DataFrame:
     """op-pred-not-in / op-pred-left-null / op-join-anti: rows of `left`
@@ -34,20 +36,15 @@ def not_exists_all_columns(
     ``C3_load_dim_ops.sql:85-92``): keep batch rows not already present.
 
     Null-safe on every column (the reference's NOT EXISTS arms use ``=``,
-    but its fact columns are non-null post-cleaning; eqNullSafe makes the
+    but its fact columns are non-null post-cleaning; ``<=>`` makes the
     operator total). At 100 TB, pre-filter `existing` to the batch's date
     partitions before calling (see plans/facts.py) — the anti-join then
     shuffles only the overlap window, not the whole fact.
     """
-    cols = cols or batch.columns
-    b, e = batch.alias("__b"), existing.alias("__e")
-    cond = None
-    for c in cols:
-        # alias-qualified so batch/existing may derive from the same source
-        # (self-join) without ambiguous-column resolution
-        clause = F.col(f"__b.{c}").eqNullSafe(F.col(f"__e.{c}"))
-        cond = clause if cond is None else cond & clause
-    return b.join(e, on=cond, how="left_anti")
+    # alias-qualified so batch/existing may derive from the same source
+    # (self-join) without ambiguous-column resolution
+    cond = " AND ".join(f"__b.`{c}` <=> __e.`{c}`" for c in cols or batch.columns)
+    return batch.alias("__b").join(existing.alias("__e"), F.expr(cond), "left_anti")
 
 
 def case_insensitive_join(
@@ -58,14 +55,20 @@ def case_insensitive_join(
     how: str = "inner",
 ) -> DataFrame:
     """op-join-caseinsensitive: equi-join on ``UPPER(TRIM(x))`` normalized
-    keys (ref ``A3_load_dim_emp.sql:39``, ``fact_downtime.sql:31-33``).
+    keys (ref ``A3_load_dim_emp.sql:39``, ``fact_downtime.sql:31-33``) —
+    ``cleaning.normalize_upper_trim``, the key ``plans/dims.upsert_dim``
+    keeps its members unique on.
 
     Implemented as an expression-keyed equi-join — Catalyst still plans it
     as a hash join on the normalized expression (it is NOT a theta join),
-    so broadcast/shuffled-hash strategies apply normally.
+    so broadcast/shuffled-hash strategies apply normally. The sides are
+    alias-qualified, so they may derive from the same source.
     """
-    cond = F.upper(F.trim(left[left_key])) == F.upper(F.trim(right[right_key]))
-    return left.join(right, on=cond, how=how)
+    cond = (
+        f"{normalize_upper_trim(f'__l.`{left_key}`')} = "
+        f"{normalize_upper_trim(f'__r.`{right_key}`')}"
+    )
+    return left.alias("__l").join(right.alias("__r"), F.expr(cond), how)
 
 
 def scalar_subquery(df: DataFrame, agg: Column):

@@ -12,7 +12,7 @@ for dim-sized inputs (the distinct-members set, thousands of rows).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.functions.cleaning import (
@@ -25,44 +25,43 @@ def upsert_dim(
     batch_members: DataFrame,
     member_col: str,
     id_col: str,
-    normalize: bool = True,
 ) -> DataFrame:
     """Insert only unseen members, preserving existing ids (ref
     ``A3_load_dim_emp.sql:14-19``: ``INSERT ... WHERE name NOT IN
     (SELECT name FROM dim)``, case/trim-normalized).
 
     ``existing``: (id_col, member_col); ``batch_members``: (member_col).
-    Returns the new full dim content. The anti-join broadcasts the
-    existing member list when dim-sized; new-member numbering continues
-    from max(existing_id).
+    Returns the new full dim content. Members are equal when their
+    :func:`~..functions.cleaning.normalize_upper_trim` keys are — the key
+    the fact loads look members up on — so a batch spelling a member two
+    ways inserts one row (its least trimmed spelling), and a lookup
+    matches at most one member. The anti-join broadcasts the existing
+    member list when dim-sized; new-member numbering continues from
+    max(existing_id).
     """
-    norm = (lambda c: F.expr(normalize_upper_trim(c))) if normalize else F.col
-
-    batch_distinct = (
-        batch_members.select(F.trim(F.col(member_col)).alias(member_col))
-        .filter(F.col(member_col).isNotNull())
+    m, i = f"`{member_col}`", f"`{id_col}`"
+    # distinct before the per-key least spelling: Catalyst then folds both
+    # into one aggregate over the batch (and drops the batch's own
+    # dropDuplicates). array_min(collect_set), not min: a string min plans
+    # as a sort aggregate, which AQE runs as one Spark job more.
+    new_members = (
+        batch_members.selectExpr(f"trim({m}) AS {m}")
+        .where(f"{m} IS NOT NULL")
         .distinct()
-    )
-    new_members = batch_distinct.alias("b").join(
-        existing.alias("e"),
-        on=norm(f"b.{member_col}").eqNullSafe(norm(f"e.{member_col}")),
-        how="left_anti",
-    )
-
-    # max() over a dim is a tiny agg; cross-join the 1-row max to number
-    # new members after it (broadcast, no shuffle of the member set).
-    max_id = existing.agg(
-        F.coalesce(F.max(id_col), F.lit(0)).alias("_max_id")
-    )
-    numbered = (
-        new_members.crossJoin(F.broadcast(max_id))
-        .withColumn(
-            id_col,
-            (
-                F.col("_max_id")
-                + F.row_number().over(Window.orderBy(member_col))
-            ).cast(existing.schema[id_col].dataType),
+        .groupBy(F.expr(normalize_upper_trim(m)).alias("_key"))
+        .agg(F.expr(f"array_min(collect_set({m})) AS {m}"))
+        .alias("b")
+        .join(
+            existing.alias("e"),
+            F.expr(f"b._key <=> {normalize_upper_trim(f'e.{m}')}"),
+            "left_anti",
         )
-        .select(id_col, member_col)
+    )
+    # max() over a dim is a tiny agg; cross-join the 1-row max to number
+    # new members after it (broadcast, no shuffle of the member set). The
+    # sum keeps an INT or BIGINT id's type.
+    max_id = existing.selectExpr(f"coalesce(max({i}), 0) AS _max_id")
+    numbered = new_members.crossJoin(F.broadcast(max_id)).selectExpr(
+        f"_max_id + row_number() OVER (ORDER BY {m}) AS {i}", m
     )
     return existing.select(id_col, member_col).unionByName(numbered)

@@ -14,8 +14,7 @@ and the audit counts are plan-side aggregates (no driver collect)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from data_warehousing_assignment_spark.functions.cleaning import sql_str
 
@@ -57,28 +56,21 @@ def audit_frame(
     df: DataFrame,
     table_name: str,
     etl_stage: str,
-    failed_predicate: Column,
+    failed_predicate: str,
 ) -> DataFrame:
     """One audit row computed plan-side: rows_processed = COUNT(*),
-    rows_failed = COUNT_IF(failed_predicate), status per the reference's
-    rules — 0 failed → success, some → partial, all → failed (ref
-    ``A2_hr_etl.py:103-119``)."""
-    counted = df.agg(
-        F.count(F.lit(1)).alias("rows_processed"),
-        F.count_if(failed_predicate).alias("rows_failed"),
-    )
-    status = (
-        F.when(F.col("rows_failed") == 0, F.lit("success"))
-        .when(F.col("rows_failed") < F.col("rows_processed"), F.lit("partial"))
-        .otherwise(F.lit("failed"))
-    )
-    return counted.select(
-        F.lit(table_name).alias("table_name"),
-        F.lit(etl_stage).alias("etl_stage"),
+    rows_failed = COUNT_IF(failed_predicate), a SQL predicate over
+    ``df``, and status per the reference's rules — 0 failed → success,
+    some → partial, all → failed (ref ``A2_hr_etl.py:103-119``)."""
+    return df.selectExpr(
+        "count(1) AS rows_processed", f"count_if({failed_predicate}) AS rows_failed"
+    ).selectExpr(
+        f"{sql_str(table_name)} AS table_name",
+        f"{sql_str(etl_stage)} AS etl_stage",
         "rows_processed",
         "rows_failed",
-        status.alias("status"),
-        F.format_string(
-            "Processed %d rows, %d failed", F.col("rows_processed"), F.col("rows_failed")
-        ).alias("message"),
+        "CASE WHEN rows_failed = 0 THEN 'success'"
+        " WHEN rows_failed < rows_processed THEN 'partial' ELSE 'failed' END AS status",
+        "format_string('Processed %d rows, %d failed', rows_processed, rows_failed)"
+        " AS message",
     )

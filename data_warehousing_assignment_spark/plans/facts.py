@@ -16,8 +16,6 @@ anti-join shuffles only the overlap days, not years of history.
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,8 +37,9 @@ def incremental_fact_insert(
 
     When ``date_col`` is given, ``existing`` is pre-pruned to the batch's
     [min, max] date window — the partition-prune wrapper the reference
-    lacks. The min/max scalar collect is 1 row and prunes the fact scan,
-    the one legitimate driver-side value (see joins.scalar_subquery).
+    lacks. Both bounds come from one 1-row aggregate collect, which
+    prunes the fact scan: the one legitimate driver-side value (see
+    joins.scalar_subquery).
 
     CORRECTNESS PRECONDITION for the prune: ``date_col`` must be part of
     the dedup key (it is in the reference — its NOT EXISTS compares
@@ -54,12 +53,9 @@ def incremental_fact_insert(
             "(otherwise the prune changes dedup semantics)"
         )
     if date_col is not None:
-        lo = scalar_subquery(batch, F.min(date_col))
-        hi = scalar_subquery(batch, F.max(date_col))
+        lo, hi = batch.selectExpr(f"min(`{date_col}`)", f"max(`{date_col}`)").first()
         if lo is not None:
-            existing = existing.filter(
-                (F.col(date_col) >= F.lit(lo)) & (F.col(date_col) <= F.lit(hi))
-            )
+            existing = existing.filter(F.col(date_col).between(F.lit(lo), F.lit(hi)))
     return not_exists_all_columns(
         batch, existing.select(*batch.columns), dedup_cols
     )

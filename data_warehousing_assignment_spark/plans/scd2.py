@@ -23,8 +23,10 @@ Upgrade path: with Delta/Iceberg present this becomes a single
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from data_warehousing_assignment_spark.functions.cleaning import sql_str
 
 #: Marker substituted for NULL attributes inside the row hash so that
 #: (NULL, 'x') and ('x', NULL) hash differently (concat_ws would silently
@@ -34,19 +36,16 @@ _NULL_MARK = "\x00null\x00"
 SCD2_COLS = ("row_hash", "valid_from", "valid_to", "is_current")
 
 
-def scd2_row_hash(attrs: list[str | Column]) -> Column:
+def scd2_row_hash(attrs: list[str]) -> str:
     """md5(concat_ws('::', ...)) change-detection hash over the tracked
-    attributes (ref ``A3_load_dim_emp.sql:28``; dbt
+    attribute columns (ref ``A3_load_dim_emp.sql:28``; dbt
     ``generate_surrogate_key``, ``stg_hr_employee.sql:10``), made
-    null-total by coalescing each attribute to a marker first."""
-    parts = [
-        F.coalesce(
-            (F.col(a) if isinstance(a, str) else a).cast("string"),
-            F.lit(_NULL_MARK),
-        )
-        for a in attrs
-    ]
-    return F.md5(F.concat_ws("::", *parts))
+    null-total by coalescing each attribute to a marker first. SQL text:
+    a caller that needs a Column wraps it in ``F.expr``."""
+    parts = ", ".join(
+        f"coalesce(CAST(`{a}` AS STRING), {sql_str(_NULL_MARK)})" for a in attrs
+    )
+    return f"md5(concat_ws('::', {parts}))"
 
 
 def merge_scd2(
@@ -66,8 +65,8 @@ def merge_scd2(
     rows against the incoming batch classifies every key — (changed, new,
     unchanged, absent-from-batch) all fall out of side-presence plus the
     null-safe hash comparison — and each joined row emits its ≤2 output
-    rows (the surviving/expired open row and/or the fresh insert) via a
-    row-local array+explode. The previous formulation derived the same
+    rows (the surviving/expired open row and/or the fresh insert) in one
+    ``inline`` projection. The previous formulation derived the same
     four row sets with THREE key joins (changed-keys inner, new-keys
     anti, plus semi/anti consumers) and re-evaluated the open-rows and
     incoming subtrees up to three times each — 6 exchanges at scale
@@ -76,70 +75,47 @@ def merge_scd2(
     most one open row per key (the documented contract) makes the two
     classifications identical.
     """
-    inc = incoming.select(key, *attrs).withColumn("row_hash", scd2_row_hash(attrs))
-
-    cur_open = current.filter(F.col("is_current"))
-    history = current.filter(~F.col("is_current"))
-
-    c = cur_open.select(
-        F.col(key),
-        *[F.col(a).alias(f"_c_{a}") for a in attrs],
-        F.col("row_hash").alias("_c_hash"),
-        F.col("valid_from").alias("_c_from"),
-        F.col("valid_to").alias("_c_to"),
-        F.lit(True).alias("_c_present"),
+    c = current.where("is_current").selectExpr(
+        f"`{key}`",
+        *(f"`{a}` AS `_c_{a}`" for a in attrs),
+        "row_hash AS _c_hash",
+        "valid_from AS _c_from",
+        "valid_to AS _c_to",
+        "true AS _c_present",
     )
-    i = inc.select(
-        F.col(key),
-        *[F.col(a).alias(f"_i_{a}") for a in attrs],
-        F.col("row_hash").alias("_i_hash"),
-        F.lit(True).alias("_i_present"),
+    i = incoming.selectExpr(
+        f"`{key}`",
+        *(f"`{a}` AS `_i_{a}`" for a in attrs),
+        f"{scd2_row_hash(attrs)} AS _i_hash",
+        "true AS _i_present",
     )
-    j = c.join(i, on=key, how="full_outer")
-    c_present = F.col("_c_present").isNotNull()
-    i_present = F.col("_i_present").isNotNull()
     # Null-safe hash inequality = IS DISTINCT FROM (ref A3_load_dim_emp.sql:48,61)
     changed = (
-        c_present
-        & i_present
-        & ~F.col("_c_hash").eqNullSafe(F.col("_i_hash"))
+        "(_c_present IS NOT NULL AND _i_present IS NOT NULL"
+        " AND NOT _c_hash <=> _i_hash)"
     )
-    as_of_d = F.to_date(F.lit(as_of))
+    as_of_d = f"to_date({sql_str(as_of)})"
 
-    open_row = F.when(
-        c_present,
-        F.struct(
-            *[F.col(f"_c_{a}").alias(a) for a in attrs],
-            F.col("_c_hash").alias("row_hash"),
-            F.col("_c_from").alias("valid_from"),
-            F.when(changed, as_of_d).otherwise(F.col("_c_to")).alias("valid_to"),
-            (~changed).alias("is_current"),
-        ),
+    def row(side: str, *scd2: str) -> str:
+        fields = [f"'{a}', `_{side}_{a}`" for a in attrs]
+        fields += [f"'{n}', {v}" for n, v in zip(SCD2_COLS, scd2)]
+        return f"named_struct({', '.join(fields)})"
+
+    open_row = row(
+        "c", "_c_hash", "_c_from", f"IF({changed}, {as_of_d}, _c_to)", f"NOT {changed}"
     )
-    insert_row = F.when(
-        changed | (i_present & ~c_present),
-        F.struct(
-            *[F.col(f"_i_{a}").alias(a) for a in attrs],
-            F.col("_i_hash").alias("row_hash"),
-            as_of_d.alias("valid_from"),
-            F.lit(None).cast("date").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        ),
+    insert_row = row("i", "_i_hash", as_of_d, "CAST(NULL AS DATE)", "true")
+    # filter, not array_compact: the array stays containsNull, so inline
+    # types every emitted field nullable, as the history rows are
+    emitted = c.join(i, on=key, how="full_outer").selectExpr(
+        f"`{key}`",
+        "inline(filter(array("
+        f"IF(_c_present IS NOT NULL, {open_row}, NULL), "
+        f"IF({changed} OR (_i_present IS NOT NULL AND _c_present IS NULL), "
+        f"{insert_row}, NULL)), s -> s IS NOT NULL))",
     )
     cols = [key, *attrs, *SCD2_COLS]
-    emitted = (
-        j.select(
-            F.col(key),
-            F.explode(
-                F.filter(
-                    F.array(open_row, insert_row), lambda s: s.isNotNull()
-                )
-            ).alias("_r"),
-        )
-        .select(key, "_r.*")
-        .select(cols)
-    )
-    return history.select(cols).unionByName(emitted)
+    return current.where("NOT is_current").select(cols).unionByName(emitted)
 
 
 def expire_deleted(

@@ -23,15 +23,21 @@ Ops to 1957-01-01; Q7 gender keeps the full 'UNKNOWN' string.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.functions import cleaning as cl
 from data_warehousing_assignment_spark.functions.dates import build_dim_time
 from data_warehousing_assignment_spark.operators.dedup import duplicate_rows
+from data_warehousing_assignment_spark.operators.joins import case_insensitive_join
 from data_warehousing_assignment_spark.plans.dq import audit_frame, dq_log
 from data_warehousing_assignment_spark.plans.dims import upsert_dim
-from data_warehousing_assignment_spark.plans.facts import incremental_fact_insert
+from data_warehousing_assignment_spark.plans.facts import (
+    incremental_fact_insert,
+    snapshot_fact,
+)
 from data_warehousing_assignment_spark.plans.scd2 import merge_scd2
 
 GENDER_MAP = {"M": "M", "MALE": "M", "F": "F", "FEMALE": "F"}
@@ -179,6 +185,18 @@ STATE_SCHEMAS = {
 }
 
 
+#: The conformed dims: table -> (id column, member column, the cleaned
+#: (domain, column) pairs its members are upserted from, in order).
+DIMS = {
+    "dim_department": (
+        "department_id", "department_name", (("hr", "department"), ("ops", "department")),
+    ),
+    "dim_expense_type": ("expense_type_id", "expense_type_name", (("fin", "expense_type"),)),
+    "dim_process": ("process_id", "process_name", (("ops", "process_name"),)),
+    "dim_location": ("location_id", "location_name", (("ops", "location"),)),
+}
+
+
 def load_warehouse(
     spark: SparkSession,
     hr_clean: DataFrame,
@@ -201,135 +219,82 @@ def load_warehouse(
             return prior[key]
         return spark.createDataFrame([], STATE_SCHEMAS[key])
 
-    dim_department = upsert_dim(
-        upsert_dim(
-            prior_of("dim_department"),
-            hr_clean.select(F.col("department").alias("department_name")),
-            "department_name", "department_id",
-        ),
-        ops_clean.select(F.col("department").alias("department_name")),
-        "department_name", "department_id",
-    )
-    dim_expense_type = upsert_dim(
-        prior_of("dim_expense_type"),
-        fin_clean.select(F.col("expense_type").alias("expense_type_name")),
-        "expense_type_name", "expense_type_id",
-    )
-    dim_process = upsert_dim(
-        prior_of("dim_process"),
-        ops_clean.select("process_name"), "process_name", "process_id",
-    )
-    dim_location = upsert_dim(
-        prior_of("dim_location"),
-        ops_clean.select(F.col("location").alias("location_name")),
-        "location_name", "location_id",
-    )
+    clean = {"hr": hr_clean, "fin": fin_clean, "ops": ops_clean}
+    state: dict[str, DataFrame] = {}
+    for table, (id_col, member, sources) in DIMS.items():
+        dim = prior_of(table)
+        for domain, col in sources:
+            dim = upsert_dim(dim, clean[domain].selectExpr(f"{col} AS {member}"), member, id_col)
+        state[table] = dim
 
-    dim_employee = merge_scd2(
+    state["dim_employee"] = merge_scd2(
         prior_of("dim_employee"),
-        hr_clean.select("employee_id", *EMP_ATTRS),
+        hr_clean.selectExpr("employee_id", *EMP_ATTRS),
         "employee_id", EMP_ATTRS, load_date,
     )
-
     dim_time = prior.get("dim_time")
-    if dim_time is None:
-        dim_time = build_dim_time(spark)
+    state["dim_time"] = build_dim_time(spark) if dim_time is None else dim_time
 
     # --- facts ------------------------------------------------------------
-    emp_current = dim_employee.filter(F.col("is_current")).select(
-        "employee_id", "department"
-    )
+    emp_current = state["dim_employee"].where("is_current").selectExpr("employee_id")
+    time_ids = F.broadcast(state["dim_time"].selectExpr("time_id", "full_date"))
+
+    def lookup(facts: DataFrame, table: str, col: str) -> DataFrame:
+        # on the normalized member key, which upsert_dim keeps unique
+        return case_insensitive_join(facts, F.broadcast(state[table]), col, DIMS[table][1])
 
     # Snapshot fact (ref A3_load_dim_emp.sql:85-95) + Q4 dedup guard
-    time_today = dim_time.filter(F.col("full_date") == F.to_date(F.lit(load_date)))
-    snapshot_batch = (
-        hr_clean.join(emp_current, on="employee_id", how="left_semi")
-        .crossJoin(F.broadcast(time_today.select("time_id")))
-        .select("employee_id", "time_id", "salary", "status")
-    )
-    fact_employee_prior = prior_of("fact_employee")
-    fact_employee = fact_employee_prior.unionByName(
-        incremental_fact_insert(fact_employee_prior, snapshot_batch)
-    )
+    snapshot_batch = snapshot_fact(
+        hr_clean.join(emp_current, on="employee_id", how="left_semi"),
+        state["dim_time"], load_date,
+    ).selectExpr("employee_id", "time_id", "salary", "status")
 
     # Expense fact (ref B3_load_fin_facts.sql:67-126): orphan FKs DQ'd and
     # dropped by the inner dim join; full-row NOT EXISTS dedup.
-    fk_dq = dq_log(
+    state["fk_dq"] = dq_log(
         fin_clean.join(emp_current, on="employee_id", how="left_anti"),
         "fact_expenses", "employee_id",
         [("employee_id", "true", "unmatched employee FK dropped")],
     )
     expense_batch = (
-        fin_clean.join(emp_current.select("employee_id"), on="employee_id")
-        .join(
-            F.broadcast(dim_expense_type),
-            fin_clean.expense_type == F.col("expense_type_name"),
-        )
-        .join(
-            F.broadcast(dim_time.select("time_id", "full_date")),
-            fin_clean.expense_date == F.col("full_date"),
-        )
-        .select(
+        lookup(fin_clean.join(emp_current, on="employee_id"), "dim_expense_type", "expense_type")
+        .join(time_ids, F.expr("expense_date = full_date"))
+        .selectExpr(
             "employee_id", "expense_type_id", "expense_amount",
             "approved_by", "time_id", "is_refund",
         )
     )
-    fact_expenses_prior = prior_of("fact_expenses")
-    fact_expenses = fact_expenses_prior.unionByName(
-        incremental_fact_insert(fact_expenses_prior, expense_batch)
-    )
 
     # Downtime fact (ref C3_load_dim_ops.sql:71-122)
-    downtime_batch = (
-        ops_clean.join(
-            F.broadcast(dim_department),
-            ops_clean.department == F.col("department_name"),
-        )
-        .join(F.broadcast(dim_process), on="process_name")
-        .join(
-            F.broadcast(dim_location),
-            ops_clean.location == F.col("location_name"),
-        )
-        .join(
-            F.broadcast(dim_time.select("time_id", "full_date")),
-            ops_clean.process_date == F.col("full_date"),
-        )
-        .select(
-            "department_id", "process_id", "location_id", "time_id",
-            F.col("downtime_hours").cast("decimal(10,2)").alias("downtime_hours"),
-        )
-    )
-    fact_downtime_prior = prior_of("fact_downtime")
-    fact_downtime = fact_downtime_prior.unionByName(
-        incremental_fact_insert(fact_downtime_prior, downtime_batch)
+    downtime = ops_clean
+    for table, col in (
+        ("dim_department", "department"),
+        ("dim_process", "process_name"),
+        ("dim_location", "location"),
+    ):
+        downtime = lookup(downtime, table, col)
+    downtime_batch = downtime.join(time_ids, F.expr("process_date = full_date")).selectExpr(
+        "department_id", "process_id", "location_id", "time_id",
+        "CAST(downtime_hours AS decimal(10,2)) AS downtime_hours",
     )
 
-    audit = (
-        audit_frame(hr_clean, "dim_employee", "load", F.col("date_of_joining").isNull())
-        .unionByName(
-            audit_frame(
-                fin_clean, "fact_expenses", "load",
-                F.col("expense_date").isNull() | F.col("expense_amount").isNull(),
-            )
-        )
-        .unionByName(
-            audit_frame(ops_clean, "fact_downtime", "load", F.col("downtime_hours").isNull())
-        )
-    )
+    for table, batch in (
+        ("fact_employee", snapshot_batch),
+        ("fact_expenses", expense_batch),
+        ("fact_downtime", downtime_batch),
+    ):
+        loaded = prior_of(table)
+        state[table] = loaded.unionByName(incremental_fact_insert(loaded, batch))
 
-    return {
-        "dim_department": dim_department,
-        "dim_expense_type": dim_expense_type,
-        "dim_process": dim_process,
-        "dim_location": dim_location,
-        "dim_employee": dim_employee,
-        "dim_time": dim_time,
-        "fact_employee": fact_employee,
-        "fact_expenses": fact_expenses,
-        "fact_downtime": fact_downtime,
-        "fk_dq": fk_dq,
-        "audit": audit,
-    }
+    state["audit"] = reduce(DataFrame.unionByName, [
+        audit_frame(hr_clean, "dim_employee", "load", "date_of_joining IS NULL"),
+        audit_frame(
+            fin_clean, "fact_expenses", "load",
+            "expense_date IS NULL OR expense_amount IS NULL",
+        ),
+        audit_frame(ops_clean, "fact_downtime", "load", "downtime_hours IS NULL"),
+    ])
+    return state
 
 
 def run_etl(

@@ -101,32 +101,26 @@ def op_pipe_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = t(spark, sf_dir, "customer")
     attrs = ["c_name", "c_mktsegment"]
 
+    row_hash = f"{scd2_row_hash(attrs)} AS row_hash"
     cur_open = (
-        cust.filter(F.col("c_custkey") % 7 != 0)
-        .select(
+        cust.where("c_custkey % 7 != 0")
+        .selectExpr(
             "c_custkey",
             "c_name",
-            F.when(F.col("c_custkey") % 4 == 0, F.lit("OLDSEG"))
-            .otherwise(F.col("c_mktsegment"))
-            .alias("c_mktsegment"),
+            "IF(c_custkey % 4 = 0, 'OLDSEG', c_mktsegment) AS c_mktsegment",
         )
-        .withColumn("row_hash", scd2_row_hash(attrs))
-        .withColumn("valid_from", F.to_date(F.lit("2024-01-01")))
-        .withColumn("valid_to", F.lit(None).cast("date"))
-        .withColumn("is_current", F.lit(True))
+        .selectExpr(
+            "*", row_hash, "DATE'2024-01-01' AS valid_from",
+            "CAST(NULL AS DATE) AS valid_to", "true AS is_current",
+        )
     )
-    hist = (
-        cust.filter(F.col("c_custkey") % 13 == 0)
-        .select("c_custkey", "c_name", F.lit("HISTSEG").alias("c_mktsegment"))
-        .withColumn("row_hash", scd2_row_hash(attrs))
-        .withColumn("valid_from", F.to_date(F.lit("2023-01-01")))
-        .withColumn("valid_to", F.to_date(F.lit("2024-01-01")))
-        .withColumn("is_current", F.lit(False))
+    hist = cust.where("c_custkey % 13 = 0").selectExpr(
+        "c_custkey", "c_name", "'HISTSEG' AS c_mktsegment",
+    ).selectExpr(
+        "*", row_hash, "DATE'2023-01-01' AS valid_from",
+        "DATE'2024-01-01' AS valid_to", "false AS is_current",
     )
-    current = cur_open.unionByName(hist)
-    incoming = cust.select("c_custkey", *attrs)
-
-    merged = merge_scd2(current, incoming, "c_custkey", attrs, "2024-06-01")
+    merged = merge_scd2(cur_open.unionByName(hist), cust, "c_custkey", attrs, "2024-06-01")
     return merged.select(
         "c_custkey",
         "c_name",
@@ -398,6 +392,11 @@ _DIRTY_CUST = """
 """
 
 
+#: The repair predicates the DQ log and the audit count over the dirty frame
+_NEG_BALANCE = "acctbal < 0"
+_NULLISH_SEGMENT = "lower(trim(segment)) IN ('', 'nan', 'null')"
+
+
 def _dirty_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = t(spark, sf_dir, "customer")
     return cust.select(
@@ -437,9 +436,8 @@ def op_pipe_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dq_log(
         _dirty_customer(spark, sf_dir), "staging_customer", "c_custkey",
         [
-            ("acctbal", "acctbal < 0", "negative balance repaired with abs()"),
-            ("segment", "lower(trim(segment)) IN ('', 'nan', 'null')",
-             "null-like sentinel replaced"),
+            ("acctbal", _NEG_BALANCE, "negative balance repaired with abs()"),
+            ("segment", _NULLISH_SEGMENT, "null-like sentinel replaced"),
             ("name", "trim(name) = ''", "blank name -> fallback id"),
         ],
     )
@@ -489,13 +487,8 @@ def op_pipe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_processed/rows_failed/status/message values over the full dirty
     frame."""
     dirty = _dirty_customer(spark, sf_dir)
-    return audit_frame(
-        dirty, "staging_customer", "extract", F.col("acctbal") < 0
-    ).unionByName(
-        audit_frame(
-            dirty, "staging_customer", "transform",
-            F.lower(F.trim("segment")).isin("", "nan", "null"),
-        )
+    return audit_frame(dirty, "staging_customer", "extract", _NEG_BALANCE).unionByName(
+        audit_frame(dirty, "staging_customer", "transform", _NULLISH_SEGMENT)
     )
 
 

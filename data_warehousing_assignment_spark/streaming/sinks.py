@@ -179,7 +179,7 @@ def start_scd2_dim_sink(
             current = (
                 latest.select(key, *attrs)
                 .limit(0)
-                .withColumn("row_hash", scd2_row_hash(attrs))
+                .withColumn("row_hash", F.expr(scd2_row_hash(attrs)))
                 .withColumn("valid_from", F.lit(None).cast("date"))
                 .withColumn("valid_to", F.lit(None).cast("date"))
                 .withColumn("is_current", F.lit(True))

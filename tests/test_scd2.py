@@ -90,7 +90,7 @@ def test_null_attribute_change_detected(spark):
 def test_row_hash_concat_ws_null_distinction(spark):
     df = spark.createDataFrame(
         [("a", None), (None, "a")], "x string, y string"
-    ).select(scd2_row_hash(["x", "y"]).alias("h"))
+    ).select(F.expr(scd2_row_hash(["x", "y"])).alias("h"))
     h1, h2 = [r.h for r in df.collect()]
     assert h1 != h2
 
@@ -111,7 +111,7 @@ def test_merge_matches_three_join_formulation(spark):
          dt.date(2024, 1, 1), False),
     ]).withColumn(
         "row_hash",
-        F.when(F.col("is_current"), scd2_row_hash(ATTRS))
+        F.when(F.col("is_current"), F.expr(scd2_row_hash(ATTRS)))
         .otherwise(F.col("row_hash")),
     )
     inc = mk_inc(spark, [
@@ -125,7 +125,7 @@ def test_merge_matches_three_join_formulation(spark):
     got = merge_scd2(dim, inc, KEY, ATTRS, as_of)
 
     # --- the pre-r14 three-join formulation, verbatim ---
-    inc_h = inc.select(KEY, *ATTRS).withColumn("row_hash", scd2_row_hash(ATTRS))
+    inc_h = inc.select(KEY, *ATTRS).withColumn("row_hash", F.expr(scd2_row_hash(ATTRS)))
     cur_open = dim.filter(F.col("is_current"))
     history = dim.filter(~F.col("is_current"))
     changed_keys = (

@@ -88,7 +88,7 @@ def _batch_replay(spark):
             dim = (
                 latest.select(KEY, *ATTRS)
                 .limit(0)
-                .withColumn("row_hash", scd2_row_hash(ATTRS))
+                .withColumn("row_hash", F.expr(scd2_row_hash(ATTRS)))
                 .withColumn("valid_from", F.lit(None).cast("date"))
                 .withColumn("valid_to", F.lit(None).cast("date"))
                 .withColumn("is_current", F.lit(True))

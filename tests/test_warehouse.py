@@ -154,6 +154,63 @@ def test_scd2_day2_and_idempotency(spark, state):
 
 
 # --------------------------------------------------------------------------
+# Dim members under the normalized key; the state schemas
+# --------------------------------------------------------------------------
+
+
+def _golden_raw(spark, ops_rows=OPS_ROWS):
+    return (
+        spark.createDataFrame(HR_ROWS, HR_COLS),
+        spark.createDataFrame(FIN_ROWS, FIN_COLS),
+        spark.createDataFrame(ops_rows, OPS_COLS),
+    )
+
+
+def test_case_variants_of_known_members_load_their_fact_rows(spark, state):
+    """A day-2 batch spelling the known 'Backup' and 'HQ' in another case
+    looks them up on the normalized key the upsert dedups on: every row
+    loads against the existing members and no dim row is added."""
+    ops = [
+        ("IT", "backup", "1.0", "2024-01-20", "HQ"),
+        ("IT", "Backup", "2.0", "2024-01-21", "hq"),
+        ("IT", "Backup", "3.0", "2024-01-22", "HQ"),
+    ]
+    state2 = wh.run_etl(spark, *_golden_raw(spark, ops), "2024-02-02", prior=state)
+    backup = state["dim_process"].filter("process_name = 'Backup'").first().process_id
+    hq = state["dim_location"].filter("location_name = 'HQ'").first().location_id
+    for table in ("dim_process", "dim_location"):
+        assert state2[table].count() == state[table].count()
+    new = state2["fact_downtime"].exceptAll(state["fact_downtime"]).collect()
+    assert sorted(float(r.downtime_hours) for r in new) == [1.0, 2.0, 3.0]
+    assert {(r.process_id, r.location_id) for r in new} == {(backup, hq)}
+
+
+def test_new_member_spelled_two_ways_is_one_dim_row(spark):
+    """A new member arriving as 'Backup' and 'backup' in one batch is one
+    dim row, its least spelling, and both fact rows point at it."""
+    ops = [
+        ("IT", "Backup", "1.0", "2024-01-10", "HQ"),
+        ("IT", "backup", "2.0", "2024-01-11", "HQ"),
+    ]
+    st = wh.run_etl(spark, *_golden_raw(spark, ops), LOAD_DATE)
+    procs = st["dim_process"].collect()
+    assert [r.process_name for r in procs] == ["Backup"]
+    assert [r.process_id for r in st["fact_downtime"].collect()] == [procs[0].process_id] * 2
+
+
+def test_state_tables_keep_their_declared_schemas(spark, state):
+    """On the initial and an incremental load, each state table has
+    exactly its STATE_SCHEMAS schema: names, types, every field nullable
+    (a generator over a null-free array would make fields non-null)."""
+    state2 = wh.run_etl(spark, *_golden_raw(spark), "2024-02-02", prior=state)
+    for st in (state, state2):
+        for table, ddl in wh.STATE_SCHEMAS.items():
+            want = [(f.name, f.dataType, True) for f in spark.createDataFrame([], ddl).schema]
+            got = [(f.name, f.dataType, f.nullable) for f in st[table].schema]
+            assert got == want, table
+
+
+# --------------------------------------------------------------------------
 # DQ log vs a reference union of filtered slices
 # --------------------------------------------------------------------------
 

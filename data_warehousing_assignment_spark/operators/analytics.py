@@ -240,27 +240,31 @@ def top_k_per_group(
     )
 
 
-def exact_var_samp(n: Column, s: Column, ss: Column) -> Column:
-    """Sample variance from exact power sums (count, Σx, Σx²) — the sums
-    must be exact integer/decimal types. One double division at the end:
-    var = (n·Σx² − (Σx)²) / (n·(n−1)), bit-identical cross-engine."""
-    num = (n.cast("decimal(38,0)") * ss - s.cast("decimal(38,0)") * s)
-    den = n.cast("decimal(38,0)") * (n - F.lit(1))
-    return num.cast("double") / den.cast("double")
+def exact_var_samp(n: str, s: str, ss: str) -> str:
+    """SQL for the sample variance from exact power sums (count, Σx, Σx²)
+    — column names of exact integer/decimal sums. One double division at
+    the end: var = (n·Σx² − (Σx)²) / (n·(n−1)), bit-identical
+    cross-engine (the text is Spark and DuckDB SQL alike)."""
+    return (
+        f"CAST(CAST({n} AS DECIMAL(38,0)) * {ss} - CAST({s} AS DECIMAL(38,0)) * {s}"
+        f" AS DOUBLE) / CAST(CAST({n} AS DECIMAL(38,0)) * ({n} - 1) AS DOUBLE)"
+    )
 
 
-def exact_corr(
-    n: Column, sx: Column, sy: Column, sxx: Column, syy: Column, sxy: Column
-) -> Column:
-    """Pearson correlation from exact power sums: every term is computed
-    in DECIMAL(38,0) (no int64 overflow at 100 TB row counts), then
-    exactly three IEEE ops (two sqrt, one divide) — deterministic in any
-    engine that evaluates the same expression."""
-    d = lambda c: c.cast("decimal(38,0)")
-    cov = (d(n) * sxy - d(sx) * sy).cast("double")
-    vx = F.sqrt((d(n) * sxx - d(sx) * sx).cast("double"))
-    vy = F.sqrt((d(n) * syy - d(sy) * sy).cast("double"))
-    return cov / (vx * vy)
+def exact_corr(n: str, sx: str, sy: str, sxx: str, syy: str, sxy: str) -> str:
+    """SQL for the Pearson correlation from exact power sums (column
+    names): every term is computed in DECIMAL(38,0) (no int64 overflow
+    at 100 TB row counts), then exactly three IEEE ops (two sqrt, one
+    divide) — deterministic in any engine that evaluates the same
+    expression; the text is Spark and DuckDB SQL alike."""
+    def ss(a: str, b: str, ab: str) -> str:
+        return f"CAST({n} AS DECIMAL(38,0)) * {ab} - CAST({a} AS DECIMAL(38,0)) * {b}"
+
+    return (
+        f"CAST({ss(sx, sy, sxy)} AS DOUBLE)"
+        f" / (sqrt(CAST({ss(sx, sx, sxx)} AS DOUBLE))"
+        f" * sqrt(CAST({ss(sy, sy, syy)} AS DOUBLE)))"
+    )
 
 
 def pack_sequences(

@@ -27,6 +27,7 @@ from data_warehousing_assignment_spark.operators.similarity import (
     int_dot,
     norm,
     quantize,
+    quantize_sql,
 )
 
 
@@ -146,6 +147,69 @@ def _assign(corpus: DataFrame, centroids: DataFrame, n_probe: int = 1) -> DataFr
         .filter(F.col("_rk") <= n_probe)
         .drop("_d", "_rk")
     )
+
+
+#: exact int64 dot of a probe row's ``qvec`` with a cell row's ``cv``
+_PAIR_DOT_SQL = dot_sql("qvec", "cv")
+#: cosine over the per-row norms ``_nq``/``_nc`` hoisted out of the pair
+#: join (computed once per row, not per pair): one IEEE divide
+_PAIR_COS_SQL = f"CAST({_PAIR_DOT_SQL} AS DOUBLE) / (_nq * _nc)"
+
+
+def quantized_rows(
+    frame: DataFrame, id_as: str, vec_as: str, norm_as: str, keys=()
+) -> DataFrame:
+    """``(id_as, vec_as, *keys, norm_as)`` of an embeddings frame: the
+    quantized vector and, in a second projection (so the quantize HOF
+    runs once per row), its norm."""
+    return frame.selectExpr(
+        f"vec_id AS {id_as}", f"{quantize_sql('embedding')} AS {vec_as}", *keys
+    ).withColumn(norm_as, norm(vec_as))
+
+
+def cosine_pairs(cells: DataFrame, probes: DataFrame, keys: list[str]) -> DataFrame:
+    """``(query_id, neighbor_id, dot, cos)`` of every pair of a cell row
+    ``(neighbor_id, cv, _nc)`` and a broadcast probe row
+    ``(query_id, qvec, _nq)`` that agree on ``keys``, self-pairs
+    excluded. The probe side is query-bounded (Q or Q·n_probe rows), so
+    it carries the broadcast hint and the corpus side streams."""
+    return (
+        cells.join(F.broadcast(probes), keys)
+        .filter("neighbor_id <> query_id")
+        .selectExpr(
+            "query_id",
+            "neighbor_id",
+            f"{_PAIR_DOT_SQL} AS dot",
+            f"{_PAIR_COS_SQL} AS cos",
+        )
+    )
+
+
+def probed_cell_scan(
+    corpus: DataFrame,
+    queries: DataFrame,
+    index: tuple[DataFrame, DataFrame],
+    n_probe: int,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(query_id, neighbor_id, dot, cos)`` for each query of an
+    embeddings frame against every corpus row in its ``n_probe`` nearest
+    cells of ``index = (centroids, assignments)``: the exact-cosine
+    probed-cell scan the SQL oracles replay as ``_ivf_cand_ctes``' cand
+    plus exact scoring. ``keys`` are extra columns of both frames that
+    must also be equal (an equi-key of the cell join, so a metadata
+    predicate cuts candidates before any scoring)."""
+    centroids, assignments = index
+    q = queries.selectExpr(
+        "vec_id AS query_id", f"{quantize_sql('embedding')} AS qvec", *keys
+    )
+    probes = _assign(q, centroids, n_probe=n_probe).select(
+        "query_id", "qvec", "cluster", *keys
+    ).withColumn("_nq", norm("qvec"))
+    cells = quantized_rows(corpus, "neighbor_id", "cv", "_nc", keys).join(
+        assignments.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
+    )
+    return cosine_pairs(cells, probes, ["cluster", *keys])
 
 
 def auto_n_clusters(

@@ -506,152 +506,13 @@ _RM_IDCG_SQL = "CASE n_rel " + " ".join(
 ) + " END"
 
 
-@query(
-    "op-ext-retrieval-metrics",
-    oracle=f"""
-    WITH qv AS (
-      SELECT vec_id AS query_id, label AS true_label, {_KNN_QUANT} AS e
-      FROM embeddings WHERE vec_id % 100 = 0
-    ), cv AS (
-      SELECT vec_id AS neighbor_id, {_KNN_QUANT} AS e FROM embeddings
-    ), idx AS (SELECT unnest(range(1, 65)) AS i),
-    dots AS (
-      SELECT q.query_id, c.neighbor_id,
-             CAST(SUM(q.e[idx.i] * c.e[idx.i]) AS BIGINT) AS dot
-      FROM qv q, cv c, idx
-      WHERE q.query_id <> c.neighbor_id
-      GROUP BY 1, 2
-    ), norms AS (
-      SELECT vec_id, CAST(SUM(p) AS BIGINT) AS nrm FROM (
-        SELECT vec_id, e[idx.i] * e[idx.i] AS p
-        FROM (SELECT vec_id, {_KNN_QUANT} AS e FROM embeddings), idx)
-      GROUP BY 1
-    ), top AS (
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT d.query_id, d.neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY d.query_id
-                    ORDER BY CAST(d.dot AS DOUBLE)
-                      / (sqrt(CAST(nq.nrm AS DOUBLE))
-                         * sqrt(CAST(nc.nrm AS DOUBLE))) DESC,
-                      d.neighbor_id) AS rank
-        FROM dots d
-        JOIN norms nq ON d.query_id = nq.vec_id
-        JOIN norms nc ON d.neighbor_id = nc.vec_id)
-      WHERE rank <= {_RM_K}
-    ), rel AS (
-      SELECT t.query_id, q.true_label, t.rank,
-             CASE WHEN e.label = q.true_label THEN 1 ELSE 0 END AS is_rel
-      FROM top t
-      JOIN embeddings e ON t.neighbor_id = e.vec_id
-      JOIN qv q ON t.query_id = q.query_id
-    ), per_q AS (
-      SELECT query_id, true_label,
-             MIN(CASE WHEN is_rel = 1 THEN rank END) AS first_rel,
-             CAST(SUM(is_rel * ({_RM_DISC_SQL})) AS BIGINT) AS dcg_x1e9,
-             CAST(SUM(is_rel) AS BIGINT) AS n_rel
-      FROM rel GROUP BY 1, 2
-    )
-    SELECT true_label,
-           CAST(COUNT(*) AS BIGINT) AS n_queries,
-           CAST(SUM(CASE WHEN first_rel IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_with_hit,
-           CAST(SUM(COALESCE(1000000000 // first_rel, 0)) AS BIGINT)
-             AS sum_rr_x1e9,
-           CAST(SUM(dcg_x1e9) AS BIGINT) AS sum_dcg_x1e9,
-           CAST(SUM({_RM_IDCG_SQL}) AS BIGINT) AS sum_idcg_x1e9
-    FROM per_q GROUP BY 1
-    """,
-)
-def op_ext_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval evaluation — exact MRR and NDCG@10 per label class for
-    the label-retrieval task over the embedding corpus (queries =
-    vec_id%100, relevance = neighbor shares the query's label, ranking
-    = the exact quantized-cosine top-k every ANN op in this repo is
-    anchored to). The metrics every retrieval/RAG pipeline reports
-    before swapping encoders — and the exact ground layer under an
-    approximate variant: rerunning with lsh/ivf_cosine_topk instead of
-    brute force measures THEIR quality drop with the same arithmetic.
-
-    Exactness: the NDCG log2 discounts and IDCG prefix sums are
-    precomputed in Python as ×1e9 integers and embedded as IDENTICAL
-    literals in both engines (log2 never runs engine-side); reciprocal
-    ranks are integer division. Every surfaced column is an exact
-    BIGINT sum. 100 TB: top-k is the documented O(Q·C) exact anchor
-    (IVF/LSH are the scale path); the metric aggregation is two
-    map-side-combined passes over k·|Q| rows."""
-    emb = t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    topk = sim.brute_force_cosine_topk(emb, queries, k=_RM_K)
-    labels = emb.select("vec_id", "label")
-    truth = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("true_label")
-    )
-    disc = F.when(F.col("rank") == 1, F.lit(_RM_W[0]))
-    for r in range(2, _RM_K + 1):
-        disc = disc.when(F.col("rank") == r, F.lit(_RM_W[r - 1]))
-    rel = (
-        topk.join(labels, topk["neighbor_id"] == labels["vec_id"])
-        .join(F.broadcast(truth), "query_id")
-        .select(
-            "query_id",
-            "true_label",
-            "rank",
-            (F.col("label") == F.col("true_label")).cast("long").alias(
-                "is_rel"
-            ),
-            disc.alias("_w"),
-        )
-    )
-    idcg = F.when(F.col("n_rel") == 0, F.lit(0))
-    for m in range(1, _RM_K + 1):
-        idcg = idcg.when(F.col("n_rel") == m, F.lit(_RM_P[m]))
-    per_q = rel.groupBy("query_id", "true_label").agg(
-        F.min(F.when(F.col("is_rel") == 1, F.col("rank"))).alias(
-            "first_rel"
-        ),
-        F.sum(F.col("is_rel") * F.col("_w")).cast("bigint").alias(
-            "dcg_x1e9"
-        ),
-        F.sum("is_rel").cast("bigint").alias("n_rel"),
-    )
-    return per_q.groupBy("true_label").agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum(F.col("first_rel").isNotNull().cast("long"))
-        .cast("bigint")
-        .alias("n_with_hit"),
-        F.sum(
-            F.coalesce(
-                F.expr("1000000000 div first_rel"), F.lit(0)
-            )
-        )
-        .cast("bigint")
-        .alias("sum_rr_x1e9"),
-        F.sum("dcg_x1e9").cast("bigint").alias("sum_dcg_x1e9"),
-        F.sum(idcg).cast("bigint").alias("sum_idcg_x1e9"),
-    )
-
-
-# --------------------------------------------------------------------------
-# fusion evaluation: the retrieval metrics over the HYBRID ranking
-# --------------------------------------------------------------------------
-
-from data_warehousing_assignment_spark.registry_extensions import (  # noqa: E402
-    _HYBRID_C0_SQL,
-    _hybrid_fused_ctes,
-    _ivf_cand_ctes,
-    _QSAMPLE_CTE,
-    _QSAMPLE_WHERE,
-    audit_sample,
-    hybrid_fused_frame,
-)
-
-
 def _metrics_tail_sql(top_cte: str) -> str:
     """The exact fixed-point MRR/NDCG@10 aggregation over a ranked-list
     CTE ``top_cte(query_id, neighbor_id, rank)`` with label relevance —
-    ONE definition shared by the fusion-gain and fusion-baseline
-    oracles so the two rankings are graded by literally the same
-    arithmetic (that's what makes their delta a measured gain)."""
+    ONE definition shared by the retrieval-metrics, fusion-gain and
+    fusion-baseline oracles, so every ranking is graded by literally the
+    same arithmetic (that's what makes the fusion delta a measured
+    gain)."""
     return f"""
     rel AS (
       SELECT t.query_id, ql.label AS true_label, t.rank,
@@ -681,66 +542,126 @@ def _metrics_tail_sql(top_cte: str) -> str:
 
 def _retrieval_metrics_over(top: DataFrame, emb: DataFrame) -> DataFrame:
     """Engine twin of :func:`_metrics_tail_sql` over a ranked frame
-    ``(query_id, neighbor_id, rank)`` — shared by op-ext-fusion-gain
-    and op-ext-fusion-baseline.
+    ``(query_id, neighbor_id, rank)`` — the one engine tail of
+    op-ext-retrieval-metrics, op-ext-fusion-gain and
+    op-ext-fusion-baseline, with the same discount and IDCG literals.
 
     Join strategy (r13 verdict #7 + the same defect class as #1): the
-    label frames are CORPUS-SIZED (one row per embedding — the former
-    ``F.broadcast(qlab)`` hint was a designed-in 100 TB driver OOM,
-    invisible at tested SFs), while ``top`` is Q-BOUNDED by construction
-    (≤ _RM_K·|Q| = 1000 rows at Q=100). So the broadcast hints go on the
-    rank-bounded side of BOTH label joins — the corpus side streams with
-    zero exchange; pinned in
-    tests/test_plan_shapes.py::test_retrieval_metrics_broadcasts_rank_frame."""
-    qlab = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("true_label")
-    )
-    nlab = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("label").alias("_nl")
-    )
-    disc = F.when(F.col("rank") == 1, F.lit(_RM_W[0]))
-    for r in range(2, _RM_K + 1):
-        disc = disc.when(F.col("rank") == r, F.lit(_RM_W[r - 1]))
+    label frames are CORPUS-SIZED (one row per embedding — a broadcast
+    hint on them is a designed-in 100 TB driver OOM, invisible at tested
+    SFs), while ``top`` is Q-BOUNDED by construction (≤ _RM_K·|Q| rows).
+    So the broadcast hints go on the rank-bounded side of BOTH label
+    joins — the corpus side streams with zero exchange; pinned in
+    tests/test_plan_shapes.py::test_retrieval_metrics_broadcasts_rank_frame.
+    The joined rows (≤ _RM_K·|Q|) are then hash-partitioned once on the
+    query's label: a query has one label, so that one shuffle serves
+    both the per-query and the per-label aggregate."""
+    qlab = emb.selectExpr("vec_id AS query_id", "label AS true_label")
+    nlab = emb.selectExpr("vec_id AS neighbor_id", "label AS _nl")
     rel = (
         F.broadcast(F.broadcast(top).join(qlab, "query_id"))
         .join(nlab, "neighbor_id")
-        .select(
-            "query_id",
-            "true_label",
-            "rank",
-            (F.col("_nl") == F.col("true_label")).cast("long").alias(
-                "is_rel"
-            ),
-            disc.alias("_w"),
+        .selectExpr(
+            "query_id", "true_label", "rank",
+            "CAST(_nl = true_label AS BIGINT) AS is_rel",
         )
+        .repartition("true_label")
     )
-    idcg = F.when(F.col("n_rel") == 0, F.lit(0))
-    for m in range(1, _RM_K + 1):
-        idcg = idcg.when(F.col("n_rel") == m, F.lit(_RM_P[m]))
     per_q = rel.groupBy("query_id", "true_label").agg(
-        F.min(F.when(F.col("is_rel") == 1, F.col("rank"))).alias(
-            "first_rel"
-        ),
-        F.sum(F.col("is_rel") * F.col("_w")).cast("bigint").alias(
-            "dcg_x1e9"
-        ),
-        F.sum("is_rel").cast("bigint").alias("n_rel"),
+        F.expr("min(CASE WHEN is_rel = 1 THEN rank END) AS first_rel"),
+        F.expr(f"CAST(sum(is_rel * ({_RM_DISC_SQL})) AS BIGINT) AS dcg_x1e9"),
+        F.expr("CAST(sum(is_rel) AS BIGINT) AS n_rel"),
     )
     return per_q.groupBy("true_label").agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum(F.col("first_rel").isNotNull().cast("long"))
-        .cast("bigint")
-        .alias("n_with_hit"),
-        F.sum(
-            F.coalesce(
-                F.expr("1000000000 div first_rel"), F.lit(0)
-            )
-        )
-        .cast("bigint")
-        .alias("sum_rr_x1e9"),
-        F.sum("dcg_x1e9").cast("bigint").alias("sum_dcg_x1e9"),
-        F.sum(idcg).cast("bigint").alias("sum_idcg_x1e9"),
+        F.expr("count(1) AS n_queries"),
+        F.expr(
+            "CAST(sum(CAST(first_rel IS NOT NULL AS BIGINT)) AS BIGINT)"
+            " AS n_with_hit"
+        ),
+        F.expr(
+            "CAST(sum(coalesce(1000000000 div first_rel, 0)) AS BIGINT)"
+            " AS sum_rr_x1e9"
+        ),
+        F.expr("CAST(sum(dcg_x1e9) AS BIGINT) AS sum_dcg_x1e9"),
+        F.expr(f"CAST(sum({_RM_IDCG_SQL}) AS BIGINT) AS sum_idcg_x1e9"),
     )
+
+
+@query(
+    "op-ext-retrieval-metrics",
+    oracle=f"""
+    WITH qv AS (
+      SELECT vec_id AS query_id, {_KNN_QUANT} AS e
+      FROM embeddings WHERE vec_id % 100 = 0
+    ), cv AS (
+      SELECT vec_id AS neighbor_id, {_KNN_QUANT} AS e FROM embeddings
+    ), idx AS (SELECT unnest(range(1, 65)) AS i),
+    dots AS (
+      SELECT q.query_id, c.neighbor_id,
+             CAST(SUM(q.e[idx.i] * c.e[idx.i]) AS BIGINT) AS dot
+      FROM qv q, cv c, idx
+      WHERE q.query_id <> c.neighbor_id
+      GROUP BY 1, 2
+    ), norms AS (
+      SELECT vec_id, CAST(SUM(p) AS BIGINT) AS nrm FROM (
+        SELECT vec_id, e[idx.i] * e[idx.i] AS p
+        FROM (SELECT vec_id, {_KNN_QUANT} AS e FROM embeddings), idx)
+      GROUP BY 1
+    ), top AS (
+      SELECT query_id, neighbor_id, rank FROM (
+        SELECT d.query_id, d.neighbor_id,
+               ROW_NUMBER() OVER (PARTITION BY d.query_id
+                    ORDER BY CAST(d.dot AS DOUBLE)
+                      / (sqrt(CAST(nq.nrm AS DOUBLE))
+                         * sqrt(CAST(nc.nrm AS DOUBLE))) DESC,
+                      d.neighbor_id) AS rank
+        FROM dots d
+        JOIN norms nq ON d.query_id = nq.vec_id
+        JOIN norms nc ON d.neighbor_id = nc.vec_id)
+      WHERE rank <= {_RM_K}
+    ),
+    {_metrics_tail_sql("top")}
+    """,
+)
+def op_ext_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Retrieval evaluation — exact MRR and NDCG@10 per label class for
+    the label-retrieval task over the embedding corpus (queries =
+    vec_id%100, relevance = neighbor shares the query's label, ranking
+    = the exact quantized-cosine top-k every ANN op in this repo is
+    anchored to). The metrics every retrieval/RAG pipeline reports
+    before swapping encoders — and the exact ground layer under an
+    approximate variant: rerunning with lsh/ivf_cosine_topk instead of
+    brute force measures THEIR quality drop with the same arithmetic.
+
+    Exactness: the NDCG log2 discounts and IDCG prefix sums are
+    precomputed in Python as ×1e9 integers and embedded as IDENTICAL
+    literals in both engines (log2 never runs engine-side); reciprocal
+    ranks are integer division. Every surfaced column is an exact
+    BIGINT sum. 100 TB: top-k is the documented O(Q·C) exact anchor
+    (IVF/LSH are the scale path); the metric aggregation is two
+    map-side-combined passes over k·|Q| rows."""
+    emb = t(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 100 == 0)
+    topk = sim.brute_force_cosine_topk(emb, queries, k=_RM_K)
+    return _retrieval_metrics_over(
+        topk.select("query_id", "neighbor_id", "rank"), emb
+    )
+
+
+# --------------------------------------------------------------------------
+# fusion evaluation: the retrieval metrics over the HYBRID ranking
+# --------------------------------------------------------------------------
+
+from data_warehousing_assignment_spark.registry_extensions import (  # noqa: E402
+    _HYBRID_C0_SQL,
+    _hybrid_fused_ctes,
+    _ivf_cand_ctes,
+    _QSAMPLE_CTE,
+    _QSAMPLE_WHERE,
+    _top_per_query,
+    audit_sample,
+    hybrid_fused_frame,
+)
 
 
 @query(
@@ -771,15 +692,9 @@ def op_ext_fusion_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor shares the query's label. SCALE: metric aggregation is
     two map-side-combined passes over 10·|Q| rank rows on top of the
     hybrid pipeline's documented shapes."""
-    fused = hybrid_fused_frame(spark, sf_dir)
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_micro"), F.col("neighbor_id")
-    )
-    top = (
-        fused.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= _RM_K)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    top = _top_per_query(
+        hybrid_fused_frame(spark, sf_dir), "rrf_micro DESC, neighbor_id", _RM_K
+    ).select("query_id", "neighbor_id", "rank")
     return _retrieval_metrics_over(top, t(spark, sf_dir, "embeddings"))
 
 

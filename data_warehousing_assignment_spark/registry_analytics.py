@@ -348,7 +348,7 @@ def op_ext_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-moments",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT l_returnflag, COUNT(*) AS n,
              SUM(CAST(l_quantity AS BIGINT)) AS sx,
@@ -357,13 +357,8 @@ def op_ext_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem GROUP BY 1
     )
     SELECT l_returnflag, n AS n_rows,
-           CAST(CAST(n AS DECIMAL(38,0)) * sxx
-                - CAST(sx AS DECIMAL(38,0)) * sx AS DOUBLE)
-             / CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) AS DOUBLE) AS var_qty,
-           sqrt(CAST(CAST(n AS DECIMAL(38,0)) * sxx
-                     - CAST(sx AS DECIMAL(38,0)) * sx AS DOUBLE)
-                / CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) AS DOUBLE))
-             AS std_qty
+           {an.exact_var_samp("n", "sx", "sxx")} AS var_qty,
+           sqrt({an.exact_var_samp("n", "sx", "sxx")}) AS std_qty
     FROM s
     """,
 )
@@ -381,7 +376,7 @@ def op_ext_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("_q").alias("sx"),
         F.sum(F.col("_q") * F.col("_q")).alias("sxx"),
     )
-    var = an.exact_var_samp(F.col("n"), F.col("sx"), F.col("sxx"))
+    var = F.expr(an.exact_var_samp("n", "sx", "sxx"))
     return s.select(
         "l_returnflag",
         F.col("n").alias("n_rows"),
@@ -404,13 +399,7 @@ def op_ext_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem GROUP BY 1
     )
     SELECT l_returnflag, n AS n_rows,
-           CAST(CAST(n AS DECIMAL(38,0)) * sxy
-                - CAST(sx AS DECIMAL(38,0)) * sy AS DOUBLE)
-           / (sqrt(CAST(CAST(n AS DECIMAL(38,0)) * sxx
-                        - CAST(sx AS DECIMAL(38,0)) * sx AS DOUBLE))
-              * sqrt(CAST(CAST(n AS DECIMAL(38,0)) * syy
-                          - CAST(sy AS DECIMAL(38,0)) * sy AS DOUBLE)))
-             AS corr_qty_price
+           {an.exact_corr("n", "sx", "sy", "sxx", "syy", "sxy")} AS corr_qty_price
     FROM s
     """,
 )
@@ -436,10 +425,9 @@ def op_ext_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "l_returnflag",
         F.col("n").alias("n_rows"),
-        an.exact_corr(
-            F.col("n"), F.col("sx"), F.col("sy"),
-            F.col("sxx"), F.col("syy"), F.col("sxy"),
-        ).alias("corr_qty_price"),
+        F.expr(an.exact_corr("n", "sx", "sy", "sxx", "syy", "sxy")).alias(
+            "corr_qty_price"
+        ),
     )
 
 
@@ -1027,29 +1015,38 @@ _CM_PAIRS = [
 ]
 
 
-def _cm_oracle() -> str:
-    sums = ", ".join(
-        f"SUM(CAST({expr} AS DECIMAL(38,0))) AS s_{nm}, "
-        f"SUM(CAST({expr} AS DECIMAL(38,0)) * {expr}) AS ss_{nm}"
+#: the one-pass aggregate: count, then per variable Σx and Σx², then per
+#: pair Σxy, all in DECIMAL(38,0) — Spark and DuckDB SQL alike
+_CM_SUMS = (
+    ["COUNT(*) AS n"]
+    + [
+        agg
         for nm, expr in _CM_VARS
-    )
-    crosses = ", ".join(
+        for agg in (
+            f"SUM(CAST({expr} AS DECIMAL(38,0))) AS s_{nm}",
+            f"SUM(CAST({expr} AS DECIMAL(38,0)) * {expr}) AS ss_{nm}",
+        )
+    ]
+    + [
         f"SUM(CAST({ea} AS DECIMAL(38,0)) * {eb}) AS sx_{na}_{nb}"
         for (na, ea), (nb, eb) in _CM_PAIRS
+    ]
+)
+
+
+def _cm_corr(na: str, nb: str) -> str:
+    return an.exact_corr(
+        "n", f"s_{na}", f"s_{nb}", f"ss_{na}", f"ss_{nb}", f"sx_{na}_{nb}"
     )
-    def corr(na, nb):
-        return (
-            f"CAST(CAST(n AS DECIMAL(38,0)) * sx_{na}_{nb} - s_{na} * s_{nb} "
-            f"AS DOUBLE) / (sqrt(CAST(CAST(n AS DECIMAL(38,0)) * ss_{na} "
-            f"- s_{na} * s_{na} AS DOUBLE)) * sqrt(CAST(CAST(n AS "
-            f"DECIMAL(38,0)) * ss_{nb} - s_{nb} * s_{nb} AS DOUBLE)))"
-        )
+
+
+def _cm_oracle() -> str:
     rows = " UNION ALL ".join(
         f"SELECT '{na}' AS var_a, '{nb}' AS var_b, CAST(n AS BIGINT) "
-        f"AS n_rows, {corr(na, nb)} AS pearson_r FROM s"
+        f"AS n_rows, {_cm_corr(na, nb)} AS pearson_r FROM s"
         for (na, _), (nb, _) in _CM_PAIRS
     )
-    return f"WITH s AS (SELECT COUNT(*) AS n, {sums}, {crosses} FROM lineitem) {rows}"
+    return f"WITH s AS (SELECT {', '.join(_CM_SUMS)} FROM lineitem) {rows}"
 
 
 @query("op-ext-corr-matrix", oracle=_cm_oracle())
@@ -1059,39 +1056,21 @@ def op_ext_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) power sums — the feature-screening step of any model
     pipeline, and the generalization of op-ext-corr's single pair: 4
     sums + 4 squares + 6 cross-products accumulate map-side-combinably
-    in a single aggregate, the 6 correlations are then three IEEE ops
-    each over the 1-row exact frame, exploded long-form (var_a, var_b,
-    n_rows, pearson_r). 100 TB: one scan, one 1-row combine — adding
-    variables grows the row width O(k²), never the pass count."""
-    li = t(spark, sf_dir, "lineitem")
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for nm, expr in _CM_VARS:
-        e = F.expr(expr)
-        aggs.append(F.sum(e.cast("decimal(38,0)")).alias(f"s_{nm}"))
-        aggs.append(F.sum(e.cast("decimal(38,0)") * e).alias(f"ss_{nm}"))
-    for (na, ea), (nb, eb) in _CM_PAIRS:
-        aggs.append(
-            F.sum(F.expr(ea).cast("decimal(38,0)") * F.expr(eb)).alias(
-                f"sx_{na}_{nb}"
-            )
-        )
-    s = li.agg(*aggs)
-    pairs = F.array(*[
-        F.struct(
-            F.lit(na).alias("var_a"),
-            F.lit(nb).alias("var_b"),
-            F.col("n").cast("bigint").alias("n_rows"),
-            an.exact_corr(
-                F.col("n"),
-                F.col(f"s_{na}"), F.col(f"s_{nb}"),
-                F.col(f"ss_{na}"), F.col(f"ss_{nb}"),
-                F.col(f"sx_{na}_{nb}"),
-            ).alias("pearson_r"),
-        )
+    in a single aggregate (the oracle's own aggregate text), the 6
+    correlations are then three IEEE ops each over the 1-row exact
+    frame, exploded long-form (var_a, var_b, n_rows, pearson_r). 100 TB:
+    one scan, one 1-row combine — adding variables grows the row width
+    O(k²), never the pass count."""
+    pairs = ", ".join(
+        f"struct('{na}' AS var_a, '{nb}' AS var_b, CAST(n AS BIGINT) AS n_rows,"
+        f" {_cm_corr(na, nb)} AS pearson_r)"
         for (na, _), (nb, _) in _CM_PAIRS
-    ])
-    return s.select(F.explode(pairs).alias("_p")).select(
-        "_p.var_a", "_p.var_b", "_p.n_rows", "_p.pearson_r"
+    )
+    return (
+        t(spark, sf_dir, "lineitem")
+        .selectExpr(*_CM_SUMS)
+        .selectExpr(f"explode(array({pairs})) AS _p")
+        .select("_p.*")
     )
 
 

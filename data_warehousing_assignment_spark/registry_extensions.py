@@ -1359,6 +1359,44 @@ _RRF_ORACLE = f"""
     """
 
 
+def _top_per_query(
+    frame: DataFrame, order: str, k: int, rank_as: str = "rank"
+) -> DataFrame:
+    """``frame`` plus ``rank_as``, cut to each query's first ``k`` rows by
+    the SQL ``order`` (which ends in a unique tie-break) — the ranking
+    every retrieval op shares with its oracle. The filter sits right on
+    the window, so Spark plans it as a per-partition group limit."""
+    return frame.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY query_id ORDER BY {order}) AS {rank_as}",
+    ).filter(f"{rank_as} <= {k}")
+
+
+def _rrf_contrib(ranked: DataFrame, order: str) -> DataFrame:
+    """``(query_id, neighbor_id, c)``: the reciprocal-rank contribution
+    1e6 div (60 + r) of each query's top 20 by ``order`` (ties to the
+    lower neighbor_id) — exact integer micro-units, so no float sum can
+    drift."""
+    return _top_per_query(ranked, f"{order}, neighbor_id", 20, "r").selectExpr(
+        "query_id", "neighbor_id", "1000000 div (60 + r) AS c"
+    )
+
+
+def _rrf_fused(a: DataFrame, b: DataFrame) -> DataFrame:
+    """``(query_id, neighbor_id, rrf_micro)``: the summed contributions
+    of both rankings a candidate appears in."""
+    return (
+        a.unionAll(b)
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.expr("CAST(sum(c) AS BIGINT) AS rrf_micro"))
+    )
+
+
+def _fused_top10(fused: DataFrame) -> DataFrame:
+    top = _top_per_query(fused, "rrf_micro DESC, neighbor_id", 10, "fused_rank")
+    return top.select("query_id", "neighbor_id", "rrf_micro", "fused_rank")
+
+
 @query("op-ext-rank-fusion", oracle=_RRF_ORACLE)
 def op_ext_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009):
@@ -1376,73 +1414,14 @@ def op_ext_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehousing_assignment_spark.caching import pin
 
     corpus = t(spark, sf_dir, "embeddings")
-    queries = corpus.filter(F.col("vec_id") % 100 == 0)
-    centroids, assignments = iv.build_ivf_index(
-        corpus, "vec_id", "embedding", 16
+    index = iv.build_ivf_index(corpus, "vec_id", "embedding", 16)
+    queries = corpus.filter("vec_id % 100 = 0")
+    # two ranking windows read one scoring pass
+    scored = pin(iv.probed_cell_scan(corpus, queries, index, n_probe=4))
+    fused = _rrf_fused(
+        _rrf_contrib(scored, "cos DESC"), _rrf_contrib(scored, "dot DESC")
     )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        sim.quantize("embedding").alias("qvec"),
-    )
-    # per-row norms hoisted out of the candidate join (computed once per
-    # probe/corpus row, not per pair) — same expression, bit-identical.
-    probes = iv._assign(q, centroids, n_probe=4).select(
-        "query_id", "qvec", "cluster"
-    ).withColumn("_nq", sim.norm("qvec"))
-    cells = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        sim.quantize("embedding").alias("cv"),
-    ).withColumn("_nc", sim.norm("cv")).join(
-        assignments.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
-    )
-    dot = sim.int_dot("qvec", "cv")
-    scored = (
-        cells.join(F.broadcast(probes), "cluster")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot.alias("dot"),
-            (dot.cast("double") / (F.col("_nq") * F.col("_nc"))).alias("cos"),
-        )
-    )
-    scored = pin(scored)  # two ranking windows read one scoring pass
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.col("neighbor_id")
-    )
-    wb = Window.partitionBy("query_id").orderBy(
-        F.desc("dot"), F.col("neighbor_id")
-    )
-    contrib = (
-        scored.withColumn("r", F.row_number().over(wa))
-        .filter(F.col("r") <= 20)
-        .select("query_id", "neighbor_id", F.expr("1000000 div (60 + r)").alias("c"))
-        .unionAll(
-            scored.withColumn("r", F.row_number().over(wb))
-            .filter(F.col("r") <= 20)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.expr("1000000 div (60 + r)").alias("c"),
-            )
-        )
-    )
-    fused = contrib.groupBy("query_id", "neighbor_id").agg(
-        F.sum("c").cast("bigint").alias("rrf_micro")
-    )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_micro"), F.col("neighbor_id")
-    )
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(wf))
-        .filter(F.col("fused_rank") <= 10)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rrf_micro",
-            F.col("fused_rank").cast("int"),
-        )
-    )
+    return _fused_top10(fused)
 
 
 @query(
@@ -2584,6 +2563,99 @@ def op_ext_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.withColumn("rnk", F.row_number().over(w).cast("bigint"))
 
 
+#: BM25 (k1 = 1.5, b = 0.75) of one posting from its ``tf``, document
+#: length ``dl``, corpus ``avgdl`` and term ``idf``, rounded to 6 dp: the
+#: same left-associative double expression the oracles write (``D``
+#: literals, so no operand is parsed as DECIMAL).
+BM25_SQL = (
+    "round(idf * (tf * 2.5D)"
+    " / (tf + 1.5D * (1.0D - 0.75D + 0.75D * dl / avgdl)), 6)"
+)
+#: the same score as exact fixed-point µ-units: rounded to 6 dp, ×1e6,
+#: rounded again so Spark's truncating cast and DuckDB's rounding cast
+#: agree — sums of these are order-free integers
+BM25_MICRO_SQL = f"CAST(round({BM25_SQL} * 1000000, 0) AS BIGINT)"
+_BM25_IDF_SQL = "ln(1.0D + (n_docs - df + 0.5D) / (df + 0.5D))"
+
+
+def bm25_idf(tf: DataFrame, stats: DataFrame, guarded: bool = True) -> DataFrame:
+    """Per-token BM25 idf ``(tok, idf)``. ``guarded`` applies the stop-term
+    guard (integer-exact, mirrored in the oracles' HAVING): a term in
+    >90% of documents contributes idf ≈ ln(1.11) ≈ 0.1 — noise — while
+    its postings list is O(corpus). Dropping it bounds the postings join
+    the way every production lexical index does (stop lists /
+    impact-ordered pruning à la WAND are the stronger forms). No-op on
+    the tested corpora: max df ratio measured 0.78–0.83 across SFs
+    (threshold behavior unit-pinned in tests/test_rank_fusion.py)."""
+    df = (
+        tf.groupBy("tok")
+        .agg(F.expr("count(1) AS df"))
+        .crossJoin(F.broadcast(stats.select("n_docs")))
+    )
+    if guarded:
+        df = df.filter("df * 10 <= n_docs * 9")
+    return df.selectExpr("tok", f"{_BM25_IDF_SQL} AS idf")
+
+
+def bm25_build(
+    docs: DataFrame, guarded: bool, zipf_skew: bool = False
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """``(tf, dl, stats, idf)`` of a documents frame: the pinned
+    ``(doc_id, tok, tf)`` term counts (they feed both the doc-frequency
+    agg and the score join), ``(doc_id, dl)`` lengths, the 1-row
+    ``(avgdl, n_docs)`` stats and :func:`bm25_idf`. tf/df/dl/N are
+    integer-exact in both engines; avgdl is exact-int-sum / count (one
+    IEEE divide). Only the 1-row stats may carry a broadcast hint: the
+    idf (vocab-sized: unbounded on web text) and dl (one row per
+    document) frames join UNHINTED (r13 verdict #1) — at ~100 TB both are
+    tens-of-GB frames and a forced broadcast is a designed-in driver OOM;
+    AQE broadcasts them at small SF and picks shuffle-hash/sort-merge at
+    scale (pinned in
+    tests/test_plan_shapes.py::test_bm25_family_no_forced_corpus_broadcast).
+
+    ``zipf_skew=True`` is a measurement knob, not a registered contract:
+    a deterministic Zipf PROJECTION of the posting lists that reproduces
+    the natural-language df profile the block-max prune targets. Tokens
+    get a fixed arbitrary rank r (md5 order); the token at rank r keeps
+    ~1/r of its (doc, token) postings via a per-posting md5 coin, so df
+    falls off as df_raw/r — a Zipf(1) tail: few huge stop-ish lists (low
+    idf ⇒ low impact ⇒ non-essential under MaxScore) and many short
+    rare-term lists. dl/avgdl are recomputed from the projected postings
+    so the BM25 arithmetic is self-consistent on the projected corpus;
+    the vocab-sized rank frame joins unhinted like idf. Block-max
+    losslessness under the knob is pinned in tests/test_rank_fusion.py."""
+    from data_warehousing_assignment_spark.caching import pin
+
+    tf = pin(
+        docs.select("doc_id", F.explode(tx.tokens("text")).alias("tok"))
+        .groupBy("doc_id", "tok")
+        .agg(F.expr("count(1) AS tf"))
+    )
+    if zipf_skew:
+        tokrank = tf.select("tok").distinct().selectExpr(
+            "tok",
+            "CAST(row_number() OVER (ORDER BY md5(tok), tok) AS BIGINT) AS zrank",
+        )
+        tf = pin(
+            tf.join(tokrank, "tok")
+            .filter(
+                "CAST(conv(substring(md5(concat_ws(':', tok,"
+                " CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
+                " % zrank = 0"
+            )
+            .drop("zrank")
+        )
+        dl = tf.groupBy("doc_id").agg(F.expr("CAST(sum(tf) AS BIGINT) AS dl"))
+    else:
+        dl = docs.select(
+            "doc_id", F.size(tx.tokens("text")).cast("bigint").alias("dl")
+        )
+    stats = dl.selectExpr(
+        "CAST(sum(dl) AS DOUBLE) / count(1) AS avgdl", "count(1) AS n_docs"
+    )
+    return tf, dl, stats, bm25_idf(tf, stats, guarded)
+
+
 @query(
     "op-ext-bm25",
     oracle=f"""
@@ -2627,65 +2699,22 @@ def op_ext_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def op_ext_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 BM25 (k1=1.5, b=0.75) terms per document — TF-IDF's
     production successor with doc-length normalization. Determinism:
-    tf/df/dl/N are integer-exact both engines; avgdl is exact-int-sum /
-    count (one IEEE divide); the score is the SAME left-associative
-    double expression in both engines, rounded to 6 dp before ranking;
-    ties by token. Plan: tf agg feeds both the doc-frequency agg and
-    the score join; only the 1-row corpus stats carry broadcast hints.
-    The idf (vocab-sized: unbounded on web text) and dl (one row per
-    corpus document) sides are deliberately UNHINTED (r13 verdict #1):
-    at ~100 TB both are tens-of-GB frames and a forced broadcast is a
-    designed-in driver OOM — AQE broadcasts them at small SF and picks
-    shuffle-hash/sort-merge at scale (pinned in
-    tests/test_plan_shapes.py::test_bm25_family_no_forced_corpus_broadcast)."""
-    from pyspark.sql import Window
-
-    from data_warehousing_assignment_spark.caching import pin
-
+    the score is the SAME left-associative double expression in both
+    engines (BM25_SQL), rounded to 6 dp before ranking; ties by token.
+    Plan: the bm25_build shape, with the unguarded idf."""
     docs = docs_t(spark, sf_dir)
-    tf = pin(
-        docs.select("doc_id", F.explode(tx.tokens("text")).alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dl = docs.select("doc_id", F.size(tx.tokens("text")).cast("bigint").alias("dl"))
-    stats = dl.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    idf = (
-        tf.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .select(
-            "tok",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    scored = (
+    tf, dl, stats, idf = bm25_build(docs, guarded=False)
+    return (
         tf.join(idf, "tok")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats.select("avgdl")))
-        .select(
-            "doc_id",
-            "tok",
-            F.round(
-                F.col("idf") * (F.col("tf") * 2.5)
-                / (
-                    F.col("tf")
-                    + 1.5 * (F.lit(1.0) - 0.75 + 0.75 * F.col("dl") / F.col("avgdl"))
-                ),
-                6,
-            ).alias("bm25"),
+        .selectExpr("doc_id", "tok", f"{BM25_SQL} AS bm25")
+        .selectExpr(
+            "*",
+            "CAST(row_number() OVER (PARTITION BY doc_id"
+            " ORDER BY bm25 DESC, tok) AS BIGINT) AS rnk",
         )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("bm25"), F.asc("tok"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 3)
+        .filter("rnk <= 3")
     )
 
 
@@ -3502,44 +3531,7 @@ def op_ext_hybrid_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard bound a production lexical index applies; measured
     two-decade probe stays linear (6.0→26.6→244.5 s across
     sf0.1→sf1→sf10, BASELINE.md r13)."""
-    fused = hybrid_fused_frame(spark, sf_dir)
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_micro"), F.col("neighbor_id")
-    )
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(wf))
-        .filter(F.col("fused_rank") <= 10)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rrf_micro",
-            F.col("fused_rank").cast("int"),
-        )
-    )
-
-
-def bm25_guarded_idf(tf: DataFrame, stats: DataFrame) -> DataFrame:
-    """Per-token BM25 idf with the stop-term guard (integer-exact,
-    mirrored in the oracle's HAVING): a term in >90% of documents
-    contributes idf ≈ ln(1.11) ≈ 0.1 — noise — while its postings list
-    is O(corpus). Dropping it bounds the postings join the way every
-    production lexical index does (stop lists / impact-ordered pruning
-    à la WAND are the stronger forms). No-op on the tested corpora:
-    max df ratio measured 0.78–0.83 across SFs (threshold behavior
-    unit-pinned in tests/test_rank_fusion.py)."""
-    return (
-        tf.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .filter(F.col("df") * 10 <= F.col("n_docs") * 9)
-        .select(
-            "tok",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
+    return _fused_top10(hybrid_fused_frame(spark, sf_dir))
 
 
 def hybrid_fused_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3563,124 +3555,33 @@ def hybrid_fused_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the op-ext-ann-ivf-scaled precedent, 35.6 s vs 100.6 s).
     n_vec = emb.count()
     k_cells = iv.auto_n_clusters(n_vec, min(100, n_vec), n_probe=4)
-    centroids, assignments = iv.build_ivf_index(
-        emb, "vec_id", "embedding", k_cells
-    )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        sim.quantize("embedding").alias("qvec"),
-    )
-    # per-row norms hoisted out of the candidate join (computed once per
-    # probe/corpus row, not per pair) — same expression, bit-identical.
-    probes = iv._assign(q, centroids, n_probe=4).select(
-        "query_id", "qvec", "cluster"
-    ).withColumn("_nq", sim.norm("qvec"))
-    cells = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        sim.quantize("embedding").alias("cv"),
-    ).withColumn("_nc", sim.norm("cv")).join(
-        assignments.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
-    )
-    dot = sim.int_dot("qvec", "cv")
-    dscored = (
-        cells.join(F.broadcast(probes), "cluster")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot.cast("double") / (F.col("_nq") * F.col("_nc"))).alias("cos"),
-        )
-    )
-    wd = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.col("neighbor_id")
-    )
-    dense20 = (
-        dscored.withColumn("r", F.row_number().over(wd))
-        .filter(F.col("r") <= 20)
-        .select(
-            "query_id", "neighbor_id",
-            F.expr("1000000 div (60 + r)").alias("c"),
-        )
+    index = iv.build_ivf_index(emb, "vec_id", "embedding", k_cells)
+    dense20 = _rrf_contrib(
+        iv.probed_cell_scan(emb, queries, index, n_probe=4), "cos DESC"
     )
     # --- lexical leg: BM25 doc ranking from the inverted tf table
-    from data_warehousing_assignment_spark.caching import pin
-
-    docs = docs_t(spark, sf_dir)
-    tf = pin(
-        docs.select("doc_id", F.explode(tx.tokens("text")).alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-    dl = docs.select(
-        "doc_id", F.size(tx.tokens("text")).cast("bigint").alias("dl")
-    )
-    stats = dl.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    idf = bm25_guarded_idf(tf, stats)
+    tf, dl, stats, idf = bm25_build(docs_t(spark, sf_dir), guarded=True)
     qt = (
-        tf.join(
-            F.broadcast(queries.select(F.col("vec_id").alias("doc_id"))),
-            "doc_id",
-        )
-        .select(F.col("doc_id").alias("query_id"), "tok")
+        tf.join(F.broadcast(queries.selectExpr("vec_id AS doc_id")), "doc_id")
+        .selectExpr("doc_id AS query_id", "tok")
         .distinct()
     )
     lterm = (
-        qt.join(
-            tf.withColumnRenamed("doc_id", "neighbor_id"), "tok"
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+        qt.join(tf.withColumnRenamed("doc_id", "neighbor_id"), "tok")
+        .filter("neighbor_id <> query_id")
         # idf (vocab-sized) and dl (corpus-sized) deliberately unhinted —
-        # see op_ext_bm25's docstring (r13 verdict #1); only fixed-size
-        # frames (1-row stats, Q-row query sample) carry broadcast hints.
+        # see bm25_build (r13 verdict #1); only fixed-size frames (1-row
+        # stats, Q-row query sample) carry broadcast hints.
         .join(idf, "tok")
-        .join(
-            dl.withColumnRenamed("doc_id", "neighbor_id"),
-            "neighbor_id",
-        )
+        .join(dl.withColumnRenamed("doc_id", "neighbor_id"), "neighbor_id")
         .crossJoin(F.broadcast(stats.select("avgdl")))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.round(
-                    F.col("idf") * (F.col("tf") * 2.5)
-                    / (
-                        F.col("tf")
-                        + 1.5
-                        * (F.lit(1.0) - 0.75 + 0.75 * F.col("dl") / F.col("avgdl"))
-                    ),
-                    6,
-                )
-                * 1000000,
-                0,
-            )
-            .cast("bigint")
-            .alias("mu"),
-        )
+        .selectExpr("query_id", "neighbor_id", f"{BM25_MICRO_SQL} AS mu")
     )
     lexscore = lterm.groupBy("query_id", "neighbor_id").agg(
-        F.sum("mu").cast("bigint").alias("bm25_micro")
-    )
-    wl = Window.partitionBy("query_id").orderBy(
-        F.desc("bm25_micro"), F.col("neighbor_id")
-    )
-    lex20 = (
-        lexscore.withColumn("r", F.row_number().over(wl))
-        .filter(F.col("r") <= 20)
-        .select(
-            "query_id", "neighbor_id",
-            F.expr("1000000 div (60 + r)").alias("c"),
-        )
+        F.expr("CAST(sum(mu) AS BIGINT) AS bm25_micro")
     )
     # --- RRF fusion: exact integer micro-contributions
-    return (
-        dense20.unionAll(lex20)
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("c").cast("bigint").alias("rrf_micro"))
-    )
+    return _rrf_fused(dense20, _rrf_contrib(lexscore, "bm25_micro DESC"))
 
 
 # --------------------------------------------------------------------------
@@ -3741,106 +3642,17 @@ _BM25_LEX_CTES = f"""
 
 
 def _blockmax_frames(
-    spark: SparkSession,
-    sf_dir: str,
-    bigram_terms: bool = False,
-    zipf_skew: bool = False,
+    spark: SparkSession, sf_dir: str, zipf_skew: bool = False
 ) -> dict:
     """Shared build for the block-max BM25 pair: the fixed-point impact
     postings, the MaxScore term split, and the pruned candidate/scoring
     frames. Engine twin of the _BM25_LEX_CTES + audit-oracle chain.
-
-    ``bigram_terms=True`` swaps the term space to adjacent-token bigrams —
-    a measurement knob, not a registered contract: the synthetic corpus's
-    unigram vocabulary is deliberately tiny and dense (every doc matches
-    ~every query through some term), which is the worst case for
-    candidate-level pruning; the ~quadratically sparser bigram space
-    shows the regime WAND-style pruning is built for (numbers in
-    BASELINE.md round 14).
-
-    ``zipf_skew=True`` is the second measurement knob: a deterministic
-    Zipf PROJECTION of the posting lists that reproduces the
-    natural-language df profile the production form targets. Tokens get
-    a fixed arbitrary rank r (md5 order); the token at rank r keeps
-    ~1/r of its (doc, token) postings via a per-posting md5 coin, so df
-    falls off as df_raw/r — a Zipf(1) tail: few huge stop-ish lists
-    (low idf ⇒ low impact ⇒ non-essential under MaxScore) and many
-    short rare-term lists (high impact ⇒ essential). dl/avgdl are
-    recomputed from the projected postings so the BM25 arithmetic is
-    self-consistent on the projected corpus. Prune numbers under this
-    knob are the block-max WIN-regime measurement quoted in BASELINE.md
-    round 14; losslessness under the knob is pinned engine-side in
-    tests/test_rank_fusion.py."""
+    ``zipf_skew`` is bm25_build's Zipf posting projection (the
+    win-regime measurement knob, numbers in BASELINE.md round 14)."""
     from data_warehousing_assignment_spark.caching import pin
 
     docs = docs_t(spark, sf_dir)
-    if bigram_terms:
-        toks = tx.tokens("text")
-        term_col = F.explode(
-            F.when(
-                F.size(toks) >= 2,
-                F.zip_with(
-                    F.slice(toks, 1, F.size(toks) - 1),
-                    F.slice(toks, 2, F.size(toks) - 1),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("tok")
-    else:
-        term_col = F.explode(tx.tokens("text")).alias("tok")
-    tf = pin(
-        docs.select("doc_id", term_col)
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-    if zipf_skew:
-        # Zipf posting projection (see docstring): rank r keeps the
-        # postings whose per-(tok, doc) md5 coin lands on 0 mod r. The
-        # rank window is vocab-sized; dl derives from the projected tf
-        # on its existing shuffle (the verdict-#1 shape).
-        tokrank = (
-            tf.select("tok")
-            .distinct()
-            .withColumn(
-                "zrank",
-                F.row_number()
-                .over(Window.orderBy(F.md5(F.col("tok")), F.col("tok")))
-                .cast("bigint"),
-            )
-        )
-        tf = pin(
-            # vocab-sized rank frame joins UNHINTED (same verdict-#1
-            # discipline as idf/dl below — AQE owns the strategy)
-            tf.join(tokrank, "tok")
-            .filter(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                ":", F.col("tok"), F.col("doc_id").cast("string")
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % F.col("zrank")
-                == 0
-            )
-            .drop("zrank")
-        )
-        dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
-    else:
-        dl = docs.select(
-            "doc_id", F.size(tx.tokens("text")).cast("bigint").alias("dl")
-        )
-    stats = dl.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    idf = bm25_guarded_idf(tf, stats)
+    tf, dl, stats, idf = bm25_build(docs, guarded=True, zipf_skew=zipf_skew)
     # Query-INDEPENDENT per-(doc, token) impact in exact µ-units — the
     # quantity an impact-ordered index stores. Same double-round
     # fixed-point as the hybrid lexical leg; idf/dl joins unhinted
@@ -3849,36 +3661,18 @@ def _blockmax_frames(
         tf.join(idf, "tok")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats.select("avgdl")))
-        .select(
-            "tok",
-            "doc_id",
-            F.round(
-                F.round(
-                    F.col("idf") * (F.col("tf") * 2.5)
-                    / (
-                        F.col("tf")
-                        + 1.5
-                        * (F.lit(1.0) - 0.75 + 0.75 * F.col("dl") / F.col("avgdl"))
-                    ),
-                    6,
-                )
-                * 1000000,
-                0,
-            )
-            .cast("bigint")
-            .alias("mu"),
-        )
+        .selectExpr("tok", "doc_id", f"{BM25_MICRO_SQL} AS mu")
     )
     # per-term max impact: the block-max upper bound (vocab-sized agg)
-    ub = postings.groupBy("tok").agg(F.max("mu").alias("ub"))
+    ub = postings.groupBy("tok").agg(F.expr("max(mu) AS ub"))
     qdocs = pin(
         docs.select("doc_id")
-        .orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
+        .orderBy(F.expr("md5(CAST(doc_id AS STRING))"), "doc_id")
         .limit(100)
     )
     qt = pin(
         tf.join(F.broadcast(qdocs), "doc_id")
-        .select(F.col("doc_id").alias("query_id"), "tok")
+        .selectExpr("doc_id AS query_id", "tok")
         .distinct()
     )
     qterms = qt.join(ub, "tok")
@@ -3890,20 +3684,13 @@ def _blockmax_frames(
     # was valid too but far looser — measured 5.8% postings reduction vs
     # this bound's, BASELINE.md r14.) Fewer than k pool docs ⇒ no θ ⇒
     # nothing pruned.
-    wtop = Window.partitionBy("query_id").orderBy(F.desc("ub"), F.asc("tok"))
-    t1 = (
-        qterms.withColumn("_r", F.row_number().over(wtop))
-        .filter(F.col("_r") == 1)
-        .select("query_id", "tok")
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("mu"), F.asc("doc_id"))
-    pool = (
-        t1.join(postings, "tok")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .withColumn("_k", F.row_number().over(wk))
-        .filter(F.col("_k") <= _BM25_TOPK)
-        .select("query_id", F.col("doc_id").alias("neighbor_id"))
-    )
+    t1 = _top_per_query(qterms, "ub DESC, tok", 1, "_r").select("query_id", "tok")
+    pool = _top_per_query(
+        t1.join(postings, "tok").filter("doc_id <> query_id"),
+        "mu DESC, doc_id",
+        _BM25_TOPK,
+        "_k",
+    ).selectExpr("query_id", "doc_id AS neighbor_id")
     poolscore = (
         pool.join(qt, "query_id")
         .join(
@@ -3911,37 +3698,34 @@ def _blockmax_frames(
             ["tok", "neighbor_id"],
         )
         .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("mu").cast("bigint").alias("fsc"))
+        .agg(F.expr("CAST(sum(mu) AS BIGINT) AS fsc"))
     )
     theta = (
         poolscore.groupBy("query_id")
-        .agg(F.min("fsc").alias("theta"), F.count(F.lit(1)).alias("_np"))
-        .filter(F.col("_np") == _BM25_TOPK)
+        .agg(F.expr("min(fsc) AS theta"), F.expr("count(1) AS _np"))
+        .filter(f"_np = {_BM25_TOPK}")
         .select("query_id", "theta")
     )
     # MaxScore split: ascending-UB running sum; a term whose cumulative
     # UB stays STRICTLY below θ is non-essential (a doc matching only
     # such terms scores ≤ that cum < θ ≤ true k-th best — strictly below,
     # so no tie-break can resurrect it). The max-UB term is always kept.
-    word = Window.partitionBy("query_id").orderBy(F.asc("ub"), F.asc("tok"))
-    wcum = word.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wall = Window.partitionBy("query_id")
     ess = (
         qterms.join(F.broadcast(theta), "query_id", "left")
-        .withColumn("_cum", F.sum("ub").over(wcum))
-        .withColumn("_rn", F.row_number().over(word))
-        .withColumn("_n", F.count(F.lit(1)).over(wall))
-        .filter(
-            F.col("theta").isNull()
-            | (F.col("_cum") >= F.col("theta"))
-            | (F.col("_rn") == F.col("_n"))
+        .selectExpr(
+            "*",
+            "sum(ub) OVER (PARTITION BY query_id ORDER BY ub, tok"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _cum",
+            "row_number() OVER (PARTITION BY query_id ORDER BY ub, tok) AS _rn",
+            "count(1) OVER (PARTITION BY query_id) AS _n",
         )
+        .filter("theta IS NULL OR _cum >= theta OR _rn = _n")
         .select("query_id", "tok")
     )
     cand = (
         ess.join(postings, "tok")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .select("query_id", F.col("doc_id").alias("neighbor_id"))
+        .filter("doc_id <> query_id")
+        .selectExpr("query_id", "doc_id AS neighbor_id")
         .distinct()
     )
     # Exact scoring of the surviving candidates: the (tok, doc)-keyed
@@ -3953,22 +3737,14 @@ def _blockmax_frames(
     # naive per-pair volume once with a bounded candidate hash — the
     # shape that survives 100× (r14; the candidate-GENERATION skip
     # above is unchanged and is where the WAND win lives).
-    scored_stream = (
+    scored = (
         qt.join(postings.withColumnRenamed("doc_id", "neighbor_id"), "tok")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .filter("neighbor_id <> query_id")
         .join(cand, ["query_id", "neighbor_id"], "left_semi")
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.expr("CAST(sum(mu) AS BIGINT) AS bm25_micro"))
     )
-    scored = scored_stream.groupBy("query_id", "neighbor_id").agg(
-        F.sum("mu").cast("bigint").alias("bm25_micro")
-    )
-    return {
-        "postings": postings,
-        "qt": qt,
-        "ess": ess,
-        "cand": cand,
-        "scored_stream": scored_stream,
-        "scored": scored,
-    }
+    return {"postings": postings, "qt": qt, "ess": ess, "cand": cand, "scored": scored}
 
 
 @query(
@@ -4003,14 +3779,10 @@ def op_ext_bm25_blockmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation drops every non-essential postings list —
     exactly the skip an impact-ordered index performs, expressed
     relationally. All arithmetic integer-exact cross-engine."""
-    frames = _blockmax_frames(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("bm25_micro"), F.asc("neighbor_id")
-    )
-    return (
-        frames["scored"]
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _BM25_TOPK)
+    return _top_per_query(
+        _blockmax_frames(spark, sf_dir)["scored"],
+        "bm25_micro DESC, neighbor_id",
+        _BM25_TOPK,
     )
 
 
@@ -4086,44 +3858,39 @@ def op_ext_bm25_blockmax_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     essential_rows = candidate-generation rows after dropping
     non-essential terms (the θ probe is a subset — the top-UB term is
     always essential); n_candidates = the surviving (query, doc) pairs.
-    The exact-scoring row count (scored_rows) is measured ENGINE-side in
-    tools/retrieval_experiments.py: its only lossless SQL formulation
-    semi-joins a ~900M-row postings stream against the 43M-pair
-    candidate set at sf10, which DuckDB insists on spilling past the
-    harness disk (576 s → disk-full, measured r14) — the prune replay
-    itself is what the oracle pins. Per-SF numbers in BASELINE.md
-    round 14."""
-    return _blockmax_count_row(_blockmax_frames(spark, sf_dir))
+    The exact-scoring row count is not surfaced: its only lossless SQL
+    formulation semi-joins a ~900M-row postings stream against the
+    43M-pair candidate set at sf10, which DuckDB insists on spilling
+    past the harness disk (576 s → disk-full, measured r14) — the prune
+    replay itself is what the oracle pins. Per-SF numbers in BASELINE.md
+    round 14.
 
-
-def _blockmax_count_row(frames: dict) -> DataFrame:
-    """The audit op's 1-row counter frame over a _blockmax_frames build —
-    shared with tools/retrieval_experiments.py so the published
-    reduction numbers come from the oracle-gated counters themselves
-    (r14 self-review)."""
-    qt, postings = frames["qt"], frames["postings"]
-    n_queries = qt.agg(
-        F.countDistinct("query_id").cast("bigint").alias("n_queries")
+    Both row counters are algebraic (r14): each query term contributes
+    df(tok) − 1 pair rows (the query doc itself contains tok by qt
+    construction), so they are vocab-sized joins — materializing the
+    890M pair rows at sf10 just to count them was half the temp
+    blowup."""
+    frames = _blockmax_frames(spark, sf_dir)
+    qt = frames["qt"]
+    dfc = frames["postings"].groupBy("tok").agg(
+        F.expr("CAST(count(1) AS BIGINT) AS df")
     )
-    # Algebraic counts (r14): each query term contributes df(tok) − 1
-    # pair rows (the query doc itself contains tok by qt construction),
-    # so both counters are vocab-sized joins — materializing the 890M
-    # pair rows at sf10 just to count them was half the temp blowup.
-    dfc = postings.groupBy("tok").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
+    return (
+        qt.selectExpr("CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries")
+        .crossJoin(
+            qt.join(dfc, "tok").selectExpr(
+                "CAST(sum(df - 1) AS BIGINT) AS unpruned_rows"
+            )
+        )
+        .crossJoin(
+            frames["ess"].join(dfc, "tok").selectExpr(
+                "CAST(sum(df - 1) AS BIGINT) AS essential_rows"
+            )
+        )
+        .crossJoin(
+            frames["cand"].selectExpr("CAST(count(1) AS BIGINT) AS n_candidates")
+        )
     )
-    unpruned = qt.join(dfc, "tok").agg(
-        F.sum(F.col("df") - 1).cast("bigint").alias("unpruned_rows")
-    )
-    essential = (
-        frames["ess"]
-        .join(dfc, "tok")
-        .agg(F.sum(F.col("df") - 1).cast("bigint").alias("essential_rows"))
-    )
-    n_cand = frames["cand"].agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_candidates")
-    )
-    return n_queries.crossJoin(unpruned).crossJoin(essential).crossJoin(n_cand)
 
 
 # --------------------------------------------------------------------------
@@ -4163,9 +3930,9 @@ _FILT_SCORE_TAIL = """
 
 def _filt_ctx(spark: SparkSession, sf_dir: str) -> tuple:
     """(emb, pinned audit sample, built 16-cell index) — built ONCE and
-    passed into both strategy legs by the recall op and the sweep tool,
-    so comparisons never pay a redundant k-means build (r14
-    self-review; ivf_cosine_topk's index= parameter exists for this)."""
+    passed into both strategy legs by the recall op, so the comparison
+    never pays a redundant k-means build (r14 self-review;
+    ivf_cosine_topk's index= parameter exists for this)."""
     emb = t(spark, sf_dir, "embeddings")
     queries = audit_sample(emb)
     index = iv.build_ivf_index(emb, "vec_id", "embedding", 16)
@@ -4173,49 +3940,19 @@ def _filt_ctx(spark: SparkSession, sf_dir: str) -> tuple:
 
 
 def _filtered_aware_top(
-    spark: SparkSession, sf_dir: str, band: int = 1, ctx: tuple | None = None
-):
+    spark: SparkSession, sf_dir: str, ctx: tuple | None = None
+) -> DataFrame:
     """Filter-AWARE IVF top-k: the label predicate is an EQUI-KEY of the
     probed-cell join, not a post-scoring filter — candidate volume
     divides by the predicate's selectivity before any scoring happens
     (at 100 TB with a label-bucketed layout this is the partition-pruned
-    scan). ``band`` widens the predicate to label-div-band equality for
-    the recall-vs-selectivity sweep (registered contract: band=1)."""
-    emb, queries, (centroids, assignments) = ctx or _filt_ctx(spark, sf_dir)
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        sim.quantize("embedding").alias("qvec"),
-        F.expr(f"label div {band}").alias("nband"),
-    )
-    # per-row norms hoisted out of the candidate join (computed once per
-    # probe/corpus row, not per pair) — same expression, bit-identical.
-    probes = iv._assign(q, centroids, n_probe=_FILT_NPROBE).select(
-        "query_id", "qvec", "cluster", "nband"
-    ).withColumn("_nq", sim.norm("qvec"))
-    cells = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        sim.quantize("embedding").alias("cv"),
-        F.expr(f"label div {band}").alias("nband"),
-    ).withColumn("_nc", sim.norm("cv")).join(
-        assignments.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
-    )
-    dot = sim.int_dot("qvec", "cv")
-    scored = (
-        cells.join(F.broadcast(probes), ["cluster", "nband"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot.cast("double") / (F.col("_nq") * F.col("_nc"))).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _FILT_TOPK)
-        .select("query_id", "neighbor_id", "rank", "score")
+    scan)."""
+    emb, queries, index = ctx or _filt_ctx(spark, sf_dir)
+    scored = iv.probed_cell_scan(
+        emb, queries, index, n_probe=_FILT_NPROBE, keys=("label",)
+    ).selectExpr("query_id", "neighbor_id", "cos AS score")
+    return _top_per_query(scored, "score DESC, neighbor_id", _FILT_TOPK).select(
+        "query_id", "neighbor_id", "rank", "score"
     )
 
 
@@ -4256,39 +3993,29 @@ def op_ext_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     and scoring verbatim. Recall vs the brute-force FILTERED ground
     truth is oracle-checked by op-ext-ann-filtered-recall;
     recall-vs-selectivity sweep in BASELINE.md round 14."""
-    return _filtered_aware_top(spark, sf_dir, band=1)
+    return _filtered_aware_top(spark, sf_dir)
 
 
 def _postfilter_top(
-    spark: SparkSession, sf_dir: str, band: int = 1, ctx: tuple | None = None
+    spark: SparkSession, sf_dir: str, ctx: tuple | None = None
 ) -> DataFrame:
     """Unfiltered IVF top-20 → label predicate → top-5 re-rank. Shared
-    by op-ext-ann-postfilter (band=1 contract) and the recall /
-    selectivity comparisons (band widens the predicate, BASELINE.md)."""
+    by op-ext-ann-postfilter and the recall comparison."""
     emb, queries, index = ctx or _filt_ctx(spark, sf_dir)
     top20 = iv.ivf_cosine_topk(
         emb, queries, k=20, n_probe=_FILT_NPROBE, index=index
     ).select("query_id", "neighbor_id", "score")
-    qlab = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.expr(f"label div {band}").alias("_ql"),
-    )
+    qlab = queries.selectExpr("vec_id AS query_id", "label AS _ql")
     # corpus-sized label frame UNHINTED; the Q-bounded top frame carries
     # the hint (same discipline as _retrieval_metrics_over, verdict #7)
-    nlab = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr(f"label div {band}").alias("_nl"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
-    return (
+    nlab = emb.selectExpr("vec_id AS neighbor_id", "label AS _nl")
+    kept = (
         F.broadcast(top20.join(F.broadcast(qlab), "query_id"))
         .join(nlab, "neighbor_id")
-        .filter(F.col("_nl") == F.col("_ql"))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _FILT_TOPK)
-        .select("query_id", "neighbor_id", "rank", "score")
+        .filter("_nl = _ql")
+    )
+    return _top_per_query(kept, "score DESC, neighbor_id", _FILT_TOPK).select(
+        "query_id", "neighbor_id", "rank", "score"
     )
 
 
@@ -4473,86 +4200,43 @@ def op_ext_ann_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(Q · C/|labels|) rows, a 10× reduction on the already-linear
     recall-sampled contract; both strategy legs ride the documented
     probed-cell shapes. All counts integer-exact."""
-    hits = _filtered_truth_hits(spark, sf_dir, band=1)
-    return hits.select(
+    return _filtered_truth_hits(spark, sf_dir).selectExpr(
         "query_id",
         "n_truth",
         "n_hits_aware",
         "n_hits_post",
-        F.expr("(1000000 * n_hits_aware) div n_truth").alias(
-            "recall_aware_ppm"
-        ),
-        F.expr("(1000000 * n_hits_post) div n_truth").alias(
-            "recall_post_ppm"
-        ),
+        "(1000000 * n_hits_aware) div n_truth AS recall_aware_ppm",
+        "(1000000 * n_hits_post) div n_truth AS recall_post_ppm",
     )
 
 
-def _filtered_truth_hits(
-    spark: SparkSession, sf_dir: str, band: int
-) -> DataFrame:
+def _filtered_truth_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query (n_truth, n_hits_aware, n_hits_post) of both filtered-
-    search strategies vs the brute-force filtered ground truth — ONE
-    body shared by the registered op-ext-ann-filtered-recall (band=1)
-    and tools/retrieval_experiments.py's selectivity sweep, so the
-    published BASELINE.md numbers come from the oracle-gated logic
-    itself (r14 self-review). The index and sample are built once and
-    fed to both strategy legs."""
+    search strategies vs the brute-force filtered ground truth. The
+    index and sample are built once and fed to both strategy legs; the
+    ground truth scores every same-label pair with the probed-cell
+    scan's own cosine (iv.cosine_pairs on the label key alone)."""
     ctx = _filt_ctx(spark, sf_dir)
     emb, queries, _ = ctx
-    aware5 = _filtered_aware_top(spark, sf_dir, band=band, ctx=ctx).select(
-        "query_id", F.col("neighbor_id").alias("_na")
+    aware5 = _filtered_aware_top(spark, sf_dir, ctx).selectExpr(
+        "query_id AS _qa", "neighbor_id AS _na"
     )
-    post5 = _postfilter_top(spark, sf_dir, band=band, ctx=ctx).select(
-        "query_id", F.col("neighbor_id").alias("_np")
+    post5 = _postfilter_top(spark, sf_dir, ctx).selectExpr(
+        "query_id AS _qp", "neighbor_id AS _np"
     )
-    qs = queries.select(
-        F.col("vec_id").alias("query_id"),
-        sim.quantize("embedding").alias("qvec"),
-        F.expr(f"label div {band}").alias("_lb"),
+    truth = iv.cosine_pairs(
+        iv.quantized_rows(emb, "neighbor_id", "cv", "_nc", ["label"]),
+        iv.quantized_rows(queries, "query_id", "qvec", "_nq", ["label"]),
+        ["label"],
     )
-    # per-row norms hoisted out of the label-keyed pair join (computed
-    # once per query/corpus row, not per pair) — bit-identical scores.
-    qs = qs.withColumn("_nq", sim.norm("qvec"))
-    cand = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        sim.quantize("embedding").alias("cv"),
-        F.expr(f"label div {band}").alias("_lb"),
-    ).withColumn("_nc", sim.norm("cv")).join(F.broadcast(qs), "_lb")
-    dot = sim.int_dot("qvec", "cv")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
-    truth5 = (
-        cand.filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot.cast("double") / (F.col("_nq") * F.col("_nc"))).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _FILT_TOPK)
-        .select("query_id", "neighbor_id")
-    )
+    truth5 = _top_per_query(truth, "cos DESC, neighbor_id", _FILT_TOPK)
     return (
-        truth5.join(
-            aware5,
-            (truth5.query_id == aware5.query_id)
-            & (truth5.neighbor_id == aware5._na),
-            "left",
-        )
-        .drop(aware5.query_id)
-        .join(
-            post5,
-            (truth5.query_id == post5.query_id)
-            & (truth5.neighbor_id == post5._np),
-            "left",
-        )
-        .drop(post5.query_id)
-        .groupBy(truth5.query_id)
+        truth5.join(aware5, F.expr("query_id = _qa AND neighbor_id = _na"), "left")
+        .join(post5, F.expr("query_id = _qp AND neighbor_id = _np"), "left")
+        .groupBy("query_id")
         .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_truth"),
-            F.count("_na").cast("bigint").alias("n_hits_aware"),
-            F.count("_np").cast("bigint").alias("n_hits_post"),
+            F.expr("CAST(count(1) AS BIGINT) AS n_truth"),
+            F.expr("CAST(count(_na) AS BIGINT) AS n_hits_aware"),
+            F.expr("CAST(count(_np) AS BIGINT) AS n_hits_post"),
         )
     )

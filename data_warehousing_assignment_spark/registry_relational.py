@@ -625,7 +625,7 @@ def op_ext_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
     mean = sx.cast("double") / n.cast("double")
-    var = an.exact_var_samp(n, sx, sxx)
+    var = F.expr(an.exact_var_samp("n", "sx", "sxx"))
     b = s.select("l_returnflag", n.alias("n"), mean.alias("mean"),
                  F.sqrt(var).alias("std"))
     j = pc.join(F.broadcast(b), "l_returnflag")

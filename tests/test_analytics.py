@@ -102,7 +102,7 @@ def test_exact_moments_match_numpy(spark):
         F.sum("_q").alias("sx"),
         F.sum(F.col("_q") * F.col("_q")).alias("sxx"),
     ).select(
-        an.exact_var_samp(F.col("n"), F.col("sx"), F.col("sxx")).alias("v")
+        F.expr(an.exact_var_samp("n", "sx", "sxx")).alias("v")
     )
     got = s.collect()[0].v
     q = np.array(
@@ -130,10 +130,7 @@ def test_exact_corr_matches_numpy(spark):
         F.sum(F.col("_pc").cast("decimal(38,0)") * F.col("_pc")).alias("syy"),
         F.sum(F.col("_q") * F.col("_pc")).alias("sxy"),
     ).select(
-        an.exact_corr(
-            F.col("n"), F.col("sx"), F.col("sy"),
-            F.col("sxx"), F.col("syy"), F.col("sxy"),
-        ).alias("c")
+        F.expr(an.exact_corr("n", "sx", "sy", "sxx", "syy", "sxy")).alias("c")
     )
     got = s.collect()[0].c
     rows = li.select("_q", "_pc").collect()

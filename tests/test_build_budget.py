@@ -1,12 +1,15 @@
-"""Build-cost guard for the sign-bit fingerprint, hyperplane-LSH and
-IVF/PQ ops and for the warehouse ETL: building each one sends fewer
-than its budget of py4j call commands, so a builder that goes back to
-one literal Column per bit or coefficient, to Python-lambda Column
-trees per Lloyd round, to one Column chain and one filtered DQ slice
-per cleaning rule, or to Column trees built one attribute at a time in
-the SCD2 merge, dim upserts, fact anti-joins and audit (thousands of
-JVM round trips before any data moves), fails here. The incremental
-fact load's date-window prune is pinned to one bounds collect."""
+"""Build-cost guard: building a query sends fewer than its budget of
+py4j call commands. The sign-bit fingerprint, hyperplane-LSH, IVF/PQ,
+retrieval and correlation-matrix ops and the warehouse ETL are held
+under 1,000, so a builder that goes back to one literal Column per bit
+or coefficient, to Python-lambda Column trees per Lloyd round, to
+hand-built Column copies of a scoring or ranking stage, to one Column
+chain and one filtered DQ slice per cleaning rule, or to Column trees
+built one attribute at a time in the SCD2 merge, dim upserts, fact
+anti-joins and audit (thousands of JVM round trips before any data
+moves), fails here. Every other registered query is held under 2,000.
+The incremental fact load's date-window prune is pinned to one bounds
+collect."""
 
 from __future__ import annotations
 
@@ -19,9 +22,13 @@ from data_warehousing_assignment_spark.registry import all_queries
 from perfbench.trace import Py4jCounter
 
 BUDGET = 1000
+#: every registered query
+REGISTRY_BUDGET = 2000
 #: one run_etl load: clean + DQ of three domains, 5 dim upserts, SCD2,
 #: 3 incremental facts, audit
 ETL_BUDGET = 1000
+#: every registered query
+REGISTRY_BUDGET = 2000
 
 
 def _build_calls(build) -> int:
@@ -53,6 +60,17 @@ def _build_calls(build) -> int:
         "op-ext-ann-ivf-incremental",
         "op-ext-ann-cell-drift",
         "op-ext-ann-postfilter",
+        "op-ext-ann-filtered",
+        "op-ext-ann-filtered-recall",
+        "op-ext-rank-fusion",
+        "op-ext-hybrid-fusion",
+        "op-ext-fusion-gain",
+        "op-ext-fusion-baseline",
+        "op-ext-retrieval-metrics",
+        "op-ext-bm25",
+        "op-ext-bm25-blockmax",
+        "op-ext-bm25-blockmax-audit",
+        "op-ext-corr-matrix",
     ],
 )
 def test_build_sends_few_py4j_calls(spark, op):
@@ -61,6 +79,21 @@ def test_build_sends_few_py4j_calls(spark, op):
     build = all_queries()[op]
     calls = _build_calls(lambda: build(spark, SF_SMALL))
     assert calls < BUDGET, f"{op}: {calls} py4j calls"
+
+
+@pytest.mark.parametrize("op", list(all_queries()))
+def test_every_query_builds_under_registry_budget(spark, op):
+    from tests.conftest import SF_SMALL
+
+    build = all_queries()[op]
+    try:
+        calls = _build_calls(lambda: build(spark, SF_SMALL))
+    finally:
+        # iterative ops leave localCheckpoint RDDs behind; drop them so
+        # later cached-RDD accounting starts clean
+        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            jrdd.unpersist(False)
+    assert calls < REGISTRY_BUDGET, f"{op}: {calls} py4j calls"
 
 
 def test_run_etl_builds_in_few_py4j_calls(spark):

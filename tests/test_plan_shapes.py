@@ -445,6 +445,21 @@ def test_retrieval_metrics_broadcasts_rank_frame(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_retrieval_metrics_op_joins_labels_without_shuffle(spark, qs):
+    """op-ext-retrieval-metrics grades its exact top-k through the shared
+    metrics tail, so with auto-broadcast disabled its label joins still
+    broadcast the rank-bounded frame: no SortMergeJoin, which would
+    shuffle the corpus-sized label frame (the tail's verdict-#7 shape,
+    pinned for the tail alone above)."""
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = plan_of(qs["op-ext-retrieval-metrics"](spark, SF_SMALL))
+        assert "SortMergeJoin" not in plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 def test_tfidf_vocab_join_not_force_broadcast(spark, qs):
     """r14 optimization sweep: op-ext-tfidf carried the one remaining
     vocab-sized broadcast hint (df_counts — one row per distinct raw

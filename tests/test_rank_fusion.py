@@ -129,7 +129,7 @@ def test_stop_term_guard_threshold(spark):
     dropped from scoring (idf ≈ 0, postings O(corpus)); at exactly 90%
     it survives. Integer-exact boundary — no float threshold."""
     from data_warehousing_assignment_spark.registry_extensions import (
-        bm25_guarded_idf,
+        bm25_idf,
     )
 
     # 10 docs: 'univ' in all 10 (df ratio 1.0 — dropped), 'edge' in 9
@@ -140,7 +140,7 @@ def test_stop_term_guard_threshold(spark):
     tf = spark.createDataFrame(rows, "doc_id: long, tok: string")
     stats = spark.createDataFrame([(10,)], "n_docs: long")
     kept = {
-        r.tok for r in bm25_guarded_idf(
+        r.tok for r in bm25_idf(
             tf, stats.selectExpr("n_docs", "0.0 as avgdl")
         ).collect()
     }

@@ -82,56 +82,38 @@ def distributed_prefix(
     stats/offset equi-joins drop NULL group keys, and every caller
     groups by engineered non-null columns."""
     groups = list(groups or [])
-    if groups:
-        stats = g.groupBy(*groups).agg(
-            F.min(v).alias("vmin"), F.max(v).alias("vmax")
-        )
-        b = g.join(F.broadcast(stats), groups)
-    else:
-        stats = g.agg(F.min(v).alias("vmin"), F.max(v).alias("vmax"))
-        b = g.crossJoin(F.broadcast(stats))
-    b = b.withColumn(
-        "bkt",
-        F.when(F.col(v).isNull(), F.lit(0))  # NULLS FIRST, see docstring
-        .when(F.col("vmin") == F.col("vmax"), F.lit(1))
-        .otherwise(F.expr(f"width_bucket({v}, vmin, vmax, {n_buckets})")),
-    ).drop("vmin", "vmax")
-    wloc = (
-        Window.partitionBy(*groups, "bkt")
-        .orderBy(v)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    loc = b
-    for c in cols:
-        loc = loc.withColumn(f"_cum_{c}", F.sum(c).over(wloc))
-    tot = loc.groupBy(*groups, "bkt").agg(
-        *[F.sum(c).alias(f"_tot_{c}") for c in cols]
-    )
-    woff = (
-        Window.partitionBy(*groups)
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = tot.select(
-        *groups,
-        "bkt",
+    keys = [f"`{c}`" for c in groups]
+    # the output keeps the input's columns, group keys first
+    out = keys + [f"`{c}`" for c in g.columns if c not in groups]
+    stats = g.groupBy(*groups).agg(F.expr(f"min(`{v}`) AS vmin"), F.expr(f"max(`{v}`) AS vmax"))
+    b = g.join(F.broadcast(stats), groups) if groups else g.crossJoin(F.broadcast(stats))
+    loc = b.selectExpr(
+        *out,
+        # NULLS FIRST, see docstring
+        f"CASE WHEN `{v}` IS NULL THEN 0 WHEN vmin = vmax THEN 1"
+        f" ELSE width_bucket(`{v}`, vmin, vmax, {n_buckets}) END AS bkt",
+    ).selectExpr(
+        "*",
         *[
-            F.coalesce(F.sum(f"_tot_{c}").over(woff), F.lit(0)).alias(
-                f"_off_{c}"
-            )
+            f"SUM(`{c}`) OVER (PARTITION BY {', '.join(keys + ['bkt'])} ORDER BY `{v}`"
+            f" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS `_cum_{c}`"
             for c in cols
         ],
     )
-    out = loc.join(F.broadcast(off), groups + ["bkt"])
-    for c in cols:
-        out = out.withColumn(
-            f"cum_{c}",
-            (F.col(f"_off_{c}") + F.col(f"_cum_{c}")).cast("bigint"),
-        )
-    return out.drop(
+    tot = loc.groupBy(*groups, "bkt").agg(*[F.expr(f"SUM(`{c}`) AS `_tot_{c}`") for c in cols])
+    part = f"PARTITION BY {', '.join(keys)} " if groups else ""
+    off = tot.selectExpr(
+        *keys,
         "bkt",
-        *[f"_cum_{c}" for c in cols],
-        *[f"_off_{c}" for c in cols],
+        *[
+            f"coalesce(SUM(`_tot_{c}`) OVER ({part}ORDER BY bkt"
+            f" ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS `_off_{c}`"
+            for c in cols
+        ],
+    )
+    return loc.join(F.broadcast(off), groups + ["bkt"]).selectExpr(
+        *out,
+        *[f"CAST(`_off_{c}` + `_cum_{c}` AS BIGINT) AS `cum_{c}`" for c in cols],
     )
 
 
@@ -143,11 +125,11 @@ def distributed_ar2(
     ``ar2 = 2·cum_before + ct + 1 = 2·cum_inclusive − ct + 1`` — also
     exactly the tie group's ``min(rank) + max(rank)`` (the midrank×2
     op-ext-auc needs). Exact int64 throughout."""
-    out = distributed_prefix(g, v, [ct], n_buckets)
-    return out.withColumn(
-        "ar2",
-        (2 * F.col(f"cum_{ct}") - F.col(ct) + 1).cast("bigint"),
-    ).drop(f"cum_{ct}")
+    return (
+        distributed_prefix(g, v, [ct], n_buckets)
+        .withColumn("ar2", F.expr(f"CAST(2 * `cum_{ct}` - `{ct}` + 1 AS BIGINT)"))
+        .drop(f"cum_{ct}")
+    )
 
 
 def distributed_ntile(
@@ -170,34 +152,27 @@ def distributed_ntile(
     assigned rank-as-tile. Adds a BIGINT ``ntile`` column; ``tiebreak``
     must be unique within a value group so the order is total
     (determinism rule)."""
-    v = -F.col(value) if descending else F.col(value)
-    d2 = df.withColumn("_v", v)
-    gb = d2.groupBy("_v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_ct")
+    d2 = df.withColumn("_v", F.expr(f"-`{value}`" if descending else f"`{value}`"))
+    gb = d2.groupBy("_v").agg(F.expr("CAST(count(1) AS BIGINT) AS _ct"))
+    base = distributed_prefix(gb, "_v", ["_ct"], n_buckets).selectExpr(
+        "_v", "cum__ct - _ct AS _base"
     )
-    base = (
-        distributed_prefix(gb, "_v", ["_ct"], n_buckets)
-        .withColumn("_base", F.col("cum__ct") - F.col("_ct"))
-        .select("_v", "_base")
-    )
-    wir = Window.partitionBy("_v").orderBy(tiebreak)
-    nrow = d2.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
-    ranked = (
-        d2.join(base, "_v")
-        .withColumn("_rn", F.col("_base") + F.row_number().over(wir))
-        .crossJoin(F.broadcast(nrow))
-    )
+    nrow = d2.selectExpr("CAST(count(1) AS BIGINT) AS _n")
     k = n_tiles
-    out = ranked.withColumn(
-        "ntile",
-        F.expr(
+    return (
+        d2.join(base, "_v")
+        .selectExpr(
+            "*", f"_base + row_number() OVER (PARTITION BY _v ORDER BY `{tiebreak}`) AS _rn"
+        )
+        .crossJoin(F.broadcast(nrow))
+        .selectExpr(
+            *[f"`{c}`" for c in df.columns],
             f"CAST(CASE WHEN _rn <= (_n % {k}) * (_n div {k} + 1)"
             f" THEN (_rn - 1) div (_n div {k} + 1) + 1"
             f" ELSE (_n % {k}) + (_rn - (_n % {k}) * (_n div {k} + 1) - 1)"
-            f" div (_n div {k}) + 1 END AS BIGINT)"
-        ),
+            f" div (_n div {k}) + 1 END AS BIGINT) AS ntile",
+        )
     )
-    return out.drop("_v", "_base", "_rn", "_n")
 
 
 def sessionize(

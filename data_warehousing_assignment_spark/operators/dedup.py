@@ -20,7 +20,7 @@ no engine-specific 64-bit hash is ever involved.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.caching import pin
@@ -87,61 +87,80 @@ def exact_dedup(
     )
 
 
-def _seeded_md5(seed: int):
-    # NB: must be a unary lambda — a two-arg lambda would be taken as
-    # F.transform's (element, index) form and the index would clobber
-    # the seed.
-    return lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s))
-
-
-def minhash_from_shingles(sh: Column, k: int = 12) -> Column:
-    """k-permutation MinHash over an already-computed shingle array: for
-    each seed i, the lexicographic-min md5('<i>:'||shingle). Row-local
-    (transform + array_min) — zero shuffles."""
-    return F.array(*[F.array_min(F.transform(sh, _seeded_md5(i))) for i in range(k)])
-
-
-def minhash_signature(text_col: Column | str, k: int = 12, n: int = 3) -> Column:
-    """Column-level MinHash signature. Prefer :func:`minhash_signatures`
-    (the DataFrame form) in plans: it projects the shingle array ONCE
-    before fanning out to k seeds — inlined here, the optimizer cannot
-    share the shingle subtree across the k array elements and the
-    tokenize+shingle work runs k times per row."""
-    return minhash_from_shingles(word_shingles(tokens(text_col), n), k)
+def minhash_sig_sql(sh: str, k: int = 12) -> str:
+    """SQL for the k-permutation MinHash signature of shingle-array
+    column ``sh``: for each seed i, the lexicographic-min
+    md5('<i>:'||shingle). Row-local (transform + array_min) — zero
+    shuffles."""
+    mins = ", ".join(
+        f"array_min(transform({sh}, s -> md5(concat('{i}:', s))))" for i in range(k)
+    )
+    return f"array({mins})"
 
 
 def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 12, n: int = 3
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int = 12,
+    n: int = 3,
+    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """(id, sig) MinHash signatures, the scale path: widen partitions for
     the CPU-bound hash stage, project shingles once (a separate Project
     node — CollapseProject keeps non-cheap exprs used k times
-    unmerged), then fan out to the k seeded mins."""
-    docs = scale_out(df.select(id_col, text_col))
-    return docs.withColumn("_sh", word_shingles(tokens(text_col), n)).select(
-        id_col, minhash_from_shingles(F.col("_sh"), k).alias("sig")
-    )
+    unmerged), then fan out to the k seeded mins (:func:`minhash_sig_sql`).
+
+    ``shingles``: optional prebuilt :func:`shingle_frame` — signatures
+    are then derived from it instead of re-tokenizing ``df`` (the same
+    seeded-md5 mins over the same arrays → identical signatures)."""
+    if shingles is None:
+        shingles = scale_out(df.select(id_col, text_col)).withColumn(
+            "_sh", word_shingles(tokens(text_col), n)
+        )
+    return shingles.selectExpr(f"`{id_col}`", f"{minhash_sig_sql('_sh', k)} AS sig")
 
 
-def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """Banded LSH keys: array of (band_idx, md5(sig slice)) structs.
-    Two docs sharing ANY band hash are candidate near-dups.
+def minhash_band_keys(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    alias: str,
+    k: int = 12,
+    bands: int = 4,
+    n: int = 3,
+    shingles: DataFrame | None = None,
+) -> DataFrame:
+    """Pinned ``(alias, band, band_hash)`` banded-LSH keys of the
+    :func:`minhash_signatures`: band b hashes signature slots
+    b·r .. b·r+r−1 (r = k / bands). Two docs sharing ANY (band,
+    band_hash) are candidate near-dups.
 
     band_hash is the 16-byte ``unhex`` packing of the md5 hex digest
     (r14, guide §2.3 shuffle fewer bytes): the key is internal to the
     bucket self-joins — never an output column — and unhex is bijective
     on md5 output, so every join/group matches exactly the same pairs
-    while the keyed frames shuffle and compare half the key bytes."""
-    out = []
-    for b in range(bands):
-        parts = [F.element_at(sig, b * rows_per_band + j + 1) for j in range(rows_per_band)]
-        out.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.unhex(F.md5(F.concat_ws("|", *parts))).alias("band_hash"),
-            )
+    while the keyed frames shuffle and compare half the key bytes.
+
+    Persisted before the self-joins: the two join sides carry different
+    projections, so exchange reuse can't kick in and each side would
+    otherwise recompute every signature. Band keys are ~(bands × 36)
+    bytes/doc — at 100 TB of text that's a few hundred GB
+    cluster-wide, MEMORY_AND_DISK-safe. The persist is scope-owned
+    (caching.pin): run inside ``cache_scope()`` to release it once the
+    pairs are materialized."""
+    r = k // bands
+    keys = ", ".join(
+        "unhex(md5(concat_ws('|', "
+        + ", ".join(f"sig[{b * r + j}]" for j in range(r))
+        + ")))"
+        for b in range(bands)
+    )
+    return pin(
+        minhash_signatures(df, id_col, text_col, k, n, shingles).selectExpr(
+            f"`{id_col}` AS {alias}", f"posexplode(array({keys})) AS (band, band_hash)"
         )
-    return F.array(*out)
+    )
 
 
 def shingle_frame(
@@ -177,13 +196,8 @@ def minhash_lsh_candidates(
     partitioned by bucket; work is Σ|bucket|², never |docs|². Returned
     pairs are distinct across bands.
 
-    The band-key frame is persisted before the self-join: the two join
-    sides carry different projections, so exchange reuse can't kick in
-    and each side would otherwise recompute every signature. Band keys
-    are ~(bands × 36) bytes/doc — at 100 TB of text that's a few hundred
-    GB cluster-wide, MEMORY_AND_DISK-safe. The persist is scope-owned
-    (caching.pin): run inside ``cache_scope()`` to release it once the
-    pairs are materialized.
+    The band keys come from :func:`minhash_band_keys` (persisted, see
+    there).
 
     r14 MEASURED NEGATIVE, reverted: the first-agreeing-band dedup that
     replaced simhash_neardup_pairs' candidate DISTINCT does NOT carry
@@ -194,27 +208,12 @@ def minhash_lsh_candidates(
     in ~5 s. The DISTINCT exchange carries two int64s per row — the
     cheaper side of that trade at every tested SF.
 
-    ``shingles``: optional prebuilt :func:`shingle_frame` — signatures
-    are then derived from it instead of re-tokenizing ``df`` (the same
-    seeded-md5 mins over the same arrays → identical signatures)."""
-    r = k // bands
-    if shingles is not None:
-        sigs = shingles.select(
-            id_col, minhash_from_shingles(F.col("_sh"), k).alias("sig")
-        )
-    else:
-        sigs = minhash_signatures(df, id_col, text_col, k, n)
-    keyed = pin(
-        sigs.select(
-            F.col(id_col).alias("doc_a"),
-            F.explode(minhash_bands(F.col("sig"), bands, r)).alias("bk"),
-        ).select("doc_a", "bk.band", "bk.band_hash")
-    )
-    left = keyed
-    right = keyed.withColumnRenamed("doc_a", "doc_b")
+    ``shingles``: optional prebuilt :func:`shingle_frame` (see
+    :func:`minhash_signatures`)."""
+    keyed = minhash_band_keys(df, id_col, text_col, "doc_a", k, bands, n, shingles)
     return (
-        left.join(right, on=["band", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        keyed.join(keyed.withColumnRenamed("doc_a", "doc_b"), on=["band", "band_hash"])
+        .where("doc_a < doc_b")
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -227,7 +226,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.0,
-    size_prefilter: bool = False,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for candidate pairs: join each
@@ -235,33 +233,12 @@ def ngram_jaccard_pairs(
     array_intersect / union sizes — integer counts, one IEEE division.
 
     Verification stage of the dedup pipeline: cost O(|candidates|), and
-    candidates come from LSH, so the full pipeline never goes quadratic.
-
-    ``size_prefilter`` (r10 verdict #4) inserts a PROVABLY no-loss
-    length-ratio gate before the array join: J(A,B) = |A∩B|/|A∪B| ≤
-    min(|A|,|B|)/max(|A|,|B|) (numerator ≤ the smaller set, denominator
-    ≥ the larger), so any pair with min/max < threshold cannot reach it
-    and may skip the full intersect. The gate joins ONLY int sizes onto
-    the candidate frame (8 bytes/side vs the full shingle arrays), then
-    the arrays join on survivors. The 1e-9 epsilon matches the PPJoin
-    prefix guard: IEEE drift in threshold·max can only ADMIT a boundary
-    pair (re-checked exactly by the verify), never drop one.
-
-    MEASURED NEGATIVE at the synthesized sf10 (BASELINE.md, r11): the
-    LSH candidates are 99.93 % true edges at θ=0.5 (27.05 M cands →
-    27.03 M verified edges — mutated-copy corpora give LSH very high
-    precision), so the gate can prune at most 0.07 % of pairs while
-    adding two extra joins over the 27 M-pair frame. Default stays OFF;
-    the option exists for corpora where LSH precision is genuinely low
-    (short docs, tiny band counts)."""
+    candidates come from LSH, so the full pipeline never goes quadratic."""
     if shingles is not None:
         # prebuilt raw-shingle frame (see shingle_frame): dedup to the
         # SET row-locally — array_distinct over the identical array the
         # inline path would have built, so _sh is value-identical.
-        sh = shingles.select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(F.col("_sh")).alias("_sh"),
-        )
+        sh = shingles.selectExpr(f"`{id_col}` AS _id", "array_distinct(_sh) AS _sh")
     else:
         sh = pin(  # joined twice (a- and b-side) — don't shingle twice
             scale_out(df.select(id_col, text_col)).select(
@@ -269,37 +246,17 @@ def ngram_jaccard_pairs(
                 F.array_distinct(word_shingles(tokens(text_col), n)).alias("_sh"),
             )
         )
-    if size_prefilter and threshold > 0:
-        sz = sh.select("_id", F.size("_sh").alias("_n"))
-        candidates = (
-            candidates.join(
-                sz.select(F.col("_id").alias("doc_a"), F.col("_n").alias("_na")),
-                "doc_a",
-            )
-            .join(
-                sz.select(F.col("_id").alias("doc_b"), F.col("_n").alias("_nb")),
-                "doc_b",
-            )
-            .filter(
-                F.least("_na", "_nb").cast("double")
-                >= F.lit(threshold) * F.greatest("_na", "_nb").cast("double")
-                - F.lit(1e-9)
-            )
-            .select("doc_a", "doc_b")
-        )
-    a = sh.select(F.col("_id").alias("doc_a"), F.col("_sh").alias("sh_a"))
-    b = sh.select(F.col("_id").alias("doc_b"), F.col("_sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    inter = "size(array_intersect(sh_a, sh_b))"
     return (
-        candidates.join(a, on="doc_a")
-        .join(b, on="doc_b")
-        .select(
+        candidates.join(sh.selectExpr("_id AS doc_a", "_sh AS sh_a"), "doc_a")
+        .join(sh.selectExpr("_id AS doc_b", "_sh AS sh_b"), "doc_b")
+        .selectExpr(
             "doc_a",
             "doc_b",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
+            f"CAST({inter} AS DOUBLE) / CAST(size(sh_a) + size(sh_b) - {inter} AS DOUBLE)"
+            " AS jaccard",
         )
-        .filter(F.col("jaccard") >= threshold)
+        .where(f"jaccard >= {threshold!r}D")
     )
 
 
@@ -563,6 +520,45 @@ def simhash_neardup_pairs(
     )
 
 
+def rarity_prefix(
+    docs: DataFrame, id_col: str, set_col: str, threshold: float
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The rarity-ordered prefix both exact set joins filter on. Returns
+    ``(d, toks, pre)``: ``d`` = ``(_id, _s, _sz)`` full sets with their
+    sizes, ``toks`` = ``(_id, _tok)`` one row per set element, ``pre`` =
+    ``(_id, _sz, _pos, _tok)`` each set's PREFIX tokens.
+
+    Tokens get a global rarity rank — document frequency ascending, then
+    token (the vocab-sized frame, broadcast). The global order only
+    needs to be CONSISTENT, so the sets sort by (df, token) directly: no
+    dense rank, so no global-window pass over the vocab. Each set's
+    prefix is its first |s| − ⌈t·|s|⌉ + 1 tokens in that order (0-based:
+    pos < that).
+
+    The 1e-9 epsilon guards IEEE drift: products like 0.55*100 evaluate
+    to 55.000000000000007, whose bare ceil (56) would shorten the prefix
+    by one token and silently drop pairs sitting exactly AT the
+    threshold. Under-ceiling by < 1e-9 can only LENGTHEN a prefix (more
+    candidates, never fewer), so completeness is preserved for every
+    threshold."""
+    d = docs.selectExpr(
+        f"`{id_col}` AS _id", f"`{set_col}` AS _s", f"size(`{set_col}`) AS _sz"
+    )
+    toks = d.selectExpr("_id", "explode(_s) AS _tok")
+    vocab = toks.groupBy("_tok").agg(F.expr("count(1) AS _df"))
+    sorted_sets = (
+        toks.join(F.broadcast(vocab), "_tok")
+        .groupBy("_id")
+        .agg(F.expr(
+            "transform(sort_array(collect_list(struct(_df, _tok))), kv -> kv._tok) AS _sorted"
+        ))
+    )
+    pre = sorted_sets.selectExpr(
+        "_id", "size(_sorted) AS _sz", "posexplode(_sorted) AS (_pos, _tok)"
+    ).where(f"_pos < _sz - ceil({threshold!r}D * _sz - 1e-9D) + 1")
+    return d, toks, pre
+
+
 def set_similarity_join_prefix(
     docs: DataFrame,
     id_col: str,
@@ -573,10 +569,8 @@ def set_similarity_join_prefix(
     PPJoin-style prefix filtering — the exact counterpart to the
     MinHash-LSH approximate path.
 
-    Tokens get a global rarity rank (document frequency ascending, then
-    token — vocab-sized frame, broadcast); each set is re-sorted
-    rarest-first and only its PREFIX of length |s| − ⌈t·|s|⌉ + 1 is
-    exploded into the candidate join: two sets with Jaccard ≥ t must
+    Each set is re-sorted rarest-first and only its :func:`rarity_prefix`
+    is exploded into the candidate join: two sets with Jaccard ≥ t must
     share at least one prefix token under any common global order (the
     pigeonhole behind prefix filtering), so candidates are complete.
     The equi-join runs on the prefix token — O(Σ per-token prefix²),
@@ -584,52 +578,17 @@ def set_similarity_join_prefix(
     makes hot frequent tokens fall outside prefixes) — then the exact
     Jaccard verifies on the full sets. Output: id_a, id_b, jaccard.
     """
-    d = docs.select(
-        F.col(id_col).alias("_id"), F.col(set_col).alias("_s")
-    ).withColumn("_sz", F.size("_s"))
-    toks = d.select("_id", F.explode("_s").alias("_tok"))
-    vocab = toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
-    # the global order only needs to be CONSISTENT: sort by (df, token)
-    # directly — no dense rank, so no global-window pass over the vocab
-    ranked = toks.join(F.broadcast(vocab), "_tok")
-    sorted_sets = ranked.groupBy("_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("_df", "_tok"))),
-            lambda kv: kv["_tok"],
-        ).alias("_sorted")
-    )
-    # prefix length = sz - ceil(t*sz) + 1  (0-based: pos < that).
-    # The epsilon guards IEEE drift: products like 0.55*100 evaluate to
-    # 55.000000000000007, whose bare ceil (56) would shorten the prefix by
-    # one token and silently drop pairs sitting exactly AT the threshold.
-    # Under-ceiling by < 1e-9 can only LENGTHEN a prefix (more candidates,
-    # never fewer), so completeness is preserved for every threshold.
-    pre = sorted_sets.select(
-        "_id",
-        F.size("_sorted").alias("_sz"),
-        F.posexplode("_sorted").alias("_pos", "_tok"),
-    ).filter(
-        F.col("_pos")
-        < F.col("_sz")
-        - F.ceil(F.lit(threshold) * F.col("_sz") - F.lit(1e-9))
-        + 1
-    )
-    a = pre.select(F.col("_id").alias("_ida"), "_tok")
-    b = pre.select(F.col("_id").alias("_idb"), "_tok")
+    d, _, pre = rarity_prefix(docs, id_col, set_col, threshold)
     cand = (
-        a.join(b, "_tok")
-        .filter(F.col("_ida") < F.col("_idb"))
+        pre.selectExpr("_id AS _ida", "_tok")
+        .join(pre.selectExpr("_id AS _idb", "_tok"), "_tok")
+        .where("_ida < _idb")
         .select("_ida", "_idb")
         .distinct()
     )
-    sa = d.select(F.col("_id").alias("_ida"), F.col("_s").alias("_sa"),
-                  F.col("_sz").alias("_sza"))
-    sb = d.select(F.col("_id").alias("_idb"), F.col("_s").alias("_sb"),
-                  F.col("_sz").alias("_szb"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    jac = inter.cast("double") / (
-        F.col("_sza") + F.col("_szb") - inter
-    ).cast("double")
+    sa = d.selectExpr("_id AS _ida", "_s AS _sa", "_sz AS _sza")
+    sb = d.selectExpr("_id AS _idb", "_s AS _sb", "_sz AS _szb")
+    inter = "size(array_intersect(_sa, _sb))"
     # The verify join carries BOTH full token arrays per pair — at the
     # 100× synthesis that is ~100 GB through what would otherwise be a
     # 32-wide shuffle (3 GB+/task → Java heap OOM, measured r11 via
@@ -654,12 +613,12 @@ def set_similarity_join_prefix(
         .join(sa.repartition(nv, "_ida"), "_ida")
         .repartition(nv, "_idb")
         .join(sb.repartition(nv, "_idb"), "_idb")
-        .select(
-            F.col("_ida").alias("id_a"),
-            F.col("_idb").alias("id_b"),
-            jac.alias("jaccard"),
+        .selectExpr(
+            "_ida AS id_a",
+            "_idb AS id_b",
+            f"CAST({inter} AS DOUBLE) / CAST(_sza + _szb - {inter} AS DOUBLE) AS jaccard",
         )
-        .filter(F.col("jaccard") >= threshold)
+        .where(f"jaccard >= {threshold!r}D")
     )
 
 
@@ -675,64 +634,35 @@ def containment_join(
     symmetric Jaccard joins structurally miss: containment of a small
     set in a huge one has near-zero Jaccard.
 
-    Asymmetric prefix filter: tokens get the same rarity-first global
-    order as :func:`set_similarity_join_prefix`; a qualifying pair must
-    share a token from A's prefix of length |a| − ⌈t·|a|⌉ + 1 (the
-    pigeonhole over the CONTAINED side only), but — unlike the Jaccard
-    case — B contributes its FULL token set, because containment puts no
-    lower bound on B's overlap fraction. Candidate volume is
-    Σ_token prefix_count(tok)·df(tok), concentrated on rare tokens by
-    the rarity-first ordering (hot tokens fall outside prefixes).
-    Exact verification on the full sets; one final IEEE division.
-    Empty sets are excluded (containment undefined). Output:
-    id_a (contained), id_b (container), containment.
+    Asymmetric prefix filter: a qualifying pair must share a token from
+    A's :func:`rarity_prefix` (the pigeonhole over the CONTAINED side
+    only), but — unlike the Jaccard case — B contributes its FULL token
+    set, because containment puts no lower bound on B's overlap
+    fraction. Candidate volume is Σ_token prefix_count(tok)·df(tok),
+    concentrated on rare tokens by the rarity-first ordering (hot tokens
+    fall outside prefixes). Exact verification on the full sets; one
+    final IEEE division. Empty sets are excluded (containment
+    undefined). Output: id_a (contained), id_b (container), containment.
     """
-    d = docs.select(
-        F.col(id_col).alias("_id"), F.col(set_col).alias("_s")
-    ).withColumn("_sz", F.size("_s"))
-    toks = d.select("_id", F.explode("_s").alias("_tok"))
-    vocab = toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
-    ranked = toks.join(F.broadcast(vocab), "_tok")
-    sorted_sets = ranked.groupBy("_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("_df", "_tok"))),
-            lambda kv: kv["_tok"],
-        ).alias("_sorted")
-    )
-    # same epsilon guard as set_similarity_join_prefix (IEEE ceil drift)
-    pre = sorted_sets.select(
-        "_id",
-        F.size("_sorted").alias("_sz"),
-        F.posexplode("_sorted").alias("_pos", "_tok"),
-    ).filter(
-        F.col("_pos")
-        < F.col("_sz")
-        - F.ceil(F.lit(threshold) * F.col("_sz") - F.lit(1e-9))
-        + 1
-    )
-    a = pre.select(F.col("_id").alias("_ida"), "_tok")
-    b = toks.select(F.col("_id").alias("_idb"), "_tok")
+    d, toks, pre = rarity_prefix(docs, id_col, set_col, threshold)
     cand = (
-        a.join(b, "_tok")
-        .filter(F.col("_ida") != F.col("_idb"))
+        pre.selectExpr("_id AS _ida", "_tok")
+        .join(toks.selectExpr("_id AS _idb", "_tok"), "_tok")
+        .where("_ida != _idb")
         .select("_ida", "_idb")
         .distinct()
     )
-    sa = d.select(F.col("_id").alias("_ida"), F.col("_s").alias("_sa"),
-                  F.col("_sz").alias("_sza"))
-    sb = d.select(F.col("_id").alias("_idb"), F.col("_s").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    cont = inter.cast("double") / F.col("_sza").cast("double")
     return (
-        cand.join(sa, "_ida")
-        .join(sb, "_idb")
-        .filter(F.col("_sza") > 0)
-        .select(
-            F.col("_ida").alias("id_a"),
-            F.col("_idb").alias("id_b"),
-            cont.alias("containment"),
+        cand.join(d.selectExpr("_id AS _ida", "_s AS _sa", "_sz AS _sza"), "_ida")
+        .join(d.selectExpr("_id AS _idb", "_s AS _sb"), "_idb")
+        .where("_sza > 0")
+        .selectExpr(
+            "_ida AS id_a",
+            "_idb AS id_b",
+            "CAST(size(array_intersect(_sa, _sb)) AS DOUBLE)"
+            " / CAST(_sza AS DOUBLE) AS containment",
         )
-        .filter(F.col("containment") >= threshold)
+        .where(f"containment >= {threshold!r}D")
     )
 
 
@@ -762,38 +692,22 @@ def minhash_lsh_incremental_candidates(
     {'cross', 'new-new'}) with doc_a < doc_b. Id overlap between the
     frames (a batch re-ingesting a settled doc) is tolerated: the cross
     branch drops self-collisions, so the contract holds either way."""
-    r = k // bands
-
-    def keyed(df: DataFrame, alias: str) -> DataFrame:
-        sigs = minhash_signatures(df, id_col, text_col, k, n)
-        return pin(
-            sigs.select(
-                F.col(id_col).alias(alias),
-                F.explode(minhash_bands(F.col("sig"), bands, r)).alias("bk"),
-            ).select(alias, "bk.band", "bk.band_hash")
-        )
-
-    old_keyed = keyed(old_df, "_old")
-    new_keyed = keyed(new_df, "_new")
+    old_keyed = minhash_band_keys(old_df, id_col, text_col, "_old", k, bands, n)
+    new_keyed = minhash_band_keys(new_df, id_col, text_col, "_new", k, bands, n)
+    # A doc id present in BOTH frames (a batch re-ingesting a settled
+    # doc) would otherwise collide with itself on every shared band key
+    # and emit a degenerate (x, x) row — least==greatest violates the
+    # doc_a < doc_b contract below.
     cross = (
         new_keyed.join(old_keyed, on=["band", "band_hash"])
-        # A doc id present in BOTH frames (a batch re-ingesting a settled
-        # doc) would otherwise collide with itself on every shared band
-        # key and emit a degenerate (x, x) row — least==greatest violates
-        # the doc_a < doc_b contract below.
-        .filter(F.col("_new") != F.col("_old"))
-        .select(
-            F.least("_new", "_old").alias("doc_a"),
-            F.greatest("_new", "_old").alias("doc_b"),
-            F.lit("cross").alias("pair_type"),
-        )
+        .where("_new != _old")
+        .selectExpr("least(_new, _old) AS doc_a", "greatest(_new, _old) AS doc_b", "0 AS _prio")
     )
-    nn_left = new_keyed.withColumnRenamed("_new", "doc_a")
-    nn_right = new_keyed.withColumnRenamed("_new", "doc_b")
     new_new = (
-        nn_left.join(nn_right, on=["band", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit("new-new").alias("pair_type"))
+        new_keyed.withColumnRenamed("_new", "doc_a")
+        .join(new_keyed.withColumnRenamed("_new", "doc_b"), on=["band", "band_hash"])
+        .where("doc_a < doc_b")
+        .selectExpr("doc_a", "doc_b", "1 AS _prio")
     )
     # ONE pair-keyed aggregate replaces two per-branch distincts (one
     # shuffle instead of two) and makes the output a set even when the
@@ -806,12 +720,5 @@ def minhash_lsh_incremental_candidates(
     return (
         cross.unionByName(new_new)
         .groupBy("doc_a", "doc_b")
-        .agg(
-            F.when(
-                F.max((F.col("pair_type") == "new-new").cast("int")) == 1,
-                F.lit("new-new"),
-            )
-            .otherwise(F.lit("cross"))
-            .alias("pair_type")
-        )
+        .agg(F.expr("CASE WHEN max(_prio) = 1 THEN 'new-new' ELSE 'cross' END AS pair_type"))
     )

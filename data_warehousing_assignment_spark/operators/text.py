@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions.cleaning import sql_str
+
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deliberately small and hard-coded: the heuristic must be
 # reproducible in the DuckDB oracle, and real deployments would swap in
@@ -420,7 +422,7 @@ def learn_bpe_merges(
       count → the argmax pair comes back as ONE driver scalar (same
       driver-loop contract as connected components); the merge is then
       applied to the symbol arrays with a row-local left-to-right fold
-      (``F.aggregate``) — greedy non-overlapping, exactly the reference
+      (SQL ``aggregate``) — greedy non-overlapping, exactly the reference
       algorithm's replacement order.
     * ``localCheckpoint`` truncates the per-round lineage so round k
       doesn't replay rounds 1..k-1.
@@ -431,38 +433,26 @@ def learn_bpe_merges(
     """
     words = (
         docs.select(F.explode(tokens(text_col)).alias("w"))
-        .filter(F.length("w") > 0)
+        .where("length(w) > 0")
         .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.expr("count(1) AS n"))
     )
-    vocab = words.select(
+    vocab = words.selectExpr(
         "n",
-        F.concat(
-            F.transform(
-                F.sequence(F.lit(1), F.length("w")),
-                lambda i: F.col("w").substr(i, F.lit(1)),
-            ),
-            F.array(F.lit(eow)),
-        ).alias("syms"),
+        "concat(transform(sequence(1, length(w)), i -> substr(w, i, 1)),"
+        f" array({sql_str(eow)})) AS syms",
     ).localCheckpoint(eager=False)
 
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         pairs = (
-            vocab.select(
+            vocab.selectExpr(
                 "n",
-                F.explode(
-                    F.zip_with(
-                        F.slice("syms", 1, F.size("syms") - 1),
-                        F.slice("syms", 2, F.size("syms") - 1),
-                        lambda a, b: F.struct(
-                            a.alias("l"), b.alias("r")
-                        ),
-                    )
-                ).alias("p"),
+                "explode(zip_with(slice(syms, 1, size(syms) - 1),"
+                " slice(syms, 2, size(syms) - 1), (a, b) -> struct(a AS l, b AS r))) AS p",
             )
             .groupBy("p.l", "p.r")
-            .agg(F.sum("n").alias("cnt"))
+            .agg(F.expr("sum(n) AS cnt"))
         )
         top = pairs.orderBy(
             F.desc("cnt"), F.asc("l"), F.asc("r")
@@ -471,21 +461,15 @@ def learn_bpe_merges(
             break
         left, right, cnt = top[0].l, top[0].r, int(top[0].cnt)
         merges.append((rank, left, right, cnt))
-        merged = F.lit(left + right)
-        vocab = vocab.select(
+        # symbols are corpus characters (any of them, ' and \ included):
+        # they enter the fold as escaped literals
+        vocab = vocab.selectExpr(
             "n",
-            F.aggregate(
-                "syms",
-                F.array().cast("array<string>"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == F.lit(left))
-                    & (x == F.lit(right)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1), F.array(merged)
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ).alias("syms"),
+            "aggregate(syms, CAST(array() AS ARRAY<STRING>), (acc, x) -> CASE"
+            f" WHEN size(acc) > 0 AND element_at(acc, -1) = {sql_str(left)}"
+            f" AND x = {sql_str(right)}"
+            f" THEN concat(slice(acc, 1, size(acc) - 1), array({sql_str(left + right)}))"
+            " ELSE concat(acc, array(x)) END) AS syms",
         ).localCheckpoint(eager=False)
     return merges
 

@@ -656,7 +656,6 @@ from data_warehousing_assignment_spark.registry_extensions import (  # noqa: E40
     _HYBRID_C0_SQL,
     _hybrid_fused_ctes,
     _ivf_cand_ctes,
-    _QSAMPLE_CTE,
     _QSAMPLE_WHERE,
     _top_per_query,
     audit_sample,
@@ -1232,30 +1231,18 @@ def op_ext_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
     cand = dd.minhash_lsh_candidates(docs, "doc_id", "text", 12, 4)
-    j = (
-        truth.withColumn("_t", F.lit(1))
-        .join(
-            cand.withColumn("_c", F.lit(1)),
-            on=["doc_a", "doc_b"],
-            how="full_outer",
+    hits = "SUM(in_t * in_c)"
+    return (
+        truth.selectExpr("doc_a", "doc_b", "1 AS _t")
+        .join(cand.selectExpr("doc_a", "doc_b", "1 AS _c"), ["doc_a", "doc_b"], "full_outer")
+        .selectExpr("coalesce(_t, 0) AS in_t", "coalesce(_c, 0) AS in_c")
+        .selectExpr(
+            "CAST(SUM(in_c) AS BIGINT) AS n_candidates",
+            "CAST(SUM(in_t) AS BIGINT) AS n_truth",
+            f"CAST({hits} AS BIGINT) AS n_hits",
+            f"CAST({hits} AS DOUBLE) / CAST(NULLIF(SUM(in_c), 0) AS DOUBLE) AS precision",
+            f"CAST({hits} AS DOUBLE) / CAST(NULLIF(SUM(in_t), 0) AS DOUBLE) AS recall",
         )
-        .select(
-            F.coalesce("_t", F.lit(0)).alias("in_t"),
-            F.coalesce("_c", F.lit(0)).alias("in_c"),
-        )
-    )
-    return j.agg(
-        F.sum("in_c").cast("bigint").alias("n_candidates"),
-        F.sum("in_t").cast("bigint").alias("n_truth"),
-        F.sum(F.col("in_t") * F.col("in_c")).cast("bigint").alias("n_hits"),
-        (
-            F.sum(F.col("in_t") * F.col("in_c")).cast("double")
-            / F.nullif(F.sum("in_c"), F.lit(0)).cast("double")
-        ).alias("precision"),
-        (
-            F.sum(F.col("in_t") * F.col("in_c")).cast("double")
-            / F.nullif(F.sum("in_t"), F.lit(0)).cast("double")
-        ).alias("recall"),
     )
 
 

@@ -55,7 +55,7 @@ _K, _BANDS, _R = 12, 4, 3
 
 def _sig_sql() -> str:
     """DuckDB expression list for the 12 min-hash values over shingles
-    (mirrors dedup.minhash_signature)."""
+    (mirrors dedup.minhash_sig_sql)."""
     mins = ", ".join(
         f"list_min(list_transform(sh, s -> md5('{i}:' || s)))" for i in range(_K)
     )
@@ -138,7 +138,7 @@ def op_ext_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — the signature stage scales linearly with corpus bytes."""
     docs = t(spark, sf_dir, "documents")
     sigs = dd.minhash_signatures(docs, "doc_id", "text", _K)
-    return sigs.select("doc_id", F.concat_ws("|", "sig").alias("sig"))
+    return sigs.selectExpr("doc_id", "concat_ws('|', sig) AS sig")
 
 
 _INCR_CAND_SQL = f"""
@@ -2879,18 +2879,18 @@ def op_ext_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     comp = shared_dedup_clusters(spark, sf_dir)
     q = F.size(tx.tokens("text")) >= 5
-    surv = F.col("doc_id") == F.col("cluster_id")
     samp = (tx.hash_bucket("doc_id", "cur:") % 10) < 8
-    cnt_if = lambda c: F.sum(F.when(c, 1).otherwise(0)).cast("bigint")
     return (
         docs.join(comp, "doc_id")
-        .select("source", q.alias("q"), surv.alias("surv"), samp.alias("samp"))
+        .select("source", q.alias("q"), F.expr("doc_id = cluster_id AS surv"), samp.alias("samp"))
         .groupBy("source")
         .agg(
-            F.count(F.lit(1)).alias("n_raw"),
-            cnt_if(F.col("q")).alias("n_quality"),
-            cnt_if(F.col("q") & F.col("surv")).alias("n_survivors"),
-            cnt_if(F.col("q") & F.col("surv") & F.col("samp")).alias("n_sampled"),
+            F.expr("count(1) AS n_raw"),
+            F.expr("CAST(SUM(CASE WHEN q THEN 1 ELSE 0 END) AS BIGINT) AS n_quality"),
+            F.expr("CAST(SUM(CASE WHEN q AND surv THEN 1 ELSE 0 END) AS BIGINT) AS n_survivors"),
+            F.expr(
+                "CAST(SUM(CASE WHEN q AND surv AND samp THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled"
+            ),
         )
     )
 

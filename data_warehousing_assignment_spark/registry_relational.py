@@ -1383,26 +1383,11 @@ def op_ext_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         # ntile's tiebreak column doubles as the join-back key, so each
         # score frame is exactly (o_custkey, <score>)
-        nt = (
-            an.distributed_ntile(
-                base.select("o_custkey", metric),
-                metric,
-                "o_custkey",
-                4,
-                descending=desc,
-            )
-            .select("o_custkey", F.col("ntile").alias(score))
-        )
+        nt = an.distributed_ntile(
+            base.select("o_custkey", metric), metric, "o_custkey", 4, descending=desc
+        ).selectExpr("o_custkey", f"ntile AS {score}")
         out = out.join(nt, "o_custkey")
-    return out.select(
-        "o_custkey",
-        "recency_days",
-        "frequency",
-        "monetary_cents",
-        "r_score",
-        "f_score",
-        "m_score",
-    )
+    return out
 
 
 @query(

@@ -564,35 +564,19 @@ def test_fk_discovery_flags_true_and_false_keys(spark):
         )
 
 
-def test_bpe_learn_matches_reference_algorithm(spark):
-    """The raw merge table (text.learn_bpe_merges) replays a pure-Python
-    reference BPE exactly; the registered op (since r13 a 1-row
-    structural audit with a DuckDB oracle — r12 verdict #3) must report
-    the same table's structure."""
-    from data_warehousing_assignment_spark.operators import text as tx
-
-    merges = tx.learn_bpe_merges(
-        spark.read.parquet(f"{SF}/documents.parquet"), "text", n_merges=8
-    )
+def reference_bpe(texts, n_merges, eow="▁"):
+    """Pure-Python BPE (Sennrich et al. 2016) over whitespace words:
+    ``[(rank, left, right, pair_count), ...]``, ties broken on
+    (count desc, left, right), merges applied greedily left to right."""
     import collections
-    import duckdb
     import re as _re
 
-    texts = [
-        t
-        for (t,) in duckdb.sql(
-            f"SELECT text FROM '{SF}/documents.parquet'"
-        ).fetchall()
-    ]
     freq = collections.Counter(
-        w
-        for t in texts
-        for w in _re.split(r"\s+", t.strip().lower())
-        if w
+        w for t in texts for w in _re.split(r"\s+", t.strip().lower()) if w
     )
-    vocab = {tuple(w) + ("▁",): n for w, n in freq.items()}
-    expect = []
-    for rank in range(1, 9):
+    vocab = {tuple(w) + (eow,): n for w, n in freq.items()}
+    merges = []
+    for rank in range(1, n_merges + 1):
         pairs = collections.Counter()
         for syms, n in vocab.items():
             for a, b in zip(syms, syms[1:]):
@@ -602,7 +586,7 @@ def test_bpe_learn_matches_reference_algorithm(spark):
         (l, r), cnt = min(
             pairs.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
         )
-        expect.append((rank, l, r, cnt))
+        merges.append((rank, l, r, cnt))
         new_vocab = {}
         for syms, n in vocab.items():
             out = []
@@ -613,6 +597,28 @@ def test_bpe_learn_matches_reference_algorithm(spark):
                     out.append(x)
             new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + n
         vocab = new_vocab
+    return merges
+
+
+def test_bpe_learn_matches_reference_algorithm(spark):
+    """The raw merge table (text.learn_bpe_merges) replays a pure-Python
+    reference BPE exactly; the registered op (since r13 a 1-row
+    structural audit with a DuckDB oracle — r12 verdict #3) must report
+    the same table's structure."""
+    from data_warehousing_assignment_spark.operators import text as tx
+
+    merges = tx.learn_bpe_merges(
+        spark.read.parquet(f"{SF}/documents.parquet"), "text", n_merges=8
+    )
+    import duckdb
+
+    texts = [
+        t
+        for (t,) in duckdb.sql(
+            f"SELECT text FROM '{SF}/documents.parquet'"
+        ).fetchall()
+    ]
+    expect = reference_bpe(texts, 8)
     got = [(rk, l, r, c) for rk, l, r, c in merges]
     assert got == expect
     # the first merge is the corpus's most frequent symbol pair, and the
@@ -802,6 +808,22 @@ def test_operators_handle_empty_inputs(spark):
                         StructField("i", LongType())])
     )
     assert time_weighted_avg(empty_ts, "u", "us", "vc", "i").count() == 0
+
+
+def test_bpe_learn_merges_quote_and_backslash_symbols(spark):
+    """Symbols are corpus characters, so a chosen pair can hold ' or \\;
+    it enters the merge fold as an escaped SQL literal and must still
+    replay the reference BPE exactly."""
+    from data_warehousing_assignment_spark.operators.text import (
+        learn_bpe_merges,
+    )
+
+    texts = ["a\\b a\\b don't", "don't a\\b it's", "a\\b don't won't"]
+    docs = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = learn_bpe_merges(docs, "text", n_merges=8)
+    assert got == reference_bpe(texts, 8)
+    chosen = "".join(l + r for _, l, r, _ in got)
+    assert "'" in chosen and "\\" in chosen, got
 
 
 def test_bpe_empty_corpus_returns_no_merges(spark):

@@ -1,15 +1,13 @@
-"""Build-cost guard: building a query sends fewer than its budget of
-py4j call commands. The sign-bit fingerprint, hyperplane-LSH, IVF/PQ,
-retrieval and correlation-matrix ops and the warehouse ETL are held
-under 1,000, so a builder that goes back to one literal Column per bit
-or coefficient, to Python-lambda Column trees per Lloyd round, to
-hand-built Column copies of a scoring or ranking stage, to one Column
-chain and one filtered DQ slice per cleaning rule, or to Column trees
-built one attribute at a time in the SCD2 merge, dim upserts, fact
-anti-joins and audit (thousands of JVM round trips before any data
-moves), fails here. Every other registered query is held under 2,000.
-The incremental fact load's date-window prune is pinned to one bounds
-collect."""
+"""Build-cost guard: building any registered query, or one warehouse
+ETL load, sends fewer than ``BUDGET`` py4j call commands. A builder
+that goes back to one literal Column per bit, coefficient, signature
+slot or band, to Python-lambda Column trees per Lloyd or BPE round, to
+hand-built Column copies of a scoring, ranking or prefix-sum stage, to
+one Column chain and one filtered DQ slice per cleaning rule, or to
+Column trees built one attribute at a time in the SCD2 merge, dim
+upserts, fact anti-joins and audit (thousands of JVM round trips before
+any data moves), fails here. The incremental fact load's date-window
+prune is pinned to one bounds collect."""
 
 from __future__ import annotations
 
@@ -21,14 +19,9 @@ from data_warehousing_assignment_spark.caching import release_unscoped
 from data_warehousing_assignment_spark.registry import all_queries
 from perfbench.trace import Py4jCounter
 
+#: every registered query, and one run_etl load (clean + DQ of three
+#: domains, 5 dim upserts, SCD2, 3 incremental facts, audit)
 BUDGET = 1000
-#: every registered query
-REGISTRY_BUDGET = 2000
-#: one run_etl load: clean + DQ of three domains, 5 dim upserts, SCD2,
-#: 3 incremental facts, audit
-ETL_BUDGET = 1000
-#: every registered query
-REGISTRY_BUDGET = 2000
 
 
 def _build_calls(build) -> int:
@@ -93,7 +86,7 @@ def test_every_query_builds_under_registry_budget(spark, op):
         # later cached-RDD accounting starts clean
         for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
             jrdd.unpersist(False)
-    assert calls < REGISTRY_BUDGET, f"{op}: {calls} py4j calls"
+    assert calls < BUDGET, f"{op}: {calls} py4j calls"
 
 
 def test_run_etl_builds_in_few_py4j_calls(spark):
@@ -112,7 +105,7 @@ def test_run_etl_builds_in_few_py4j_calls(spark):
     for load_date in ("2024-02-01", "2024-02-02"):
         prior = states[-1] if states else None
         calls = _build_calls(lambda: states.append(run_etl(spark, *raw, load_date, prior)))
-        assert calls < ETL_BUDGET, f"run_etl {load_date}: {calls} py4j calls"
+        assert calls < BUDGET, f"run_etl {load_date}: {calls} py4j calls"
 
 
 def test_fact_incr_prune_collects_its_bounds_once(spark):

@@ -29,6 +29,18 @@ recomputes identically; the cost is time, never correctness.
 At 100 TB the same discipline matters more, not less: a leaked
 MEMORY_AND_DISK frame evicts useful shuffle/broadcast blocks long after
 its query finished.
+
+``checkpoint(df)`` is the other kind of pin: an eager
+``localCheckpoint``, for a frame that must be read as one snapshot. A
+persist is matched by Spark's CacheManager to any later plan over the
+same source, so a file rewritten in place outside Spark (a daily CSV
+feed) and read again would return the cached rows; a checkpoint is a
+lineage cut that no later plan matches. It cannot recompute either, so
+its ownership differs: inside a ``cache_scope()`` the scope releases it on exit;
+outside any scope it is left to Spark's ContextCleaner, which frees it
+once nothing references the frame. It never joins the unscoped pool —
+draining that between queries would break a frame the caller still
+holds (a load's state passed on as the next load's prior).
 """
 
 from __future__ import annotations
@@ -66,19 +78,47 @@ def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
     return df
 
 
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now as an eager ``localCheckpoint``, owned by
+    the innermost :func:`cache_scope` of this execution context, or by
+    Spark's ContextCleaner if no scope is active (see the module
+    docstring for why it is not a persist)."""
+    df = df.localCheckpoint(eager=True)
+    scopes = _SCOPES.get()
+    if scopes:
+        scopes[-1].append(df)
+    return df
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD holding a checkpointed frame's blocks."""
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
+def is_live(df: DataFrame) -> bool:
+    """Whether a checkpointed frame's blocks are still held, checked
+    without running a job: once its RDD is unpersisted, reading the frame
+    fails, as its lineage is cut."""
+    jsc = df.sparkSession.sparkContext._jsc
+    return jsc.getPersistentRDDs().containsKey(_checkpoint_rdd(df).id())
+
+
 def _release(frames: list[DataFrame], blocking: bool) -> None:
     for df in frames:
         try:
-            df.unpersist(blocking=blocking)
+            if df.is_cached:
+                df.unpersist(blocking=blocking)
+            else:  # a checkpoint: drop its RDD's blocks
+                _checkpoint_rdd(df).unpersist(blocking)
         except Exception:
             pass  # session already stopped — nothing to release
 
 
 @contextmanager
 def cache_scope() -> Iterator[list[DataFrame]]:
-    """Release every ``pin()`` made inside the block on exit (also on
-    error). Unpersist is blocking so tests can assert storage is clean
-    immediately after the block."""
+    """Release every ``pin()`` and ``checkpoint()`` made inside the
+    block on exit (also on error). Unpersist is blocking so tests can
+    assert storage is clean immediately after the block."""
     held: list[DataFrame] = []
     token = _SCOPES.set(_SCOPES.get() + (held,))
     try:

@@ -69,7 +69,10 @@ def date_spine(
         ).alias("full_date")
     )
     if fallback is not None:
-        fb = spark.range(1).select(F.to_date(F.lit(fallback)).alias("full_date"))
+        # a DATE literal, not to_date('...'): it is non-null before
+        # constant folding too, so the spine's declared schema is non-null
+        # as its data is (a checkpoint keeps the declared schema)
+        fb = spark.range(1).select(F.expr(f"DATE'{fallback}'").alias("full_date"))
         # SQL UNION dedups; Spark union() is UNION ALL → add distinct()
         spine = spine.unionByName(fb).distinct()
     return spine

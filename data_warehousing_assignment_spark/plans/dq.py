@@ -10,7 +10,8 @@ with rows_processed / rows_failed / status ∈ {success, partial, failed}
 Spark-first: the reference builds these logs row-at-a-time inside Python
 loops; here every issue class of a table is one element of a single
 generator projection — one scan of the raw batch for the whole log —
-and the audit counts are plan-side aggregates (no driver collect)."""
+and the audit counts are plan-side aggregates (no driver collect), or
+observed on a frame as it is materialized (``plans/warehouse.py``)."""
 
 from __future__ import annotations
 
@@ -52,6 +53,21 @@ def dq_log(
     return df.selectExpr(f"inline(array_compact(array({entries})))")
 
 
+#: The audit row's status and message from its two counts, per the
+#: reference's rules: 0 failed → success, some → partial, all → failed
+#: (ref ``A2_hr_etl.py:103-119``).
+AUDIT_STATUS = (
+    "table_name",
+    "etl_stage",
+    "rows_processed",
+    "rows_failed",
+    "CASE WHEN rows_failed = 0 THEN 'success'"
+    " WHEN rows_failed < rows_processed THEN 'partial' ELSE 'failed' END AS status",
+    "format_string('Processed %d rows, %d failed', rows_processed, rows_failed)"
+    " AS message",
+)
+
+
 def audit_frame(
     df: DataFrame,
     table_name: str,
@@ -60,17 +76,10 @@ def audit_frame(
 ) -> DataFrame:
     """One audit row computed plan-side: rows_processed = COUNT(*),
     rows_failed = COUNT_IF(failed_predicate), a SQL predicate over
-    ``df``, and status per the reference's rules — 0 failed → success,
-    some → partial, all → failed (ref ``A2_hr_etl.py:103-119``)."""
+    ``df``, and the :data:`AUDIT_STATUS` status and message."""
     return df.selectExpr(
-        "count(1) AS rows_processed", f"count_if({failed_predicate}) AS rows_failed"
-    ).selectExpr(
         f"{sql_str(table_name)} AS table_name",
         f"{sql_str(etl_stage)} AS etl_stage",
-        "rows_processed",
-        "rows_failed",
-        "CASE WHEN rows_failed = 0 THEN 'success'"
-        " WHEN rows_failed < rows_processed THEN 'partial' ELSE 'failed' END AS status",
-        "format_string('Processed %d rows, %d failed', rows_processed, rows_failed)"
-        " AS message",
-    )
+        "count(1) AS rows_processed",
+        f"count_if({failed_predicate}) AS rows_failed",
+    ).selectExpr(*AUDIT_STATUS)

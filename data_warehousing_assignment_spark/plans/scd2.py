@@ -23,7 +23,7 @@ Upgrade path: with Delta/Iceberg present this becomes a single
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.functions.cleaning import sql_str
@@ -156,37 +156,28 @@ def expire_deleted(
 
 
 def assert_scd2_invariants(dim: DataFrame, key: str) -> dict[str, int]:
-    """Sanity counters for tests: violations of '≤1 current row per key'
-    and 'valid_from ≤ valid_to'. Returns counts (0 = healthy)."""
-    multi_current = (
-        dim.filter(F.col("is_current"))
-        .groupBy(key)
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-    )
-    bad_range = dim.filter(
-        F.col("valid_to").isNotNull() & (F.col("valid_from") > F.col("valid_to"))
-    ).count()
-    # Contiguity: within a key's history ordered by valid_from, every
-    # non-last version must close exactly where the next one opens
-    # (valid_to = next valid_from, never NULL mid-chain) — the
-    # cross-batch shape of the reference's expire-then-insert
-    # (A3_load_dim_emp.sql:42-62).
-    w = Window.partitionBy(key).orderBy("valid_from")
-    broken_chain = (
-        dim.withColumn("_next_from", F.lead("valid_from").over(w))
-        .filter(
-            F.col("_next_from").isNotNull()
-            & (
-                F.col("valid_to").isNull()
-                | (F.col("valid_to") != F.col("_next_from"))
-            )
-        )
-        .count()
-    )
-    return {
-        "multi_current_keys": multi_current,
-        "bad_valid_ranges": bad_range,
-        "broken_chains": broken_chain,
-    }
+    """Sanity counters for tests: keys with more than one current row,
+    rows with valid_from > valid_to, and broken chains. Returns counts
+    (0 = healthy), all from one aggregate over one window pass.
+
+    Contiguity: within a key's history ordered by valid_from, every
+    non-last version must close exactly where the next one opens
+    (valid_to = next valid_from, never NULL mid-chain) — the cross-batch
+    shape of the reference's expire-then-insert
+    (A3_load_dim_emp.sql:42-62). A key's current rows are counted on its
+    first version, so each key counts once."""
+    k = f"`{key}`"
+    w = f"PARTITION BY {k} ORDER BY valid_from"
+    row = dim.selectExpr(
+        "is_current", "valid_from", "valid_to",
+        f"row_number() OVER ({w}) AS _version",
+        f"lead(valid_from) OVER ({w}) AS _next_from",
+        f"count_if(is_current) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING"
+        " AND UNBOUNDED FOLLOWING) AS _current_rows",
+    ).selectExpr(
+        "count_if(_version = 1 AND _current_rows > 1) AS multi_current_keys",
+        "count_if(valid_to IS NOT NULL AND valid_from > valid_to) AS bad_valid_ranges",
+        "count_if(_next_from IS NOT NULL"
+        " AND (valid_to IS NULL OR valid_to != _next_from)) AS broken_chains",
+    ).first()
+    return row.asDict()

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.caching import is_live
 from data_warehousing_assignment_spark.registry import dec, query, t
 from data_warehousing_assignment_spark.operators import dedup as dd
 from data_warehousing_assignment_spark.operators import similarity as sim
@@ -1930,16 +1931,13 @@ def shared_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
            _EDGE_THRESH)
     df = _CLUSTER_CACHE.get(key)
     if df is not None:
-        # Liveness probe: a localCheckpoint lives in block-manager
-        # blocks, and anything that unpersists all RDDs (test fixtures,
-        # a memory-pressure sweep) orphans the frame — its lineage is
-        # truncated, so it cannot recompute. One 1-row take proves the
-        # blocks are still there; on failure fall through to rebuild.
-        try:
-            df.take(1)
+        # A localCheckpoint lives in block-manager blocks, and anything
+        # that unpersists all RDDs (test fixtures, a memory-pressure
+        # sweep) orphans the frame — its lineage is truncated, so it
+        # cannot recompute. Rebuild unless its RDD is still persisted.
+        if is_live(df):
             return df
-        except Exception:
-            _CLUSTER_CACHE.pop(key, None)
+        _CLUSTER_CACHE.pop(key, None)
     df = dd.near_dup_clusters(
         t(spark, sf_dir, "documents"), "doc_id", "text",
         _K, _BANDS, _EDGE_THRESH,

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from data_warehousing_assignment_spark.caching import (
     cache_scope,
     cached_rdd_count,
+    checkpoint,
+    is_live,
     pin,
     release_unscoped,
 )
@@ -103,3 +105,19 @@ def test_nested_scopes_release_lifo(spark):
             assert cached_rdd_count(spark) == base + 2
         assert cached_rdd_count(spark) == base + 1  # inner released early
     assert cached_rdd_count(spark) == base
+
+
+def test_checkpoint_is_released_by_its_scope_not_the_unscoped_pool(spark):
+    """A checkpoint made in a scope is released when the scope exits; one
+    made outside any scope survives release_unscoped(), which would
+    otherwise break a frame its caller still holds."""
+    with cache_scope():
+        scoped = checkpoint(spark.range(5))
+        assert is_live(scoped) and scoped.count() == 5
+    assert not is_live(scoped)
+    kept = checkpoint(spark.range(7))
+    release_unscoped(blocking=True)
+    assert is_live(kept) and kept.count() == 7
+    with cache_scope() as held:
+        held.append(kept)  # hand it to a scope to release it here
+    assert not is_live(kept)

@@ -384,7 +384,10 @@ def test_cluster_family_shares_one_cached_frame(spark):
 def test_cluster_cache_rebuilds_after_unpersist_sweep(spark):
     """An unpersist-all sweep (fixtures, memory pressure) orphans the
     memoized checkpoint — the memo must detect the dead blocks and
-    rebuild instead of failing downstream queries (r8 guard)."""
+    rebuild instead of failing downstream queries (r8 guard), and detect
+    them without running a job that fails on the missing blocks."""
+    import uuid
+
     from data_warehousing_assignment_spark import registry_extensions as rx
     from tests.conftest import SF_SMALL
 
@@ -393,8 +396,20 @@ def test_cluster_cache_rebuilds_after_unpersist_sweep(spark):
     n = a.count()
     for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
         jrdd.unpersist(True)
-    b = rx.shared_dedup_clusters(spark, SF_SMALL)
-    assert b.count() == n  # rebuilt (or still live) — never a dead frame
+    sc = spark.sparkContext
+    group = f"cluster-rebuild-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        b = rx.shared_dedup_clusters(spark, SF_SMALL)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        statuses = [tracker.getJobInfo(j).status for j in tracker.getJobIdsForGroup(group)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert b is not a  # rebuilt, not the orphaned frame
+    assert statuses and "FAILED" not in statuses, statuses
+    assert b.count() == n
+    assert rx.shared_dedup_clusters(spark, SF_SMALL) is b  # live: memo hit
 
 
 def test_simhash128_wide_pairs_match_bruteforce(spark):

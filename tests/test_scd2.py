@@ -6,6 +6,7 @@ changed rows expire-then-insert."""
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -44,6 +45,36 @@ def test_initial_load_all_current(spark):
     assert all(r.valid_from == dt.date(2024, 1, 1) for r in rows)
     inv = assert_scd2_invariants(dim, KEY)
     assert inv == {"multi_current_keys": 0, "bad_valid_ranges": 0, "broken_chains": 0}
+
+
+def test_invariants_count_each_violation(spark):
+    """One key with three current rows (a contiguous chain), one key whose
+    only row closes before it opens, one key whose history has a gap and
+    one healthy key: each counter is exactly 1, the multi-current
+    counter counts keys, not rows, and all three come from one action."""
+    d = dt.date
+    dim = mk_dim(spark, [
+        ("A", "a", "x", "h", d(2024, 1, 1), d(2024, 2, 1), True),
+        ("A", "a", "y", "h", d(2024, 2, 1), d(2024, 3, 1), True),
+        ("A", "a", "z", "h", d(2024, 3, 1), None, True),
+        ("B", "b", "x", "h", d(2024, 3, 1), d(2024, 2, 1), False),
+        ("C", "c", "x", "h", d(2024, 1, 1), d(2024, 1, 15), False),
+        ("C", "c", "y", "h", d(2024, 2, 1), None, True),
+        ("D", "d", "x", "h", d(2024, 1, 1), None, True),
+    ])
+    sc = spark.sparkContext
+    group = f"scd2-invariants-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        inv = assert_scd2_invariants(dim, KEY)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert inv == {"multi_current_keys": 1, "bad_valid_ranges": 1, "broken_chains": 1}
+    # one action: the window's and the aggregate's shuffle stages and the
+    # result, where three count() actions ran 8 jobs
+    assert jobs <= 3, f"{jobs} jobs"
 
 
 def test_changed_row_expires_and_inserts(spark):

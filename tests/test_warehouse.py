@@ -319,3 +319,104 @@ def test_dq_log_matches_filtered_slices_on_generated_day(spark, tmp_path):
     # with the orphan-FK slice, the log holds exactly the planted rows
     state = wh.run_etl(spark, hr, fin, ops, meta["days"][0]["load_date"])
     assert state["dq"].count() == meta["days"][0]["dq_rows"]
+
+
+# --------------------------------------------------------------------------
+# Each load's shared intermediates are checkpointed once
+# --------------------------------------------------------------------------
+
+
+def _csv_batches(root, hr_rows=HR_ROWS):
+    """The golden batches written as header CSVs under ``root`` by plain
+    file I/O, as a daily feed delivers them (a Spark write would refresh
+    Spark's caches of the path itself); returns their paths."""
+    import csv
+
+    os.makedirs(root, exist_ok=True)
+    paths = []
+    for name, rows, cols in (
+        ("hr", hr_rows, HR_COLS), ("fin", FIN_ROWS, FIN_COLS), ("ops", OPS_ROWS, OPS_COLS),
+    ):
+        path = os.path.join(root, f"{name}.csv")
+        with open(path, "w", newline="") as fh:
+            out = csv.writer(fh)
+            out.writerow([c.split()[0] for c in cols.split(", ")])
+            out.writerows(rows)
+        paths.append(path)
+    return paths
+
+
+def _read_csvs(spark, paths):
+    from data_warehousing_assignment_spark.sources.readers import read_csv
+
+    return [read_csv(spark, p) for p in paths]
+
+
+def _write_state(st, root):
+    from data_warehousing_assignment_spark.sources.writers import write_table
+    from perfbench.workloads import ETL_OUTPUTS
+
+    for table in ETL_OUTPUTS:
+        write_table(st[table], os.path.join(root, table))
+
+
+def test_reload_of_a_rewritten_batch_sees_the_new_rows(spark, tmp_path):
+    """A daily job rewrites hr.csv in place and loads it again in the same
+    session, outside any cache scope: the second load reads the new rows.
+    A persist of the first load's batch would be matched to the second
+    read of the same path and replay yesterday's rows."""
+    paths = _csv_batches(str(tmp_path / "in"))
+    _write_state(wh.run_etl(spark, *_read_csvs(spark, paths), LOAD_DATE), str(tmp_path / "a"))
+    hr_b = [
+        ("1001", "Alice", "IT", "F", "2018-01-15", "2001", "55000", "Active"),
+        ("1004", "Eve", "HR", "F", "2020-05-05", "2001", "42000", "Active"),
+    ]
+    _csv_batches(str(tmp_path / "in"), hr_b)
+    st = wh.run_etl(spark, *_read_csvs(spark, paths), "2024-02-02")
+    assert {r.employee_id for r in st["dim_employee"].collect()} == {"1001", "1004"}
+    assert st["dq"].where("table_name = 'staging_employee'").count() == 0
+    audit = {r.table_name: r for r in st["audit"].collect()}
+    assert audit["dim_employee"].rows_processed == 2
+
+
+def test_load_outputs_plan_over_checkpoints_not_the_csv(spark, tmp_path):
+    """Every output of a load reads the load's checkpoints: no executed
+    plan scans a raw CSV again."""
+    paths = _csv_batches(str(tmp_path / "in"))
+    st = wh.run_etl(spark, *_read_csvs(spark, paths), LOAD_DATE)
+    for table, df in st.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan csv" not in plan, table
+
+
+def test_cache_scope_releases_every_checkpoint_of_a_load(spark, tmp_path):
+    """A load and all of its writes inside one cache_scope leave no RDD
+    persisted that was not persisted before the block."""
+    from data_warehousing_assignment_spark.caching import cache_scope
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    with cache_scope():
+        st = wh.run_etl(spark, *_golden_raw(spark), LOAD_DATE)
+        assert persisted() - before  # the checkpoints are live in the scope
+        _write_state(st, str(tmp_path / "out"))
+    assert not persisted() - before
+
+
+def test_empty_batches_load_and_audit_zero_rows(spark):
+    """Empty HR and Ops batches load, and their checkpoints still report
+    the observed audit counts: 0 rows processed, status success."""
+    st = wh.run_etl(
+        spark, spark.createDataFrame([], HR_COLS), spark.createDataFrame(FIN_ROWS, FIN_COLS),
+        spark.createDataFrame([], OPS_COLS), LOAD_DATE,
+    )
+    audit = {r.table_name: (r.rows_processed, r.status) for r in st["audit"].collect()}
+    assert audit == {
+        "dim_employee": (0, "success"),
+        "fact_expenses": (4, "success"),
+        "fact_downtime": (0, "success"),
+    }
+    assert st["dim_employee"].count() == 0
+    assert st["fact_expenses"].count() == 0  # every FK is orphaned

@@ -246,39 +246,10 @@ def run_suite(spark, qs, names, sf_dir, sf, metric) -> dict:
         if name not in qs:
             continue
         try:
-            # Iterative driver-loop ops (connected components) do their
-            # distributed work EAGERLY during query construction and
-            # return a checkpointed result — timing only force(df) would
-            # measure a no-op. Rebuild those inside the timed region;
-            # lazy queries keep the build-once timing (comparable with
-            # earlier rounds, and plan construction isn't the metric).
-            eager = name in (
-                "op-ext-dedup-clusters",
-                "op-ext-dedup-survivors",
-                "op-ext-dedup-best-survivor",
-                "op-ext-bpe-learn",  # merge loop collects during build
-                # r11: the staged verify pins (postings, text-pair
-                # reps, both DP rungs) run eagerly at build — timing
-                # only force(df) would measure the final join/filter
-                # (~0.5 s of a ~13 s pipeline at sf1)
-                "op-ext-winnow-neardup",
-                # r15 (r14 verdict #1): build_ivf_index PINS its
-                # finished centroid frame since r14, so on a lazy
-                # build-once query the k-means chain runs once at the
-                # first warm force and every later timed force measures
-                # the PROBE only — an unintended timed-region shift vs
-                # r13 and earlier. Rebuilding per timed force restores
-                # build+probe timing (the pin still serves its
-                # production purpose: ONE Lloyd chain per force instead
-                # of one per downstream consumer). Timed construction
-                # includes the auto-k count() jobs where the op uses
-                # them — part of the honest build cost.
-                "op-ext-ann-ivf",
-                "op-ext-ann-ivf-scaled",
-                "op-ext-ann-ivf-pq",
-                "op-ext-ann-ivf-fullprobe",
-                "op-ext-ann-ivf-incremental",
-            )
+            # An eager op's build runs its measured work (see
+            # registry.query): rebuild it inside the timed region. Lazy
+            # ops build once, which keeps BENCH_r* timings comparable.
+            eager = qs[name].eager
 
             def fresh():
                 """Rebuild bypassing session memos (the dedup-cluster
@@ -433,22 +404,56 @@ def check_floors(
     return violations
 
 
+def _sf_of(sf_dir: str) -> float | None:
+    """".../sf0.1" -> 0.1 (best effort; None on nonstandard dirs)."""
+    tail = os.path.basename(sf_dir.rstrip("/"))
+    try:
+        return float(tail[2:]) if tail.startswith("sf") else None
+    except ValueError:
+        return None
+
+
+#: mode flag -> (suite, data dir for a session, sf, metric text,
+#: bench_floors.json section); no flag runs the headline suite.
+MODES = {
+    "--sf10": (
+        SF10_HEADLINE, synthesize_sf10, 10.0,
+        "scale-probe suite wall seconds (100x synthesized, noop-sink, min of warm runs)",
+        "sf10",
+    ),
+    "--sf1": (
+        SF1_HEADLINE, synthesize_sf1, 1.0,
+        "scale-probe suite wall seconds (10x synthesized, noop-sink, min of warm runs)",
+        "sf1",
+    ),
+    "--tpch": (
+        TPCH_HEADLINE, lambda spark: SF_DIR, 0.1,
+        "tpch-suite wall seconds (noop-sink, min of warm runs)",
+        "tpch",
+    ),
+    None: (
+        HEADLINE, lambda spark: SF_DIR, _sf_of(SF_DIR),
+        "headline-suite wall seconds (noop-sink, min of warm runs)",
+        None,
+    ),
+}
+
+
 def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entrymod
     from data_warehousing_assignment_spark.session import get_spark
 
-    sf1_mode = "--sf1" in sys.argv[1:]
-    sf10_mode = "--sf10" in sys.argv[1:]
-    tpch_mode = "--tpch" in sys.argv[1:]
+    mode = next((m for m in MODES if m in sys.argv[1:]), None)
+    suite_names, data_dir, sf, metric, section = MODES[mode]
     assert_mode = "--assert" in sys.argv[1:]
-    if sf10_mode and "SPARK_GRAFT_BENCH_ITERS" not in os.environ:
+    if mode == "--sf10":
         # 100×-scale queries run 10-60 s each: 3 timed iters (after the
         # 2 warm forces) bound a full gate run to ~10 min while min-of-3
         # still sheds the occasional host spike.
-        global N_ITERS
-        N_ITERS = 3
-    if sf10_mode:
+        if "SPARK_GRAFT_BENCH_ITERS" not in os.environ:
+            global N_ITERS
+            N_ITERS = 3
         # The default 8g driver heap is sized for the sf0.1/sf1 gates; at
         # 100× the heaviest suite query (simhash band verify) needs most
         # of 8g ALONE and OOMs behind three predecessors' not-yet-
@@ -458,55 +463,12 @@ def main() -> int:
     spark = get_spark("bench")
     qs = entrymod.queries()
 
-    if sf10_mode:
-        sf_dir = synthesize_sf10(spark)
-        report = run_suite(
-            spark, qs, SF10_HEADLINE, sf_dir, 10.0,
-            "scale-probe suite wall seconds (100x synthesized, noop-sink, min of warm runs)",
-        )
-        suite_names, suite_sf_dir = SF10_HEADLINE, sf_dir
-    elif sf1_mode:
-        sf_dir = synthesize_sf1(spark)
-        report = run_suite(
-            spark, qs, SF1_HEADLINE, sf_dir, 1.0,
-            "scale-probe suite wall seconds (10x synthesized, noop-sink, min of warm runs)",
-        )
-        suite_names, suite_sf_dir = SF1_HEADLINE, sf_dir
-    elif tpch_mode:
-        report = run_suite(
-            spark, qs, TPCH_HEADLINE, SF_DIR, 0.1,
-            "tpch-suite wall seconds (noop-sink, min of warm runs)",
-        )
-        suite_names, suite_sf_dir = TPCH_HEADLINE, SF_DIR
-    else:
-        sf = None
-        try:
-            # ".../sf0.1" -> 0.1 (best effort; None on nonstandard dirs)
-            tail = os.path.basename(SF_DIR.rstrip("/"))
-            if tail.startswith("sf"):
-                sf = float(tail[2:])
-        except ValueError:
-            sf = None
-        report = run_suite(
-            spark, qs, HEADLINE, SF_DIR, sf,
-            "headline-suite wall seconds (noop-sink, min of warm runs)",
-        )
-        suite_names, suite_sf_dir = HEADLINE, SF_DIR
+    sf_dir = data_dir(spark)
+    report = run_suite(spark, qs, suite_names, sf_dir, sf, metric)
     print(json.dumps(report))
     if assert_mode:
         floors_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "bench_floors.json"
-        )
-        # --sf1 --assert grades against the dedicated 10×-scale floor
-        # section (r10 verdict #9) — floors measured AT sf1, so the
-        # r9-advice objection (SF_DIR-scale floors vs 10× data) no
-        # longer applies; the per-query retry threads the sf1 suite
-        # names and synthesized dir like any other section.
-        section = (
-            "sf10" if sf10_mode
-            else "sf1" if sf1_mode
-            else "tpch" if tpch_mode
-            else None
         )
         violations = check_floors(report, floors_path, section)
         # Per-query retry: the r9 host shows NON-uniform noise spikes
@@ -540,7 +502,7 @@ def main() -> int:
             # re-measures the exact workload that violated (r9 advice)
             retry = run_suite(
                 spark, qs, [n for n in suite_names if n in retriable],
-                suite_sf_dir, report.get("sf"), "retry",
+                sf_dir, report.get("sf"), "retry",
             )
             merged = dict(report)
             merged["queries"] = dict(report["queries"])

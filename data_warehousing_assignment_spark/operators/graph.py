@@ -363,20 +363,20 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     with their in-core degrees).
     """
     cur = pin(edges.select("u", "v"))
+    before = cur.count()
     for _ in range(max_iter):
         deg = node_degrees(cur)
         keep = deg.filter(F.col("d") >= k).select("n")
-        nxt = (
+        cur = (
             cur.join(keep.withColumnRenamed("n", "u"), "u", "semi")
             .join(keep.withColumnRenamed("n", "v"), "v", "semi")
             .select("u", "v")
             .localCheckpoint(eager=True)
         )
-        before = cur.count()
-        after = nxt.count()
-        cur = nxt
+        after = cur.count()
         if after == before:
             break
+        before = after
     return node_degrees(cur).filter(F.col("d") >= k)
 
 

@@ -280,7 +280,6 @@ def build_ivf_index(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     n_iters: int = 2,
-    checkpoint_every: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (centroids(cluster, centroid), assignments(id, cluster)).
 
@@ -290,12 +289,10 @@ def build_ivf_index(
     hash aggregations per round, no RNG, no collect of the corpus (only
     the k centroids ever reach the driver's broadcast).
 
-    ``checkpoint_every=N`` truncates the centroid lineage with an eager
-    ``localCheckpoint`` every N Lloyd rounds: without it the plan doubles
-    per round (each round re-derives the previous round's centroids from
-    scratch), which is fine for the default 2 rounds but pathological for
-    long convergence runs at scale. Centroids are only n_clusters rows,
-    so the checkpoint itself is tiny."""
+    The lazy plan doubles per round (each round re-derives the previous
+    round's centroids), which suits the few rounds the registered ops
+    run; a long convergence run would ``localCheckpoint`` the k-row
+    centroids between rounds."""
     vecs = corpus.select(F.col(id_col).alias("_id"), quantize(vec_col).alias("qvec"))
 
     # orderBy+limit plans as TakeOrderedAndProject (per-partition top-k,
@@ -307,12 +304,10 @@ def build_ivf_index(
         F.col("qvec").alias("centroid"),
     )
 
-    for i in range(n_iters):
+    for _ in range(n_iters):
         centroids = lloyd_means(
             _assign(vecs, centroids), ["cluster"], "qvec", "centroid"
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
-            centroids = centroids.localCheckpoint(eager=True)
 
     # PIN the finished centroid frame (k rows — bytes, scope-owned):
     # both consumers of the index (the corpus assignment below and the

@@ -156,17 +156,15 @@ def lsh_cosine_topk(
     vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 6,
-    multi_probe: bool = True,
     probe_all: bool = False,
 ) -> DataFrame:
     """Approximate top-k: probe the query's own hyperplane bucket, plus
-    (multi_probe) every bucket at Hamming distance 1 — the standard
-    recall boost: n_planes+1 probes ≈ (n_planes+1)/2^n_planes of the
-    corpus instead of 1/2^n_planes, still never all-pairs. Bucketing is
-    one row-local pass over the corpus; the join is an equi-join on
-    bucket id, so candidate work is O(probed bucket sizes). Recall is
-    tunable via n_planes (fewer planes → bigger buckets → higher
-    recall)."""
+    every bucket at Hamming distance 1 — the standard recall boost:
+    n_planes+1 probes ≈ (n_planes+1)/2^n_planes of the corpus instead of
+    1/2^n_planes, still never all-pairs. Bucketing is one row-local pass
+    over the corpus; the join is an equi-join on bucket id, so candidate
+    work is O(probed bucket sizes). Recall is tunable via n_planes
+    (fewer planes → bigger buckets → higher recall)."""
     bucket = F.expr(hyperplane_signs(vec_col, n_planes)).alias("bucket")
     qbase = queries.select(
         F.col(id_col).alias("query_id"), quantize(vec_col).alias("qv"), bucket
@@ -177,19 +175,12 @@ def lsh_cosine_topk(
         # brute_force_cosine_topk — the exactness anchor for the bucket
         # machinery, used by op-ext-ann-lsh-fullprobe's oracle check.
         probes = F.expr(f"array({', '.join(map(str, range(1 << n_planes)))})")
-        q = qbase.select(
-            "query_id", "qv", "_nq", F.explode(probes).alias("bucket")
-        )
-    elif multi_probe:
+    else:
         probes = F.array(
             F.col("bucket"),
             *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)],
         )
-        q = qbase.select(
-            "query_id", "qv", "_nq", F.explode(probes).alias("bucket")
-        )
-    else:
-        q = qbase
+    q = qbase.select("query_id", "qv", "_nq", F.explode(probes).alias("bucket"))
     # per-row norms hoisted out of the pair join (see
     # brute_force_cosine_topk) — score expression bit-identical.
     c = scale_out(corpus).select(

@@ -1704,6 +1704,7 @@ def op_ext_fk_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
            l AS first_left, r AS first_right, cnt AS first_count
     FROM top
     """,
+    eager=True,  # the merge loop collects each round at build
 )
 def op_ext_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn the first 8 BPE merges from the documents corpus (Sennrich

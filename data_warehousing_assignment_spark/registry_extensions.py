@@ -1051,6 +1051,7 @@ def _seed16_c0(src: str) -> str:
     "op-ext-ann-ivf",
     oracle=_ivf_oracle(f"""
     {_seed16_c0('emb')}"""),
+    eager=True,  # the pinned centroids make a re-force time the probe only
 )
 def op_ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k: deterministic k-means cells (2 Lloyd rounds
@@ -1067,7 +1068,11 @@ def op_ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return iv.ivf_cosine_topk(corpus, queries, k=5, n_clusters=16, n_probe=4)
 
 
-@query("op-ext-ann-ivf-fullprobe", oracle=_ANN_ORACLE)
+@query(
+    "op-ext-ann-ivf-fullprobe",
+    oracle=_ANN_ORACLE,
+    eager=True,  # the pinned centroids make a re-force time the probe only
+)
 def op_ext_ann_ivf_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with n_probe = n_clusters: every cell probed ⇒ every
     (query, neighbor) pair scored exactly once through the index path —
@@ -1111,6 +1116,7 @@ IVF_KK_EXPR = (
                    ROW_NUMBER() OVER (ORDER BY vec_id) AS rk FROM emb)
       WHERE rk <= (SELECT k FROM kk)
     )"""),
+    eager=True,  # the pinned centroids make a re-force time the probe only
 )
 def op_ext_ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF at the COST-BALANCED cell count (r9 verdict #2): same pipeline
@@ -1269,7 +1275,11 @@ _PQ_ORACLE = f"""
     """
 
 
-@query("op-ext-ann-ivf-pq", oracle=_PQ_ORACLE)
+@query(
+    "op-ext-ann-ivf-pq",
+    oracle=_PQ_ORACLE,
+    eager=True,  # the pinned centroids make a re-force time the probe only
+)
 def op_ext_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-ADC+R approximate top-k (Jégou et al., TPAMI 2011,
     non-residual variant with re-ranking, §V): the same k-means cells
@@ -1571,6 +1581,7 @@ _WN_MINSH = 3
     WHERE levenshtein(da.text, db.text) * 10
           <= 3 * greatest(length(da.text), length(db.text))
     """.format(fps_cte=_winnow_fps_cte()),
+    eager=True,  # verify stages pin at build: postings, pair reps, DP rungs
 )
 def op_ext_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS copy detection end to end (Schleimer/Wilkerson/Aiken,
@@ -1995,6 +2006,7 @@ _EDGE_CTES = f"""{_SIG_CTE}, {_BANDS_CTE},
 @query(
     "op-ext-dedup-clusters",
     oracle=f"WITH RECURSIVE {_EDGE_CTES} SELECT doc_id, cluster_id FROM comp",
+    eager=True,  # connected components runs its driver loop at build
 )
 def op_ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER labels (dedup.near_dup_clusters): exact-dedup
@@ -2013,6 +2025,7 @@ def op_ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""WITH RECURSIVE {_EDGE_CTES}
     SELECT cluster_id, COUNT(*) AS group_size FROM comp GROUP BY cluster_id
     """,
+    eager=True,  # connected components runs its driver loop at build
 )
 def op_ext_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster rollup: one row per duplicate group, keyed by its
@@ -2044,6 +2057,7 @@ def op_ext_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
            n_tokens AS survivor_tokens
     FROM ranked WHERE rn = 1
     """,
+    eager=True,  # connected components runs its driver loop at build
 )
 def op_ext_dedup_best_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-policy survivor selection: per near-dup cluster keep the
@@ -3244,6 +3258,7 @@ def _incr_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
 @query(
     "op-ext-ann-ivf-incremental",
     oracle=_ivf_oracle(_INCR_SEED_SQL, train_src="base"),
+    eager=True,  # the pinned centroids make a re-force time the probe only
 )
 def op_ext_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k served from an INCREMENTALLY MAINTAINED index: k-means

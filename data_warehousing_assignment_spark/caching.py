@@ -95,14 +95,6 @@ def _checkpoint_rdd(df: DataFrame):
     return df._jdf.queryExecution().analyzed().rdd()
 
 
-def is_live(df: DataFrame) -> bool:
-    """Whether a checkpointed frame's blocks are still held, checked
-    without running a job: once its RDD is unpersisted, reading the frame
-    fails, as its lineage is cut."""
-    jsc = df.sparkSession.sparkContext._jsc
-    return jsc.getPersistentRDDs().containsKey(_checkpoint_rdd(df).id())
-
-
 def _release(frames: list[DataFrame], blocking: bool) -> None:
     for df in frames:
         try:

@@ -28,17 +28,28 @@ join it rides behind.
 
 The driver-side ``while`` loop is inherent to iterative graph
 algorithms (GraphX/GraphFrames do the same): each iteration is fully
-distributed; the only driver data is the 1-scalar convergence count.
-``localCheckpoint`` truncates the lineage each round so the plan does
-not grow exponentially with iterations.
+distributed; the only driver data is the 1-scalar convergence count,
+observed on the eager ``localCheckpoint`` that also truncates the
+lineage each round so the plan does not grow exponentially with
+iterations.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.caching import pin
+
+
+def _observed_checkpoint(df: DataFrame, agg_sql: str) -> tuple[DataFrame, object]:
+    """``df`` as an eager ``localCheckpoint``, and the value of the SQL
+    aggregate ``agg_sql`` over its rows. The aggregate is an
+    ``Observation`` on the checkpoint's own job, so the scalar costs no
+    job of its own; the checkpoint cuts the loop's lineage."""
+    obs = Observation()
+    df = df.observe(obs, F.expr(f"{agg_sql} AS v")).localCheckpoint(eager=True)
+    return df, obs.get["v"]
 
 
 def connected_components(
@@ -75,11 +86,9 @@ def connected_components(
     # each round's edge⋈labels join re-shuffles only the (tiny) labels
     # side — the edge list crosses the wire once per CC run, not once
     # per round.
-    fwd = edges.select(F.col(src_col).alias("_a"), F.col(dst_col).alias("_b"))
-    sym = pin(
-        fwd.union(fwd.select(F.col("_b").alias("_a"), F.col("_a").alias("_b")))
-        .repartition("_a")
-    )
+    fwd = edges.selectExpr(f"`{src_col}` AS _a", f"`{dst_col}` AS _b")
+    sym = pin(fwd.union(fwd.selectExpr("_b AS _a", "_a AS _b")).repartition("_a"))
+    edge_nodes = sym.selectExpr("_a AS _node")
 
     # Only nodes that touch an edge can ever change label — isolated
     # nodes label themselves by construction. Run the iteration over
@@ -88,13 +97,12 @@ def connected_components(
     # graph, not the corpus. (In a typical corpus most documents are
     # singletons; at 100 TB that is the difference between iterating
     # over everything and iterating over the few % that deduplicate.)
-    all_nodes = nodes.select(F.col(id_col).alias("_node"))
-    touched = all_nodes.join(
-        sym.select(F.col("_a").alias("_node")), on="_node", how="semi"
+    all_nodes = nodes.selectExpr(f"`{id_col}` AS _node")
+    labels = (
+        all_nodes.join(edge_nodes, "_node", "semi")
+        .selectExpr("_node", "_node AS component")
+        .localCheckpoint(eager=False)
     )
-    labels = touched.select(
-        "_node", F.col("_node").alias("component")
-    ).localCheckpoint(eager=False)
 
     # No seed-sum job (r15, guide §5 driver round-trips): round 1's own
     # scalar is the first probe. The seed previously let a graph already
@@ -115,20 +123,20 @@ def connected_components(
         # the union with the current labels re-aggregates per node with
         # a map-side-combinable MIN. min(own, incoming) ≡ the previous
         # least/coalesce formulation row for row.
-        incoming = sym.join(labels, sym["_a"] == labels["_node"]).select(
-            F.col("_b").alias("_node"), F.col("component")
+        incoming = sym.join(labels, F.expr("_a = _node")).selectExpr(
+            "_b AS _node", "component"
         )
         propagated = (
             labels.unionByName(incoming)
             .groupBy("_node")
-            .agg(F.min("component").alias("component"))
+            .agg(F.expr("min(component) AS component"))
         )
         if i >= 3:
             # Pointer doubling: label(v) <- label(label(v)). Every label
             # IS a node id (init + mins over node ids) and every node
             # appears in `propagated` exactly once, so the inner join is
             # total. Labels are monotonically non-increasing, hence
-            # label(label(v)) ≤ label(v) — F.least is belt-and-braces,
+            # label(label(v)) ≤ label(v) — least() is belt-and-braces,
             # not a semantic change. Engaged only from round 4: dense
             # near-dup blobs (diameter ≤ ~3) converge — including the
             # zero-change confirmation round — before it ever runs and
@@ -137,35 +145,28 @@ def connected_components(
             # hops by round r — O(log d) total rounds either way (sf1
             # probe: unconditional doubling cost +2.3 s on the
             # blob-shaped dedup graph for zero round savings).
-            parent = propagated.select(
-                F.col("_node").alias("_p"), F.col("component").alias("_pcomp")
-            )
-            updated = propagated.join(
-                parent, propagated["component"] == parent["_p"]
-            ).select(
-                "_node",
-                F.least("component", "_pcomp").alias("component"),
-            )
-        else:
-            updated = propagated
-        updated = updated.localCheckpoint(eager=False)
+            propagated = propagated.join(
+                propagated.selectExpr("_node AS _p", "component AS _pcomp"),
+                F.expr("component = _p"),
+            ).selectExpr("_node", "least(component, _pcomp) AS component")
         # Convergence probe WITHOUT a changed-flag pass (r14): labels
         # only ever decrease, so Σ component (exact decimal sum of
         # int64 ids) is strictly decreasing while anything changes and
-        # exactly equal at the fixpoint. One scalar aggregate over the
-        # just-checkpointed frame replaces the old filter+count job.
-        cur_sum = updated.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        labels = updated
+        # exactly equal at the fixpoint. The sum is observed on the
+        # round's own checkpoint job: no scalar job of its own.
+        labels, cur_sum = _observed_checkpoint(
+            propagated, "sum(CAST(component AS DECIMAL(38,0)))"
+        )
         if i > 0 and cur_sum == prev_sum:
             break
         prev_sum = cur_sum
 
-    isolated = all_nodes.join(
-        sym.select(F.col("_a").alias("_node")), on="_node", how="anti"
-    ).select("_node", F.col("_node").alias("component"))
-    return labels.unionByName(isolated).withColumnRenamed("_node", id_col)
+    isolated = all_nodes.join(edge_nodes, "_node", "anti").selectExpr(
+        "_node", "_node AS component"
+    )
+    return labels.unionByName(isolated).selectExpr(
+        f"_node AS `{id_col}`", "component"
+    )
 
 
 def pagerank_fixed_point(
@@ -354,26 +355,23 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
 
     Same driver-loop contract as :func:`connected_components`: each
     round is one distributed semi-join + one degree aggregation, the
-    only driver data is the 1-scalar convergence count, and
-    ``localCheckpoint`` truncates lineage per round. Rounds are
-    bounded by the degeneracy ordering depth — small for real graphs
-    (the sf0.1 co-purchase graph converges in ≤4).
+    only driver data is the surviving-edge count, observed on the
+    round's eager ``localCheckpoint`` that truncates its lineage.
+    Rounds are bounded by the degeneracy ordering depth — small for
+    real graphs (the sf0.1 co-purchase graph converges in ≤4).
 
     Returns the surviving (n, d) degree frame (nodes of the k-core
     with their in-core degrees).
     """
-    cur = pin(edges.select("u", "v"))
-    before = cur.count()
+    cur, before = _observed_checkpoint(edges.select("u", "v"), "count(1)")
     for _ in range(max_iter):
-        deg = node_degrees(cur)
-        keep = deg.filter(F.col("d") >= k).select("n")
-        cur = (
+        keep = node_degrees(cur).filter(f"d >= {k}").select("n")
+        cur, after = _observed_checkpoint(
             cur.join(keep.withColumnRenamed("n", "u"), "u", "semi")
             .join(keep.withColumnRenamed("n", "v"), "v", "semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+            .select("u", "v"),
+            "count(1)",
         )
-        after = cur.count()
         if after == before:
             break
         before = after

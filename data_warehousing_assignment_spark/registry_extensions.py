@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_warehousing_assignment_spark.caching import is_live
 from data_warehousing_assignment_spark.registry import dec, query, t
 from data_warehousing_assignment_spark.operators import dedup as dd
 from data_warehousing_assignment_spark.operators import similarity as sim
@@ -1926,49 +1925,6 @@ from data_warehousing_assignment_spark.operators import timeseries as tsr  # noq
 #: LSH collisions (low-Jaccard candidates) stay singletons.
 _EDGE_THRESH = 0.5
 
-#: Session-scoped memo of the (doc_id, cluster_id) frame: clusters,
-#: survivors and best-survivor all sit on the SAME near-dup clustering
-#: (same corpus, same k/bands/threshold), and the CC loop inside it is
-#: the expensive part (≈12 s at sf1) — computing it three times per
-#: session was pure waste (r7 verdict #6). Keyed by Spark app id so a
-#: fresh session never sees another session's checkpoints. The frame is
-#: eagerly localCheckpoint-ed: tiny (two ids per doc), lineage-free,
-#: and exactly what each family member would have computed itself.
-_CLUSTER_CACHE: dict[tuple, DataFrame] = {}
-
-
-def shared_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, _K, _BANDS,
-           _EDGE_THRESH)
-    df = _CLUSTER_CACHE.get(key)
-    if df is not None:
-        # A localCheckpoint lives in block-manager blocks, and anything
-        # that unpersists all RDDs (test fixtures, a memory-pressure
-        # sweep) orphans the frame — its lineage is truncated, so it
-        # cannot recompute. Rebuild unless its RDD is still persisted.
-        if is_live(df):
-            return df
-        _CLUSTER_CACHE.pop(key, None)
-    df = dd.near_dup_clusters(
-        t(spark, sf_dir, "documents"), "doc_id", "text",
-        _K, _BANDS, _EDGE_THRESH,
-    ).localCheckpoint(eager=True)
-    # Evict entries from OTHER applications on insert: keys of dead
-    # sessions can never hit again (appId is in the key) but would pin
-    # their localCheckpoint blocks forever; one live session implies at
-    # most a handful of sf_dir keys, so this bounds the memo to the
-    # current app's working set (r8 advice).
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _CLUSTER_CACHE if k[0] != app]:
-        _CLUSTER_CACHE.pop(k, None)
-    _CLUSTER_CACHE[key] = df
-    return df
-
-
-def clear_dedup_cluster_cache() -> None:
-    """Drop the memo (bench uses this so per-op timings still measure a
-    full rebuild rather than a cache hit)."""
-    _CLUSTER_CACHE.clear()
 
 # DuckDB twin of the full pair pipeline (sigs → bands → candidates →
 # Jaccard-verified edges), symmetrized for reachability. Shared by the
@@ -2017,7 +1973,8 @@ def op_ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays reachability over the RAW pair graph as a recursive CTE —
     valid because quotienting by exact-dup groups preserves components
     and the min-reachable-id fixpoint is iteration-order-independent."""
-    return shared_dedup_clusters(spark, sf_dir)
+    docs = t(spark, sf_dir, "documents")
+    return dd.near_dup_clusters(docs, "doc_id", "text", _K, _BANDS, _EDGE_THRESH)
 
 
 @query(
@@ -2032,7 +1989,8 @@ def op_ext_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving representative (= the component label = min doc_id).
     Dedup-by-cluster = keep rows where doc_id == cluster_id; this query
     surfaces the group sizes that decision is based on."""
-    comp = shared_dedup_clusters(spark, sf_dir)
+    docs = t(spark, sf_dir, "documents")
+    comp = dd.near_dup_clusters(docs, "doc_id", "text", _K, _BANDS, _EDGE_THRESH)
     return comp.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("group_size")
     )
@@ -2073,7 +2031,7 @@ def op_ext_dedup_best_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = t(spark, sf_dir, "documents")
-    comp = shared_dedup_clusters(spark, sf_dir)
+    comp = dd.near_dup_clusters(docs, "doc_id", "text", _K, _BANDS, _EDGE_THRESH)
     scored = comp.join(
         docs.select(
             "doc_id", F.size(tx.tokens("text")).cast("bigint").alias("n_tokens")
@@ -2889,7 +2847,7 @@ def op_ext_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local flags, and the only post-join shuffle carries
     |sources| × 4 counters."""
     docs = t(spark, sf_dir, "documents")
-    comp = shared_dedup_clusters(spark, sf_dir)
+    comp = dd.near_dup_clusters(docs, "doc_id", "text", _K, _BANDS, _EDGE_THRESH)
     q = F.size(tx.tokens("text")) >= 5
     samp = (tx.hash_bucket("doc_id", "cur:") % 10) < 8
     return (

@@ -18,6 +18,7 @@ line of defense rather than the only one."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from data_warehousing_assignment_spark.plans.facts import incremental_fact_insert
@@ -56,6 +57,28 @@ def _has_committed_data(spark, path: str) -> bool:
     return False
 
 
+def _start(stream: DataFrame, load_batch, checkpoint_dir: str | None) -> StreamingQuery:
+    """Run ``load_batch`` on each micro-batch of ``stream`` available
+    now, checkpointed to ``checkpoint_dir`` if given."""
+    writer = stream.writeStream.foreachBatch(load_batch)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.trigger(availableNow=True).start()
+
+
+def _latest_per_key(batch: DataFrame, key: str, *order_cols: str) -> DataFrame:
+    """The latest change per ``key`` in a micro-batch (greatest
+    ``order_cols``): at-least-once sources may redeliver a key."""
+    order = ", ".join(f"`{c}` DESC" for c in order_cols)
+    return (
+        batch.withColumn(
+            "_rn", F.expr(f"row_number() OVER (PARTITION BY `{key}` ORDER BY {order})")
+        )
+        .filter("_rn = 1")
+        .drop("_rn")
+    )
+
+
 def start_incremental_fact_sink(
     stream: DataFrame,
     fact_path: str,
@@ -84,10 +107,7 @@ def start_incremental_fact_sink(
             writer = writer.partitionBy(*partition_by)
         writer.parquet(fact_path)
 
-    writer = stream.writeStream.foreachBatch(load_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()
+    return _start(stream, load_batch, checkpoint_dir)
 
 
 def start_scd2_dim_sink(
@@ -125,9 +145,6 @@ def start_scd2_dim_sink(
     becomes MERGE INTO on a lakehouse table — same plan, transactional
     swap instead of overwrite."""
     spark = stream.sparkSession
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from data_warehousing_assignment_spark.plans.scd2 import (
         SCD2_COLS,
         merge_scd2,
@@ -136,29 +153,12 @@ def start_scd2_dim_sink(
 
     seq_path = dim_path.rstrip("/") + "_seq"
 
-    def _readable(path: str) -> bool:
-        jp = spark._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-        return bool(
-            fs.exists(jp)
-            and fs.globStatus(
-                spark._jvm.org.apache.hadoop.fs.Path(path + "/part-*")  # type: ignore[union-attr]
-            )
-        )
-
     def load_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        w = Window.partitionBy(key).orderBy(
-            F.desc(seq_col), F.desc(as_of_col)
-        )
-        latest = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        latest = _latest_per_key(batch, key, seq_col, as_of_col)
         # sequence-monotonicity guard: drop changes the dim already saw
-        if _readable(seq_path):
+        if _has_committed_data(spark, seq_path):
             seqs = spark.read.parquet(seq_path)
             latest = (
                 latest.join(seqs, on=key, how="left")
@@ -173,7 +173,7 @@ def start_scd2_dim_sink(
         if latest.isEmpty():
             return
         as_of = latest.agg(F.max(as_of_col)).first()[0]
-        if _readable(dim_path):
+        if _has_committed_data(spark, dim_path):
             current = spark.read.parquet(dim_path)
         else:
             current = (
@@ -198,10 +198,7 @@ def start_scd2_dim_sink(
         merged.write.mode("overwrite").parquet(dim_path)
         new_seqs.write.mode("overwrite").parquet(seq_path)
 
-    writer = stream.writeStream.foreachBatch(load_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()
+    return _start(stream, load_batch, checkpoint_dir)
 
 
 def start_merge_sink(
@@ -233,31 +230,13 @@ def start_merge_sink(
     table — identical join plan, transactional swap instead of
     overwrite."""
     spark = stream.sparkSession
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from data_warehousing_assignment_spark.plans.kimball import merge_into
-
-    def _readable(path: str) -> bool:
-        jp = spark._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-        return bool(
-            fs.exists(jp)
-            and fs.globStatus(
-                spark._jvm.org.apache.hadoop.fs.Path(path + "/part-*")  # type: ignore[union-attr]
-            )
-        )
 
     def load_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        w = Window.partitionBy(key).orderBy(F.desc(seq_col))
-        latest = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if _readable(target_path):
+        latest = _latest_per_key(batch, key, seq_col)
+        if _has_committed_data(spark, target_path):
             target = spark.read.parquet(target_path)
         else:
             target = latest.select(key, *attrs).limit(0)
@@ -267,10 +246,7 @@ def start_merge_sink(
         ).localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(target_path)
 
-    writer = stream.writeStream.foreachBatch(load_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()
+    return _start(stream, load_batch, checkpoint_dir)
 
 
 def start_vector_ingest_sink(
@@ -311,7 +287,4 @@ def start_vector_ingest_sink(
             assign_path
         )
 
-    writer = stream.writeStream.foreachBatch(load_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()
+    return _start(stream, load_batch, checkpoint_dir)

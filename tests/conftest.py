@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from data_warehousing_assignment_spark.session import get_spark
@@ -20,3 +22,17 @@ def spark():
 
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+
+def count_jobs(spark, run):
+    """``(run(), the number of Spark jobs run() started)``, counted
+    through a job group and statusTracker."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

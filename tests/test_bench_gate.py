@@ -169,6 +169,21 @@ def test_run_suite_rebuilds_only_eager_ops_per_timed_run():
     assert set(report["queries"]) == set(qs)
 
 
+def test_tpch_and_headline_label_the_sf_of_their_data_dir():
+    """Both suites that read ``$SPARK_GRAFT_SF_DIR`` report the sf of
+    that directory, not a fixed 0.1. A fresh interpreter imports bench
+    with the variable set: no Spark."""
+    import subprocess
+
+    code = "import bench; print(bench.MODES['--tpch'][2], bench.MODES[None][2])"
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR="/data/tpch/sf0.01")
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, env=env,
+        capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert out == ["0.01", "0.01"]
+
+
 def test_every_bench_suite_query_is_registered():
     """A renamed or deleted op must not drop silently out of a suite
     (run_suite skips names it does not find)."""

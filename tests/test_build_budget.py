@@ -7,12 +7,10 @@ one Column chain and one filtered DQ slice per cleaning rule, or to
 Column trees built one attribute at a time in the SCD2 merge, dim
 upserts, fact anti-joins and audit (thousands of JVM round trips before
 any data moves), fails here. The incremental fact load's date-window
-prune is pinned to one bounds collect, and the k-core peel to one count
-per round."""
+prune is pinned to one bounds collect, the k-core peel to the jobs of
+its round checkpoints, and connected components to < 100 calls."""
 
 from __future__ import annotations
-
-import uuid
 
 import pytest
 
@@ -115,20 +113,30 @@ def test_run_etl_builds_in_few_py4j_calls(spark):
             assert calls < BUDGET, f"run_etl {load_date}: {calls} py4j calls"
 
 
-def _build_jobs(spark, op) -> int:
-    """Spark jobs run while building ``op`` at sf0.001, counted through a
-    job group and statusTracker."""
-    from tests.conftest import SF_SMALL
+def test_connected_components_rounds_send_few_py4j_calls(spark):
+    """Each connected-components round is SQL text and reads its
+    Σcomponent from an Observation on its own checkpoint: a
+    two-component graph builds in < 100 py4j calls."""
+    from data_warehousing_assignment_spark.operators.graph import connected_components
 
-    sc = spark.sparkContext
-    group = f"build-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
+    nodes = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 99]], "id bigint")
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (10, 11)], "src bigint, dst bigint"
+    )
     try:
-        all_queries()[op](spark, SF_SMALL)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        calls = _build_calls(lambda: connected_components(nodes, edges))
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        _drop_checkpoints(spark)
+    assert calls < 100, f"connected_components: {calls} py4j calls"
+
+
+def _build_jobs(spark, op) -> int:
+    """Spark jobs run while building ``op`` at sf0.001."""
+    from tests.conftest import SF_SMALL, count_jobs
+
+    try:
+        return count_jobs(spark, lambda: all_queries()[op](spark, SF_SMALL))[1]
+    finally:
         release_unscoped()
         _drop_checkpoints(spark)
 
@@ -142,8 +150,9 @@ def test_fact_incr_prune_collects_its_bounds_once(spark):
 
 
 def test_kcore_counts_each_round_once(spark):
-    """k_core counts the surviving edges once per peel round and carries
-    the count into the next round: 13 build jobs for op-ext-kcore, where
-    counting both sides of every round took 18."""
+    """k_core reads each peel round's surviving-edge count from an
+    Observation on that round's checkpoint, and its starting count from
+    the checkpoint of the input edges: no count() job of its own, 8
+    build jobs for op-ext-kcore."""
     jobs = _build_jobs(spark, "op-ext-kcore")
-    assert jobs <= 13, f"op-ext-kcore: {jobs} build jobs"
+    assert jobs <= 8, f"op-ext-kcore: {jobs} build jobs"

@@ -10,7 +10,6 @@ from data_warehousing_assignment_spark.caching import (
     cache_scope,
     cached_rdd_count,
     checkpoint,
-    is_live,
     pin,
     release_unscoped,
 )
@@ -110,14 +109,24 @@ def test_nested_scopes_release_lifo(spark):
 def test_checkpoint_is_released_by_its_scope_not_the_unscoped_pool(spark):
     """A checkpoint made in a scope is released when the scope exits; one
     made outside any scope survives release_unscoped(), which would
-    otherwise break a frame its caller still holds."""
+    otherwise break a frame its caller still holds. Liveness is read as
+    persisted-RDD id sets, so ContextCleaner freeing an earlier test's
+    checkpoint mid-test cannot flake it."""
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
     with cache_scope():
         scoped = checkpoint(spark.range(5))
-        assert is_live(scoped) and scoped.count() == 5
-    assert not is_live(scoped)
+        scoped_ids = persisted() - before
+        assert scoped_ids and scoped.count() == 5
+    assert not scoped_ids & persisted()
+    before = persisted()
     kept = checkpoint(spark.range(7))
+    kept_ids = persisted() - before
     release_unscoped(blocking=True)
-    assert is_live(kept) and kept.count() == 7
+    assert kept_ids and kept_ids <= persisted() and kept.count() == 7
     with cache_scope() as held:
         held.append(kept)  # hand it to a scope to release it here
-    assert not is_live(kept)
+    assert not kept_ids & persisted()

@@ -359,57 +359,33 @@ def test_containment_join_random_vs_naive(spark):
         assert got == naive, f"mismatch at t={threshold}"
 
 
-def test_cluster_family_shares_one_cached_frame(spark):
-    """clusters / survivors / best-survivor / curation-funnel all sit on
-    one session-memoized cluster frame (r8): the memo returns the SAME
-    checkpointed object, and its content equals a fresh uncached
-    near_dup_clusters run (hashes unchanged by the reuse)."""
-    from data_warehousing_assignment_spark import registry_extensions as rx
-    from data_warehousing_assignment_spark.registry import t as _t
+def test_cluster_op_clusters_under_each_shuffle_width(spark, monkeypatch):
+    """Two builds of op-ext-dedup-clusters in one session, at shuffle
+    width 32 and then 7, each run the near-dup clustering under their own
+    width (no build hands a later one its clusters, so the determinism
+    gate compares two real runs) and label every doc the same."""
+    from data_warehousing_assignment_spark.registry import all_queries
     from tests.conftest import SF_SMALL
 
-    rx.clear_dedup_cluster_cache()
-    a = rx.shared_dedup_clusters(spark, SF_SMALL)
-    b = rx.shared_dedup_clusters(spark, SF_SMALL)
-    assert a is b
-    fresh = dd.near_dup_clusters(
-        _t(spark, SF_SMALL, "documents"), "doc_id", "text",
-        rx._K, rx._BANDS, rx._EDGE_THRESH,
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(
-        map(tuple, fresh.collect())
-    )
+    widths = []
+    real = dd.near_dup_clusters
 
+    def spy(*args, **kwargs):
+        widths.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return real(*args, **kwargs)
 
-def test_cluster_cache_rebuilds_after_unpersist_sweep(spark):
-    """An unpersist-all sweep (fixtures, memory pressure) orphans the
-    memoized checkpoint — the memo must detect the dead blocks and
-    rebuild instead of failing downstream queries (r8 guard), and detect
-    them without running a job that fails on the missing blocks."""
-    import uuid
-
-    from data_warehousing_assignment_spark import registry_extensions as rx
-    from tests.conftest import SF_SMALL
-
-    rx.clear_dedup_cluster_cache()
-    a = rx.shared_dedup_clusters(spark, SF_SMALL)
-    n = a.count()
-    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        jrdd.unpersist(True)
-    sc = spark.sparkContext
-    group = f"cluster-rebuild-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
+    monkeypatch.setattr(dd, "near_dup_clusters", spy)
+    build = all_queries()["op-ext-dedup-clusters"]
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    labels = []
     try:
-        b = rx.shared_dedup_clusters(spark, SF_SMALL)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        tracker = sc.statusTracker()
-        statuses = [tracker.getJobInfo(j).status for j in tracker.getJobIdsForGroup(group)]
+        for width in ("32", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+            labels.append(sorted(map(tuple, build(spark, SF_SMALL).collect())))
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert b is not a  # rebuilt, not the orphaned frame
-    assert statuses and "FAILED" not in statuses, statuses
-    assert b.count() == n
-    assert rx.shared_dedup_clusters(spark, SF_SMALL) is b  # live: memo hit
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    assert widths == ["32", "7"]
+    assert labels[0] == labels[1]
 
 
 def test_simhash128_wide_pairs_match_bruteforce(spark):

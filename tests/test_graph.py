@@ -4,29 +4,19 @@ cluster-summary rollup."""
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.operators import graph as gr
+from tests.conftest import count_jobs
 
 
 def _cc_jobs(spark, node_ids, edge_pairs):
-    """(labels, Spark jobs connected_components ran while building) —
-    counted through a job group and statusTracker."""
-    sc = spark.sparkContext
-    group = f"cc-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        nodes = spark.createDataFrame([(i,) for i in node_ids], "id bigint")
-        edges = spark.createDataFrame(
-            edge_pairs or [(None, None)], "src bigint, dst bigint"
-        ).filter(F.col("src").isNotNull())
-        out = gr.connected_components(nodes, edges)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    """(labels, Spark jobs connected_components ran while building)."""
+    nodes = spark.createDataFrame([(i,) for i in node_ids], "id bigint")
+    edges = spark.createDataFrame(
+        edge_pairs or [(None, None)], "src bigint, dst bigint"
+    ).filter(F.col("src").isNotNull())
+    out, jobs = count_jobs(spark, lambda: gr.connected_components(nodes, edges))
     return {r.id: r.component for r in out.collect()}, jobs
 
 

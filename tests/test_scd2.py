@@ -6,7 +6,6 @@ changed rows expire-then-insert."""
 from __future__ import annotations
 
 import datetime as dt
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -15,6 +14,7 @@ from data_warehousing_assignment_spark.plans.scd2 import (
     merge_scd2,
     scd2_row_hash,
 )
+from tests.conftest import count_jobs
 
 KEY, ATTRS = "emp_id", ["name", "dept"]
 
@@ -62,15 +62,7 @@ def test_invariants_count_each_violation(spark):
         ("C", "c", "y", "h", d(2024, 2, 1), None, True),
         ("D", "d", "x", "h", d(2024, 1, 1), None, True),
     ])
-    sc = spark.sparkContext
-    group = f"scd2-invariants-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        inv = assert_scd2_invariants(dim, KEY)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    inv, jobs = count_jobs(spark, lambda: assert_scd2_invariants(dim, KEY))
     assert inv == {"multi_current_keys": 1, "bad_valid_ranges": 1, "broken_chains": 1}
     # one action: the window's and the aggregate's shuffle stages and the
     # result, where three count() actions ran 8 jobs

@@ -3,11 +3,12 @@
 The r10 verdict asked that EVERY registered op be either sf10
 value-exact or pinned to a NAMED exclusion class — no silent gaps at
 100×. BASELINE.md records the sweep narratively per batch; this tool
-makes it mechanical: it knows which ops each prior-round batch covered
-(family-level claims transcribed from BASELINE.md), which ops are
-excluded and WHY, and computes the complement. ``--write`` emits
-SF10_SWEEP.json at the repo root; ``--mark <round> <batch> op...``
-records a fresh green check_local run.
+makes it mechanical: SF10_SWEEP.json is the record of every op found
+exact (with the round and batch of its green run), this file names
+which ops are excluded and WHY, and every other registered op is
+pending. ``--write`` regenerates SF10_SWEEP.json at the repo root;
+``--mark <round> <batch> op...`` records a fresh green check_local
+run.
 
 Exclusion classes (all ORACLE-cost — the engine side of each has its
 own sf1/sf10 probe; documented in BASELINE.md rounds 10-11):
@@ -53,98 +54,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 LEDGER = os.path.join(ROOT, "SF10_SWEEP.json")
-
-#: Prior-round batches, transcribed from BASELINE.md. Family-level
-#: claims ("all 22 TPC-H queries", "all 8 KPI views", "the row-local
-#: fn/pred core 34/34") expand to whole registry modules where the
-#: prose is collective; op-level lists are verbatim.
-_MODULE_BATCHES = {
-    # r10 batch A: "76/76 — all 22 TPC-H + 3 bucketed twins, the full
-    # Kimball/warehouse wave, all 8 KPI views, the §2 join/agg/window/
-    # set core"; batch E: "row-local fn/pred/filter/project core 34/34"
-    # (op-derive via compare_huge). Together: tpch, warehouse,
-    # pipelines, core modules in full.
-    "registry_tpch.py": (10, "A"),
-    "registry_warehouse.py": (10, "A"),
-    "registry_pipelines.py": (10, "A"),
-    "registry_core.py": (10, "A/E"),
-}
-
-#: Op-level transcriptions (verbatim lists in BASELINE.md).
-_OP_BATCHES: dict[str, tuple[int, str]] = {}
-for _r, _b, _ops in [
-    (9, "stats", [
-        "op-ext-mannwhitney", "op-ext-kruskal-wallis",
-        "op-ext-wilcoxon-signed-rank", "op-ext-jonckheere",
-        "op-ext-friedman", "op-ext-page-trend", "op-ext-mcnemar",
-        "op-ext-cochran-q", "op-ext-auc", "op-ext-ks-test",
-        "op-ext-welch-ttest", "op-ext-gini", "op-ext-percentile-cont",
-        "op-ext-histogram-equidepth", "op-ext-ntile",
-    ]),
-    (10, "B-analytics", [
-        "op-ext-sessionize", "op-ext-funnel", "op-ext-funnel-windowed",
-        "op-ext-rolling-dau", "op-ext-event-gaps", "op-ext-streaks",
-        "op-ext-transitions", "op-ext-markov", "op-ext-cohort-retention",
-        "op-ext-rfm", "op-ext-percent-rank", "op-ext-moving-avg",
-        "op-ext-cumsum", "op-ext-lead-lag", "op-ext-first-last",
-        "op-ext-minmax-by", "op-ext-weighted-avg",
-        "op-ext-time-weighted-avg", "op-ext-gapfill", "op-ext-median",
-        "op-ext-mode", "op-ext-moments", "op-ext-corr",
-        "op-ext-histogram", "op-ext-share-of-total",
-        "op-ext-topk-per-group", "op-ext-argmax", "op-ext-string-agg",
-        "op-ext-mad-outliers", "op-ext-zscore-outliers",
-        "op-ext-winsorize", "op-ext-gini-impurity",
-    ]),
-    (10, "C-text", [
-        "op-ext-lang-id", "op-ext-quality", "op-ext-text-stats",
-        "op-ext-gopher-rules", "op-ext-lm-score",
-        "op-ext-importance-score", "op-ext-token-bpe",
-        "op-ext-regex-extract-all", "op-ext-repetition",
-        "op-ext-length-quantiles", "op-ext-vocab-topk",
-        "op-ext-hash-split", "op-ext-sample-stratified",
-        "op-ext-paragraph-dedup", "op-ext-pii-redact",
-        "op-ext-chunk-digest", "op-ext-chunk-overlap",
-        "op-ext-decontaminate",
-    ]),
-    (10, "B-relational", [
-        "op-ext-except", "op-ext-intersect", "op-ext-except-all",
-        "op-ext-intersect-all", "op-ext-grouping-sets", "op-ext-cube",
-        "op-ext-rollup", "op-ext-pivot", "op-ext-unpivot",
-        "op-ext-offset-page", "op-ext-range-frame", "op-ext-salted-join",
-        "op-ext-asof-join", "op-ext-asof-tolerance", "op-ext-range-join",
-        "op-ext-interval-overlap", "op-ext-bloom-semi",
-        "op-ext-bucket-join", "op-ext-zonemap", "op-ext-zonemap-prune",
-        "op-ext-json-extract", "op-ext-variant-json", "op-ext-try-arith",
-        "op-ext-recursive-spine", "op-ext-table-digest", "op-ext-profile",
-    ]),
-    (10, "D", [
-        "op-ext-dedup-exact", "op-ext-dedup-dupcapture",
-        "op-ext-dedup-incremental", "op-ext-cms", "op-ext-cms-join-size",
-        "op-ext-hll-merge", "op-ext-kmv-sketch", "op-ext-kmv-intersect",
-        "op-ext-bitmap-distinct", "op-ext-approx-count-distinct",
-        "op-ext-approx-quantile", "op-ext-benford", "op-ext-ivm",
-        "op-ext-ivm-join", "op-ext-wap", "op-ext-time-travel",
-        "op-ext-merge-txlog", "op-ext-txlog-skip",
-        "op-ext-compaction-plan", "op-ext-orphan-check",
-        "op-ext-crypto-shred", "op-ext-rls", "op-ext-kanonymity",
-        "op-ext-attribution", "op-ext-multitouch", "op-ext-lifetable",
-        "op-ext-decile-lift", "op-ext-confusion",
-        "op-ext-mixture-schedule", "op-ext-curriculum-pack",
-        "op-ext-seq-pack", "op-ext-seq-match", "op-ext-shard-assign",
-        "op-ext-priority-sample", "op-ext-stream-tumbling",
-        "op-ext-stream-sliding", "op-ext-stream-session",
-        "op-ext-stream-dedup", "op-ext-stream-enrich",
-        "op-ext-stream-join", "op-ext-stream-join-outer",
-        "op-ext-paired-ttest",
-    ]),
-    (10, "new-ops", [
-        "op-ext-anova", "op-ext-cramers-v", "op-ext-feature-hash",
-        "op-ext-late-arrivals", "op-ext-snapshot-diff",
-        "op-ext-ann-ivf-scaled",
-    ]),
-]:
-    for _o in _ops:
-        _OP_BATCHES[_o] = (_r, _b)
 
 #: Named exclusions with classes (BASELINE.md round 10 + this round).
 EXCLUSIONS = {
@@ -211,34 +120,28 @@ EXCLUSIONS = {
 }
 
 
-def all_ops() -> dict[str, str]:
+def all_ops() -> set[str]:
     d = os.path.join(ROOT, "data_warehousing_assignment_spark")
-    out = {}
-    for f in sorted(os.listdir(d)):
+    out = set()
+    for f in os.listdir(d):
         if f.startswith("registry") and f.endswith(".py"):
             src = open(os.path.join(d, f)).read()
-            for n in re.findall(r'@query\(\s*\n?\s*"(op-[^"]+)"', src):
-                out[n] = f
+            out.update(re.findall(r'@query\(\s*\n?\s*"(op-[^"]+)"', src))
     return out
 
 
 def build() -> dict:
-    ops = all_ops()
     prev = {}
     if os.path.exists(LEDGER):
         prev = json.load(open(LEDGER))
+    ops = all_ops()
     ledger = {}
-    for name, mod in sorted(ops.items()):
+    # the recorded order first (--mark appends), then new ops sorted
+    for name in [n for n in prev if n in ops] + sorted(ops - prev.keys()):
         if name in EXCLUSIONS:
             ledger[name] = {"status": "excluded", "class": EXCLUSIONS[name]}
         elif name in prev and prev[name].get("status") == "exact":
             ledger[name] = prev[name]  # keep recorded green runs
-        elif name in _OP_BATCHES:
-            r, b = _OP_BATCHES[name]
-            ledger[name] = {"status": "exact", "round": r, "batch": b}
-        elif mod in _MODULE_BATCHES:
-            r, b = _MODULE_BATCHES[mod]
-            ledger[name] = {"status": "exact", "round": r, "batch": b}
         else:
             ledger[name] = {"status": "pending"}
     return ledger

@@ -27,7 +27,7 @@ from data_warehousing_assignment_spark.caching import pin
 from data_warehousing_assignment_spark.operators.text import tokens, word_shingles
 
 
-def scale_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def scale_out(df: DataFrame) -> DataFrame:
     """Repartition up when the scan produced fewer partitions than cores.
 
     Hash/HOF-heavy row-local stages (minhash, simhash, hyperplane
@@ -45,7 +45,7 @@ def scale_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     genuinely CPU-bound stages — a shuffle-bound op like
     :func:`exact_dedup` loses more to the extra body shuffle than the
     map parallelism returns (benchmarked 0.83 s vs 0.18 s at sf0.1)."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         width = df.rdd.getNumPartitions()
     except Exception:  # unplannable source — widen defensively

@@ -23,11 +23,13 @@ from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.caching import pin
 from data_warehousing_assignment_spark.operators.similarity import (
+    cosine_sql,
     dot_sql,
     int_dot,
+    nearest_k,
     norm,
-    quantize,
     quantize_sql,
+    quantized_rows,
 )
 
 
@@ -149,24 +151,6 @@ def _assign(corpus: DataFrame, centroids: DataFrame, n_probe: int = 1) -> DataFr
     )
 
 
-#: exact int64 dot of a probe row's ``qvec`` with a cell row's ``cv``
-_PAIR_DOT_SQL = dot_sql("qvec", "cv")
-#: cosine over the per-row norms ``_nq``/``_nc`` hoisted out of the pair
-#: join (computed once per row, not per pair): one IEEE divide
-_PAIR_COS_SQL = f"CAST({_PAIR_DOT_SQL} AS DOUBLE) / (_nq * _nc)"
-
-
-def quantized_rows(
-    frame: DataFrame, id_as: str, vec_as: str, norm_as: str, keys=()
-) -> DataFrame:
-    """``(id_as, vec_as, *keys, norm_as)`` of an embeddings frame: the
-    quantized vector and, in a second projection (so the quantize HOF
-    runs once per row), its norm."""
-    return frame.selectExpr(
-        f"vec_id AS {id_as}", f"{quantize_sql('embedding')} AS {vec_as}", *keys
-    ).withColumn(norm_as, norm(vec_as))
-
-
 def cosine_pairs(cells: DataFrame, probes: DataFrame, keys: list[str]) -> DataFrame:
     """``(query_id, neighbor_id, dot, cos)`` of every pair of a cell row
     ``(neighbor_id, cv, _nc)`` and a broadcast probe row
@@ -179,10 +163,34 @@ def cosine_pairs(cells: DataFrame, probes: DataFrame, keys: list[str]) -> DataFr
         .selectExpr(
             "query_id",
             "neighbor_id",
-            f"{_PAIR_DOT_SQL} AS dot",
-            f"{_PAIR_COS_SQL} AS cos",
+            f"{dot_sql('qvec', 'cv')} AS dot",
+            f"{cosine_sql('qvec', 'cv', '_nq', '_nc')} AS cos",
         )
     )
+
+
+def _cell_sides(
+    corpus: DataFrame,
+    queries: DataFrame,
+    index: tuple[DataFrame, DataFrame],
+    n_probe: int,
+    keys: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """``(cells, probes)`` of an IVF search: every corpus row with its
+    cell, ``(neighbor_id, cv, *keys, _nc, cluster)``, and each query once
+    per probed cell of ``index = (centroids, assignments)``,
+    ``(query_id, qvec, cluster, *keys, _nq)``."""
+    centroids, assignments = index
+    q = queries.selectExpr(
+        "vec_id AS query_id", f"{quantize_sql('embedding')} AS qvec", *keys
+    )
+    probes = _assign(q, centroids, n_probe=n_probe).select(
+        "query_id", "qvec", "cluster", *keys
+    ).withColumn("_nq", norm("qvec"))
+    cells = quantized_rows(corpus, "neighbor_id", "cv", "_nc", keys).join(
+        assignments.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
+    )
+    return cells, probes
 
 
 def probed_cell_scan(
@@ -199,16 +207,7 @@ def probed_cell_scan(
     plus exact scoring. ``keys`` are extra columns of both frames that
     must also be equal (an equi-key of the cell join, so a metadata
     predicate cuts candidates before any scoring)."""
-    centroids, assignments = index
-    q = queries.selectExpr(
-        "vec_id AS query_id", f"{quantize_sql('embedding')} AS qvec", *keys
-    )
-    probes = _assign(q, centroids, n_probe=n_probe).select(
-        "query_id", "qvec", "cluster", *keys
-    ).withColumn("_nq", norm("qvec"))
-    cells = quantized_rows(corpus, "neighbor_id", "cv", "_nc", keys).join(
-        assignments.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
-    )
+    cells, probes = _cell_sides(corpus, queries, index, n_probe, keys)
     return cosine_pairs(cells, probes, ["cluster", *keys])
 
 
@@ -254,34 +253,21 @@ def auto_n_clusters(
     return max(floor, min(k, max(floor, n_corpus // 8)))
 
 
-def assign_to_index(
-    frame: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cluster) for every row of ``frame`` by argmin against the
+def assign_to_index(frame: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, cluster) for every row of ``frame`` by argmin against the
     given centroids — THE assignment step, one definition shared by
     :func:`build_ivf_index`'s final pass and
     :func:`extend_ivf_index`'s delta pass so the two can never diverge
     in quantization or tie-break (the incremental index's
     oracle-equivalence rests on exactly that identity)."""
-    vecs = frame.select(
-        F.col(id_col).alias("_id"), quantize(vec_col).alias("qvec")
-    )
-    return _assign(vecs, centroids).select(
-        F.col("_id").alias(id_col), "cluster"
-    )
+    vecs = frame.selectExpr("vec_id", f"{quantize_sql('embedding')} AS qvec")
+    return _assign(vecs, centroids).select("vec_id", "cluster")
 
 
 def build_ivf_index(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    n_iters: int = 2,
+    corpus: DataFrame, n_clusters: int = 16, n_iters: int = 2
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (centroids(cluster, centroid), assignments(id, cluster)).
+    """Returns (centroids(cluster, centroid), assignments(vec_id, cluster)).
 
     Init: the n_clusters lowest-id vectors (deterministic). Each Lloyd
     round: row-local argmin against the broadcast centroids
@@ -293,14 +279,14 @@ def build_ivf_index(
     round's centroids), which suits the few rounds the registered ops
     run; a long convergence run would ``localCheckpoint`` the k-row
     centroids between rounds."""
-    vecs = corpus.select(F.col(id_col).alias("_id"), quantize(vec_col).alias("qvec"))
+    vecs = corpus.selectExpr("vec_id", f"{quantize_sql('embedding')} AS qvec")
 
     # orderBy+limit plans as TakeOrderedAndProject (per-partition top-k,
     # no full-corpus single-partition exchange); the row_number window
     # then runs over just n_clusters rows.
-    seeds = vecs.orderBy("_id").limit(n_clusters)
+    seeds = vecs.orderBy("vec_id").limit(n_clusters)
     centroids = seeds.select(
-        (F.row_number().over(Window.orderBy("_id")) - 1).alias("cluster"),
+        (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cluster"),
         F.col("qvec").alias("centroid"),
     )
 
@@ -316,7 +302,7 @@ def build_ivf_index(
     # corpus per downstream force (r14; the sf10 bench re-forced the
     # chain once per probe-side evaluation, ~15 s/force at 200k rows).
     centroids = pin(centroids)
-    assignments = assign_to_index(corpus, centroids, id_col, vec_col)
+    assignments = assign_to_index(corpus, centroids)
     return centroids, assignments
 
 
@@ -324,8 +310,6 @@ def extend_ivf_index(
     centroids: DataFrame,
     assignments: DataFrame,
     delta: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """O(Δ·k) incremental index maintenance: assign ONLY the new
     ``delta`` vectors against the FROZEN centroids and append them to
@@ -340,7 +324,7 @@ def extend_ivf_index(
     pinned in tests/test_ivf.py. Recall drifts as the un-reclustered
     corpus grows; op-ext-ann-incr-recall is the monitor for exactly
     that (measured numbers in BASELINE.md r14)."""
-    extra = assign_to_index(delta, centroids, id_col, vec_col)
+    extra = assign_to_index(delta, centroids)
     return centroids, assignments.unionByName(extra)
 
 
@@ -427,7 +411,7 @@ def _probe_cell_topk_np(cells: DataFrame, probes: DataFrame, k: int) -> DataFram
         for lo in range(0, len(probe_pdf), 512):
             chunk = probe_pdf.iloc[lo : lo + 512]
             qid = chunk["query_id"].to_numpy()
-            qm = np.vstack(chunk["qv"].to_numpy()).astype(np.float64)
+            qm = np.vstack(chunk["qvec"].to_numpy()).astype(np.float64)
             nqn = chunk["_nq"].to_numpy(dtype=np.float64)
             dots = cm @ qm.T  # exact: every partial sum < 2^53
             scores = dots / (ncn[:, None] * nqn[None, :])
@@ -474,8 +458,6 @@ def _probe_cell_topk_np(cells: DataFrame, probes: DataFrame, k: int) -> DataFram
 def ivf_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_clusters: int | str = 16,
     n_probe: int = 4,
@@ -493,44 +475,19 @@ def ivf_cosine_topk(
     Pass ``index=(centroids, assignments)`` (from :func:`build_ivf_index`
     or :func:`load_ivf_index`) to reuse a prebuilt index — repeated query
     batches then trigger no k-means stages at all."""
-    if index is not None:
-        # prebuilt index fixes the cell count — resolving "auto" here
-        # would burn two count() jobs for a value that's never used
-        centroids, assignments = index
-    else:
+    if index is None:
+        # a prebuilt index fixes the cell count — "auto" is resolved only
+        # here, so it never burns two count() jobs for an unused value
         if n_clusters == "auto":
             n_clusters = auto_n_clusters(
                 corpus.count(), queries.count(), n_probe=n_probe
             )
-        centroids, assignments = build_ivf_index(
-            corpus, id_col, vec_col, n_clusters
-        )
-    # persist (scope-owned): the cell lists feed the probe join; run under
+        index = build_ivf_index(corpus, n_clusters)
+    cells, probes = _cell_sides(corpus, queries, index, n_probe)
+    # persist (scope-owned): the cell lists feed the probe scan; run under
     # cache_scope() — or save_ivf_index for cross-job reuse — to release.
-    # Per-row norms are computed BEFORE the probe join (once per corpus
-    # row / once per probe row) instead of per candidate pair — the
-    # score expression is unchanged, so scores stay bit-identical; the
-    # corpus-side norm rides the pinned cell frame.
-    cells = pin(
-        corpus.select(F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv"))
-        .withColumn("_nc", norm("cv"))
-        .join(
-            assignments.withColumnRenamed(id_col, "neighbor_id"), on="neighbor_id"
-        )
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), quantize(vec_col).alias("qvec"))
-    probes = _assign(q, centroids, n_probe=n_probe).select(
-        F.col("query_id"), F.col("qvec").alias("qv"), "cluster"
-    ).withColumn("_nq", norm("qv"))
-
     # Probe scan: per-(cell, query) top-k via the cogrouped numpy GEMM
     # stage (bit-identical scores and order — see _probe_cell_topk_np);
-    # the global window below then ranks ≤ k·n_probe rows per query
-    # instead of every candidate pair.
-    scored = _probe_cell_topk_np(cells, probes, k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    # the global cut then ranks ≤ k·n_probe rows per query instead of
+    # every candidate pair.
+    return nearest_k(_probe_cell_topk_np(pin(cells), probes, k), k)

@@ -41,17 +41,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: Typed metadata carried alongside every payload column.
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-    ]
-)
-
 _MAGIC = b"FAKE1"
 
 

@@ -8,6 +8,12 @@ engine; only the final ``dot/(√na·√nb)`` runs in IEEE doubles (identical
 operand order → identical bits). Quantization error ~1e-6 per component
 is far below any meaningful similarity threshold.
 
+Every vector operator (here, in ivf.py and pq.py) shares three steps:
+:func:`quantized_rows` builds a side ``(id, vector, norm)`` of an
+``embeddings(vec_id, embedding)`` frame, :func:`cosine_sql` is the one
+score text over those hoisted norms, and :func:`top_per_query` is the
+one per-query top-k cut. Each operator keeps only its own join.
+
 Scale design: brute-force top-k broadcasts the (small) query set and
 streams the corpus — one pass, no corpus shuffle except the final
 per-query top-k (shuffle keyed by query id, k rows each). The LSH path
@@ -19,7 +25,7 @@ query, and never O(n²) overall.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.operators.dedup import scale_out
@@ -50,30 +56,74 @@ def int_dot(a: str, b: str) -> Column:
     return F.expr(dot_sql(a, b))
 
 
+def norm_sql(vec: str) -> str:
+    """SQL for ‖v‖ of a quantized vector as a double: sqrt of the exact
+    int64 ‖v‖² — the per-row factor of every cosine denominator."""
+    return f"sqrt(CAST({dot_sql(vec, vec)} AS DOUBLE))"
+
+
 def norm(vec: str) -> Column:
-    """‖v‖ of a quantized vector as a double: sqrt of the exact int64
-    ‖v‖² — the per-row factor of every cosine denominator."""
-    return F.expr(f"sqrt(CAST({dot_sql(vec, vec)} AS DOUBLE))")
+    return F.expr(norm_sql(vec))
 
 
-def cosine_similarity_col(a: str, b: str) -> Column:
-    """Deterministic cosine of two array<float> columns (names or SQL
-    expressions) via quantized integer dot/norms; the single double
-    expression at the end is bit-identical across engines."""
-    qa, qb = quantize_sql(a), quantize_sql(b)
-    return F.expr(
-        f"CAST({dot_sql(qa, qb)} AS DOUBLE)"
-        f" / (sqrt(CAST({dot_sql(qa, qa)} AS DOUBLE))"
-        f" * sqrt(CAST({dot_sql(qb, qb)} AS DOUBLE)))"
+def quantized_rows(
+    frame: DataFrame, id_as: str, vec_as: str, norm_as: str, keys=()
+) -> DataFrame:
+    """``(id_as, vec_as, *keys, norm_as)`` of an embeddings frame: the
+    quantized vector and, in a second projection (so the quantize HOF
+    runs once per row), its norm. ``keys`` are extra columns or SQL
+    expressions of the frame carried alongside (join keys)."""
+    return frame.selectExpr(
+        f"vec_id AS {id_as}", f"{quantize_sql('embedding')} AS {vec_as}", *keys
+    ).withColumn(norm_as, norm(vec_as))
+
+
+def cosine_sql(a: str, b: str, na: str, nb: str) -> str:
+    """SQL for the exact cosine of quantized vectors ``a`` and ``b`` with
+    norms ``na`` and ``nb``: the int64 dot over the norms' product, one
+    IEEE divide with the same operands in the same order in every engine.
+    The norms are per-ROW quantities (:func:`quantized_rows` computes
+    each once before a pair join), never re-run per pair."""
+    return f"CAST({dot_sql(a, b)} AS DOUBLE) / ({na} * {nb})"
+
+
+def top_per_query(
+    frame: DataFrame, order: str, k: int, rank_as: str = "rank"
+) -> DataFrame:
+    """``frame`` plus ``rank_as``, cut to each query's first ``k`` rows by
+    the SQL ``order`` (which ends in a unique tie-break) — the ranking
+    every retrieval op shares with its oracle. The filter sits right on
+    the window, so Spark plans it as a per-partition group limit."""
+    return frame.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY query_id ORDER BY {order}) AS {rank_as}",
+    ).filter(f"{rank_as} <= {k}")
+
+
+def nearest_k(scored: DataFrame, k: int) -> DataFrame:
+    """``(query_id, neighbor_id, rank, score)``: each query's ``k`` best
+    ``score``s, ties to the lower neighbor id — the output of every
+    top-k search (fully deterministic)."""
+    return top_per_query(scored, "score DESC, neighbor_id", k).select(
+        "query_id", "neighbor_id", "rank", "score"
+    )
+
+
+def _scored_nearest(pairs: DataFrame, k: int) -> DataFrame:
+    """:func:`nearest_k` over joined query rows ``(query_id, qvec, _nq)``
+    and corpus rows ``(neighbor_id, cv, _nc)``, self-pairs excluded."""
+    return nearest_k(
+        pairs.filter("neighbor_id <> query_id").selectExpr(
+            "query_id",
+            "neighbor_id",
+            f"{cosine_sql('qvec', 'cv', '_nq', '_nc')} AS score",
+        ),
+        k,
     )
 
 
 def brute_force_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
+    corpus: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
     """Baseline exact ANN: broadcast the query set against the corpus,
     score row-locally, keep top-k per query (rank ties broken by
@@ -83,35 +133,9 @@ def brute_force_cosine_topk(
     and a k-row-per-query shuffle — the correct baseline shape. The IVF/
     LSH variant (lsh_cosine_topk) is the scale path when |queries| grows.
     """
-    # Norms are per-ROW quantities: compute each side's ‖v‖ once before
-    # the pair join instead of re-running the 64-element aggregate per
-    # PAIR (guide §1.2 "per-task work": 3 HOF aggregates/pair → 1). The
-    # score expression is unchanged — sqrt of the same int64-as-double,
-    # multiplied in the same order — so scores stay bit-identical.
-    q = queries.select(
-        F.col(id_col).alias("query_id"), quantize(vec_col).alias("qv")
-    ).withColumn("_nq", norm("qv"))
-    c = scale_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv")
-    ).withColumn("_nc", norm("cv"))
-    dot = int_dot("qv", "cv").cast("double")
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("_nq") * F.col("_nc"))).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    q = quantized_rows(queries, "query_id", "qvec", "_nq")
+    c = quantized_rows(scale_out(corpus), "neighbor_id", "cv", "_nc")
+    return _scored_nearest(c.crossJoin(F.broadcast(q)), k)
 
 
 def _plane_coeffs(plane: int, dim: int) -> list[int]:
@@ -128,22 +152,22 @@ def _plane_coeffs(plane: int, dim: int) -> list[int]:
     ]
 
 
-def hyperplane_signs(vec_col: str, n_planes: int = 8, dim: int = 64) -> str:
-    """SQL for the random-hyperplane LSH bucket id: sign pattern of
-    <v, h_p> over the quantized vector for n_planes fixed pseudo-random
-    hyperplanes (see _plane_coeffs), an int in [0, 2^n_planes).
+def hyperplane_signs(n_planes: int) -> str:
+    """SQL for the random-hyperplane LSH bucket id of an embeddings row:
+    sign pattern of <v, h_p> over the quantized vector for n_planes
+    fixed pseudo-random 64-dim hyperplanes (see _plane_coeffs), an int
+    in [0, 2^n_planes).
 
     Row-local; per row the cost is n_planes exact int64 dot products
     against literal coefficient arrays (zero hashing at execution time).
-    One SQL string — each builder parses it once with ``F.expr`` and
-    uses the Column on both join sides, instead of rebuilding n_planes ×
-    dim literal Columns per side."""
-    v = quantize_sql(f"`{vec_col}`")
+    One SQL string — each builder parses it once per join side, instead
+    of rebuilding n_planes × dim literal Columns per side."""
+    v = quantize_sql("embedding")
     # transform-with-index (not zip_with: it null-pads the shorter
-    # side) — iterates the vector's own length; requires dim ≥ len(v)
+    # side) — iterates the vector's own length; requires 64 ≥ len(v)
     return " + ".join(
         f"CASE WHEN aggregate(transform({v}, (x, i) -> x * element_at(array("
-        f"{', '.join(f'{c}L' for c in _plane_coeffs(p, dim))}), i + 1)),"
+        f"{', '.join(f'{c}L' for c in _plane_coeffs(p, 64))}), i + 1)),"
         f" 0L, (acc, x) -> acc + x) > 0 THEN 1 ELSE 0 END * {1 << p}"
         for p in range(n_planes)
     )
@@ -152,8 +176,6 @@ def hyperplane_signs(vec_col: str, n_planes: int = 8, dim: int = 64) -> str:
 def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 6,
     probe_all: bool = False,
@@ -165,51 +187,34 @@ def lsh_cosine_topk(
     over the corpus; the join is an equi-join on bucket id, so candidate
     work is O(probed bucket sizes). Recall is tunable via n_planes
     (fewer planes → bigger buckets → higher recall)."""
-    bucket = F.expr(hyperplane_signs(vec_col, n_planes)).alias("bucket")
-    qbase = queries.select(
-        F.col(id_col).alias("query_id"), quantize(vec_col).alias("qv"), bucket
-    ).withColumn("_nq", norm("qv"))
+    bucket = [f"{hyperplane_signs(n_planes)} AS bucket"]
     if probe_all:
         # every bucket probed ⇒ every corpus row scored exactly once
         # (each row lives in exactly one sign bucket) ⇒ provably equal to
         # brute_force_cosine_topk — the exactness anchor for the bucket
         # machinery, used by op-ext-ann-lsh-fullprobe's oracle check.
-        probes = F.expr(f"array({', '.join(map(str, range(1 << n_planes)))})")
+        probes = range(1 << n_planes)
     else:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)],
-        )
-    q = qbase.select("query_id", "qv", "_nq", F.explode(probes).alias("bucket"))
-    # per-row norms hoisted out of the pair join (see
-    # brute_force_cosine_topk) — score expression bit-identical.
-    c = scale_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("cv"), bucket
-    ).withColumn("_nc", norm("cv"))
-    dot = int_dot("qv", "cv").cast("double")
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("_nq") * F.col("_nc"))).alias("score"),
-        )
+        probes = ["bucket", *(f"bucket ^ {1 << p}" for p in range(n_planes))]
+    q = quantized_rows(queries, "query_id", "qvec", "_nq", bucket).selectExpr(
+        "query_id",
+        "qvec",
+        "_nq",
+        f"explode(array({', '.join(map(str, probes))})) AS bucket",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    c = quantized_rows(scale_out(corpus), "neighbor_id", "cv", "_nc", bucket)
+    return _scored_nearest(c.join(F.broadcast(q), "bucket"), k)
 
 
-def exact_near_dup_pairs(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-) -> DataFrame:
+def pairs_above(pairs: DataFrame, threshold: float) -> DataFrame:
+    """``(doc_a, doc_b, cosine)`` of joined rows ``(doc_a, va, _na)`` ×
+    ``(doc_b, vb, _nb)`` whose cosine is at least ``threshold``."""
+    return pairs.selectExpr(
+        "doc_a", "doc_b", f"{cosine_sql('va', 'vb', '_na', '_nb')} AS cosine"
+    ).filter(f"cosine >= {threshold!r}D")
+
+
+def exact_near_dup_pairs(corpus: DataFrame, threshold: float = 0.9) -> DataFrame:
     """ALL-PAIRS exact near-duplicate detection — the correctness anchor
     for :func:`embedding_near_dup_pairs` (which buckets by hyperplane
     signs and can miss pairs split across buckets). Deliberately O(n²):
@@ -217,56 +222,23 @@ def exact_near_dup_pairs(
     the bucketed variant is the scale path. One side is broadcast, so
     the plan is a BroadcastNestedLoopJoin with the a<b predicate — no
     shuffle, but candidate work is quadratic by definition."""
-    # per-row norms hoisted out of the O(n²) pair join (see
-    # brute_force_cosine_topk) — cosine expression bit-identical.
-    c = scale_out(corpus).select(
-        F.col(id_col).alias("doc_a"), quantize(vec_col).alias("va")
-    ).withColumn("_na", norm("va"))
-    c2 = corpus.select(
-        F.col(id_col).alias("doc_b"), quantize(vec_col).alias("vb")
-    ).withColumn("_nb", norm("vb"))
-    dot = int_dot("va", "vb").cast("double")
-    return (
-        c.join(F.broadcast(c2), F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b",
-            (dot / (F.col("_na") * F.col("_nb"))).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    a = quantized_rows(scale_out(corpus), "doc_a", "va", "_na")
+    b = quantized_rows(corpus, "doc_b", "vb", "_nb")
+    return pairs_above(a.join(F.broadcast(b), F.expr("doc_a < doc_b")), threshold)
 
 
 def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    n_planes: int = 6,
+    corpus: DataFrame, threshold: float = 0.9, n_planes: int = 6
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: bucket by hyperplane signs,
     score only within buckets, keep pairs above threshold. Same
     O(Σ bucket²) guarantee as minhash-LSH — never all-pairs."""
     corpus = scale_out(corpus)
-    bucket = F.expr(hyperplane_signs(vec_col, n_planes)).alias("bucket")
-    # per-row norms hoisted out of the bucket pair join (see
-    # brute_force_cosine_topk) — cosine expression bit-identical.
-    c = corpus.select(
-        F.col(id_col).alias("doc_a"), quantize(vec_col).alias("va"), bucket
-    ).withColumn("_na", norm("va"))
-    c2 = corpus.select(
-        F.col(id_col).alias("doc_b"), quantize(vec_col).alias("vb"), bucket
-    ).withColumn("_nb", norm("vb"))
-    dot = int_dot("va", "vb").cast("double")
-    return (
-        c.join(c2, on="bucket")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b",
-            (dot / (F.col("_na") * F.col("_nb"))).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .distinct()
-    )
+    bucket = [f"{hyperplane_signs(n_planes)} AS bucket"]
+    a = quantized_rows(corpus, "doc_a", "va", "_na", bucket)
+    b = quantized_rows(corpus, "doc_b", "vb", "_nb", bucket)
+    pairs = a.join(b, "bucket").filter("doc_a < doc_b")
+    return pairs_above(pairs, threshold).distinct()
 
 
 def label_centroids(

@@ -19,8 +19,6 @@ from pyspark.sql import DataFrame
 
 from data_warehousing_assignment_spark.functions.cleaning import sql_str
 
-DQ_COLUMNS = ("table_name", "column_name", "row_reference", "original_value", "issue")
-
 
 def dq_log(
     df: DataFrame,

@@ -22,6 +22,7 @@ matches bit-for-bit):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Any
 
@@ -52,6 +53,7 @@ def query(name: str, oracle: str | None = None, eager: bool = False) -> Callable
                 f"duplicate query registration: {name!r} "
                 f"(existing: {QUERIES[name].__name__}, new: {fn.__name__})"
             )
+        @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Sequential harnesses (driver gate, bench, check_local) have
             # fully materialized the previous query by the time they build
@@ -64,8 +66,6 @@ def query(name: str, oracle: str | None = None, eager: bool = False) -> Callable
             apply_runtime_confs(spark)
             return fn(spark, sf_dir)
 
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
         wrapped.eager = eager
         QUERIES[name] = wrapped
         if oracle is not None:

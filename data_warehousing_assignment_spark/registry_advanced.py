@@ -657,7 +657,6 @@ from data_warehousing_assignment_spark.registry_extensions import (  # noqa: E40
     _hybrid_fused_ctes,
     _ivf_cand_ctes,
     _QSAMPLE_WHERE,
-    _top_per_query,
     audit_sample,
     hybrid_fused_frame,
 )
@@ -691,7 +690,7 @@ def op_ext_fusion_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor shares the query's label. SCALE: metric aggregation is
     two map-side-combined passes over 10·|Q| rank rows on top of the
     hybrid pipeline's documented shapes."""
-    top = _top_per_query(
+    top = sim.top_per_query(
         hybrid_fused_frame(spark, sf_dir), "rrf_micro DESC, neighbor_id", _RM_K
     ).select("query_id", "neighbor_id", "rank")
     return _retrieval_metrics_over(top, t(spark, sf_dir, "embeddings"))
@@ -1390,7 +1389,6 @@ def op_ext_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Poisson bootstrap confidence intervals
 # --------------------------------------------------------------------------
 
-_BOOT_B = 48
 _BOOT_G = 6  # hash groups: one md5 yields EIGHT 16-bit uniforms (128 bits)
 #: Poisson(1) inverse-CDF thresholds on a 16-bit uniform: u16 < T[k] -> k
 _POIS_T = [24109, 48218, 60273, 64291, 65296, 65497, 65530, 65535]

@@ -451,34 +451,13 @@ def semantic_dedup_frame(emb: DataFrame) -> DataFrame:
     Returns (vec_id, cluster BIGINT, kept BOOL)."""
     n = emb.count()
     k = max(8, min(256, n // 500))
-    _, assign = build_ivf_index(
-        emb, id_col="vec_id", vec_col="embedding", n_clusters=k, n_iters=2
-    )
-    vecs = emb.select(
-        "vec_id", sim.quantize("embedding").alias("qv")
-    ).join(assign, "vec_id")
-    vecs = vecs.withColumn("nrm", sim.norm("qv"))
-    a = vecs.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("qv").alias("qa"),
-        F.col("nrm").alias("na"),
-        "cluster",
-    )
-    b = vecs.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("qv").alias("qb"),
-        F.col("nrm").alias("nb"),
-        "cluster",
-    )
+    _, assign = build_ivf_index(emb, n_clusters=k, n_iters=2)
+    vecs = sim.quantized_rows(emb, "vec_id", "qv", "nrm").join(assign, "vec_id")
+    a = vecs.selectExpr("vec_id AS doc_a", "qv AS va", "nrm AS _na", "cluster")
+    b = vecs.selectExpr("vec_id AS doc_b", "qv AS vb", "nrm AS _nb", "cluster")
     dominated = (
-        a.join(b, "cluster")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            sim.int_dot("qa", "qb").cast("double")
-            / (F.col("na") * F.col("nb"))
-            >= 0.5
-        )
-        .select(F.col("id_b").alias("vec_id"))
+        sim.pairs_above(a.join(b, "cluster").filter("doc_a < doc_b"), 0.5)
+        .selectExpr("doc_b AS vec_id")
         .distinct()
     )
     return (

@@ -1369,25 +1369,12 @@ _RRF_ORACLE = f"""
     """
 
 
-def _top_per_query(
-    frame: DataFrame, order: str, k: int, rank_as: str = "rank"
-) -> DataFrame:
-    """``frame`` plus ``rank_as``, cut to each query's first ``k`` rows by
-    the SQL ``order`` (which ends in a unique tie-break) — the ranking
-    every retrieval op shares with its oracle. The filter sits right on
-    the window, so Spark plans it as a per-partition group limit."""
-    return frame.selectExpr(
-        "*",
-        f"row_number() OVER (PARTITION BY query_id ORDER BY {order}) AS {rank_as}",
-    ).filter(f"{rank_as} <= {k}")
-
-
 def _rrf_contrib(ranked: DataFrame, order: str) -> DataFrame:
     """``(query_id, neighbor_id, c)``: the reciprocal-rank contribution
     1e6 div (60 + r) of each query's top 20 by ``order`` (ties to the
     lower neighbor_id) — exact integer micro-units, so no float sum can
     drift."""
-    return _top_per_query(ranked, f"{order}, neighbor_id", 20, "r").selectExpr(
+    return sim.top_per_query(ranked, f"{order}, neighbor_id", 20, "r").selectExpr(
         "query_id", "neighbor_id", "1000000 div (60 + r) AS c"
     )
 
@@ -1403,7 +1390,7 @@ def _rrf_fused(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def _fused_top10(fused: DataFrame) -> DataFrame:
-    top = _top_per_query(fused, "rrf_micro DESC, neighbor_id", 10, "fused_rank")
+    top = sim.top_per_query(fused, "rrf_micro DESC, neighbor_id", 10, "fused_rank")
     return top.select("query_id", "neighbor_id", "rrf_micro", "fused_rank")
 
 
@@ -1424,7 +1411,7 @@ def op_ext_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehousing_assignment_spark.caching import pin
 
     corpus = t(spark, sf_dir, "embeddings")
-    index = iv.build_ivf_index(corpus, "vec_id", "embedding", 16)
+    index = iv.build_ivf_index(corpus, 16)
     queries = corpus.filter("vec_id % 100 = 0")
     # two ranking windows read one scoring pass
     scored = pin(iv.probed_cell_scan(corpus, queries, index, n_probe=4))
@@ -2834,6 +2821,7 @@ def _cur_bucket_sql() -> str:
                 AS BIGINT) AS n_sampled
     FROM f GROUP BY source
     """,
+    eager=True,  # connected components runs its driver loop at build
 )
 def op_ext_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end curation funnel — the per-source keep/drop accounting a
@@ -3526,7 +3514,7 @@ def hybrid_fused_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the op-ext-ann-ivf-scaled precedent, 35.6 s vs 100.6 s).
     n_vec = emb.count()
     k_cells = iv.auto_n_clusters(n_vec, min(100, n_vec), n_probe=4)
-    index = iv.build_ivf_index(emb, "vec_id", "embedding", k_cells)
+    index = iv.build_ivf_index(emb, k_cells)
     dense20 = _rrf_contrib(
         iv.probed_cell_scan(emb, queries, index, n_probe=4), "cos DESC"
     )
@@ -3655,8 +3643,8 @@ def _blockmax_frames(
     # was valid too but far looser — measured 5.8% postings reduction vs
     # this bound's, BASELINE.md r14.) Fewer than k pool docs ⇒ no θ ⇒
     # nothing pruned.
-    t1 = _top_per_query(qterms, "ub DESC, tok", 1, "_r").select("query_id", "tok")
-    pool = _top_per_query(
+    t1 = sim.top_per_query(qterms, "ub DESC, tok", 1, "_r").select("query_id", "tok")
+    pool = sim.top_per_query(
         t1.join(postings, "tok").filter("doc_id <> query_id"),
         "mu DESC, doc_id",
         _BM25_TOPK,
@@ -3750,7 +3738,7 @@ def op_ext_bm25_blockmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation drops every non-essential postings list —
     exactly the skip an impact-ordered index performs, expressed
     relationally. All arithmetic integer-exact cross-engine."""
-    return _top_per_query(
+    return sim.top_per_query(
         _blockmax_frames(spark, sf_dir)["scored"],
         "bm25_micro DESC, neighbor_id",
         _BM25_TOPK,
@@ -3906,7 +3894,7 @@ def _filt_ctx(spark: SparkSession, sf_dir: str) -> tuple:
     ivf_cosine_topk's index= parameter exists for this)."""
     emb = t(spark, sf_dir, "embeddings")
     queries = audit_sample(emb)
-    index = iv.build_ivf_index(emb, "vec_id", "embedding", 16)
+    index = iv.build_ivf_index(emb, 16)
     return emb, queries, index
 
 
@@ -3922,9 +3910,7 @@ def _filtered_aware_top(
     scored = iv.probed_cell_scan(
         emb, queries, index, n_probe=_FILT_NPROBE, keys=("label",)
     ).selectExpr("query_id", "neighbor_id", "cos AS score")
-    return _top_per_query(scored, "score DESC, neighbor_id", _FILT_TOPK).select(
-        "query_id", "neighbor_id", "rank", "score"
-    )
+    return sim.nearest_k(scored, _FILT_TOPK)
 
 
 @query(
@@ -3985,9 +3971,7 @@ def _postfilter_top(
         .join(nlab, "neighbor_id")
         .filter("_nl = _ql")
     )
-    return _top_per_query(kept, "score DESC, neighbor_id", _FILT_TOPK).select(
-        "query_id", "neighbor_id", "rank", "score"
-    )
+    return sim.nearest_k(kept, _FILT_TOPK)
 
 
 @query(
@@ -4196,11 +4180,11 @@ def _filtered_truth_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id AS _qp", "neighbor_id AS _np"
     )
     truth = iv.cosine_pairs(
-        iv.quantized_rows(emb, "neighbor_id", "cv", "_nc", ["label"]),
-        iv.quantized_rows(queries, "query_id", "qvec", "_nq", ["label"]),
+        sim.quantized_rows(emb, "neighbor_id", "cv", "_nc", ["label"]),
+        sim.quantized_rows(queries, "query_id", "qvec", "_nq", ["label"]),
         ["label"],
     )
-    truth5 = _top_per_query(truth, "cos DESC, neighbor_id", _FILT_TOPK)
+    truth5 = sim.top_per_query(truth, "cos DESC, neighbor_id", _FILT_TOPK)
     return (
         truth5.join(aware5, F.expr("query_id = _qa AND neighbor_id = _na"), "left")
         .join(post5, F.expr("query_id = _qp AND neighbor_id = _np"), "left")

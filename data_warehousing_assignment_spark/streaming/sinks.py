@@ -254,8 +254,6 @@ def start_vector_ingest_sink(
     centroids: DataFrame,
     assign_path: str,
     checkpoint_dir: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> StreamingQuery:
     """The ARRIVAL PATH of the incremental IVF index as a stream: each
     micro-batch of new vectors is assigned against the FROZEN broadcast
@@ -267,7 +265,7 @@ def start_vector_ingest_sink(
     the streaming twin of the batch SCD2 merge.
 
     Exactly-once contents under at-least-once delivery: an anti-join on
-    ``id_col`` against the committed assignments drops redelivered
+    ``vec_id`` against the committed assignments drops redelivered
     vectors before the append (same defense-in-depth as
     start_incremental_fact_sink — checkpointing dedups batches, the
     anti-join dedups rows), pinned with an overlapping-batch replay in
@@ -279,10 +277,10 @@ def start_vector_ingest_sink(
     spark = stream.sparkSession
 
     def load_batch(batch: DataFrame, batch_id: int) -> None:
-        assigned = assign_to_index(batch, centroids, id_col, vec_col)
+        assigned = assign_to_index(batch, centroids)
         if _has_committed_data(spark, assign_path):
-            existing = spark.read.parquet(assign_path).select(id_col)
-            assigned = assigned.join(existing, on=id_col, how="left_anti")
+            existing = spark.read.parquet(assign_path).select("vec_id")
+            assigned = assigned.join(existing, on="vec_id", how="left_anti")
         assigned.write.mode("append").partitionBy("cluster").parquet(
             assign_path
         )

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from data_warehousing_assignment_spark.operators import ivf
 from data_warehousing_assignment_spark.operators.similarity import (
     brute_force_cosine_topk,
+    lsh_cosine_topk,
     quantize,
 )
 from tests.conftest import SF_SMALL
@@ -67,16 +68,21 @@ def test_assign_agg_path_matches_window_ranking_and_tiebreak(spark):
 
 
 def test_full_probe_equals_exact(spark):
+    """Probing every IVF cell or every LSH bucket is exact search: the
+    same neighbors, ranks and bit-equal scores as brute force, since all
+    three score with the one cosine text."""
     corpus = emb(spark).limit(200)
     queries = corpus.filter(F.col("vec_id") % 50 == 0)
     exact = brute_force_cosine_topk(corpus, queries, k=3)
     full = ivf.ivf_cosine_topk(
         corpus, queries, k=3, n_clusters=4, n_probe=4
     )
+    lsh_full = lsh_cosine_topk(corpus, queries, k=3, probe_all=True)
     canon = lambda df: sorted(
-        (r.query_id, r.neighbor_id, r.rank) for r in df.collect()
+        (r.query_id, r.neighbor_id, r.rank, r.score) for r in df.collect()
     )
     assert canon(full) == canon(exact)
+    assert canon(lsh_full) == canon(exact)
 
 
 def test_recall_beats_chance_and_grows_with_probes(spark):
@@ -259,7 +265,7 @@ def test_extend_ivf_index_equals_full_assignment(spark):
 
     vecs = corpus.select(
         F.col("vec_id").alias("_id"),
-        ivf.quantize("embedding").alias("qvec"),
+        quantize("embedding").alias("qvec"),
     )
     full_assign = ivf._assign(vecs, centroids).select(
         F.col("_id").alias("vec_id"), "cluster"
@@ -368,12 +374,12 @@ def test_probe_cell_topk_np_matches_join_formulation(spark):
             (2, [2, 1], 0),
             (2, [2, 1], 1),
         ],
-        "query_id bigint, qv array<bigint>, cluster int",
+        "query_id bigint, qvec array<bigint>, cluster int",
     ).withColumn(
         "_nq",
         F.sqrt(
             F.aggregate(
-                F.zip_with("qv", "qv", lambda x, y: x * y),
+                F.zip_with("qvec", "qvec", lambda x, y: x * y),
                 F.lit(0).cast("bigint"),
                 lambda a, x: a + x,
             ).cast("double")
@@ -395,7 +401,7 @@ def test_probe_cell_topk_np_matches_join_formulation(spark):
         )
 
     dot = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: x * y),
+        F.zip_with("qvec", "cv", lambda x, y: x * y),
         F.lit(0).cast("bigint"),
         lambda a, x: a + x,
     ).cast("double")

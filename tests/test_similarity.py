@@ -34,11 +34,10 @@ def np_cos(a, b):
 
 
 def test_cosine_matches_numpy_quantized(spark):
-    df = vec_df(spark).alias("a").crossJoin(vec_df(spark).alias("b"))
-    out = df.select(
-        F.col("a.vec_id").alias("ia"),
-        F.col("b.vec_id").alias("ib"),
-        sim.cosine_similarity_col("a.embedding", "b.embedding").alias("c"),
+    a = sim.quantized_rows(vec_df(spark), "ia", "qa", "na")
+    b = sim.quantized_rows(vec_df(spark), "ib", "qb", "nb")
+    out = a.crossJoin(b).selectExpr(
+        "ia", "ib", f"{sim.cosine_sql('qa', 'qb', 'na', 'nb')} AS c"
     ).collect()
     by_pair = {(r.ia, r.ib): r.c for r in out}
     for (ia, va), (ib, vb) in [(VECS[i], VECS[j]) for i in range(4) for j in range(4)]:

@@ -43,15 +43,16 @@ def _month_key(col: str = "o_orderdate") -> Column:
     DateTimeFormatter and hashing its string; :func:`_month_label` then
     formats the handful of post-agg groups. year·100+month ↔ 'yyyy-MM'
     is a bijection, so the groups are identical, and the label is
-    value-identical to date_format for any 1-to-4-digit year (lpad);
+    value-identical to date_format for any 1-to-4-digit year (``%04d``);
     every rider op's DuckDB oracle re-attests the output hash-exact."""
     return (F.year(col) * 100 + F.month(col)).alias("_ym")
 
 
 def _month_label() -> Column:
+    """'yyyy-MM' of :func:`_month_key`; a NULL key stays NULL (format_string
+    alone prints 'null-null')."""
     return F.expr(
-        "lpad(CAST(_ym DIV 100 AS STRING), 4, '0') || '-' ||"
-        " lpad(CAST(_ym % 100 AS STRING), 2, '0')"
+        "IF(_ym IS NULL, NULL, format_string('%04d-%02d', _ym div 100, _ym % 100))"
     ).alias("order_month")
 
 

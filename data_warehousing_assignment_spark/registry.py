@@ -124,6 +124,16 @@ def dec(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
     return c.cast(f"decimal({precision},{scale})")
 
 
+def _price_cents() -> Column:
+    """Exact integer cents of the 2-dp ``l_extendedprice``."""
+    return (dec("l_extendedprice") * 100).cast("bigint")
+
+
+def _ds(col) -> Column:
+    """date → 'yyyy-MM-dd' string (cross-engine-stable date surface)."""
+    return F.date_format(col, "yyyy-MM-dd")
+
+
 def dsum(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
     """Order-independent exact sum of a 2-dp double, surfaced as DOUBLE."""
     return F.sum(dec(col, precision, scale)).cast("double")
@@ -159,6 +169,13 @@ def o_round2_mean(p: str, c: str) -> str:
 
 def o_sum_cents(col: str, precision: int = 18, scale: int = 2) -> str:
     return f"CAST(SUM(CAST({col} AS DECIMAL({precision},{scale}))) * 100 AS BIGINT)"
+
+
+#: SQL text of _price_cents (row-local, exact in both engines)
+_CENTS = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+
+#: DuckDB twin of operators.text.tokens()
+_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 
 
 # Oracle-side fragments mirroring dsum/davg, f-string-able into SQL:

@@ -22,10 +22,7 @@ from data_warehousing_assignment_spark.operators import diff as dff
 from data_warehousing_assignment_spark.operators import graph as gr
 from data_warehousing_assignment_spark.operators import similarity as sim
 from data_warehousing_assignment_spark.operators import timeseries as ts
-from data_warehousing_assignment_spark.registry import dec, query, t
-
-#: exact integer cents of a 2-dp money double (row-local, both engines)
-_CENTS = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+from data_warehousing_assignment_spark.registry import _CENTS, dec, query, t
 
 
 # --------------------------------------------------------------------------

@@ -20,24 +20,15 @@ from pyspark.sql import functions as F
 from data_warehousing_assignment_spark.operators import analytics as an
 from data_warehousing_assignment_spark.operators import text as tx
 from data_warehousing_assignment_spark.registry import (
+    _CENTS,
+    _TOKS,
+    _price_cents,
     dec,
     o_dsum,
     query,
     sum_cents,
     t,
 )
-
-# Shared fragments ---------------------------------------------------------
-
-#: exact integer cents of a 2-dp money double (row-local, both engines)
-_CENTS = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _price_cents() -> F.Column:
-    return (dec("l_extendedprice") * 100).cast("bigint")
-
-
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 
 
 # --------------------------------------------------------------------------

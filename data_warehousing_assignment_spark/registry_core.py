@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.registry import (
     ROUND2_MEAN_EXPR,
+    _ds,
     davg,
     dec,
     dsum,
@@ -48,11 +49,6 @@ from data_warehousing_assignment_spark.operators.joins import (
     case_insensitive_join,
     scalar_subquery,
 )
-
-
-def _ds(col) -> F.Column:
-    """date → 'yyyy-MM-dd' string (cross-engine-stable date surface)."""
-    return F.date_format(col, "yyyy-MM-dd")
 
 
 # --------------------------------------------------------------------------

@@ -25,10 +25,7 @@ from data_warehousing_assignment_spark.operators.text import (
     tokens,
     word_shingles,
 )
-from data_warehousing_assignment_spark.registry import query, t
-
-#: DuckDB twin of operators.text.tokens()
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
+from data_warehousing_assignment_spark.registry import _TOKS, query, t
 
 
 # --------------------------------------------------------------------------

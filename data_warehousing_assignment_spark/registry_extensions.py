@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_warehousing_assignment_spark.registry import dec, query, t
+from data_warehousing_assignment_spark.registry import _TOKS, dec, query, t
 from data_warehousing_assignment_spark.operators import dedup as dd
 from data_warehousing_assignment_spark.operators import similarity as sim
 from data_warehousing_assignment_spark.operators import text as tx
@@ -39,8 +39,6 @@ def docs_t(spark, sf_dir):
     return dd.scale_out(t(spark, sf_dir, "documents"))
 
 # Shared DuckDB fragments -------------------------------------------------
-
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 
 # word 3-gram shingles with the same <3-token fallback as word_shingles()
 _SHINGLES = f"""

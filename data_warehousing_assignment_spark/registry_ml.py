@@ -17,10 +17,7 @@ from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.operators import analytics as an
 from data_warehousing_assignment_spark.operators.text import tokens
-from data_warehousing_assignment_spark.registry import query, sum_cents, t
-
-#: DuckDB twin of operators.text.tokens()
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
+from data_warehousing_assignment_spark.registry import _TOKS, query, sum_cents, t
 
 
 def _sdiv(a, b):

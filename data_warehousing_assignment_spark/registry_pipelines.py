@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.registry import (
     ROUND2_MEAN_EXPR,
-    dec,
+    _ds,
     o_round2_mean,
     o_sum_cents,
     query,
@@ -32,10 +32,6 @@ from data_warehousing_assignment_spark.plans.facts import (
 )
 from data_warehousing_assignment_spark.plans import kpi
 from data_warehousing_assignment_spark.plans.dq import audit_frame, dq_log
-
-
-def _ds(col) -> F.Column:
-    return F.date_format(col, "yyyy-MM-dd")
 
 
 # --------------------------------------------------------------------------

@@ -19,20 +19,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.registry import (
+    _CENTS,
+    _TOKS,
+    _price_cents,
     dec,
     query,
     sum_cents,
     t,
 )
-
-#: exact integer cents of the 2-dp price (same fragment as registry_analytics)
-_CENTS = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
-
-
-def _price_cents() -> F.Column:
-    return (dec("l_extendedprice") * 100).cast("bigint")
 
 
 # --------------------------------------------------------------------------

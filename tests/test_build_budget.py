@@ -8,7 +8,10 @@ Column trees built one attribute at a time in the SCD2 merge, dim
 upserts, fact anti-joins and audit (thousands of JVM round trips before
 any data moves), fails here. The incremental fact load's date-window
 prune is pinned to one bounds collect, the k-core peel to the jobs of
-its round checkpoints, and connected components to < 100 calls."""
+its round checkpoints, and connected components to < 100 calls. Each
+registered query's plan also audits to exactly its ``plan_audit``
+allowance, so a new cartesian or unpartitioned window fails here, and so
+does an allowance that no longer matches its plan."""
 
 from __future__ import annotations
 
@@ -17,19 +20,25 @@ import pytest
 from data_warehousing_assignment_spark.caching import cache_scope, release_unscoped
 from data_warehousing_assignment_spark.registry import all_queries
 from perfbench.trace import Py4jCounter
+from tools.plan_audit import ALLOWED, audit
 
 #: every registered query, and one run_etl load (clean + DQ of three
 #: domains, 5 dim upserts, SCD2, 3 incremental facts, audit)
 BUDGET = 1000
 
 
-def _build_calls(build) -> int:
-    """py4j call commands sent while ``build()`` runs."""
+def _build_calls(build, inspect=None) -> int:
+    """py4j call commands sent while ``build()`` runs. ``inspect`` gets
+    the built frame after the count stops and before the build's pins
+    are released."""
     counter = Py4jCounter()
     counter.install()
     try:
         counter.active = True
-        build()
+        frame = build()
+        counter.active = False
+        if inspect is not None:
+            inspect(frame)
     finally:
         counter.active = False
         counter.uninstall()
@@ -85,11 +94,15 @@ def test_every_query_builds_under_registry_budget(spark, op):
     from tests.conftest import SF_SMALL
 
     build = all_queries()[op]
+    flags: set[str] = set()
     try:
-        calls = _build_calls(lambda: build(spark, SF_SMALL))
+        calls = _build_calls(
+            lambda: build(spark, SF_SMALL), lambda df: flags.update(audit(df))
+        )
     finally:
         _drop_checkpoints(spark)
     assert calls < BUDGET, f"{op}: {calls} py4j calls"
+    assert flags == ALLOWED.get(op, set()), f"{op}: plan_audit flags {sorted(flags)}"
 
 
 def test_run_etl_builds_in_few_py4j_calls(spark):

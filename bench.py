@@ -154,10 +154,6 @@ _SF1_KEYED = {
     "documents": ["doc_id"],
     "embeddings": ["vec_id"],
 }
-_SF1_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
 _SF1_OFFSET = 10_000_000  # > any sf0.1 key, ×10 copies stays in int32
 
 
@@ -172,13 +168,15 @@ def synthesize_sf1(spark, src: str = SF_DIR, dst: str = SF1_DIR, copies: int = 1
     99 × 10 M + 10 M = 1 B < 2^31)."""
     from pyspark.sql import functions as F
 
+    from data_warehousing_assignment_spark.sources import TESTDATA_TABLES
+
     marker = os.path.join(dst, "_SYNTH_OK")
     if os.path.exists(marker):
         return dst
     # events.parquet is TIMESTAMP(NANOS): read the raw column as long so
     # the copy round-trips losslessly (registry.t handles either layout).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for tab in _SF1_TABLES:
+    for tab in TESTDATA_TABLES:
         df = spark.read.parquet(f"{src}/{tab}.parquet")
         if tab in _SF1_KEYED:
             parts = []

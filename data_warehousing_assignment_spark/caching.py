@@ -64,11 +64,11 @@ _UNSCOPED: list[DataFrame] = []
 _UNSCOPED_LOCK = threading.Lock()
 
 
-def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK by default), handing ownership to
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK), handing ownership to
     the innermost active :func:`cache_scope` of THIS execution context,
     or to the unscoped pool if no scope is active."""
-    df = df.persist(level or StorageLevel.MEMORY_AND_DISK)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     scopes = _SCOPES.get()
     if scopes:
         scopes[-1].append(df)

@@ -50,10 +50,10 @@ def blank_to_null(col: str, extra_sentinels: tuple[str, ...] = ()) -> str:
     return f"CASE WHEN lower(trim({col})) IN ({listed}) THEN NULL ELSE trim({col}) END"
 
 
-def dedup_sentinels(col: str, default: str, extra_sentinels: tuple[str, ...] = ()) -> str:
+def dedup_sentinels(col: str, default: str) -> str:
     """Sentinel/blank → fixed default (e.g. 'UNASSIGNED_DEPT', ref
     ``A2_hr_etl.py:21-23``; 'UNKNOWN_PROCESS', ref ``C2_ops_etl.py:35-38``)."""
-    return f"coalesce({blank_to_null(col, extra_sentinels)}, {sql_str(default)})"
+    return f"coalesce({blank_to_null(col)}, {sql_str(default)})"
 
 
 def normalize_upper_trim(col: str) -> str:
@@ -109,13 +109,9 @@ def lenient_decimal(col: str, precision: int = 12, scale: int = 2) -> str:
     return f"try_cast({col} AS decimal({precision},{scale}))"
 
 
-def parse_date_multi(
-    col: str,
-    formats: tuple[str, ...] = ("yyyy-MM-dd", "dd-MM-yyyy"),
-    fallback: str | None = None,
-) -> str:
+def parse_date_multi(col: str, fallback: str | None = None) -> str:
     """op-fn-date-parse-multi: tolerant multi-format date parse by ordered
-    trial parsing — try each format in order, first success wins;
+    trial parsing — try ``yyyy-MM-dd``, then ``dd-MM-yyyy``, first success wins;
     unparseable → `fallback` (Ops uses ``'1957-01-01'``, ref
     ``C2_ops_etl.py:87-103``) or NULL (HR/Finance, ref
     ``A2_hr_etl.py:39-51``). This mirrors the reference's pandas
@@ -123,8 +119,10 @@ def parse_date_multi(
     semantics use :func:`...functions.dates.date_safe_dispatch`.
     try_to_date keeps this ANSI-safe (bad input → NULL, never a throw).
     """
-    attempts = ", ".join(f"try_to_date(trim({col}), {sql_str(fmt)})" for fmt in formats)
-    parsed = f"coalesce({attempts})"
+    parsed = (
+        f"coalesce(try_to_date(trim({col}), 'yyyy-MM-dd'), "
+        f"try_to_date(trim({col}), 'dd-MM-yyyy'))"
+    )
     return parsed if fallback is None else f"coalesce({parsed}, to_date({sql_str(fallback)}))"
 
 
@@ -144,15 +142,9 @@ def fallback_id_hash(col: str, prefix: str, attrs: list[str]) -> str:
     )
 
 
-def group_mean_impute(
-    df,
-    measure: str,
-    group_keys: list[str],
-    final_default: float = 0.0,
-    ndigits: int = 2,
-):
+def group_mean_impute(df, measure: str, group_keys: list[str]):
     """op-pipe-impute / op-join-left-fill: fill NULL `measure` with the
-    per-group mean (rounded), then a constant default.
+    per-group mean (rounded to 2 digits), then 0.0.
 
     Reference does this as a groupby-mean + merge + fillna (ref
     ``C2_ops_etl.py:62-85``) / avg-CTE + left join + coalesce (ref
@@ -164,8 +156,8 @@ def group_mean_impute(
     from pyspark.sql import Window
 
     w = Window.partitionBy(*group_keys)
-    grp_mean = F.round(F.avg(measure).over(w), ndigits)
+    grp_mean = F.round(F.avg(measure).over(w), 2)
     return df.withColumn(
         measure,
-        F.coalesce(F.col(measure), grp_mean, F.lit(final_default)),
+        F.coalesce(F.col(measure), grp_mean, F.lit(0.0)),
     )

@@ -100,7 +100,7 @@ def build_dim_time(
     ).select("time_id", "full_date", "day", "month", "quarter", "year", "is_weekend")
 
 
-def date_safe_dispatch(col: Column | str, fallback: str = FALLBACK_DATE) -> Column:
+def date_safe_dispatch(col: Column | str) -> Column:
     """op-fn-date-safe: the dbt ``date_safe`` macro's regex dispatch (ref
     ``05_dbt_implementation/.../macros/utils/date_safe.sql:1-7``): pick the
     parse format by the string's *shape* — ``^\\d{4}-\\d{2}-\\d{2}$`` →
@@ -112,7 +112,7 @@ def date_safe_dispatch(col: Column | str, fallback: str = FALLBACK_DATE) -> Colu
     return (
         F.when(c.rlike(r"^\d{4}-\d{2}-\d{2}$"), F.try_to_date(c, "yyyy-MM-dd"))
         .when(c.rlike(r"^\d{2}-\d{2}-\d{4}$"), F.try_to_date(c, "dd-MM-yyyy"))
-        .otherwise(F.to_date(F.lit(fallback)))
+        .otherwise(F.to_date(F.lit(FALLBACK_DATE)))
     )
 
 

@@ -117,18 +117,16 @@ def distributed_prefix(
     )
 
 
-def distributed_ar2(
-    g: DataFrame, v: str = "v", ct: str = "ct", n_buckets: int = 64
-) -> DataFrame:
-    """Doubled tie-group average ranks over a distinct-value frame,
-    built on :func:`distributed_prefix`:
+def distributed_ar2(g: DataFrame, v: str = "v") -> DataFrame:
+    """Doubled tie-group average ranks over a distinct-value frame with
+    count column ``ct``, built on :func:`distributed_prefix`:
     ``ar2 = 2·cum_before + ct + 1 = 2·cum_inclusive − ct + 1`` — also
     exactly the tie group's ``min(rank) + max(rank)`` (the midrank×2
     op-ext-auc needs). Exact int64 throughout."""
     return (
-        distributed_prefix(g, v, [ct], n_buckets)
-        .withColumn("ar2", F.expr(f"CAST(2 * `cum_{ct}` - `{ct}` + 1 AS BIGINT)"))
-        .drop(f"cum_{ct}")
+        distributed_prefix(g, v, ["ct"])
+        .withColumn("ar2", F.expr("CAST(2 * cum_ct - ct + 1 AS BIGINT)"))
+        .drop("cum_ct")
     )
 
 
@@ -138,7 +136,6 @@ def distributed_ntile(
     tiebreak: str,
     n_tiles: int,
     descending: bool = False,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """NTILE(n) over ``(value ASC|DESC, tiebreak ASC)`` with Spark's
     exact remainder semantics (first ``n_rows mod n`` tiles get one
@@ -154,7 +151,7 @@ def distributed_ntile(
     (determinism rule)."""
     d2 = df.withColumn("_v", F.expr(f"-`{value}`" if descending else f"`{value}`"))
     gb = d2.groupBy("_v").agg(F.expr("CAST(count(1) AS BIGINT) AS _ct"))
-    base = distributed_prefix(gb, "_v", ["_ct"], n_buckets).selectExpr(
+    base = distributed_prefix(gb, "_v", ["_ct"]).selectExpr(
         "_v", "cum__ct - _ct AS _base"
     )
     nrow = d2.selectExpr("CAST(count(1) AS BIGINT) AS _n")
@@ -175,28 +172,23 @@ def distributed_ntile(
     )
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_us_col: str = "ts_us",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Gap-based batch sessionization: a new session starts when the
-    inter-event gap exceeds ``gap_minutes``. Returns the input plus
-    ``session_seq`` (1-based per-user session index).
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+    """Gap-based batch sessionization of events ``(user_id, ts_us,
+    event_id)``: a new session starts when the inter-event gap exceeds
+    ``gap_minutes``. Returns the input plus ``session_seq`` (1-based
+    per-user session index).
 
     Classic lag → boundary-flag → running-sum formulation; both windows
     share one (user) partitioning so it costs a single shuffle. The
-    event-time order carries ``tiebreak_col`` so equal timestamps are
+    event-time order carries ``event_id`` so equal timestamps are
     deterministic (registry.py determinism rules)."""
-    w = Window.partitionBy(user_col).orderBy(ts_us_col, tiebreak_col)
+    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     gap_us = gap_minutes * 60 * 1_000_000
-    prev = F.lag(ts_us_col).over(w)
+    prev = F.lag("ts_us").over(w)
     is_new = F.when(
-        prev.isNull() | (F.col(ts_us_col) - prev > gap_us), F.lit(1)
+        prev.isNull() | (F.col("ts_us") - prev > gap_us), F.lit(1)
     ).otherwise(F.lit(0))
-    running = Window.partitionBy(user_col).orderBy(ts_us_col, tiebreak_col).rowsBetween(
+    running = Window.partitionBy("user_id").orderBy("ts_us", "event_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return events.withColumn("_is_new", is_new).withColumn(
@@ -280,13 +272,11 @@ def pack_sequences(
     )
 
 
-def chunk_totals(
-    packed: DataFrame, budget: int = 512, part_col: str = "source"
-) -> DataFrame:
+def chunk_totals(packed: DataFrame, budget: int = 512) -> DataFrame:
     """Materialize the per-sequence view of :func:`pack_sequences`: each
     doc explodes over the chunk range it spans, contributing the integer
     token overlap ``min(cum, (c+1)·B) − max(cum−tk, c·B)`` to chunk c.
-    Output per (shard, chunk): token total (== budget for every chunk
+    Output per (``source`` shard, chunk): token total (== budget for every chunk
     except a shard's last — the packing invariant), docs touching, docs
     starting.
 
@@ -299,7 +289,7 @@ def chunk_totals(
         F.col("cum_tokens") - F.col("n_tokens"), F.col("chunk") * budget
     )
     hi = F.least(F.col("cum_tokens"), (F.col("chunk") + 1) * budget)
-    return chunks.groupBy(part_col, "chunk").agg(
+    return chunks.groupBy("source", "chunk").agg(
         F.sum(hi - lo).alias("n_tokens"),
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(

@@ -67,16 +67,13 @@ def duplicate_rows(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     )
 
 
-def exact_dedup(
-    df: DataFrame, content_col: str, id_col: str, normalize: bool = True
-) -> DataFrame:
-    """Exact dedup by content hash, keeping the lowest id per hash group
+def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
+    """Exact dedup by content hash (of the trimmed, lower-cased,
+    whitespace-collapsed text), keeping the lowest id per hash group
     (deterministic survivor rule). One shuffle on the 32-byte hash, never
     on the document body — at 100 TB the shuffle carries ~40 bytes/row.
     """
-    c = F.col(content_col)
-    if normalize:
-        c = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
+    c = F.regexp_replace(F.lower(F.trim(F.col(content_col))), r"\s+", " ")
     hashed = df.select(F.col(id_col), F.md5(c).alias("content_hash"))
     return (
         hashed.groupBy("content_hash")
@@ -103,20 +100,20 @@ def minhash_signatures(
     id_col: str,
     text_col: str,
     k: int = 12,
-    n: int = 3,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, sig) MinHash signatures, the scale path: widen partitions for
-    the CPU-bound hash stage, project shingles once (a separate Project
-    node — CollapseProject keeps non-cheap exprs used k times
-    unmerged), then fan out to the k seeded mins (:func:`minhash_sig_sql`).
+    """(id, sig) MinHash signatures of word 3-gram shingles, the scale
+    path: widen partitions for the CPU-bound hash stage, project
+    shingles once (a separate Project node — CollapseProject keeps
+    non-cheap exprs used k times unmerged), then fan out to the k
+    seeded mins (:func:`minhash_sig_sql`).
 
     ``shingles``: optional prebuilt :func:`shingle_frame` — signatures
     are then derived from it instead of re-tokenizing ``df`` (the same
     seeded-md5 mins over the same arrays → identical signatures)."""
     if shingles is None:
         shingles = scale_out(df.select(id_col, text_col)).withColumn(
-            "_sh", word_shingles(tokens(text_col), n)
+            "_sh", word_shingles(tokens(text_col))
         )
     return shingles.selectExpr(f"`{id_col}`", f"{minhash_sig_sql('_sh', k)} AS sig")
 
@@ -128,7 +125,6 @@ def minhash_band_keys(
     alias: str,
     k: int = 12,
     bands: int = 4,
-    n: int = 3,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Pinned ``(alias, band, band_hash)`` banded-LSH keys of the
@@ -157,7 +153,7 @@ def minhash_band_keys(
         for b in range(bands)
     )
     return pin(
-        minhash_signatures(df, id_col, text_col, k, n, shingles).selectExpr(
+        minhash_signatures(df, id_col, text_col, k, shingles).selectExpr(
             f"`{id_col}` AS {alias}", f"posexplode(array({keys})) AS (band, band_hash)"
         )
     )
@@ -186,7 +182,6 @@ def minhash_lsh_candidates(
     text_col: str,
     k: int = 12,
     bands: int = 4,
-    n: int = 3,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH: explode the band
@@ -210,7 +205,7 @@ def minhash_lsh_candidates(
 
     ``shingles``: optional prebuilt :func:`shingle_frame` (see
     :func:`minhash_signatures`)."""
-    keyed = minhash_band_keys(df, id_col, text_col, "doc_a", k, bands, n, shingles)
+    keyed = minhash_band_keys(df, id_col, text_col, "doc_a", k, bands, shingles)
     return (
         keyed.join(keyed.withColumnRenamed("doc_a", "doc_b"), on=["band", "band_hash"])
         .where("doc_a < doc_b")
@@ -224,11 +219,10 @@ def ngram_jaccard_pairs(
     candidates: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     threshold: float = 0.0,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for candidate pairs: join each
+    """Exact word 3-gram Jaccard similarity for candidate pairs: join each
     side's (deduplicated) shingle array onto the pair, then row-local
     array_intersect / union sizes — integer counts, one IEEE division.
 
@@ -243,7 +237,7 @@ def ngram_jaccard_pairs(
         sh = pin(  # joined twice (a- and b-side) — don't shingle twice
             scale_out(df.select(id_col, text_col)).select(
                 F.col(id_col).alias("_id"),
-                F.array_distinct(word_shingles(tokens(text_col), n)).alias("_sh"),
+                F.array_distinct(word_shingles(tokens(text_col))).alias("_sh"),
             )
         )
     inter = "size(array_intersect(sh_a, sh_b))"
@@ -673,7 +667,6 @@ def minhash_lsh_incremental_candidates(
     text_col: str,
     k: int = 12,
     bands: int = 4,
-    n: int = 3,
 ) -> DataFrame:
     """Incremental banded-LSH candidates: only the NEW batch computes
     signatures; its band keys probe the existing corpus's band index
@@ -692,8 +685,8 @@ def minhash_lsh_incremental_candidates(
     {'cross', 'new-new'}) with doc_a < doc_b. Id overlap between the
     frames (a batch re-ingesting a settled doc) is tolerated: the cross
     branch drops self-collisions, so the contract holds either way."""
-    old_keyed = minhash_band_keys(old_df, id_col, text_col, "_old", k, bands, n)
-    new_keyed = minhash_band_keys(new_df, id_col, text_col, "_new", k, bands, n)
+    old_keyed = minhash_band_keys(old_df, id_col, text_col, "_old", k, bands)
+    new_keyed = minhash_band_keys(new_df, id_col, text_col, "_new", k, bands)
     # A doc id present in BOTH frames (a batch re-ingesting a settled
     # doc) would otherwise collide with itself on every shared band key
     # and emit a degenerate (x, x) row — least==greatest violates the

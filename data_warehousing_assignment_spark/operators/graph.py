@@ -173,15 +173,12 @@ def pagerank_fixed_point(
     edges: DataFrame,
     iters: int = 3,
     damping_pct: int = 85,
-    scale: int = 10**9,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Deterministic fixed-ITERATION, fixed-POINT PageRank.
 
     Classic float PageRank is unreproducible across engines (double
     summation order changes the low bits, and low bits flip ranks), so
-    every value here is an int64: ranks start at ``scale``, a node's
+    every value here is an int64: ranks start at ``scale`` = 10⁹, a node's
     per-edge contribution is ``rank div outdeg`` (floor division — exact
     everywhere), and the update is
 
@@ -202,15 +199,14 @@ def pagerank_fixed_point(
     85·Σ needs |V|·scale < 9.2e18/100 — at scale=1e9 that is ~10^8
     nodes; beyond that drop scale one decade per 10× nodes.
 
-    ``edges`` must already be directed the way probability should flow
+    ``edges(src, dst)`` must already be directed the way probability should flow
     (symmetrize for undirected graphs). Every node must appear as a src
     at least once (true for symmetrized graphs); dangling-node mass
     redistribution is deliberately out of scope for this variant.
     Returns ``(node, rank_i)``.
     """
-    e0 = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
-    )
+    scale = 10**9
+    e0 = edges.select(F.col("src").alias("_src"), F.col("dst").alias("_dst"))
     outdeg = e0.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
     # degree is loop-invariant: stamp it onto the edge list ONCE so each
     # iteration pays a single join instead of two (edges ⋈ ranks only).
@@ -242,7 +238,7 @@ def pagerank_fixed_point(
     return ranks
 
 
-def component_summary(components: DataFrame, id_col: str = "id") -> DataFrame:
+def component_summary(components: DataFrame) -> DataFrame:
     """Per-cluster rollup of :func:`connected_components` output:
     ``(component, group_size)`` — the component label IS the surviving
     representative (min id), so dedup = keep rows where
@@ -345,7 +341,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
-def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
+def k_core(edges: DataFrame, k: int) -> DataFrame:
     """The k-core of an undirected graph (canonical u<v edges): the
     maximal subgraph where every node has degree ≥ k, computed by the
     standard peeling fixpoint — drop all nodes with degree < k,
@@ -358,13 +354,14 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     only driver data is the surviving-edge count, observed on the
     round's eager ``localCheckpoint`` that truncates its lineage.
     Rounds are bounded by the degeneracy ordering depth — small for
-    real graphs (the sf0.1 co-purchase graph converges in ≤4).
+    real graphs (the sf0.1 co-purchase graph converges in ≤4); the loop
+    stops after 30 rounds at most.
 
     Returns the surviving (n, d) degree frame (nodes of the k-core
     with their in-core degrees).
     """
     cur, before = _observed_checkpoint(edges.select("u", "v"), "count(1)")
-    for _ in range(max_iter):
+    for _ in range(30):
         keep = node_degrees(cur).filter(f"d >= {k}").select("n")
         cur, after = _observed_checkpoint(
             cur.join(keep.withColumnRenamed("n", "u"), "u", "semi")

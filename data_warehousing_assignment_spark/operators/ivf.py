@@ -211,16 +211,17 @@ def probed_cell_scan(
     return cosine_pairs(cells, probes, ["cluster", *keys])
 
 
-def auto_n_clusters(
-    n_corpus: int,
-    n_queries: int,
-    n_probe: int = 4,
-    n_build_passes: int = 3,
-    floor: int = 16,
-) -> int:
+#: assignment passes of an IVF build and the least cell count, in the
+#: cost model of :func:`auto_n_clusters` and its SQL twin
+#: (registry_extensions.IVF_KK_EXPR)
+BUILD_PASSES = 3
+MIN_CELLS = 16
+
+
+def auto_n_clusters(n_corpus: int, n_queries: int, n_probe: int = 4) -> int:
     """Cost-balanced cell count for one build + one query batch.
 
-    Work model (d cancels): the build runs ``n_build_passes`` assignment
+    Work model (d cancels): the build runs R = ``BUILD_PASSES`` assignment
     passes of n·k centroid distances plus Q·k on the query side; probing
     scores Q·n_probe·(n/k) candidates. Balancing the k and 1/k terms
     gives k* = sqrt(Q·n_probe·n / (R·n + Q)) ≈ sqrt(Q·n_probe/R) for
@@ -228,18 +229,17 @@ def auto_n_clusters(
     BASELINE.md r9): fixed k=16 → 80.7 s, this rule's regime (k≈115,
     probed 64/256 around it: 35.2 s / 56.4 s) — the pinned k=16 in the
     registered query is the oracle-replay anchor, this is the scale
-    sizing. Clamped to [floor, n/8] so tiny corpora keep meaningful
+    sizing. Clamped to [MIN_CELLS, n/8] so tiny corpora keep meaningful
     cells."""
     import math
 
     # Degenerate inputs (empty corpus or empty query batch): den would be
     # 0.0 and num/den a raw ZeroDivisionError (r14 self-review). Return
-    # the floor — an empty corpus builds an empty index and every
+    # MIN_CELLS — an empty corpus builds an empty index and every
     # downstream frame degrades to zero rows, matching the SQL twin's
     # empty-seed degradation.
     if n_corpus <= 0 or n_queries <= 0:
-        return floor
-    r = max(1, n_build_passes)
+        return MIN_CELLS
     # Round EXACTLY like the SQL twin (registry_extensions.IVF_KK_EXPR):
     # numerator and denominator are each rounded to double BEFORE the
     # divide. A bare int/int here would divide exact arbitrary-precision
@@ -248,9 +248,9 @@ def auto_n_clusters(
     # the SQL: exact while q·n_probe·n < 2^63 (BIGINT product bound);
     # beyond that the SQL side would overflow first.
     num = float(n_queries * n_probe * n_corpus)
-    den = float(r * n_corpus + n_queries)
+    den = float(BUILD_PASSES * n_corpus + n_queries)
     k = int(math.sqrt(max(1.0, num / den)))
-    return max(floor, min(k, max(floor, n_corpus // 8)))
+    return max(MIN_CELLS, min(k, max(MIN_CELLS, n_corpus // 8)))
 
 
 def assign_to_index(frame: DataFrame, centroids: DataFrame) -> DataFrame:

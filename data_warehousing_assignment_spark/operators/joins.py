@@ -52,9 +52,8 @@ def case_insensitive_join(
     right: DataFrame,
     left_key: str,
     right_key: str,
-    how: str = "inner",
 ) -> DataFrame:
-    """op-join-caseinsensitive: equi-join on ``UPPER(TRIM(x))`` normalized
+    """op-join-caseinsensitive: inner equi-join on ``UPPER(TRIM(x))`` normalized
     keys (ref ``A3_load_dim_emp.sql:39``, ``fact_downtime.sql:31-33``) —
     ``cleaning.normalize_upper_trim``, the key ``plans/dims.upsert_dim``
     keeps its members unique on.
@@ -68,7 +67,7 @@ def case_insensitive_join(
         f"{normalize_upper_trim(f'__l.`{left_key}`')} = "
         f"{normalize_upper_trim(f'__r.`{right_key}`')}"
     )
-    return left.alias("__l").join(right.alias("__r"), F.expr(cond), how)
+    return left.alias("__l").join(right.alias("__r"), F.expr(cond), "inner")
 
 
 def scalar_subquery(df: DataFrame, agg: Column):

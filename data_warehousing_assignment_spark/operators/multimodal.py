@@ -53,19 +53,14 @@ def fake_payload(text_col: Column | str, width: int = 8, height: int = 8) -> Col
     return F.concat(F.lit(_MAGIC), F.encode(c, "UTF-8"))
 
 
-def with_media_columns(
-    df: DataFrame,
-    text_col: str = "text",
-    mime: str = "image/x-fake",
-    width: int = 8,
-    height: int = 8,
-) -> DataFrame:
-    """Attach (payload binary, meta struct) derived deterministically from
-    a text column — the schema contract every operator below consumes."""
-    return df.withColumn("payload", fake_payload(text_col, width, height)).withColumn(
+def with_media_columns(df: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
+    """Attach (payload binary, meta struct of mime ``image/x-fake``)
+    derived deterministically from the ``text`` column — the schema
+    contract every operator below consumes."""
+    return df.withColumn("payload", fake_payload("text", width, height)).withColumn(
         "meta",
         F.struct(
-            F.lit(mime).alias("mime"),
+            F.lit("image/x-fake").alias("mime"),
             F.lit(width).alias("width"),
             F.lit(height).alias("height"),
             F.lit(1).alias("n_frames"),
@@ -84,7 +79,7 @@ BYTE_STATS_SCHEMA = StructType(
 )
 
 
-def byte_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def byte_stats(df: DataFrame) -> DataFrame:
     """Payload byte statistics via ``mapInPandas``: per Arrow batch, a
     vectorized pass computing size, md5 and mean byte value. This is the
     canonical plumbing shape for any real decoder (bytes in → features
@@ -99,7 +94,7 @@ def byte_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             payloads = pdf["payload"]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "n_bytes": payloads.map(len).astype("int64"),
                     "payload_md5": payloads.map(
                         lambda b: hashlib.md5(bytes(b)).hexdigest()
@@ -112,7 +107,7 @@ def byte_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(run, BYTE_STATS_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, BYTE_STATS_SCHEMA)
 
 
 DECODE_SCHEMA = StructType(
@@ -125,7 +120,7 @@ DECODE_SCHEMA = StructType(
 )
 
 
-def decode(df: DataFrame, id_col: str = "doc_id", real_codec: bool = False) -> DataFrame:
+def decode(df: DataFrame, real_codec: bool = False) -> DataFrame:
     """Decode payloads into a pixel array (row-major, grayscale [0,1]).
 
     STUB: ``real_codec=True`` is the integration point for Pillow/ffmpeg
@@ -144,7 +139,7 @@ def decode(df: DataFrame, id_col: str = "doc_id", real_codec: bool = False) -> D
         import numpy as np
 
         for pdf in batches:
-            out: dict[str, Any] = {"doc_id": pdf[id_col].astype("int64")}
+            out: dict[str, Any] = {"doc_id": pdf["doc_id"].astype("int64")}
             widths = pdf["meta"].map(lambda m: m["width"]).astype("int32")
             heights = pdf["meta"].map(lambda m: m["height"]).astype("int32")
 
@@ -165,7 +160,7 @@ def decode(df: DataFrame, id_col: str = "doc_id", real_codec: bool = False) -> D
             ]
             yield pd.DataFrame(out)
 
-    return df.select(id_col, "payload", "meta").mapInPandas(run, DECODE_SCHEMA)
+    return df.select("doc_id", "payload", "meta").mapInPandas(run, DECODE_SCHEMA)
 
 
 def resize(decoded: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -207,7 +202,7 @@ FRAME_SAMPLE_SCHEMA = StructType(
 )
 
 
-def sample_frames(df: DataFrame, every_n: int = 2, id_col: str = "doc_id") -> DataFrame:
+def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
     """Video frame sampling STUB: treats the payload as ``n_frames``
     equal byte-slices and emits every ``every_n``-th slice as its own
     row — the fan-out (one media row → many frame rows) and the schema
@@ -216,7 +211,7 @@ def sample_frames(df: DataFrame, every_n: int = 2, id_col: str = "doc_id") -> Da
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for i, b, m in zip(pdf[id_col], pdf["payload"], pdf["meta"]):
+            for i, b, m in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
                 body = bytes(b)[len(_MAGIC):]
                 n = max(int(m["n_frames"]), 1)
                 step = max(len(body) // n, 1)
@@ -228,7 +223,7 @@ def sample_frames(df: DataFrame, every_n: int = 2, id_col: str = "doc_id") -> Da
                 {"doc_id": ids, "frame_idx": idxs, "frame_payload": frames}
             )
 
-    return df.select(id_col, "payload", "meta").mapInPandas(run, FRAME_SAMPLE_SCHEMA)
+    return df.select("doc_id", "payload", "meta").mapInPandas(run, FRAME_SAMPLE_SCHEMA)
 
 
 AUDIO_ENERGY_SCHEMA = StructType(
@@ -245,7 +240,6 @@ AUDIO_ENERGY_SCHEMA = StructType(
 def audio_frame_energy(
     df: DataFrame,
     frame_len: int = 256,
-    id_col: str = "doc_id",
     real_codec: bool = False,
 ) -> DataFrame:
     """Audio feature extraction STUB: treat the payload body as 8-bit
@@ -270,7 +264,7 @@ def audio_frame_energy(
 
         for pdf in batches:
             ids, ns, nf, tot, peak = [], [], [], [], []
-            for i, b in zip(pdf[id_col], pdf["payload"]):
+            for i, b in zip(pdf["doc_id"], pdf["payload"]):
                 body = bytes(b)[len(_MAGIC):]
                 ids.append(int(i))
                 if not body:
@@ -298,13 +292,13 @@ def audio_frame_energy(
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(run, AUDIO_ENERGY_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, AUDIO_ENERGY_SCHEMA)
 
 
 AHASH_SCHEMA = "doc_id bigint, h1 bigint, h2 bigint"
 
 
-def average_hash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def average_hash(df: DataFrame) -> DataFrame:
     """Average-hash (aHash) perceptual fingerprint of each media
     payload: the 64 "pixels" (payload bytes after the magic, repeated/
     truncated to 64 exactly like :func:`decode`) become one bit each —
@@ -340,10 +334,10 @@ def average_hash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 h2s.append(int((bits[32:] * weights).sum()))
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "h1": h1s,
                     "h2": h2s,
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(run, AHASH_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, AHASH_SCHEMA)

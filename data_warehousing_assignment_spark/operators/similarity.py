@@ -138,6 +138,12 @@ def brute_force_cosine_topk(
     return _scored_nearest(c.crossJoin(F.broadcast(q)), k)
 
 
+#: hyperplanes of the sign-bucket LSH, and the length of their
+#: coefficient arrays (the embeddings' dimension)
+N_PLANES = 6
+PLANE_DIM = 64
+
+
 def _plane_coeffs(plane: int, dim: int) -> list[int]:
     """Deterministic pseudo-random hyperplane coefficients: h_p[d] =
     2·nibble(md5('p:d')) − 15 ∈ [−15, 15]. Hashed so bucketing is
@@ -164,10 +170,10 @@ def hyperplane_signs(n_planes: int) -> str:
     of rebuilding n_planes × dim literal Columns per side."""
     v = quantize_sql("embedding")
     # transform-with-index (not zip_with: it null-pads the shorter
-    # side) — iterates the vector's own length; requires 64 ≥ len(v)
+    # side) — iterates the vector's own length; requires PLANE_DIM ≥ len(v)
     return " + ".join(
         f"CASE WHEN aggregate(transform({v}, (x, i) -> x * element_at(array("
-        f"{', '.join(f'{c}L' for c in _plane_coeffs(p, 64))}), i + 1)),"
+        f"{', '.join(f'{c}L' for c in _plane_coeffs(p, PLANE_DIM))}), i + 1)),"
         f" 0L, (acc, x) -> acc + x) > 0 THEN 1 ELSE 0 END * {1 << p}"
         for p in range(n_planes)
     )
@@ -177,7 +183,7 @@ def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_planes: int = 6,
+    n_planes: int = N_PLANES,
     probe_all: bool = False,
 ) -> DataFrame:
     """Approximate top-k: probe the query's own hyperplane bucket, plus
@@ -228,7 +234,7 @@ def exact_near_dup_pairs(corpus: DataFrame, threshold: float = 0.9) -> DataFrame
 
 
 def embedding_near_dup_pairs(
-    corpus: DataFrame, threshold: float = 0.9, n_planes: int = 6
+    corpus: DataFrame, threshold: float = 0.9, n_planes: int = N_PLANES
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: bucket by hyperplane signs,
     score only within buckets, keep pairs above threshold. Same

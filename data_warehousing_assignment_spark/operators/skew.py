@@ -21,9 +21,8 @@ def salted_join(
     small: DataFrame,
     on: list[str],
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join a skew-prone ``big`` side to ``small`` with key salting: the
+    """Inner-join a skew-prone ``big`` side to ``small`` with key salting: the
     big side gets a deterministic salt in [0, n_salts) (hash of the whole
     row — spreads even a single hot key across n_salts reducers), the
     small side is replicated n_salts times, and the join key becomes
@@ -40,5 +39,5 @@ def salted_join(
     salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     small_salted = small.withColumn(SALT_COL, salts)
     return big_salted.join(
-        small_salted, on=[*on, SALT_COL], how=how
+        small_salted, on=[*on, SALT_COL], how="inner"
     ).drop(SALT_COL)

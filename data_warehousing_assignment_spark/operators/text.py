@@ -158,14 +158,35 @@ ROLL_BASE = 257
 ROLL_MOD = (1 << 31) - 1
 
 
-def rolling_hash_fingerprint(col: Column | str, k: int = ROLL_K) -> Column:
+def rolling_hash_fingerprint(col: Column | str) -> Column:
     """Rabin-Karp-style document fingerprint: polynomial hash
-    (base 257 mod 2³¹−1) of every k-char window of the lower-cased text,
-    minimized over windows — near-identical documents (differing in a
-    suffix/prefix) still collide on their shared windows' minimum.
+    (base 257 mod 2³¹−1) of every ``ROLL_K``-char window of the
+    lower-cased text, minimized over windows — near-identical documents
+    (differing in a suffix/prefix) still collide on their shared
+    windows' minimum: the min of :func:`winnow_hashes`.
 
     Expressed as nested array folds (O(len·k) integer ops per row,
     row-local, JVM-side). Texts shorter than k hash their full length."""
+    return F.array_min(winnow_hashes(col))
+
+
+WINNOW_W = 4
+
+
+def winnow_hashes(col: Column | str) -> Column:
+    """All k-gram (k = ``ROLL_K``) rolling hashes of the lower-cased
+    text, in position order (``array<bigint>``, one per window start)
+    — stage 1 of winnowing, and the windows
+    :func:`rolling_hash_fingerprint` minimizes over (base 257 mod
+    2³¹−1), O(len·k) row-local integer ops. Texts shorter than k yield
+    one full-length hash.
+
+    MATERIALIZE this column (``.select(... .alias("hs"))``) before
+    passing it to :func:`winnow_select`: embedding this subtree inside
+    the selection lambda makes Catalyst re-evaluate the whole O(len·k)
+    build once per window position — O(len²·k), measured 237 s vs
+    <1 s at sf0.01."""
+    k = ROLL_K
     c = F.lower(F.col(col) if isinstance(col, str) else col)
     n = F.length(c)
     starts = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
@@ -180,45 +201,14 @@ def rolling_hash_fingerprint(col: Column | str, k: int = ROLL_K) -> Column:
             % ROLL_MOD,
         )
 
-    return F.array_min(F.transform(starts, win_hash))
-
-
-WINNOW_W = 4
-
-
-def winnow_hashes(col: Column | str, k: int = ROLL_K) -> Column:
-    """All k-gram rolling hashes of the lower-cased text, in position
-    order (``array<bigint>``, one per window start) — stage 1 of
-    winnowing. Same polynomial hash as
-    :func:`rolling_hash_fingerprint` (base 257 mod 2³¹−1), O(len·k)
-    row-local integer ops. Texts shorter than k yield one full-length
-    hash.
-
-    MATERIALIZE this column (``.select(... .alias("hs"))``) before
-    passing it to :func:`winnow_select`: embedding this subtree inside
-    the selection lambda makes Catalyst re-evaluate the whole O(len·k)
-    build once per window position — O(len²·k), measured 237 s vs
-    <1 s at sf0.01."""
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    n = F.length(c)
-    starts = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
-
-    def win_hash(i: Column) -> Column:
-        positions = F.sequence(i, F.least(i + F.lit(k - 1), n))
-        return F.aggregate(
-            positions,
-            F.lit(0).cast("bigint"),
-            lambda acc, p: (acc * ROLL_BASE + F.ascii(c.substr(p, F.lit(1))))
-            % ROLL_MOD,
-        )
-
     return F.transform(starts, win_hash)
 
 
-def winnow_select(hashes: Column | str, w: int = WINNOW_W) -> Column:
+def winnow_select(hashes: Column | str) -> Column:
     """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS algorithm): slide a w-wide window over the
-    position-ordered hash sequence from :func:`winnow_hashes`, keep
+    SIGMOD'03 — the MOSS algorithm): slide a w-wide (w = ``WINNOW_W``)
+    window over the position-ordered hash sequence from
+    :func:`winnow_hashes`, keep
     each window's MINIMUM, return the DISTINCT selected hashes. The
     guarantee that makes this the standard document-fingerprint
     scheme: any shared substring of length ≥ k + w − 1 yields at least
@@ -231,6 +221,7 @@ def winnow_select(hashes: Column | str, w: int = WINNOW_W) -> Column:
     :func:`winnow_hashes` warning). Row-local, O(len·w), zero
     shuffle; hash sequences shorter than w collapse to their overall
     min — every doc emits ≥ 1 fingerprint."""
+    w = WINNOW_W
     hs = F.col(hashes) if isinstance(hashes, str) else hashes
     nh = F.size(hs)
     sel_starts = F.sequence(F.lit(1), F.greatest(nh - w + 1, F.lit(1)))
@@ -238,7 +229,7 @@ def winnow_select(hashes: Column | str, w: int = WINNOW_W) -> Column:
     return F.array_distinct(mins)
 
 
-def winnow_fps_np(col: Column | str, k: int = ROLL_K, w: int = WINNOW_W) -> Column:
+def winnow_fps_np(col: Column | str) -> Column:
     """Winnowed fingerprints (= ``winnow_select(winnow_hashes(text))``
     up to element order) as ONE Arrow-batched pandas UDF — the measured
     fast path for the winnow family: the HOF formulation evaluates
@@ -265,6 +256,7 @@ def winnow_fps_np(col: Column | str, k: int = ROLL_K, w: int = WINNOW_W) -> Colu
     failure, not silent wrong answers."""
     import numpy as np
 
+    k, w = ROLL_K, WINNOW_W
     c = F.col(col) if isinstance(col, str) else col
 
     @F.pandas_udf("array<long>")
@@ -306,11 +298,11 @@ def winnow_fps_np(col: Column | str, k: int = ROLL_K, w: int = WINNOW_W) -> Colu
     return _fps(c)
 
 
-def doc_fingerprint(col: Column | str, n: int = 3) -> Column:
+def doc_fingerprint(col: Column | str) -> Column:
     """Winnowing-style document fingerprint: the lexicographic-min md5
-    over the document's word n-gram shingles (k=1 min-hash). Identical
+    over the document's word 3-gram shingles (k=1 min-hash). Identical
     and near-identical documents collide; row-local, no shuffle."""
-    sh = word_shingles(tokens(col), n)
+    sh = word_shingles(tokens(col))
     return F.array_min(F.transform(sh, F.md5))
 
 
@@ -336,20 +328,21 @@ def hash_bucket(col: Column | str, salt: str = "") -> Column:
     return hexpos(1) * 16 + hexpos(2)
 
 
-def hash_split(
-    col: Column | str,
-    train_pct: int = 80,
-    val_pct: int = 10,
-    salt: str = "split:",
-) -> Column:
-    """'train' / 'val' / 'test' label from :func:`hash_bucket` — e.g.
-    80/10/10 becomes bucket thresholds 204 / 230 out of 256."""
-    b = hash_bucket(col, salt)
-    t_hi = 256 * train_pct // 100
-    v_hi = 256 * (train_pct + val_pct) // 100
+#: salt of the train/val/test split and its bucket bounds: 80/10/10
+#: of 256 buckets is train below 204, val below 230
+SPLIT_SALT = "split:"
+SPLIT_TRAIN_HI = 256 * 80 // 100
+SPLIT_VAL_HI = 256 * (80 + 10) // 100
+
+
+def hash_split(col: Column | str) -> Column:
+    """'train' / 'val' / 'test' label from :func:`hash_bucket` with
+    ``SPLIT_SALT`` — bucket below ``SPLIT_TRAIN_HI`` is train, below
+    ``SPLIT_VAL_HI`` val, the rest test."""
+    b = hash_bucket(col, SPLIT_SALT)
     return (
-        F.when(b < t_hi, F.lit("train"))
-        .when(b < v_hi, F.lit("val"))
+        F.when(b < SPLIT_TRAIN_HI, F.lit("train"))
+        .when(b < SPLIT_VAL_HI, F.lit("val"))
         .otherwise(F.lit("test"))
     )
 
@@ -400,11 +393,15 @@ def contamination_hits(
     )
 
 
+#: the end-of-word marker BPE appends to every word, so merges never
+#: cross word boundaries
+BPE_EOW = "▁"
+
+
 def learn_bpe_merges(
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int = 8,
-    eow: str = "▁",
 ) -> list[tuple[int, str, str, int]]:
     """Learn a BPE merge table (Sennrich et al. 2016) from a corpus.
 
@@ -440,7 +437,7 @@ def learn_bpe_merges(
     vocab = words.selectExpr(
         "n",
         "concat(transform(sequence(1, length(w)), i -> substr(w, i, 1)),"
-        f" array({sql_str(eow)})) AS syms",
+        f" array({sql_str(BPE_EOW)})) AS syms",
     ).localCheckpoint(eager=False)
 
     merges: list[tuple[int, str, str, int]] = []
@@ -499,12 +496,10 @@ def bpe_apply_counts(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    merges: tuple[tuple[str, str], ...] = BPE_MERGES_V1,
-    eow: str = "▁",
 ) -> DataFrame:
-    """Apply a pre-learned BPE merge table and count resulting tokens
-    per document — the ENCODE path of the tokenizer (the part that runs
-    over all 100 TB; learning ran once, offline).
+    """Apply the pre-learned BPE merge table ``BPE_MERGES_V1`` and count
+    resulting tokens per document — the ENCODE path of the tokenizer
+    (the part that runs over all 100 TB; learning ran once, offline).
 
     Encoding trick that keeps the whole operator a single Column
     expression (zero Python, zero shuffle until the final projection):
@@ -529,8 +524,8 @@ def bpe_apply_counts(
     )
 
     def encoded_len(w: Column) -> Column:
-        s = F.concat(F.regexp_replace(w, "(.)", "($1)"), F.lit(f"({eow})"))
-        for left, right in merges:
+        s = F.concat(F.regexp_replace(w, "(.)", "($1)"), F.lit(f"({BPE_EOW})"))
+        for left, right in BPE_MERGES_V1:
             s = F.replace(
                 s, F.lit(f"({left})({right})"), F.lit(f"({left}{right})")
             )
@@ -554,15 +549,12 @@ def bpe_apply_counts(
     )
 
 
-def bpe_apply_oracle_sql(
-    merges: tuple[tuple[str, str], ...] = BPE_MERGES_V1,
-    eow: str = "▁",
-) -> str:
+def bpe_apply_oracle_sql() -> str:
     """DuckDB twin of :func:`bpe_apply_counts` — same parenthesized
     encoding, same rank-ordered replace chain, composed from the SAME
     merge constant so the two can never drift."""
-    s = f"regexp_replace(w, '(.)', '(\\1)', 'g') || '({eow})'"
-    for left, right in merges:
+    s = f"regexp_replace(w, '(.)', '(\\1)', 'g') || '({BPE_EOW})'"
+    for left, right in BPE_MERGES_V1:
         s = f"replace({s}, '({left})({right})', '({left}{right})')"
     return f"""
     WITH words AS (
@@ -611,15 +603,11 @@ def n_chunks(n_toks: Column, w: int = CHUNK_W, s: int = CHUNK_S) -> Column:
     ).cast("bigint")
 
 
-def chunk_windows(
-    df: DataFrame,
-    text_col: str = "text",
-    w: int = CHUNK_W,
-    s: int = CHUNK_S,
-) -> DataFrame:
-    """Overlapping token-window chunks of each document — the
-    RAG-indexing / training-sequence shape (windows of ``w`` tokens
-    every ``s``, so consecutive chunks share ``w-s`` tokens; the final
+def chunk_windows(df: DataFrame) -> DataFrame:
+    """Overlapping token-window chunks of each document's ``text`` — the
+    RAG-indexing / training-sequence shape (windows of w = ``CHUNK_W``
+    tokens every s = ``CHUNK_S``, so consecutive chunks share ``w-s``
+    tokens; the final
     window is the ragged tail). Row-local: tokenize once, build the
     per-chunk structs with transform(sequence(...)), explode — no
     shuffle at all, and chunk text leaves the row as an md5 digest, so
@@ -632,9 +620,10 @@ def chunk_windows(
     100 TB: embarrassingly parallel per-document work; output rows ≈
     input tokens / s.
     """
-    toks = tokens(text_col)
+    w, s = CHUNK_W, CHUNK_S
+    toks = tokens("text")
     df = (
-        df.filter(F.col(text_col).isNotNull())
+        df.filter(F.col("text").isNotNull())
         .withColumn("_toks", toks)
         .withColumn("_n", F.size("_toks"))
     )

@@ -40,9 +40,8 @@ def point_in_interval_join(
     start_col: str,
     end_col: str,
     bucket: str = "1 month",
-    how: str = "inner",
 ) -> DataFrame:
-    """Join each point p to every interval with ``start <= p < end``
+    """Inner-join each point p to every interval with ``start <= p < end``
     (end-exclusive), via bucket expansion on ``bucket``-wide time
     buckets. Returns points × matching interval rows (all columns of
     both sides).
@@ -62,7 +61,7 @@ def point_in_interval_join(
             )
         ),
     )
-    joined = p.join(iv, on="_bk", how=how).filter(
+    joined = p.join(iv, on="_bk", how="inner").filter(
         (F.col(start_col) <= F.col(point_col))
         & (F.col(point_col) < F.col(end_col))
     )
@@ -144,27 +143,23 @@ def _trunc_unit(bucket: str) -> str:
     return unit
 
 
-def cascade_rollup(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def cascade_rollup(events: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Continuous-aggregate cascade hourly → 6-hourly → daily over an
-    event stream: returns ``(hourly, six_hourly, daily)``, each with
-    ``(bucket, key, n_events, total_value)`` where total_value stays
-    DECIMAL until the caller casts it.
+    event stream ``(ts, event_type, value)``: returns ``(hourly,
+    six_hourly, daily)``, each with ``(bucket, key, n_events,
+    total_value)`` (key = event_type) where total_value stays DECIMAL
+    until the caller casts it.
 
     Only the hourly level scans raw events; each coarser level
     re-aggregates the finer one (COUNT→SUM, SUM→SUM — exact for
     decimals). At 100 TB the raw scan happens once and the cascade cost
     is proportional to the hourly cardinality, not the event count."""
     hourly = events.groupBy(
-        F.date_trunc("hour", F.col(ts_col)).alias("bucket"),
-        F.col(key_col).alias("key"),
+        F.date_trunc("hour", F.col("ts")).alias("bucket"),
+        F.col("event_type").alias("key"),
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(18,2)")).alias("total_value"),
+        F.sum(F.col("value").cast("decimal(18,2)")).alias("total_value"),
     )
 
     def _coarsen(finer: DataFrame, expr: Column) -> DataFrame:
@@ -183,14 +178,10 @@ def cascade_rollup(
     return hourly, six, daily
 
 
-def gapfill_hourly(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_us_col: str = "ts_us",
-    value_col: str = "value",
-) -> DataFrame:
-    """Dense per-user hourly series with gap filling — the TimescaleDB
-    ``time_bucket_gapfill`` + ``locf`` shape, as pure DataFrame ops.
+def gapfill_hourly(events: DataFrame) -> DataFrame:
+    """Dense per-user hourly series of events ``(user_id, ts_us, value)``
+    with gap filling — the TimescaleDB ``time_bucket_gapfill`` +
+    ``locf`` shape, as pure DataFrame ops.
 
     Input needs an exact integer-microsecond epoch column (``ts_us``);
     hours are integer-division buckets so both engines agree exactly.
@@ -208,32 +199,32 @@ def gapfill_hourly(
     corpus with bounded per-user history keeps every partition small."""
     # integer division keeps the bucket exact (double division would
     # round before the cast truncates)
-    hour = F.expr(f"{ts_us_col} div 3600000000").cast("bigint")
+    hour = F.expr("ts_us div 3600000000").cast("bigint")
     hourly = events.groupBy(
-        F.col(user_col), hour.alias("hour_id")
+        F.col("user_id"), hour.alias("hour_id")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(18,2)"))
+        F.sum(F.col("value").cast("decimal(18,2)"))
         .cast("double")
         .alias("hour_value"),
     )
     spine = (
-        hourly.groupBy(user_col)
+        hourly.groupBy("user_id")
         .agg(F.min("hour_id").alias("_lo"), F.max("hour_id").alias("_hi"))
         .select(
-            user_col,
+            "user_id",
             F.explode(F.sequence(F.col("_lo"), F.col("_hi"))).alias("hour_id"),
         )
     )
     w = (
-        Window.partitionBy(user_col)
+        Window.partitionBy("user_id")
         .orderBy("hour_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        spine.join(hourly, [user_col, "hour_id"], "left")
+        spine.join(hourly, ["user_id", "hour_id"], "left")
         .select(
-            user_col,
+            "user_id",
             "hour_id",
             F.coalesce("n_events", F.lit(0)).cast("bigint").alias("n_events"),
             F.coalesce("hour_value", F.lit(0.0)).alias("hour_value"),

@@ -77,15 +77,14 @@ def snapshot_fact(
     dim_current: DataFrame,
     time_dim: DataFrame,
     snapshot_date,
-    date_col: str = "full_date",
 ) -> DataFrame:
     """Daily snapshot fact (ref ``A3_load_dim_emp.sql:85-95``): current dim
-    rows × the single time row for the snapshot date. The 1-row time side
-    broadcasts — the dim never shuffles.
+    rows × the single time row whose ``full_date`` is the snapshot date.
+    The 1-row time side broadcasts — the dim never shuffles.
 
     Note reference quirk Q4: the reference's snapshot has NO dedup guard
     (re-running same-day double-inserts); callers here pair this with
     incremental_fact_insert for idempotency.
     """
-    today_row = time_dim.filter(F.col(date_col) == F.lit(snapshot_date))
+    today_row = time_dim.filter(F.col("full_date") == F.lit(snapshot_date))
     return dim_current.crossJoin(F.broadcast(today_row))

@@ -202,12 +202,12 @@ def merge_into(
     source: DataFrame,
     key: str,
     attrs: Sequence[str],
-    op_col: str = "op",
 ) -> DataFrame:
     """Generic MERGE INTO (ANSI / Delta ``MERGE`` semantics), expressed
     as ONE full-outer join — the set-based re-expression of the
     reference's UPDATE-then-INSERT pair (ref A3_load_dim_emp.sql:42-62)
-    and the upgrade path documented in plans/scd2.py for Delta/Iceberg:
+    and the upgrade path documented in plans/scd2.py for Delta/Iceberg.
+    The source's ``op`` column says what each change is:
 
     * WHEN MATCHED AND s.op = 'D'  → DELETE
     * WHEN MATCHED (op = 'U'/'I')  → UPDATE SET attrs = source attrs
@@ -219,22 +219,21 @@ def merge_into(
     key; at scale Delta/Iceberg add file-pruning on top of exactly this
     join, so the plan shape is the portable core.
     """
-    src = source.select(
-        F.col(key).alias("_sk"),
-        F.col(op_col).alias("_sop"),
-        *[F.col(a).alias(f"_s_{a}") for a in attrs],
+    src = source.selectExpr(
+        f"`{key}` AS _sk", "op AS _sop", *(f"`{a}` AS `_s_{a}`" for a in attrs)
     )
     tgt = target.select(key, *attrs)
-    joined = tgt.join(src, tgt[key] == src["_sk"], "full_outer")
-    keep = ~(
-        F.col("_sk").isNotNull()
-        & (F.col("_sop") == "D")
-    ) & ~(F.col(key).isNull() & (F.col("_sop") == "D"))
-    take_src = F.col("_sk").isNotNull()
-    return joined.filter(keep).select(
-        F.coalesce(F.col(key), F.col("_sk")).alias(key),
-        *[
-            F.when(take_src, F.col(f"_s_{a}")).otherwise(F.col(a)).alias(a)
-            for a in attrs
-        ],
+    return (
+        tgt.join(src, F.expr(f"`{key}` = _sk"), "full_outer")
+        .where(
+            "NOT (_sk IS NOT NULL AND _sop = 'D')"
+            f" AND NOT (`{key}` IS NULL AND _sop = 'D')"
+        )
+        .selectExpr(
+            f"coalesce(`{key}`, _sk) AS `{key}`",
+            *(
+                f"CASE WHEN _sk IS NOT NULL THEN `_s_{a}` ELSE `{a}` END AS `{a}`"
+                for a in attrs
+            ),
+        )
     )

@@ -127,21 +127,11 @@ def rewrite(root: str, df: DataFrame, version: int) -> str:
 
 
 def compact(spark: SparkSession, root: str, version: int) -> str:
-    """Rewrite commit: materialize the current snapshot into ONE new
-    file and log remove actions for every file it supersedes — the
-    OPTIMIZE step that makes files eligible for vacuum (and the point
-    where op-ext-compaction-plan's grouping would drive WHICH files
-    co-rewrite at scale)."""
-    superseded = live_files(root, latest_version(root))
-    snap = read_snapshot(spark, root)
-    compacted = os.path.join(root, f"compact_v{version}")
-    snap.write.mode("overwrite").parquet(compacted)
-    _append(
-        root,
-        [{"version": version, "path": p, "action": "remove"} for p in superseded]
-        + [{"version": version, "path": compacted, "action": "add"}],
-    )
-    return compacted
+    """Rewrite the current snapshot into ONE new file (:func:`rewrite`),
+    superseding every live file — the OPTIMIZE step that makes files
+    eligible for vacuum (and the point where op-ext-compaction-plan's
+    grouping would drive WHICH files co-rewrite at scale)."""
+    return rewrite(root, read_snapshot(spark, root), version)
 
 
 def vacuum(root: str, retain_from_version: int) -> list[str]:

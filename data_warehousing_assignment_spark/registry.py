@@ -115,13 +115,18 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def dec(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
+#: the exact decimal every money/measure sum runs in, engine side (dec)
+#: and oracle side (the o_* fragments)
+MONEY_DECIMAL = "DECIMAL(18,2)"
+
+
+def dec(col: Column | str) -> Column:
     """Exact-decimal view of a 2-dp money/measure double (inputs verified
     2-dp clean, TESTDATA.md tables). Precision 18 leaves ~16 integer digits
     of headroom so SUMs never overflow even at sf100 (Spark widens sum of
     decimal(18,2) to decimal(28,2))."""
     c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({precision},{scale})")
+    return c.cast(MONEY_DECIMAL)
 
 
 def _price_cents() -> Column:
@@ -134,14 +139,14 @@ def _ds(col) -> Column:
     return F.date_format(col, "yyyy-MM-dd")
 
 
-def dsum(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
+def dsum(col: Column | str) -> Column:
     """Order-independent exact sum of a 2-dp double, surfaced as DOUBLE."""
-    return F.sum(dec(col, precision, scale)).cast("double")
+    return F.sum(dec(col)).cast("double")
 
 
-def davg(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
+def davg(col: Column | str) -> Column:
     """Deterministic average: exact decimal sum → double, one IEEE divide."""
-    return F.sum(dec(col, precision, scale)).cast("double") / F.count(F.lit(1))
+    return F.sum(dec(col)).cast("double") / F.count(F.lit(1))
 
 
 #: ROUND(mean, 2) computed entirely in exact int64 cents — engines round
@@ -154,10 +159,10 @@ ROUND2_MEAN_EXPR = (
 )
 
 
-def sum_cents(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
+def sum_cents(col: Column | str) -> Column:
     """Exact integer-cents sum of a 2-dp measure (pairs with
     ROUND2_MEAN_EXPR): decimal-exact, cast to bigint losslessly."""
-    return (F.sum(dec(col, precision, scale)) * 100).cast("bigint")
+    return (F.sum(dec(col)) * 100).cast("bigint")
 
 
 def o_round2_mean(p: str, c: str) -> str:
@@ -167,24 +172,24 @@ def o_round2_mean(p: str, c: str) -> str:
     )
 
 
-def o_sum_cents(col: str, precision: int = 18, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({col} AS DECIMAL({precision},{scale}))) * 100 AS BIGINT)"
+def o_sum_cents(col: str) -> str:
+    return f"CAST(SUM(CAST({col} AS {MONEY_DECIMAL})) * 100 AS BIGINT)"
 
 
 #: SQL text of _price_cents (row-local, exact in both engines)
-_CENTS = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+_CENTS = f"CAST(CAST(l_extendedprice AS {MONEY_DECIMAL}) * 100 AS BIGINT)"
 
 #: DuckDB twin of operators.text.tokens()
 _TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 
 
 # Oracle-side fragments mirroring dsum/davg, f-string-able into SQL:
-def o_dsum(col: str, precision: int = 18, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({col} AS DECIMAL({precision},{scale}))) AS DOUBLE)"
+def o_dsum(col: str) -> str:
+    return f"CAST(SUM(CAST({col} AS {MONEY_DECIMAL})) AS DOUBLE)"
 
 
-def o_davg(col: str, precision: int = 18, scale: int = 2) -> str:
-    return f"(CAST(SUM(CAST({col} AS DECIMAL({precision},{scale}))) AS DOUBLE) / COUNT(*))"
+def o_davg(col: str) -> str:
+    return f"(CAST(SUM(CAST({col} AS {MONEY_DECIMAL})) AS DOUBLE) / COUNT(*))"
 
 
 def import_all_registries() -> None:

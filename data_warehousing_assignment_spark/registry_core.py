@@ -43,6 +43,7 @@ from data_warehousing_assignment_spark.functions.cleaning import (
     whitelist,
 )
 from data_warehousing_assignment_spark.functions.dates import date_safe_dispatch
+from data_warehousing_assignment_spark.operators import analytics as an
 from data_warehousing_assignment_spark.plans.kpi import _month_key, _month_label
 from data_warehousing_assignment_spark.operators.joins import (
     anti_join,
@@ -720,18 +721,19 @@ def op_win_rownumber_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def op_win_rownumber_unordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fallback TEMP_<n> ids for missing natural keys (ref
     stg_hr_employee.sql:42). Ordered by the stable doc_id so numbering is
-    deterministic — never ``row_number() over ()`` on an unstable order."""
-    docs = t(spark, sf_dir, "documents")
-    raw = F.when(F.col("doc_id") % 7 == 0, F.lit("")).otherwise(
-        F.concat(F.lit("DOC_"), F.col("doc_id").cast("string"))
-    )
-    rn = F.row_number().over(Window.orderBy("doc_id"))
-    return docs.select(
+    deterministic — never ``row_number() over ()`` on an unstable order.
+    doc_id is unique, so its inclusive running count is its row number:
+    the distributed prefix sum numbers the rows without a single-task
+    window over every document."""
+    docs = t(spark, sf_dir, "documents").selectExpr("doc_id", "1 AS _one")
+    return an.distributed_prefix(docs, "doc_id", ["_one"]).selectExpr(
         "doc_id",
-        F.coalesce(
-            F.nullif(raw, F.lit("")),
-            F.concat(F.lit("TEMP_"), rn.cast("string")),
-        ).alias("doc_key"),
+        "coalesce(nullif(CASE WHEN doc_id % 7 = 0 THEN ''"
+        " ELSE concat('DOC_', CAST(doc_id AS STRING)) END, ''),"
+        " concat('TEMP_', CAST(cum__one AS STRING)),"
+        # never reached (the count is never NULL); keeps doc_key
+        # non-nullable, as row_number's numbering made it
+        " '') AS doc_key",
     )
 
 

@@ -410,7 +410,7 @@ def op_ext_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.brute_force_cosine_topk(emb, queries, k=5)
 
 
-def _planes_sql(n_planes: int = 6, dim: int = 64) -> str:
+def _planes_sql() -> str:
     """The hyperplane coefficient table as literal VALUES rows — the
     SAME integers Spark uses (similarity._plane_coeffs is md5-derived
     and computed driver-side), so DuckDB can replay sign-bucketing
@@ -420,7 +420,8 @@ def _planes_sql(n_planes: int = 6, dim: int = 64) -> str:
     )
 
     rows = ", ".join(
-        f"({p}, {list(_plane_coeffs(p, dim))})" for p in range(n_planes)
+        f"({p}, {list(_plane_coeffs(p, sim.PLANE_DIM))})"
+        for p in range(sim.N_PLANES)
     )
     return f"(VALUES {rows}) planes(p, h)"
 
@@ -1088,11 +1089,11 @@ def op_ext_ann_ivf_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: them. The {n} / {q} placeholders are SQL expressions for the corpus
 #: and query counts (BIGINT).
 IVF_KK_EXPR = (
-    "GREATEST(CAST(16 AS BIGINT), LEAST("
+    f"GREATEST(CAST({iv.MIN_CELLS} AS BIGINT), LEAST("
     " CAST(FLOOR(SQRT(GREATEST(CAST(1 AS DOUBLE),"
     " CAST({q} * 4 * {n} AS DOUBLE)"
-    " / CAST(3 * {n} + {q} AS DOUBLE)))) AS BIGINT),"
-    " GREATEST(CAST(16 AS BIGINT), {n} // 8)))"
+    f" / CAST({iv.BUILD_PASSES} * {{n}} + {{q}} AS DOUBLE)))) AS BIGINT),"
+    f" GREATEST(CAST({iv.MIN_CELLS} AS BIGINT), {{n}} // 8)))"
 )
 
 
@@ -1436,7 +1437,8 @@ def op_ext_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rolling_oracle(k: int = tx.ROLL_K) -> str:
+def _rolling_oracle() -> str:
+    k = tx.ROLL_K
     return f"""
     SELECT doc_id,
            list_min(list_transform(
@@ -1461,11 +1463,12 @@ def op_ext_fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winnow_fps_cte(k: int = tx.ROLL_K, w: int = tx.WINNOW_W) -> str:
+def _winnow_fps_cte() -> str:
     """DuckDB replay of the two winnowing stages: ``m(doc_id, fps)``
     holds the distinct window-min fingerprints per document — shared
     by the per-doc summary (op-ext-winnow) and the copy-detection
     posting join (op-ext-winnow-neardup)."""
+    k, w = tx.ROLL_K, tx.WINNOW_W
     return f"""
     h AS (
       SELECT doc_id, list_transform(
@@ -1487,9 +1490,9 @@ def _winnow_fps_cte(k: int = tx.ROLL_K, w: int = tx.WINNOW_W) -> str:
     )"""
 
 
-def _winnow_oracle(k: int = tx.ROLL_K, w: int = tx.WINNOW_W) -> str:
+def _winnow_oracle() -> str:
     return f"""
-    WITH {_winnow_fps_cte(k, w)}
+    WITH {_winnow_fps_cte()}
     SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fp,
            CAST(list_min(fps) AS BIGINT) AS fp_min,
            CAST(list_reduce(fps, (a, b) -> xor(a, b)) AS BIGINT) AS fp_xor
@@ -2141,12 +2144,15 @@ def _bucket_sql(key: str, salt: str) -> str:
     )
 
 
+_SPLIT_BUCKET = _bucket_sql("doc_id", tx.SPLIT_SALT)
+
+
 @query(
     "op-ext-hash-split",
     oracle=f"""
-    SELECT doc_id, CAST({_bucket_sql('doc_id', 'split:')} AS BIGINT) AS bucket,
-           CASE WHEN {_bucket_sql('doc_id', 'split:')} < 204 THEN 'train'
-                WHEN {_bucket_sql('doc_id', 'split:')} < 230 THEN 'val'
+    SELECT doc_id, CAST({_SPLIT_BUCKET} AS BIGINT) AS bucket,
+           CASE WHEN {_SPLIT_BUCKET} < {tx.SPLIT_TRAIN_HI} THEN 'train'
+                WHEN {_SPLIT_BUCKET} < {tx.SPLIT_VAL_HI} THEN 'val'
                 ELSE 'test' END AS split
     FROM documents
     """,
@@ -2159,7 +2165,7 @@ def op_ext_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Row-local, zero shuffle."""
     return t(spark, sf_dir, "documents").select(
         "doc_id",
-        tx.hash_bucket("doc_id", "split:").cast("bigint").alias("bucket"),
+        tx.hash_bucket("doc_id", tx.SPLIT_SALT).cast("bigint").alias("bucket"),
         tx.hash_split("doc_id").alias("split"),
     )
 

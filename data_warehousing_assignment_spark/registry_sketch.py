@@ -1342,7 +1342,11 @@ def op_ext_item_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _kcore_oracle(k: int = 3, rounds: int = 8) -> str:
+#: the k of op-ext-kcore, shared by its engine build and its oracle
+_KCORE_K = 3
+
+
+def _kcore_oracle() -> str:
     """Bounded-unroll DuckDB twin of the k-core peel: round i+1 keeps
     edges whose BOTH endpoints have induced degree ≥ k in round i's
     edge set. A shrinking fixpoint fits no recursive CTE (UNION ALL
@@ -1359,6 +1363,7 @@ def _kcore_oracle(k: int = 3, rounds: int = 8) -> str:
     # so inlining would expand e0 3^rounds times (observed as DuckDB
     # opening the parquet until fd exhaustion); materialization makes
     # the cascade linear — exactly like the Spark loop's localCheckpoint
+    k, rounds = _KCORE_K, 8
     parts = ["""e0 AS MATERIALIZED (
       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
       FROM lineitem a JOIN lineitem b
@@ -1402,7 +1407,7 @@ def op_ext_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     edges = part_copurchase_edges(li)
-    return k_core(edges, k=3).select(
+    return k_core(edges, k=_KCORE_K).select(
         F.col("n").alias("part_key"), F.col("d").alias("core_degree")
     )
 

@@ -400,6 +400,30 @@ def op_ext_datavault_sat(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _merge_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(o_orderkey, o_orderstatus, total_cents)`` of every order."""
+    return t(spark, sf_dir, "orders").selectExpr(
+        "o_orderkey", "o_orderstatus", f"{_OTOT} AS total_cents"
+    )
+
+
+def _merge_batch(base: DataFrame) -> DataFrame:
+    """The MERGE change batch over :func:`_merge_base` rows, with its
+    ``op``: even %10 keys update (+100 cents), the other even %14 keys
+    delete, odd %5 keys insert."""
+    return base.where(
+        "(o_orderkey % 2 = 0 AND (o_orderkey % 10 = 0 OR o_orderkey % 14 = 0))"
+        " OR (o_orderkey % 2 = 1 AND o_orderkey % 5 = 0)"
+    ).selectExpr(
+        "o_orderkey",
+        "o_orderstatus",
+        "IF(o_orderkey % 2 = 0 AND o_orderkey % 10 = 0, total_cents + 100, total_cents)"
+        " AS total_cents",
+        "CASE WHEN o_orderkey % 2 = 1 THEN 'I'"
+        " WHEN o_orderkey % 10 = 0 THEN 'U' ELSE 'D' END AS op",
+    )
+
+
 @query(
     "op-ext-merge-into",
     oracle=f"""
@@ -426,27 +450,12 @@ def op_ext_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     %5 keys. One full-outer shuffle join — the portable core that
     Delta/Iceberg wrap with file pruning (plans/scd2.py upgrade note);
     composes with op-ext-cdc-apply for raw change streams."""
-    base = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.expr(_OTOT).alias("total_cents"),
-    )
-    target = base.filter(F.col("o_orderkey") % 2 == 0)
-    k = F.col("o_orderkey")
-    upd = (
-        base.filter((k % 2 == 0) & (k % 10 == 0))
-        .withColumn("total_cents", F.col("total_cents") + F.lit(100))
-        .withColumn("op", F.lit("U"))
-    )
-    dele = base.filter(
-        (k % 2 == 0) & (k % 14 == 0) & (k % 10 != 0)
-    ).withColumn("op", F.lit("D"))
-    ins = base.filter((k % 2 == 1) & (k % 5 == 0)).withColumn(
-        "op", F.lit("I")
-    )
-    source = upd.unionByName(dele).unionByName(ins)
+    base = _merge_base(spark, sf_dir)
     return merge_into(
-        target, source, "o_orderkey", ["o_orderstatus", "total_cents"]
+        base.where("o_orderkey % 2 = 0"),
+        _merge_batch(base),
+        "o_orderkey",
+        ["o_orderstatus", "total_cents"],
     )
 
 
@@ -593,61 +602,41 @@ def op_ext_merge_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehousing_assignment_spark.registry_io import _scratch
 
     root = _scratch("op-ext-merge-txlog")
-    base = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.expr(_OTOT).alias("total_cents"),
-    )
-    k = F.col("o_orderkey")
-    txlog.commit(root, base.filter(k % 2 == 0), 1)
+    base = _merge_base(spark, sf_dir)
+    txlog.commit(root, base.where("o_orderkey % 2 = 0"), 1)
 
-    snap1 = txlog.read_snapshot(spark, root, 1)
-    upd = (
-        base.filter((k % 2 == 0) & (k % 10 == 0))
-        .withColumn("total_cents", F.col("total_cents") + F.lit(100))
-        .withColumn("op", F.lit("U"))
-    )
-    dele = base.filter(
-        (k % 2 == 0) & (k % 14 == 0) & (k % 10 != 0)
-    ).withColumn("op", F.lit("D"))
-    ins = base.filter((k % 2 == 1) & (k % 5 == 0)).withColumn(
-        "op", F.lit("I")
-    )
     merged = merge_into(
-        snap1,
-        upd.unionByName(dele).unionByName(ins),
+        txlog.read_snapshot(spark, root, 1),
+        _merge_batch(base),
         "o_orderkey",
         ["o_orderstatus", "total_cents"],
     )
     audit_bad = (
-        (F.col("total_cents") <= 0)
-        | (~F.col("o_orderstatus").isin("O", "F", "P"))
-        | F.col("o_orderkey").isNull()
+        "total_cents <= 0 OR NOT (o_orderstatus IN ('O', 'F', 'P'))"
+        " OR o_orderkey IS NULL"
     )
-    if merged.filter(audit_bad).count() == 0:  # WAP gate: clean → publish
+    if merged.where(audit_bad).count() == 0:  # WAP gate: clean → publish
         txlog.rewrite(root, merged, 2)
 
     snap2 = txlog.read_snapshot(spark, root)
-    poison = (
-        snap2.filter(k % 100 == 0)
-        .withColumn("total_cents", -F.col("total_cents"))
-        .withColumn("op", F.lit("U"))
+    poison = snap2.where("o_orderkey % 100 = 0").selectExpr(
+        "o_orderkey", "o_orderstatus", "-total_cents AS total_cents", "'U' AS op"
     )
     candidate = merge_into(
         snap2, poison, "o_orderkey", ["o_orderstatus", "total_cents"]
     )
-    if candidate.filter(audit_bad).count() == 0:  # fails: never commits
+    if candidate.where(audit_bad).count() == 0:  # fails: never commits
         txlog.rewrite(root, candidate, 3)
 
     latest = txlog.latest_version(root)
 
     def vrow(df: DataFrame, version: int, published: bool) -> DataFrame:
-        return df.agg(
-            F.lit(version).cast("bigint").alias("version"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("total_cents").cast("bigint").alias("sum_cents"),
-            F.lit(published).alias("published"),
-            F.lit(latest == version).alias("is_latest"),
+        return df.selectExpr(
+            f"CAST({version} AS BIGINT) AS version",
+            "count(1) AS n_rows",
+            "CAST(sum(total_cents) AS BIGINT) AS sum_cents",
+            f"{published} AS published",
+            f"{latest == version} AS is_latest",
         )
 
     return (

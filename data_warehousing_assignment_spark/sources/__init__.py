@@ -2,11 +2,7 @@
 
 from data_warehousing_assignment_spark.sources.readers import (
     TESTDATA_TABLES,
-    load_table,
-    load_tables,
     read_csv,
-    read_json,
-    register_views,
 )
 from data_warehousing_assignment_spark.sources.writers import (
     create_view,
@@ -15,11 +11,7 @@ from data_warehousing_assignment_spark.sources.writers import (
 
 __all__ = [
     "TESTDATA_TABLES",
-    "load_table",
-    "load_tables",
     "read_csv",
-    "read_json",
-    "register_views",
     "create_view",
     "write_table",
 ]

@@ -4,7 +4,7 @@ Reference capability: schema-on-read file scans — ``pd.read_excel`` (ref
 ``02_Extract_and_transform_raw_data/A2_hr_etl.py:14``) and dbt CSV seeds
 (``05_dbt_implementation/dbt_warehouse_project/dbt_project.yml:56-58``).
 OSS Spark has no xlsx reader, so the ingestion surface here is
-parquet/CSV/JSON; the *capability* (header-driven schema-on-read scan into a
+parquet/CSV; the *capability* (header-driven schema-on-read scan into a
 relational frame) is the same.
 
 Scale notes: `spark.read.parquet` gives splittable columnar scans with
@@ -16,7 +16,6 @@ schema in production (inference over 100 TB is a full read).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 # Driver-generated synthetic tables (TESTDATA.md) — the engine's test inputs.
 TESTDATA_TABLES = (
@@ -33,49 +32,20 @@ TESTDATA_TABLES = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """op-scan: columnar parquet scan of one testdata table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    names = names or TESTDATA_TABLES
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register testdata tables as temp views for `spark.sql` queries
-    (the Spark equivalent of the reference's Postgres schemas /
-    dbt ``source()`` resolution)."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,
-    schema: StructType | None = None,
     header: bool = True,
     **options: str,
 ) -> DataFrame:
     """op-scan-csv-seed: header-driven CSV scan (dbt seed equivalent).
 
-    Without an explicit schema all columns arrive as strings — matching the
-    reference's TEXT-heavy staging tables (ref ``01_DW_schema_and_roles_
-    creation/combined_dw_schema.sql:152-161``); cleaning casts them later.
+    Unless an ``inferSchema`` option says otherwise, all columns arrive as
+    strings — matching the reference's TEXT-heavy staging tables (ref
+    ``01_DW_schema_and_roles_creation/combined_dw_schema.sql:152-161``);
+    cleaning casts them later.
     """
     reader = spark.read.option("header", str(header).lower())
     for k, v in options.items():
         reader = reader.option(k, v)
-    if schema is not None:
-        reader = reader.schema(schema)
     return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """JSON-lines scan (extension surface; the reference has no JSON inputs,
-    but `events.props` is JSON-typed and a 100 TB pipeline ingests JSONL)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)

@@ -30,11 +30,10 @@ def write_table(
     path: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    fmt: str = "parquet",
 ) -> None:
-    """Path-based table sink. ``partition_by`` enables partition pruning on
-    later incremental reads — mandatory for facts at scale."""
-    writer = df.write.mode(mode).format(fmt)
+    """Path-based parquet table sink. ``partition_by`` enables partition
+    pruning on later incremental reads — mandatory for facts at scale."""
+    writer = df.write.mode(mode).format("parquet")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)

@@ -156,13 +156,13 @@ def read_xlsx_rows(
 def read_excel(
     spark: SparkSession,
     path: str,
-    sheet: str | None = None,
     schema: StructType | None = None,
 ) -> DataFrame:
-    """op-scan-excel: xlsx → DataFrame. Cells arrive as strings (the
+    """op-scan-excel: xlsx → DataFrame of the workbook's first sheet.
+    Cells arrive as strings (the
     reference's TEXT-heavy staging contract — cleaning casts them later);
     pass ``schema`` to cast columns immediately. Blank cells → NULL."""
-    header, rows = read_xlsx_rows(path, sheet)
+    header, rows = read_xlsx_rows(path)
     str_rows = [
         [None if v is None else str(v) for v in row] for row in rows
     ]

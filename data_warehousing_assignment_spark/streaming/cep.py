@@ -79,17 +79,17 @@ def advance_dfa(armed: int, n_conv: int, initials) -> tuple[int, int]:
     return armed, n_conv
 
 
-def _update(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    armed, n_events, n_conv, last_ts, n_late = (
-        state.get if state.exists else (0, 0, 0, None, 0)
-    )
-    pdfs = [p for p in batches if len(p)]
-    if pdfs:
-        pdf = pd.concat(pdfs).sort_values(["ts_us", "event_id"])
+#: state of a user with no events yet: (armed, n_events, n_conversions,
+#: last_ts_us, n_late)
+_INITIAL = (0, 0, 0, None, 0)
+
+
+def _step(state: tuple, pdf: pd.DataFrame) -> tuple[tuple, tuple[int, int, int]]:
+    """One batch ``pdf`` of a user's events applied to its ``state``:
+    the new state and the row ``(n_events, n_conversions, n_late)``."""
+    armed, n_events, n_conv, last_ts, n_late = state
+    if len(pdf):
+        pdf = pdf.sort_values(["ts_us", "event_id"])
         # Ordering-contract check: an event below the previous batch's
         # high-watermark arrived out of order — the DFA has already
         # consumed later events, so this event's effect on
@@ -98,25 +98,27 @@ def _update(
         if last_ts is not None:
             n_late += int((pdf["ts_us"] < last_ts).sum())
         batch_max = pdf["ts_us"].max()
-        if batch_max is not None and not pd.isna(batch_max):
+        if not pd.isna(batch_max):
             last_ts = (
                 int(batch_max)
                 if last_ts is None
                 else max(int(last_ts), int(batch_max))
             )
-        initials = _initials(pdf)
         n_events += len(pdf)
-        armed, n_conv = advance_dfa(armed, n_conv, initials)
-    state.update(
-        (
-            int(armed),
-            int(n_events),
-            int(n_conv),
-            None if last_ts is None else int(last_ts),
-            int(n_late),
-        )
+        armed, n_conv = advance_dfa(armed, n_conv, _initials(pdf))
+    state = (
+        int(armed),
+        int(n_events),
+        int(n_conv),
+        None if last_ts is None else int(last_ts),
+        int(n_late),
     )
-    yield pd.DataFrame(
+    return state, (n_events, n_conv, n_late)
+
+
+def _frame(key: tuple[Any, ...], row: tuple[int, int, int]) -> pd.DataFrame:
+    n_events, n_conv, n_late = row
+    return pd.DataFrame(
         {
             "user_id": [key[0]],
             "n_events": [n_events],
@@ -124,6 +126,17 @@ def _update(
             "n_late": [n_late],
         }
     )
+
+
+def _update(
+    key: tuple[Any, ...],
+    batches: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    prior = state.get if state.exists else _INITIAL
+    new, row = _step(prior, pd.concat(list(batches)))
+    state.update(new)
+    yield _frame(key, row)
 
 
 def _initials(pdf: pd.DataFrame) -> list[str]:
@@ -135,16 +148,9 @@ def _initials(pdf: pd.DataFrame) -> list[str]:
 
 
 def _single_batch(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values(["ts_us", "event_id"])
-    armed, n_conv = advance_dfa(0, 0, _initials(pdf))
-    return pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [len(pdf)],
-            "n_conversions": [n_conv],
-            "n_late": [0],  # one fully-sorted batch: nothing can be late
-        }
-    )
+    """Static twin of _update: one group = one fully-sorted batch from
+    the initial state, so nothing can be late."""
+    return _frame(key, _step(_INITIAL, pdf)[1])
 
 
 def conversion_cep(events: DataFrame) -> DataFrame:

@@ -17,11 +17,10 @@ from pyspark.sql import DataFrame
 def dedup_events(
     df: DataFrame,
     keys: list[str],
-    ts_col: str = "ts",
     horizon: str = "30 minutes",
 ) -> DataFrame:
     """Keep the first arrival per key; on a stream, duplicates are only
-    tracked within `horizon` of event time (bounded state)."""
+    tracked within `horizon` of event time ``ts`` (bounded state)."""
     if df.isStreaming:
-        return df.withWatermark(ts_col, horizon).dropDuplicatesWithinWatermark(keys)
+        return df.withWatermark("ts", horizon).dropDuplicatesWithinWatermark(keys)
     return df.dropDuplicates(keys)

@@ -18,11 +18,42 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+#: how late an event may arrive on either stream, and the default
+#: conversion horizon
+WATERMARK = "15 minutes"
+HORIZON = "1 hour"
+
+
+def _interval_join(views: DataFrame, purchases: DataFrame, horizon: str, how: str):
+    """views(event_id, user_id, ts) joined ``how`` to the same user's
+    purchases(event_id, user_id, value, ts) with purchase_ts in
+    [view_ts, view_ts + horizon]; streaming sides carry ``WATERMARK``."""
+    v = views.select(
+        F.col("event_id").alias("view_id"),
+        F.col("user_id"),
+        F.col("ts").alias("view_ts"),
+    )
+    p = purchases.select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user_id"),
+        F.col("value").alias("purchase_value"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    if v.isStreaming:
+        v = v.withWatermark("view_ts", WATERMARK)
+    if p.isStreaming:
+        p = p.withWatermark("purchase_ts", WATERMARK)
+
+    cond = (
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") >= F.col("view_ts"))
+        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {horizon}"))
+    )
+    return v.join(p, on=cond, how=how)
+
+
 def view_purchase_conversions(
-    views: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "1 hour",
-    watermark: str = "15 minutes",
+    views: DataFrame, purchases: DataFrame, horizon: str = HORIZON
 ) -> DataFrame:
     """Inner interval join: (view, purchase) pairs of the same user with
     purchase_ts in [view_ts, view_ts + horizon].
@@ -30,49 +61,20 @@ def view_purchase_conversions(
     Expected columns: views(event_id, user_id, ts), purchases(event_id,
     user_id, value, ts). Output aliases both event ids and the delay in
     seconds (integer — engine-neutral)."""
-    v = views.select(
-        F.col("event_id").alias("view_id"),
-        F.col("user_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    p = purchases.select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("value").alias("purchase_value"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    if v.isStreaming:
-        v = v.withWatermark("view_ts", watermark)
-    if p.isStreaming:
-        p = p.withWatermark("purchase_ts", watermark)
-
-    cond = (
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    return (
-        v.join(p, on=cond, how="inner")
-        .select(
-            "view_id",
-            "purchase_id",
-            "user_id",
-            "purchase_value",
-            (F.unix_timestamp("purchase_ts") - F.unix_timestamp("view_ts"))
-            .cast("bigint")
-            .alias("delay_sec"),
-        )
+    return _interval_join(views, purchases, horizon, "inner").select(
+        "view_id",
+        "purchase_id",
+        "user_id",
+        "purchase_value",
+        (F.unix_timestamp("purchase_ts") - F.unix_timestamp("view_ts"))
+        .cast("bigint")
+        .alias("delay_sec"),
     )
 
 
-def view_conversion_outcomes(
-    views: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "1 hour",
-    watermark: str = "15 minutes",
-) -> DataFrame:
+def view_conversion_outcomes(views: DataFrame, purchases: DataFrame) -> DataFrame:
     """LEFT-OUTER interval join: every view, with its converting
-    purchase(s) or NULLs when none arrived within the horizon — the
+    purchase(s) or NULLs when none arrived within ``HORIZON`` — the
     funnel-outcome variant of :func:`view_purchase_conversions`.
 
     Streaming semantics: Spark emits the NULL-padded row only once the
@@ -80,28 +82,7 @@ def view_conversion_outcomes(
     matching purchase can still arrive), so outer results trail the
     watermark — the same builder runs batch, where the oracle checks it
     exactly."""
-    v = views.select(
-        F.col("event_id").alias("view_id"),
-        F.col("user_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    p = purchases.select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("value").alias("purchase_value"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    if v.isStreaming:
-        v = v.withWatermark("view_ts", watermark)
-    if p.isStreaming:
-        p = p.withWatermark("purchase_ts", watermark)
-
-    cond = (
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    return v.join(p, on=cond, how="left").select(
+    return _interval_join(views, purchases, HORIZON, "left").select(
         "view_id",
         "user_id",
         F.col("purchase_id").cast("bigint").alias("purchase_id"),

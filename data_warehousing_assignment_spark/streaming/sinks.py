@@ -2,18 +2,16 @@
 
 The production pattern for feeding a warehouse from a stream: each
 micro-batch runs the SAME incremental-insert plan the batch loader uses
-(``plans/facts.incremental_fact_insert`` — full-row anti-join dedup with
-a date/partition prune), so replays, overlapping batches, and at-least-
-once sources all collapse to exactly-once fact contents. This is the
-streaming twin of the reference's NOT-EXISTS loader (ref
-``B3_load_fin_facts.sql:84-94``) — which, being batch-only, re-ran the
-full dedup scan per load; here the prune keeps each micro-batch's
-anti-join bounded by its own time window.
-
-At 100 TB: the fact is written date-partitioned (writers.write_table
-partition_by), so the per-batch existing-side scan prunes to the touched
-partitions; checkpointing makes the foreachBatch idempotence a second
-line of defense rather than the only one."""
+(``plans/facts.incremental_fact_insert`` — full-row anti-join dedup),
+so replays, overlapping batches, and at-least-once sources all collapse
+to exactly-once fact contents. This is the streaming twin of the
+reference's NOT-EXISTS loader (ref ``B3_load_fin_facts.sql:84-94``),
+and like it each micro-batch anti-joins the whole existing fact: the
+sink passes no date prune and appends one unpartitioned table. At
+100 TB the fact would be written date-partitioned (writers.write_table
+partition_by) and pruned to the batch's dates. Checkpointing makes the
+foreachBatch idempotence a second line of defense rather than the only
+one."""
 
 from __future__ import annotations
 
@@ -82,13 +80,11 @@ def _latest_per_key(batch: DataFrame, key: str, *order_cols: str) -> DataFrame:
 def start_incremental_fact_sink(
     stream: DataFrame,
     fact_path: str,
-    dedup_cols: list[str] | None = None,
     checkpoint_dir: str | None = None,
-    partition_by: list[str] | None = None,
 ) -> StreamingQuery:
     """Start a foreachBatch query appending only fact rows not already
-    present (full-row dedup by default). Returns the StreamingQuery;
-    callers trigger/await as needed."""
+    present (full-row dedup). Returns the StreamingQuery; callers
+    trigger/await as needed."""
     spark = stream.sparkSession
 
     def load_batch(batch: DataFrame, batch_id: int) -> None:
@@ -101,11 +97,7 @@ def start_incremental_fact_sink(
             existing = spark.read.parquet(fact_path).select(*batch.columns)
         else:
             existing = batch.limit(0)
-        fresh = incremental_fact_insert(existing, batch, dedup_cols)
-        writer = fresh.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(fact_path)
+        incremental_fact_insert(existing, batch).write.mode("append").parquet(fact_path)
 
     return _start(stream, load_batch, checkpoint_dir)
 
@@ -207,7 +199,6 @@ def start_merge_sink(
     key: str,
     attrs: list[str],
     seq_col: str,
-    op_col: str = "op",
     checkpoint_dir: str | None = None,
 ) -> StreamingQuery:
     """foreachBatch MERGE INTO maintenance — the streaming twin of
@@ -241,8 +232,7 @@ def start_merge_sink(
         else:
             target = latest.select(key, *attrs).limit(0)
         merged = merge_into(
-            target, latest.select(key, *attrs, op_col), key, attrs,
-            op_col=op_col,
+            target, latest.select(key, *attrs, "op"), key, attrs
         ).localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(target_path)
 

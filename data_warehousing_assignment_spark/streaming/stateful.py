@@ -59,23 +59,22 @@ OUTPUT_SCHEMA = StructType(
 )
 
 
-def _update(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    n, total, max_batch = (
-        state.get if state.exists else (0, 0.0, 0)
-    )
-    batch_n = 0
-    for pdf in batches:
-        batch_n += len(pdf)
-        # exact 2-dp money semantics: sum in integer cents
-        total += float(pdf["value"].mul(100).round().sum()) / 100.0
-    n += batch_n
-    max_batch = max(max_batch, batch_n)
-    state.update((n, total, max_batch))
-    yield pd.DataFrame(
+#: state of a user with no events yet: (n_events, total_value, max_batch)
+_INITIAL = (0, 0.0, 0)
+
+
+def _step(state: tuple[int, float, int], pdf: pd.DataFrame) -> tuple[int, float, int]:
+    """One batch ``pdf`` of a user's events applied to its ``state``; the
+    new state is also the row the batch emits."""
+    n, total, max_batch = state
+    # exact 2-dp money semantics: sum in integer cents
+    total += float(pdf["value"].mul(100).round().sum()) / 100.0
+    return n + len(pdf), total, max(max_batch, len(pdf))
+
+
+def _frame(key: tuple[Any, ...], state: tuple[int, float, int]) -> pd.DataFrame:
+    n, total, max_batch = state
+    return pd.DataFrame(
         {
             "user_id": [key[0]],
             "n_events": [n],
@@ -85,18 +84,20 @@ def _update(
     )
 
 
-def _update_single_batch(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
-    """Batch twin of _update: one group = one batch, fresh state."""
-    n = len(pdf)
-    total = float(pdf["value"].mul(100).round().sum()) / 100.0
-    return pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "total_value": [total],
-            "max_batch": [n],
-        }
-    )
+def _update(
+    key: tuple[Any, ...],
+    batches: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    prior = state.get if state.exists else _INITIAL
+    new = _step(prior, pd.concat(list(batches)))
+    state.update(new)
+    yield _frame(key, new)
+
+
+def _single_batch(key: tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
+    """Static twin of _update: one group = one batch from the initial state."""
+    return _frame(key, _step(_INITIAL, pdf))
 
 
 def user_totals_stateful(events: DataFrame) -> DataFrame:
@@ -107,7 +108,7 @@ def user_totals_stateful(events: DataFrame) -> DataFrame:
     identical output contract, which is what the parity test pins."""
     grouped = events.select("user_id", "value").groupBy("user_id")
     if not events.isStreaming:
-        return grouped.applyInPandas(_update_single_batch, OUTPUT_SCHEMA)
+        return grouped.applyInPandas(_single_batch, OUTPUT_SCHEMA)
     return grouped.applyInPandasWithState(
         _update,
         outputStructType=OUTPUT_SCHEMA,

@@ -23,85 +23,51 @@ from pyspark.sql import functions as F
 from data_warehousing_assignment_spark.registry import dec
 
 
-def with_watermark(df: DataFrame, ts_col: str = "ts", delay: str = "15 minutes") -> DataFrame:
-    """Attach an event-time watermark when streaming; no-op on batch
-    frames (watermarks only affect stateful incremental execution)."""
+def with_watermark(df: DataFrame) -> DataFrame:
+    """Attach a 15-minute event-time watermark on ``ts`` when streaming;
+    no-op on batch frames (watermarks only affect stateful incremental
+    execution)."""
     if df.isStreaming:
-        return df.withWatermark(ts_col, delay)
+        return df.withWatermark("ts", "15 minutes")
     return df
 
 
-def tumbling_counts(
-    df: DataFrame,
-    window_len: str = "1 hour",
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-) -> DataFrame:
-    """Tumbling event-time window: per (window, group) count + exact
-    decimal sum. Output window start as a string for engine-neutral
-    comparison."""
-    w = F.window(ts_col, window_len)
+def _window_totals(df: DataFrame, w, keys: list[str], start_as: str) -> DataFrame:
+    """Per (window ``w``, ``keys``) event count + exact decimal ``value``
+    sum, the window start output as a string ``start_as`` for
+    engine-neutral comparison."""
     return (
-        with_watermark(df, ts_col)
-        .groupBy(w.alias("w"), F.col(group_col))
+        with_watermark(df)
+        .groupBy(w.alias("w"), *keys)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(dec("value")).cast("double").alias("total_value"),
         )
         .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            group_col,
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(start_as),
+            *keys,
             "n_events",
             "total_value",
         )
     )
 
 
-def sliding_counts(
-    df: DataFrame,
-    window_len: str = "2 hours",
-    slide: str = "1 hour",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Sliding event-time window (each event lands in window_len/slide
-    overlapping windows)."""
-    w = F.window(ts_col, window_len, slide)
-    return (
-        with_watermark(df, ts_col)
-        .groupBy(w.alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec("value")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "n_events",
-            "total_value",
-        )
-    )
+def tumbling_counts(df: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time window per ``event_type``."""
+    return _window_totals(df, F.window("ts", "1 hour"), ["event_type"], "window_start")
 
 
-def session_counts(
-    df: DataFrame,
-    gap: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Session windows: per-key activity bursts separated by ≥`gap` of
-    silence (F.session_window — dynamic-length stateful windows; in
-    streaming mode state merges sessions across micro-batches)."""
-    w = F.session_window(ts_col, gap)
-    return (
-        with_watermark(df, ts_col)
-        .groupBy(w.alias("w"), F.col(key_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec("value")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            key_col,
-            "n_events",
-            "total_value",
-        )
+def sliding_counts(df: DataFrame) -> DataFrame:
+    """Sliding event-time window: 2 hours every hour (each event lands
+    in two overlapping windows)."""
+    return _window_totals(df, F.window("ts", "2 hours", "1 hour"), [], "window_start")
+
+
+def session_counts(df: DataFrame) -> DataFrame:
+    """Session windows: per-``user_id`` activity bursts separated by
+    ≥ 30 minutes of silence (F.session_window — dynamic-length stateful
+    windows; in streaming mode state merges sessions across
+    micro-batches)."""
+    return _window_totals(
+        df, F.session_window("ts", "30 minutes"), ["user_id"], "session_start"
     )

@@ -22,11 +22,6 @@ import duckdb
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
-
 
 def canon_cell(v):
     """Canonicalize one cell for cross-engine comparison."""
@@ -203,13 +198,14 @@ def main() -> int:
 
     import __spark_entry__ as e
     from data_warehousing_assignment_spark.session import get_spark
+    from data_warehousing_assignment_spark.sources import TESTDATA_TABLES
 
     spark = get_spark("check-local")
     qs = e.queries()
     oracles = e.oracle_sql()
 
     con = duckdb.connect()
-    for tab in TABLES:
+    for tab in TESTDATA_TABLES:
         # driver testdata ships single parquet FILES; the synthesized
         # 10× dataset (bench.synthesize_sf1) writes Spark parquet
         # DIRECTORIES — glob the part files so the same sweep runs on

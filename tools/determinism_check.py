@@ -21,9 +21,9 @@ A second axis, ``--aqe``, compares AQE ON vs OFF at fixed width —
 adaptive re-planning (coalesced partitions, demoted broadcasts, skew
 splits) must also never change answers.
 
-Exclusions (by contract): none since r11 — op-fn-uuid now returns a
-structural summary (counts) that IS run-to-run deterministic even though
-the underlying uuid values are not.
+op-fn-uuid returns a structural summary (counts) that IS run-to-run
+deterministic even though the underlying uuid values are not, so no
+query is excluded.
 
 Usage: python tools/determinism_check.py [--aqe] [sf_dir] [only ...]
 """
@@ -37,8 +37,6 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-
-NONDETERMINISTIC_BY_CONTRACT: set[str] = set()
 
 
 def canon(df) -> tuple:
@@ -59,14 +57,10 @@ def main() -> int:
     spark = get_spark("determinism-check")
     qs = e.queries()
 
-    n_ok = n_skip = n_fail = 0
+    n_ok = n_fail = 0
     failures: list[str] = []
     for name, fn in sorted(qs.items()):
         if only and name not in only:
-            continue
-        if name in NONDETERMINISTIC_BY_CONTRACT:
-            n_skip += 1
-            print(f"skip  {name}: nondeterministic by contract")
             continue
         t0 = time.time()
         key, vals = (
@@ -97,7 +91,7 @@ def main() -> int:
             print(f"ok    {name}: {len(a[1])} rows  [{time.time()-t0:.1f}s]")
 
     print(
-        f"\n== {n_ok} parallelism-independent, {n_skip} skipped, "
+        f"\n== {n_ok} parallelism-independent, "
         f"{n_fail} FAIL" + (f": {failures}" if failures else "")
     )
     return 1 if n_fail else 0

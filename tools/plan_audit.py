@@ -85,8 +85,7 @@ ALLOWED = {
     "op-ext-token-budget-select": {WIN},  # ≤ 1e6+1 quality_ppm buckets
     "op-win-rownumber-key": {WIN},  # surrogate keys of the distinct brands
     "op-pipe-dim-upsert": {WIN},  # numbering the distinct brands
-    # data-sized: the reference's dense TEMP_<n> numbering of every doc
-    "op-win-rownumber-unordered": {WIN},
+    "op-win-rownumber-unordered": {WIN},  # distributed_prefix bucket offsets
 }
 
 

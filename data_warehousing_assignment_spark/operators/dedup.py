@@ -20,10 +20,11 @@ no engine-specific 64-bit hash is ever involved.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.caching import pin
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.operators.text import tokens, word_shingles
 
 
@@ -259,26 +260,15 @@ def ngram_jaccard_pairs(
 SIMHASH_BITS = 48  # one word, so the fingerprint stays a positive int64
 
 
-def _hex_nibble(h: Column, pos: int) -> Column:
-    """Value 0-15 of hex digit `pos` (0-based) of md5 hex string `h` —
-    via strpos on the hex alphabet (portable to DuckDB, no conv()).
-
-    The ORACLE-side formulation, kept engine-side as the reference the
-    packed-chunk parse below is tested against: per bit it costs a
-    substring + strpos per ROW, which at 48-128 bits per token
-    dominated the simhash map side (r14 optimization round)."""
-    ch = F.substring(h, pos + 1, 1)
-    return F.instr(F.lit("0123456789abcdef"), ch) - F.lit(1)
-
-
 def _packed_hex_chunks(h: str, n_nibbles: int) -> list[str]:
     """SQL select items parsing the first ``n_nibbles`` hex digits of
     column ``h`` into int64 chunks ``_p{c}`` of ≤12 nibbles (48 bits —
-    conv() of 12 hex chars fits int64 exactly): one string parse per 12
-    nibbles instead of one per BIT."""
+    12 hex digits fit int64 exactly): one string parse per 12 nibbles
+    instead of one per BIT. The oracles read every bit through its own
+    nibble (``ex.nibble``) instead; tests/test_dedup.py pins the two
+    equal."""
     return [
-        f"CAST(conv(substring({h}, {c0 + 1}, {min(12, n_nibbles - c0)}), 16, 10)"
-        f" AS BIGINT) AS _p{c0 // 12}"
+        f"{ex.hex_int(h, c0 + 1, min(12, n_nibbles - c0))} AS _p{c0 // 12}"
         for c0 in range(0, n_nibbles, 12)
     ]
 
@@ -287,7 +277,7 @@ def _md5_bit(j: int, n_nibbles: int) -> str:
     """SQL for md5 bit ``j`` (bit j%4 of nibble j//4) as 0/1, read from
     its :func:`_packed_hex_chunks` chunk: digit p of the chunk starting
     at digit c0 (length L) sits at bit 4·(c0+L−1−p), most significant
-    first. Value-identical to ``_hex_nibble(h, j//4) & (1 << j%4)``
+    first. Value-identical to ``ex.nibble(h, j//4 + 1) & (1 << j%4)``
     (pinned in tests/test_dedup.py)."""
     pos = j // 4
     c0 = 12 * (pos // 12)
@@ -333,7 +323,7 @@ def simhash(
     SUM columns, map-side combined) — a single shuffle keyed by doc id;
     then the words assemble row-locally. At 100 TB this is the same cost
     as any per-doc token aggregate. The md5 digits are parsed ONCE per
-    token into int64 chunks (a dedicated Project so each conv() runs
+    token into int64 chunks (a dedicated Project so each chunk parse runs
     once per row); each vote is then a shift+mask. Every per-bit
     expression is a generated SQL string, so building the plan costs a
     few py4j calls per bit instead of a few dozen."""

@@ -23,6 +23,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
+
 
 def snapshot_diff(
     old: DataFrame,
@@ -120,23 +122,8 @@ def partition_digest(
     # between nullable columns must change the digest (r8 review). The
     # sentinel itself colliding with a literal '<NULL>' string is the
     # documented residual risk of any sentinel scheme.
-    row_hash = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.coalesce(F.col(c).cast("string"), F.lit("<NULL>"))
-                        for c in cols
-                    ],
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    fields = ", ".join(f"COALESCE(CAST(`{c}` AS STRING), '<NULL>')" for c in cols)
+    row_hash = F.expr(ex.hex_int(f"md5(concat_ws('|', {fields}))", 1, 15))
     # Sum in DECIMAL(38,0) (1000 × 2^60 overflows int64), then fold
     # back to a canonical int64 digest via mod 2^63.
     return (

@@ -28,9 +28,7 @@ def anti_join(left: DataFrame, right: DataFrame, on: list[str] | Column) -> Data
     return left.join(right, on=on, how="left_anti")
 
 
-def not_exists_all_columns(
-    batch: DataFrame, existing: DataFrame, cols: list[str] | None = None
-) -> DataFrame:
+def not_exists_all_columns(batch: DataFrame, existing: DataFrame) -> DataFrame:
     """op-pred-not-exists: correlated NOT EXISTS on every column — the
     reference's incremental fact dedup (ref ``B3_load_fin_facts.sql:84-94``,
     ``C3_load_dim_ops.sql:85-92``): keep batch rows not already present.
@@ -43,7 +41,7 @@ def not_exists_all_columns(
     """
     # alias-qualified so batch/existing may derive from the same source
     # (self-join) without ambiguous-column resolution
-    cond = " AND ".join(f"__b.`{c}` <=> __e.`{c}`" for c in cols or batch.columns)
+    cond = " AND ".join(f"__b.`{c}` <=> __e.`{c}`" for c in batch.columns)
     return batch.alias("__b").join(existing.alias("__e"), F.expr(cond), "left_anti")
 
 

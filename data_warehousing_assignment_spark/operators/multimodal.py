@@ -44,20 +44,19 @@ from pyspark.sql.types import (
 _MAGIC = b"FAKE1"
 
 
-def fake_payload(text_col: Column | str, width: int = 8, height: int = 8) -> Column:
+def fake_payload(text_col: str) -> Column:
     """Deterministic stand-in payload: ``FAKE1`` magic + the utf-8 text
     bytes. Lets every pipeline stage run on synthetic testdata with
     reproducible bytes; a real pipeline would read payloads from object
     storage via ``spark.read.format('binaryFile')``."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.concat(F.lit(_MAGIC), F.encode(c, "UTF-8"))
+    return F.concat(F.lit(_MAGIC), F.encode(F.col(text_col), "UTF-8"))
 
 
 def with_media_columns(df: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
     """Attach (payload binary, meta struct of mime ``image/x-fake``)
     derived deterministically from the ``text`` column — the schema
     contract every operator below consumes."""
-    return df.withColumn("payload", fake_payload("text", width, height)).withColumn(
+    return df.withColumn("payload", fake_payload("text")).withColumn(
         "meta",
         F.struct(
             F.lit("image/x-fake").alias("mime"),

@@ -16,13 +16,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 
-def _hash_slot(key: Column, salt: Column | str, n_hex: int) -> Column:
-    """First ``n_hex`` hex chars of md5(salt || key) as an integer —
+
+def slot_md5(kind: str, key: str) -> str:
+    """md5 hex of ``key`` salted with its hash row: ``<kind><j>:`` for
+    the row number in column ``j`` — SQL text shared with the oracles."""
+    return f"md5('{kind}' || CAST(j AS STRING) || ':' || CAST({key} AS STRING))"
+
+
+def _hash_slot(kind: str, key: str, n_hex: int) -> Column:
+    """First ``n_hex`` hex chars of :func:`slot_md5` as an integer —
     a uniform slot in [0, 16^n_hex)."""
-    s = F.lit(salt) if isinstance(salt, str) else salt
-    h = F.md5(F.concat(s, key.cast("string")))
-    return F.conv(F.substring(h, 1, n_hex), 16, 10).cast("bigint")
+    return F.expr(ex.hex_int(slot_md5(kind, key), 1, n_hex))
 
 
 def cms_build(
@@ -40,11 +46,7 @@ def cms_build(
         F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("j"),
     ).select(
         "j",
-        _hash_slot(
-            F.col(key),
-            F.concat(F.lit("cms"), F.col("j").cast("string"), F.lit(":")),
-            width_hex,
-        ).alias("bucket"),
+        _hash_slot("cms", key, width_hex).alias("bucket"),
     )
     return rows.groupBy("j", "bucket").agg(
         F.count(F.lit(1)).alias("cell_count")
@@ -66,11 +68,7 @@ def cms_estimate(
     ).select(
         F.col(key),
         "j",
-        _hash_slot(
-            F.col(key),
-            F.concat(F.lit("cms"), F.col("j").cast("string"), F.lit(":")),
-            width_hex,
-        ).alias("bucket"),
+        _hash_slot("cms", key, width_hex).alias("bucket"),
     )
     return (
         probes.join(F.broadcast(cells), ["j", "bucket"], "left")
@@ -93,11 +91,7 @@ def bloom_bits(
         F.explode(F.array(*[F.lit(j) for j in range(n_hashes)])).alias("j"),
         F.col(key),
     ).select(
-        _hash_slot(
-            F.col(key),
-            F.concat(F.lit("bf"), F.col("j").cast("string"), F.lit(":")),
-            bits_hex,
-        ).alias("pos")
+        _hash_slot("bf", key, bits_hex).alias("pos")
     )
     return pos.distinct()
 
@@ -117,11 +111,7 @@ def bloom_filter_probe(
         F.explode(F.array(*[F.lit(j) for j in range(n_hashes)])).alias("j"),
     ).select(
         F.col(key),
-        _hash_slot(
-            F.col(key),
-            F.concat(F.lit("bf"), F.col("j").cast("string"), F.lit(":")),
-            bits_hex,
-        ).alias("pos"),
+        _hash_slot("bf", key, bits_hex).alias("pos"),
     )
     hits = (
         fan.join(F.broadcast(bits), "pos")

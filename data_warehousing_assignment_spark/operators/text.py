@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.functions.cleaning import sql_str
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
@@ -309,7 +310,14 @@ def doc_fingerprint(col: Column | str) -> Column:
 # -- deterministic hash bucketing (splits / sampling) -----------------------
 
 
-def hash_bucket(col: Column | str, salt: str = "") -> Column:
+def bucket_sql(decode, col: str, salt: str) -> str:
+    """Bucket 0-255 of :func:`hash_bucket` as SQL text, its two hex digits
+    read by ``decode`` (``ex.hex_int``, or ``ex.hex_int_oracle`` in the
+    oracles)."""
+    return decode(ex.salted_md5(salt, col), 1, 2)
+
+
+def hash_bucket(col: str, salt: str) -> Column:
     """Deterministic bucket 0-255 from the first two hex nibbles of
     ``md5(salt || value)`` — the content-addressed randomness every
     train/val/test split and downsample below shares. md5-on-string is
@@ -320,12 +328,7 @@ def hash_bucket(col: Column | str, salt: str = "") -> Column:
     reruns, engines, cluster sizes, and data re-partitioning — the
     property a training pipeline needs so that test data never leaks
     into train between runs."""
-    c = F.col(col) if isinstance(col, str) else col
-    h = F.md5(F.concat(F.lit(salt), c.cast("string")))
-    hexpos = lambda i: F.instr(
-        F.lit("0123456789abcdef"), F.substring(h, i, 1)
-    ) - F.lit(1)
-    return hexpos(1) * 16 + hexpos(2)
+    return F.expr(bucket_sql(ex.hex_int, col, salt))
 
 
 #: salt of the train/val/test split and its bucket bounds: 80/10/10
@@ -335,7 +338,7 @@ SPLIT_TRAIN_HI = 256 * 80 // 100
 SPLIT_VAL_HI = 256 * (80 + 10) // 100
 
 
-def hash_split(col: Column | str) -> Column:
+def hash_split(col: str) -> Column:
     """'train' / 'val' / 'test' label from :func:`hash_bucket` with
     ``SPLIT_SALT`` — bucket below ``SPLIT_TRAIN_HI`` is train, below
     ``SPLIT_VAL_HI`` val, the rest test."""

@@ -22,15 +22,18 @@ Scale design:
   finest rollup aggregates the raw stream ONCE; every coarser level
   re-aggregates the previous level, touching ~1/width the rows instead
   of rescanning raw data. COUNT and SUM re-aggregate exactly; sums run
-  as DECIMAL(18,2) so the regrouping is associative bit-for-bit (double
-  sums would drift with accumulation order — registry.py determinism
-  rules), cast back to DOUBLE only at the boundary.
+  as ``exact.MONEY_DECIMAL`` so the regrouping is associative
+  bit-for-bit (double sums would drift with accumulation order —
+  registry.py determinism rules), cast back to DOUBLE only at the
+  boundary.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from data_warehousing_assignment_spark.functions.exact import MONEY_DECIMAL
 
 
 def point_in_interval_join(
@@ -159,7 +162,7 @@ def cascade_rollup(events: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
         F.col("event_type").alias("key"),
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("total_value"),
+        F.sum(F.col("value").cast(MONEY_DECIMAL)).alias("total_value"),
     )
 
     def _coarsen(finer: DataFrame, expr: Column) -> DataFrame:
@@ -204,7 +207,7 @@ def gapfill_hourly(events: DataFrame) -> DataFrame:
         F.col("user_id"), hour.alias("hour_id")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
+        F.sum(F.col("value").cast(MONEY_DECIMAL))
         .cast("double")
         .alias("hour_value"),
     )

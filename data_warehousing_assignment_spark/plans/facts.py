@@ -28,37 +28,25 @@ from data_warehousing_assignment_spark.operators.joins import (
 def incremental_fact_insert(
     existing: DataFrame,
     batch: DataFrame,
-    dedup_cols: list[str] | None = None,
     date_col: str | None = None,
 ) -> DataFrame:
-    """Rows of ``batch`` to append: those with no existing row matching on
-    ``dedup_cols`` (default: all columns — the reference's full-row NOT
-    EXISTS).
+    """Rows of ``batch`` to append: those with no existing row equal on
+    every batch column (the reference's full-row NOT EXISTS).
 
     When ``date_col`` is given, ``existing`` is pre-pruned to the batch's
     [min, max] date window — the partition-prune wrapper the reference
     lacks. Both bounds come from one 1-row aggregate collect, which
     prunes the fact scan: the one legitimate driver-side value (see
-    joins.scalar_subquery).
-
-    CORRECTNESS PRECONDITION for the prune: ``date_col`` must be part of
-    the dedup key (it is in the reference — its NOT EXISTS compares
-    time_id too, ``B3_load_fin_facts.sql:84-94``). Otherwise a batch row
-    could duplicate an existing row dated OUTSIDE the window and the
-    prune would wrongly resurrect it.
+    joins.scalar_subquery). The prune keeps the result exact because the
+    date is part of the full-row key (the reference's NOT EXISTS compares
+    time_id too, ``B3_load_fin_facts.sql:84-94``): any existing match
+    shares the batch row's date, so it lies inside the window.
     """
-    if date_col is not None and dedup_cols is not None and date_col not in dedup_cols:
-        raise ValueError(
-            "date-window prune requires date_col in dedup_cols "
-            "(otherwise the prune changes dedup semantics)"
-        )
     if date_col is not None:
         lo, hi = batch.selectExpr(f"min(`{date_col}`)", f"max(`{date_col}`)").first()
         if lo is not None:
             existing = existing.filter(F.col(date_col).between(F.lit(lo), F.lit(hi)))
-    return not_exists_all_columns(
-        batch, existing.select(*batch.columns), dedup_cols
-    )
+    return not_exists_all_columns(batch, existing.select(*batch.columns))
 
 
 def watermark_filter(

@@ -29,11 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_warehousing_assignment_spark.registry import (
-    ROUND2_MEAN_EXPR,
-    dec,
-    sum_cents,
-)
+from data_warehousing_assignment_spark.functions import exact as ex
+from data_warehousing_assignment_spark.registry import ROUND2_MEAN_EXPR, dec
 
 
 def _month_key(col: str = "o_orderdate") -> Column:
@@ -85,7 +82,10 @@ def kpi_avg_salary_by_gender(customer: DataFrame) -> DataFrame:
     ever rounded."""
     return (
         customer.groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(sum_cents("c_acctbal").alias("_p"), F.count(F.lit(1)).alias("_c"))
+        .agg(
+            F.expr(ex.sum_cents("c_acctbal")).alias("_p"),
+            F.count(F.lit(1)).alias("_c"),
+        )
         .select("segment", F.expr(ROUND2_MEAN_EXPR).alias("avg_salary"))
     )
 
@@ -160,7 +160,7 @@ def kpi_downtime_by_process(events: DataFrame) -> DataFrame:
         events.groupBy(F.col("event_type").alias("process_name"))
         .agg(
             F.round(F.sum(dec("value")), 2).cast("double").alias("total_downtime"),
-            sum_cents("value").alias("_p"),
+            F.expr(ex.sum_cents("value")).alias("_p"),
             F.count(F.lit(1)).alias("_c"),
         )
         .select(
@@ -180,7 +180,7 @@ def kpi_downtime_by_department(events: DataFrame) -> DataFrame:
         .groupBy("department_id")
         .agg(
             F.round(F.sum(dec("value")), 2).cast("double").alias("total_downtime"),
-            sum_cents("value").alias("_p"),
+            F.expr(ex.sum_cents("value")).alias("_p"),
             F.count(F.lit(1)).alias("_c"),
         )
         .select(

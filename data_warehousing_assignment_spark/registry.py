@@ -5,13 +5,22 @@ re-exports the dicts for the driver's correctness gate.
 Cross-engine determinism rules (so the driver's order-insensitive value hash
 matches bit-for-bit):
 
-* Money/measure aggregates cast inputs to tight DECIMALs *before* summing —
-  decimal arithmetic is exact in both Spark and DuckDB, so the sums are
-  identical regardless of row order; results are cast back to DOUBLE at the
-  end (both engines produce the same IEEE value from the same exact decimal).
+* Money/measure aggregates cast inputs to ``MONEY_DECIMAL`` *before*
+  summing — decimal arithmetic is exact in both Spark and DuckDB, so the
+  sums are identical regardless of row order; results are cast back to
+  DOUBLE at the end (both engines produce the same IEEE value from the same
+  exact decimal).
 * Averages are expressed as exact-decimal SUM cast to DOUBLE, divided by
   COUNT — a single deterministic IEEE division — never engine-native
   AVG-over-double (whose accumulation order differs per engine).
+* Content-addressed randomness reads md5 hex digits as integers: the engine
+  decodes them with ``conv``, the oracle adds the digits one by one, so the
+  oracle checks the engine's parse.
+
+The money fragments (``cents``, ``dsum``, ``davg``, ``sum_cents``) and the
+md5-hex ones (``salted_md5``, ``hex_int``, ``hex_int_oracle``) are one SQL
+text each in ``functions/exact.py``: the engine wraps a fragment in
+``F.expr`` and the oracle pastes the same text, so no copy can drift.
 * Timestamps never cross the boundary raw: queries return dates, epoch
   seconds, or formatted strings (events.parquet is nanosecond-precision,
   which Spark reads as long via ``spark.sql.legacy.parquet.nanosAsLong``).
@@ -31,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from data_warehousing_assignment_spark.caching import release_unscoped
+from data_warehousing_assignment_spark.functions.exact import MONEY_DECIMAL
 from data_warehousing_assignment_spark.session import apply_runtime_confs
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -115,38 +125,16 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-#: the exact decimal every money/measure sum runs in, engine side (dec)
-#: and oracle side (the o_* fragments)
-MONEY_DECIMAL = "DECIMAL(18,2)"
-
-
 def dec(col: Column | str) -> Column:
-    """Exact-decimal view of a 2-dp money/measure double (inputs verified
-    2-dp clean, TESTDATA.md tables). Precision 18 leaves ~16 integer digits
-    of headroom so SUMs never overflow even at sf100 (Spark widens sum of
-    decimal(18,2) to decimal(28,2))."""
+    """Exact-decimal view of a 2-dp money/measure double (Column form of
+    ``exact.money``)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast(MONEY_DECIMAL)
-
-
-def _price_cents() -> Column:
-    """Exact integer cents of the 2-dp ``l_extendedprice``."""
-    return (dec("l_extendedprice") * 100).cast("bigint")
 
 
 def _ds(col) -> Column:
     """date → 'yyyy-MM-dd' string (cross-engine-stable date surface)."""
     return F.date_format(col, "yyyy-MM-dd")
-
-
-def dsum(col: Column | str) -> Column:
-    """Order-independent exact sum of a 2-dp double, surfaced as DOUBLE."""
-    return F.sum(dec(col)).cast("double")
-
-
-def davg(col: Column | str) -> Column:
-    """Deterministic average: exact decimal sum → double, one IEEE divide."""
-    return F.sum(dec(col)).cast("double") / F.count(F.lit(1))
 
 
 #: ROUND(mean, 2) computed entirely in exact int64 cents — engines round
@@ -159,12 +147,6 @@ ROUND2_MEAN_EXPR = (
 )
 
 
-def sum_cents(col: Column | str) -> Column:
-    """Exact integer-cents sum of a 2-dp measure (pairs with
-    ROUND2_MEAN_EXPR): decimal-exact, cast to bigint losslessly."""
-    return (F.sum(dec(col)) * 100).cast("bigint")
-
-
 def o_round2_mean(p: str, c: str) -> str:
     """DuckDB twin of ROUND2_MEAN_EXPR over sum-cents/count columns."""
     return (
@@ -172,24 +154,8 @@ def o_round2_mean(p: str, c: str) -> str:
     )
 
 
-def o_sum_cents(col: str) -> str:
-    return f"CAST(SUM(CAST({col} AS {MONEY_DECIMAL})) * 100 AS BIGINT)"
-
-
-#: SQL text of _price_cents (row-local, exact in both engines)
-_CENTS = f"CAST(CAST(l_extendedprice AS {MONEY_DECIMAL}) * 100 AS BIGINT)"
-
 #: DuckDB twin of operators.text.tokens()
 _TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
-
-
-# Oracle-side fragments mirroring dsum/davg, f-string-able into SQL:
-def o_dsum(col: str) -> str:
-    return f"CAST(SUM(CAST({col} AS {MONEY_DECIMAL})) AS DOUBLE)"
-
-
-def o_davg(col: str) -> str:
-    return f"(CAST(SUM(CAST({col} AS {MONEY_DECIMAL})) AS DOUBLE) / COUNT(*))"
 
 
 def import_all_registries() -> None:

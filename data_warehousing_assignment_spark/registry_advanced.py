@@ -17,12 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.operators import analytics as an
 from data_warehousing_assignment_spark.operators import diff as dff
 from data_warehousing_assignment_spark.operators import graph as gr
 from data_warehousing_assignment_spark.operators import similarity as sim
 from data_warehousing_assignment_spark.operators import timeseries as ts
-from data_warehousing_assignment_spark.registry import _CENTS, dec, query, t
+from data_warehousing_assignment_spark.registry import dec, query, t
 
 
 # --------------------------------------------------------------------------
@@ -99,16 +100,16 @@ def op_ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-snapshot-diff",
-    oracle="""
+    oracle=f"""
     WITH o96 AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('o_totalprice')}
                AS rev
       FROM orders WHERE year(o_orderdate) = 1996 GROUP BY 1
     ),
     o97 AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('o_totalprice')}
                AS rev
       FROM orders WHERE year(o_orderdate) = 1997 GROUP BY 1
     )
@@ -168,7 +169,7 @@ def op_ext_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pts AS (
       SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS qty,
-             {_CENTS} AS price_cents, COUNT(*) AS n_points
+             {ex.cents('l_extendedprice')} AS price_cents, COUNT(*) AS n_points
       FROM lineitem GROUP BY 1, 2, 3
     ),
     flagged AS (
@@ -212,10 +213,10 @@ def op_ext_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-time-weighted-avg",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
+             {ex.cents('value')} AS vc
       FROM events
     ),
     seg AS (
@@ -258,10 +259,10 @@ def op_ext_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-gini",
-    oracle="""
+    oracle=f"""
     WITH cust AS (
       SELECT c.c_nationkey, o.o_custkey,
-             CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('o.o_totalprice')}
                AS x
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY 1, 2
@@ -762,7 +763,8 @@ def op_ext_fusion_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "op-ext-mad-outliers",
     oracle=f"""
-    WITH pc AS (SELECT l_returnflag, 2 * {_CENTS} AS c2 FROM lineitem),
+    WITH pc AS (SELECT l_returnflag, 2 * {ex.cents('l_extendedprice')} AS c2
+                FROM lineitem),
     med AS (SELECT l_returnflag, quantile_cont(c2, 0.5) AS m2
             FROM pc GROUP BY 1),
     dev AS (SELECT p.l_returnflag, 2 * abs(p.c2 - m.m2) AS dev4
@@ -886,14 +888,14 @@ def op_ext_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-zonemap",
-    oracle="""
+    oracle=f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS part_month,
            COUNT(*) AS n_rows,
-           MIN(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+           MIN({ex.cents('o_totalprice')})
              AS min_cents,
-           MAX(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+           MAX({ex.cents('o_totalprice')})
              AS max_cents,
-           (MAX(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+           (MAX({ex.cents('o_totalprice')})
              < 40000000) AS skippable_under_400k
     FROM orders GROUP BY 1
     """,
@@ -1391,21 +1393,6 @@ _BOOT_G = 6  # hash groups: one md5 yields EIGHT 16-bit uniforms (128 bits)
 _POIS_T = [24109, 48218, 60273, 64291, 65296, 65497, 65530, 65535]
 
 
-def _u16_sql(h: str, off: str = "0") -> str:
-    """16-bit integer from 4 hex nibbles of ``h`` starting at 1-based
-    position ``1 + 4*off`` — shared Spark/DuckDB text (strpos nibble
-    lookup; no engine-specific hex-decode)."""
-    nib = "(strpos('0123456789abcdef', substring({h}, ({off}) * 4 + {i}, 1)) - 1)"
-    return (
-        "("
-        + " + ".join(
-            nib.format(h=h, off=off, i=i + 1) + f" * {16 ** (3 - i)}"
-            for i in range(4)
-        )
-        + ")"
-    )
-
-
 def _pois_case(u16: str) -> str:
     branches = " ".join(
         f"WHEN {u16} < {t} THEN {k}" for k, t in enumerate(_POIS_T)
@@ -1413,9 +1400,11 @@ def _pois_case(u16: str) -> str:
     return f"CASE {branches} ELSE 8 END"
 
 
+#: one md5 per (replicate group g, line): its 32 hex digits are the 8
+#: 16-bit uniforms of replicates 8g..8g+7
 _BOOT_H = (
-    "md5('boot:' || CAST(g AS VARCHAR) || ':' || CAST(l_orderkey AS VARCHAR)"
-    " || ':' || CAST(l_linenumber AS VARCHAR))"
+    "md5('boot:' || CAST(g AS STRING) || ':' || CAST(l_orderkey AS STRING)"
+    " || ':' || CAST(l_linenumber AS STRING))"
 )
 
 
@@ -1423,7 +1412,7 @@ _BOOT_H = (
     "op-ext-bootstrap-ci",
     oracle=f"""
     WITH li AS (
-      SELECT l_returnflag, l_orderkey, l_linenumber, {_CENTS} AS x
+      SELECT l_returnflag, l_orderkey, l_linenumber, {ex.cents('l_extendedprice')} AS x
       FROM lineitem
     ),
     hashed AS (
@@ -1432,7 +1421,7 @@ _BOOT_H = (
     ),
     rep AS (
       SELECT l_returnflag, x, g.g * 8 + j.j AS b,
-             {_pois_case(_u16_sql("h", "j.j"))} AS w
+             {_pois_case(ex.hex_int_oracle("h", "j.j * 4 + 1", 4))} AS w
       FROM hashed g, (SELECT unnest(range(0, 8)) AS j) j
     ),
     means AS (
@@ -1486,21 +1475,16 @@ def bootstrap_ci_frame(li: DataFrame) -> DataFrame:
     frame-parameterized so op-ext-bootstrap-ci (full lineitem) and
     tools/scale_pins.pin_bootstrap_ci (0.5% sf10 row sample) run ONE
     body and cannot drift apart."""
-    spark_h = _BOOT_H.replace("AS VARCHAR", "AS STRING")
     hashed = li.withColumn(
         "g", F.explode(F.sequence(F.lit(0), F.lit(_BOOT_G - 1)))
-    ).withColumn("h", F.expr(spark_h))
+    ).withColumn("h", F.expr(_BOOT_H))
     rep = hashed.withColumn(
         "j", F.explode(F.sequence(F.lit(0), F.lit(7)))
     ).select(
         "l_returnflag",
         "x",
         (F.col("g") * 8 + F.col("j")).alias("b"),
-        F.expr(
-            _pois_case(
-                "CAST(conv(substring(h, j * 4 + 1, 4), 16, 10) AS INT)"
-            )
-        ).alias("w"),
+        F.expr(_pois_case(ex.hex_int("h", "j * 4 + 1", 4))).alias("w"),
     )
     means = rep.groupBy("l_returnflag", "b").agg(
         (
@@ -1910,7 +1894,7 @@ def op_ext_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op-ext-ivm",
     oracle=f"""
     SELECT l_returnflag, COUNT(*) AS n_rows,
-           CAST(SUM({_CENTS}) AS BIGINT) AS rev_cents
+           CAST(SUM({ex.cents('l_extendedprice')}) AS BIGINT) AS rev_cents
     FROM lineitem WHERE l_shipdate < DATE '1997-01-01'
     GROUP BY 1
     """,
@@ -1960,7 +1944,6 @@ def op_ext_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # incremental view maintenance for JOINS (signed-delta / Z-set algebra)
 # --------------------------------------------------------------------------
 
-_OC = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
 
 @query(
@@ -1974,7 +1957,7 @@ _OC = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
     )
     SELECT cn.seg,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM({_OC}) AS BIGINT) AS rev_cents
+           CAST(SUM({ex.cents('o_totalprice')}) AS BIGINT) AS rev_cents
     FROM orders o JOIN cust_new cn ON o.o_custkey = cn.c_custkey
     GROUP BY 1
     """,
@@ -2007,7 +1990,7 @@ def op_ext_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderdate",
-        F.expr(_OC).alias("_pc"),
+        F.expr(ex.cents("o_totalprice")).alias("_pc"),
     )
     cust = t(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("seg")
@@ -2072,17 +2055,15 @@ def op_ext_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-cuped",
-    oracle="""
+    oracle=f"""
     WITH u AS (
       SELECT user_id, user_id % 2 AS variant,
              CAST(SUM(CASE WHEN event_type = 'purchase'
                             AND ts < TIMESTAMP '2024-01-16'
-                           THEN CAST(CAST(value AS DECIMAL(18,2)) * 100
-                                     AS BIGINT) ELSE 0 END) AS BIGINT) AS x,
+                           THEN {ex.cents('value')} ELSE 0 END) AS BIGINT) AS x,
              CAST(SUM(CASE WHEN event_type = 'purchase'
                             AND ts >= TIMESTAMP '2024-01-16'
-                           THEN CAST(CAST(value AS DECIMAL(18,2)) * 100
-                                     AS BIGINT) ELSE 0 END) AS BIGINT) AS y
+                           THEN {ex.cents('value')} ELSE 0 END) AS BIGINT) AS y
       FROM events GROUP BY 1, 2
     ),
     g AS (
@@ -2522,21 +2503,11 @@ _GEO_BITS_HEX = 5          # 5 hex nibbles = 20 bits
 _GEO_CELL = 1 << 16
 
 
-def _coord_spark(salt: str, key: str) -> str:
-    return (
-        f"CAST(conv(substring(md5('{salt}:' || CAST({key} AS STRING)),"
-        f" 1, {_GEO_BITS_HEX}), 16, 10) AS BIGINT)"
-    )
-
-
-def _coord_sql(salt: str, key: str) -> str:
-    h = f"md5('{salt}:' || CAST({key} AS VARCHAR))"
-    nib = "(strpos('0123456789abcdef', substring({h}, {i}, 1)) - 1)"
-    terms = " + ".join(
-        nib.format(h=h, i=i + 1) + f" * {16 ** (_GEO_BITS_HEX - 1 - i)}"
-        for i in range(_GEO_BITS_HEX)
-    )
-    return f"CAST({terms} AS BIGINT)"
+def _coord(decode, axis: str, key: str) -> str:
+    """20-bit coordinate of ``key`` on ``axis`` from its salted md5, read
+    by ``decode`` (``ex.hex_int``, or ``ex.hex_int_oracle`` in the
+    oracles)."""
+    return decode(ex.salted_md5(f"{axis}:", key), 1, _GEO_BITS_HEX)
 
 
 @query(
@@ -2544,14 +2515,14 @@ def _coord_sql(salt: str, key: str) -> str:
     oracle=f"""
     WITH cust AS (
       SELECT c_custkey,
-             {_coord_sql('gx', 'c_custkey')} AS xc,
-             {_coord_sql('gy', 'c_custkey')} AS yc
+             {_coord(ex.hex_int_oracle, 'gx', 'c_custkey')} AS xc,
+             {_coord(ex.hex_int_oracle, 'gy', 'c_custkey')} AS yc
       FROM customer
     ),
     supp AS (
       SELECT s_suppkey,
-             {_coord_sql('gx', 's_suppkey')} AS xs,
-             {_coord_sql('gy', 's_suppkey')} AS ys
+             {_coord(ex.hex_int_oracle, 'gx', 's_suppkey')} AS xs,
+             {_coord(ex.hex_int_oracle, 'gy', 's_suppkey')} AS ys
       FROM supplier
     ),
     probes AS (
@@ -2601,13 +2572,13 @@ def op_ext_spatial_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Tie-break (dist2, suppkey) keeps the pick total-ordered."""
     cust = t(spark, sf_dir, "customer").selectExpr(
         "c_custkey",
-        f"{_coord_spark('gx', 'c_custkey')} AS xc",
-        f"{_coord_spark('gy', 'c_custkey')} AS yc",
+        f"{_coord(ex.hex_int, 'gx', 'c_custkey')} AS xc",
+        f"{_coord(ex.hex_int, 'gy', 'c_custkey')} AS yc",
     )
     supp = t(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey",
-        f"{_coord_spark('gx', 's_suppkey')} AS xs",
-        f"{_coord_spark('gy', 's_suppkey')} AS ys",
+        f"{_coord(ex.hex_int, 'gx', 's_suppkey')} AS xs",
+        f"{_coord(ex.hex_int, 'gy', 's_suppkey')} AS ys",
     ).selectExpr(
         "s_suppkey", "xs", "ys",
         f"xs div {_GEO_CELL} AS scx",
@@ -2650,14 +2621,14 @@ def op_ext_spatial_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH cust AS (
       SELECT c_custkey,
-             {_coord_sql('gx', 'c_custkey')} AS xc,
-             {_coord_sql('gy', 'c_custkey')} AS yc
+             {_coord(ex.hex_int_oracle, 'gx', 'c_custkey')} AS xc,
+             {_coord(ex.hex_int_oracle, 'gy', 'c_custkey')} AS yc
       FROM customer
     ),
     supp AS (
       SELECT s_suppkey,
-             {_coord_sql('gx', 's_suppkey')} AS xs,
-             {_coord_sql('gy', 's_suppkey')} AS ys
+             {_coord(ex.hex_int_oracle, 'gx', 's_suppkey')} AS xs,
+             {_coord(ex.hex_int_oracle, 'gy', 's_suppkey')} AS ys
       FROM supplier
     ),
     probes AS (
@@ -2697,13 +2668,13 @@ def op_ext_spatial_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     total-ordered and both engines identical."""
     cust = t(spark, sf_dir, "customer").selectExpr(
         "c_custkey",
-        f"{_coord_spark('gx', 'c_custkey')} AS xc",
-        f"{_coord_spark('gy', 'c_custkey')} AS yc",
+        f"{_coord(ex.hex_int, 'gx', 'c_custkey')} AS xc",
+        f"{_coord(ex.hex_int, 'gy', 'c_custkey')} AS yc",
     )
     supp = t(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey",
-        f"{_coord_spark('gx', 's_suppkey')} AS xs",
-        f"{_coord_spark('gy', 's_suppkey')} AS ys",
+        f"{_coord(ex.hex_int, 'gx', 's_suppkey')} AS xs",
+        f"{_coord(ex.hex_int, 'gy', 's_suppkey')} AS ys",
     ).selectExpr(
         "s_suppkey", "xs", "ys",
         f"xs div {_GEO_CELL} AS scx",
@@ -2752,14 +2723,14 @@ _GEO_R = _GEO_CELL // 2
     oracle=f"""
     WITH cust AS (
       SELECT c_custkey,
-             {_coord_sql('gx', 'c_custkey')} AS xc,
-             {_coord_sql('gy', 'c_custkey')} AS yc
+             {_coord(ex.hex_int_oracle, 'gx', 'c_custkey')} AS xc,
+             {_coord(ex.hex_int_oracle, 'gy', 'c_custkey')} AS yc
       FROM customer
     ),
     supp AS (
       SELECT s_suppkey,
-             {_coord_sql('gx', 's_suppkey')} AS xs,
-             {_coord_sql('gy', 's_suppkey')} AS ys
+             {_coord(ex.hex_int_oracle, 'gx', 's_suppkey')} AS xs,
+             {_coord(ex.hex_int_oracle, 'gy', 's_suppkey')} AS ys
       FROM supplier
     ),
     probes AS (
@@ -2792,13 +2763,13 @@ def op_ext_spatial_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     delivery-assignment or geo-dedup pipeline consumes."""
     cust = t(spark, sf_dir, "customer").selectExpr(
         "c_custkey",
-        f"{_coord_spark('gx', 'c_custkey')} AS xc",
-        f"{_coord_spark('gy', 'c_custkey')} AS yc",
+        f"{_coord(ex.hex_int, 'gx', 'c_custkey')} AS xc",
+        f"{_coord(ex.hex_int, 'gy', 'c_custkey')} AS yc",
     )
     supp = t(spark, sf_dir, "supplier").selectExpr(
         "s_suppkey",
-        f"{_coord_spark('gx', 's_suppkey')} AS xs",
-        f"{_coord_spark('gy', 's_suppkey')} AS ys",
+        f"{_coord(ex.hex_int, 'gx', 's_suppkey')} AS xs",
+        f"{_coord(ex.hex_int, 'gy', 's_suppkey')} AS ys",
     ).selectExpr(
         "s_suppkey", "xs", "ys",
         f"xs div {_GEO_CELL} AS scx",
@@ -2911,9 +2882,9 @@ def op_ext_late_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-kanonymity",
-    oracle="""
+    oracle=f"""
     SELECT CAST(c_nationkey AS BIGINT) AS nation_key, c_mktsegment,
-           CAST(FLOOR(CAST(c_acctbal AS DECIMAL(18,2)) / 1000)
+           CAST(FLOOR({ex.money('c_acctbal')} / 1000)
                 AS BIGINT) AS bal_band,
            COUNT(*) AS n_individuals,
            (COUNT(*) < 5) AS at_risk
@@ -3056,7 +3027,7 @@ def op_ext_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").cast("bigint").alias("nation_key")
     ).agg(F.count(F.lit(1)).alias("true_count_DO_NOT_SHIP"))
     # u in (0,1): 16-bit hash slice, offset half a step from the edges
-    u16 = "CAST(conv(substring(md5(concat('dp:', nation_key)), 1, 4), 16, 10) AS INT)"
+    u16 = ex.hex_int(ex.salted_md5("dp:", "nation_key"), 1, 4)
     # D-suffixed literals: bare 0.5/65536.0 parse as DECIMAL in Spark
     # SQL and the division would round to 8 fractional digits
     u = f"(({u16}) + 0.5D) / 65536.0D"
@@ -3093,16 +3064,8 @@ def _dlap_case(u16: str) -> str:
     return f"CASE {branches} ELSE 11 END"
 
 
-def _dlap_u16_oracle() -> str:
-    h = "md5('dlap:' || CAST(nation_key AS VARCHAR))"
-    nib = "(strpos('0123456789abcdef', substring({h}, {i}, 1)) - 1)"
-    return (
-        "("
-        + " + ".join(
-            nib.format(h=h, i=i + 1) + f" * {16 ** (3 - i)}" for i in range(4)
-        )
-        + ")"
-    )
+#: the 16-bit uniform of each label: its md5's first 4 hex digits
+_DLAP_H = ex.salted_md5("dlap:", "nation_key")
 
 
 @query(
@@ -3114,8 +3077,8 @@ def _dlap_u16_oracle() -> str:
       FROM customer GROUP BY 1
     )
     SELECT nation_key, true_count,
-           CAST({_dlap_case(_dlap_u16_oracle())} AS BIGINT) AS noise,
-           CAST(true_count + ({_dlap_case(_dlap_u16_oracle())}) AS BIGINT)
+           CAST({_dlap_case(ex.hex_int_oracle(_DLAP_H, 1, 4))} AS BIGINT) AS noise,
+           CAST(true_count + ({_dlap_case(ex.hex_int_oracle(_DLAP_H, 1, 4))}) AS BIGINT)
              AS released_count
     FROM counts
     """,
@@ -3137,11 +3100,7 @@ def op_ext_dp_counts_discrete(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = c.groupBy(
         F.col("c_nationkey").cast("bigint").alias("nation_key")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("true_count"))
-    u16 = (
-        "CAST(conv(substring(md5(concat('dlap:', nation_key)), 1, 4),"
-        " 16, 10) AS INT)"
-    )
-    noise = _dlap_case(u16)
+    noise = _dlap_case(ex.hex_int(_DLAP_H, 1, 4))
     return counts.select(
         "nation_key",
         "true_count",

@@ -17,18 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.operators import analytics as an
 from data_warehousing_assignment_spark.operators import text as tx
-from data_warehousing_assignment_spark.registry import (
-    _CENTS,
-    _TOKS,
-    _price_cents,
-    dec,
-    o_dsum,
-    query,
-    sum_cents,
-    t,
-)
+from data_warehousing_assignment_spark.registry import _TOKS, dec, query, t
 
 
 # --------------------------------------------------------------------------
@@ -38,7 +30,7 @@ from data_warehousing_assignment_spark.registry import (
 
 @query(
     "op-ext-sessionize",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id, epoch_us(ts) AS us, value
       FROM events WHERE user_id < 25
@@ -61,7 +53,7 @@ from data_warehousing_assignment_spark.registry import (
     SELECT user_id, CAST(sid AS BIGINT) AS session_seq,
            COUNT(*) AS n_events,
            CAST((MAX(us) - MIN(us)) // 1000000 AS BIGINT) AS duration_s,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value
+           {ex.dsum('value')} AS session_value
     FROM sess GROUP BY user_id, sid
     """,
 )
@@ -138,7 +130,7 @@ def op_ext_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH daily AS (
       SELECT l_returnflag, strftime(l_shipdate, '%Y-%m-%d') AS ship_day,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('l_extendedprice')}
                AS p
       FROM lineitem GROUP BY 1, 2
     )
@@ -160,7 +152,7 @@ def op_ext_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = li.groupBy(
         "l_returnflag",
         F.date_format("l_shipdate", "yyyy-MM-dd").alias("ship_day"),
-    ).agg(sum_cents("l_extendedprice").alias("_p"))
+    ).agg(F.expr(ex.sum_cents("l_extendedprice")).alias("_p"))
     w = (
         Window.partitionBy("l_returnflag")
         .orderBy("ship_day")
@@ -179,10 +171,10 @@ def op_ext_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-cumsum",
-    oracle="""
+    oracle=f"""
     WITH monthly AS (
       SELECT l_returnflag, strftime(l_shipdate, '%Y-%m') AS ship_month,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('l_extendedprice')}
                AS p
       FROM lineitem GROUP BY 1, 2
     )
@@ -202,7 +194,7 @@ def op_ext_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = li.groupBy(
         "l_returnflag",
         F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"),
-    ).agg(sum_cents("l_extendedprice").alias("_p"))
+    ).agg(F.expr(ex.sum_cents("l_extendedprice")).alias("_p"))
     w = (
         Window.partitionBy("l_returnflag")
         .orderBy("ship_month")
@@ -226,7 +218,7 @@ def op_ext_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH rev AS (
       SELECT n_name, s.s_suppkey, s_name,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('l_extendedprice')}
                AS p
       FROM lineitem l
       JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -253,7 +245,7 @@ def op_ext_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
         .groupBy("n_name", "s_suppkey", "s_name")
-        .agg(sum_cents("l_extendedprice").alias("_p"))
+        .agg(F.expr(ex.sum_cents("l_extendedprice")).alias("_p"))
     )
     top = an.top_k_per_group(
         rev, ["n_name"], [F.desc("_p"), F.asc("s_suppkey")], k=3
@@ -268,7 +260,7 @@ def op_ext_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-ntile",
-    oracle="""
+    oracle=f"""
     WITH q AS (
       SELECT c_custkey, c_acctbal,
              ntile(4) OVER (ORDER BY c_acctbal, c_custkey) AS quartile
@@ -277,7 +269,7 @@ def op_ext_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(quartile AS BIGINT) AS quartile,
            COUNT(*) AS n_customers,
            MIN(c_acctbal) AS min_bal, MAX(c_acctbal) AS max_bal,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+           {ex.dsum('c_acctbal')} AS total_bal
     FROM q GROUP BY 1
     """,
 )
@@ -306,7 +298,8 @@ def op_ext_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
            l_extendedprice AS top_price
     FROM (
       SELECT *, row_number() OVER (PARTITION BY l_returnflag
-                  ORDER BY {_CENTS} DESC, l_orderkey, l_linenumber) AS rn
+                  ORDER BY {ex.cents('l_extendedprice')} DESC, l_orderkey,
+                           l_linenumber) AS rn
       FROM lineitem
     ) WHERE rn = 1
     """,
@@ -316,7 +309,9 @@ def op_ext_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     price (row_number over exact cents with full-key tiebreak, rn = 1).
     Plans as a per-partition top-1 before the final per-group pick —
     never a global sort of the fact."""
-    li = t(spark, sf_dir, "lineitem").withColumn("_pc", _price_cents())
+    li = t(spark, sf_dir, "lineitem").withColumn(
+        "_pc", F.expr(ex.cents("l_extendedprice"))
+    )
     w = Window.partitionBy("l_returnflag").orderBy(
         F.desc("_pc"), F.asc("l_orderkey"), F.asc("l_linenumber")
     )
@@ -382,11 +377,12 @@ def op_ext_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH s AS (
       SELECT l_returnflag, COUNT(*) AS n,
              SUM(CAST(l_quantity AS BIGINT)) AS sx,
-             SUM({_CENTS}) AS sy,
+             SUM({ex.cents('l_extendedprice')}) AS sy,
              SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT))
                AS sxx,
-             SUM(CAST({_CENTS} AS DECIMAL(38,0)) * {_CENTS}) AS syy,
-             SUM(CAST(l_quantity AS BIGINT) * {_CENTS}) AS sxy
+             SUM(CAST({ex.cents('l_extendedprice')} AS DECIMAL(38,0))
+                 * {ex.cents('l_extendedprice')}) AS syy,
+             SUM(CAST(l_quantity AS BIGINT) * {ex.cents('l_extendedprice')}) AS sxy
       FROM lineitem GROUP BY 1
     )
     SELECT l_returnflag, n AS n_rows,
@@ -403,7 +399,7 @@ def op_ext_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (
         t(spark, sf_dir, "lineitem")
         .withColumn("_q", F.col("l_quantity").cast("bigint"))
-        .withColumn("_pc", _price_cents())
+        .withColumn("_pc", F.expr(ex.cents("l_extendedprice")))
     )
     s = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -425,9 +421,9 @@ def op_ext_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "op-ext-histogram",
     oracle=f"""
-    SELECT CAST(least({_CENTS} // 1100000, 9) AS BIGINT) AS bin,
+    SELECT CAST(least({ex.cents('l_extendedprice')} // 1100000, 9) AS BIGINT) AS bin,
            COUNT(*) AS n_items,
-           {o_dsum('l_extendedprice')} AS bin_revenue
+           {ex.dsum('l_extendedprice')} AS bin_revenue
     FROM lineitem GROUP BY 1
     """,
 )
@@ -437,7 +433,10 @@ def op_ext_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression, so the histogram is ONE combinable aggregate however
     wide the fact table is."""
     li = t(spark, sf_dir, "lineitem").withColumn(
-        "bin", F.least(F.expr(f"({_CENTS}) div 1100000"), F.lit(9)).cast("bigint")
+        "bin",
+        F.least(
+            F.expr(f"({ex.cents('l_extendedprice')}) div 1100000"), F.lit(9)
+        ).cast("bigint"),
     )
     return li.groupBy("bin").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -447,9 +446,9 @@ def op_ext_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-histogram-equidepth",
-    oracle="""
+    oracle=f"""
     WITH base AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      SELECT {ex.cents('o_totalprice')}
                AS v
       FROM orders
     ),
@@ -490,9 +489,7 @@ def op_ext_histogram_equidepth(
     domain. All arithmetic exact int64; boundary 10 is the max value
     by construction."""
     base = t(spark, sf_dir, "orders").select(
-        F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-        ).alias("v")
+        F.expr(ex.cents("o_totalprice")).alias("v")
     )
     d = base.groupBy("v").agg(
         F.count(F.lit(1)).cast("bigint").alias("ct")
@@ -524,7 +521,7 @@ def op_ext_histogram_equidepth(
 @query(
     "op-ext-winsorize",
     oracle=f"""
-    WITH pc AS (SELECT l_returnflag, {_CENTS} AS c, l_extendedprice
+    WITH pc AS (SELECT l_returnflag, {ex.cents('l_extendedprice')} AS c, l_extendedprice
                 FROM lineitem),
     bounds AS (
       SELECT l_returnflag,
@@ -535,7 +532,7 @@ def op_ext_histogram_equidepth(
     SELECT p.l_returnflag, b.lo_c, b.hi_c,
            COUNT(*) FILTER (WHERE c < lo_c) AS n_low,
            COUNT(*) FILTER (WHERE c > hi_c) AS n_high,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
+           CAST(SUM({ex.money('l_extendedprice')})
                   FILTER (WHERE c >= lo_c AND c <= hi_c) AS DOUBLE)
              AS inlier_revenue
     FROM pc p JOIN bounds b ON p.l_returnflag = b.l_returnflag
@@ -550,7 +547,7 @@ def op_ext_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups-sized and broadcast back — the standard scalable shape for
     quantile clipping."""
     pc = t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", _price_cents().alias("c"), "l_extendedprice"
+        "l_returnflag", F.expr(ex.cents("l_extendedprice")).alias("c"), "l_extendedprice"
     )
     bounds = pc.groupBy("l_returnflag").agg(
         F.ceil(F.expr("percentile(c, 0.05)")).cast("bigint").alias("lo_c"),
@@ -644,18 +641,13 @@ def op_ext_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shard_bucket_sql() -> str:
-    h = "md5('shard:' || CAST(doc_id AS VARCHAR))"
-    nib = "(strpos('0123456789abcdef', substring({h}, {i}, 1)) - 1)"
-    return f"({nib.format(h=h, i=1)} * 16 + {nib.format(h=h, i=2)})"
-
-
 @query(
     "op-ext-shard-assign",
     oracle=f"""
     WITH sh AS (
       SELECT doc_id,
-             CAST({_shard_bucket_sql()} % 8 AS BIGINT) AS shard,
+             CAST({tx.bucket_sql(ex.hex_int_oracle, 'doc_id', 'shard:')} % 8 AS BIGINT)
+               AS shard,
              md5('ord:' || CAST(doc_id AS VARCHAR)) AS ord_key
       FROM documents
     )
@@ -735,13 +727,13 @@ def op_ext_chunk_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-unpivot",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT l_returnflag,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+             {ex.dsum('l_quantity')} AS qty,
+             {ex.dsum('l_extendedprice')}
                AS price,
-             CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS disc
+             {ex.dsum('l_discount')} AS disc
       FROM lineitem GROUP BY 1
     )
     SELECT l_returnflag, 'quantity' AS measure, qty AS total FROM s
@@ -773,11 +765,11 @@ def op_ext_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-grouping-sets",
-    oracle="""
+    oracle=f"""
     SELECT coalesce(o_orderstatus, 'ALL') AS status,
            coalesce(o_orderpriority, 'ALL') AS priority,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+           {ex.dsum('o_totalprice')}
              AS revenue
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
@@ -791,11 +783,11 @@ def op_ext_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("gs_orders")
     return spark.sql(
-        """
+        f"""
         SELECT coalesce(o_orderstatus, 'ALL') AS status,
                coalesce(o_orderpriority, 'ALL') AS priority,
                COUNT(*) AS n_orders,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+               {ex.dsum('o_totalprice')}
                  AS revenue
         FROM gs_orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
@@ -836,10 +828,10 @@ def op_ext_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-ewma",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE daily AS MATERIALIZED (
       SELECT l_returnflag, strftime(l_shipdate, '%Y-%m-%d') AS ship_day,
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
+             CAST(CAST(SUM({ex.money('l_extendedprice')} * 100)
                        AS BIGINT) AS DOUBLE) / 100.0 AS day_revenue
       FROM lineitem GROUP BY 1, 2
     ),
@@ -879,7 +871,7 @@ def op_ext_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         F.date_format("l_shipdate", "yyyy-MM-dd").alias("ship_day"),
     ).agg(
-        (sum_cents("l_extendedprice").cast("double") / 100.0).alias(
+        (F.expr(ex.sum_cents("l_extendedprice")).cast("double") / 100.0).alias(
             "day_revenue"
         )
     )
@@ -912,7 +904,7 @@ def op_ext_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sketch, then rank count against the 3-row broadcast result) —
     both map-side-combined aggs."""
     pc = t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", _price_cents().alias("c")
+        "l_returnflag", F.expr(ex.cents("l_extendedprice")).alias("c")
     )
     approx = pc.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -995,7 +987,7 @@ _CM_DISC = "CAST(CAST(l_discount AS DECIMAL(5,2)) * 100 AS BIGINT)"
 _CM_TAX = "CAST(CAST(l_tax AS DECIMAL(5,2)) * 100 AS BIGINT)"
 _CM_VARS = [
     ("qty", "CAST(l_quantity AS BIGINT)"),
-    ("price_c", _CENTS),
+    ("price_c", ex.cents("l_extendedprice")),
     ("disc_pct", _CM_DISC),
     ("tax_pct", _CM_TAX),
 ]
@@ -1067,10 +1059,10 @@ def op_ext_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-holt-linear",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE daily AS MATERIALIZED (
       SELECT l_returnflag, strftime(l_shipdate, '%Y-%m-%d') AS ship_day,
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
+             CAST(CAST(SUM({ex.money('l_extendedprice')} * 100)
                        AS BIGINT) AS DOUBLE) / 100.0 AS day_revenue
       FROM lineitem GROUP BY 1, 2
     ),
@@ -1121,7 +1113,7 @@ def op_ext_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         F.date_format("l_shipdate", "yyyy-MM-dd").alias("ship_day"),
     ).agg(
-        (sum_cents("l_extendedprice").cast("double") / 100.0).alias(
+        (F.expr(ex.sum_cents("l_extendedprice")).cast("double") / 100.0).alias(
             "day_revenue"
         )
     )
@@ -1423,7 +1415,7 @@ _SPEAR_RHO = (
     WITH rows0 AS (
       SELECT l_returnflag AS flag, strftime(l_shipdate, '%Y-%m') AS mon,
              CAST(l_quantity AS BIGINT) AS x,
-             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {ex.cents('l_extendedprice')}
                AS y
       FROM lineitem
     ),
@@ -1498,8 +1490,7 @@ def op_ext_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag AS flag",
         "date_format(l_shipdate, 'yyyy-MM') AS mon",
         "CAST(l_quantity AS BIGINT) AS x",
-        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-        " AS y",
+        ex.cents("l_extendedprice") + " AS y",
     )
     def ranks(var: str) -> DataFrame:
         g = li.groupBy("flag", "mon", var).agg(
@@ -1683,10 +1674,10 @@ _WSR_Z = (
     WITH per AS (
       SELECT o_custkey,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1995
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c95,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1996
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c96,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1995
                   THEN 1 ELSE 0 END) AS BIGINT) AS n95,
@@ -1742,9 +1733,7 @@ def op_ext_wilcoxon_signed_rank(
     o = t(spark, sf_dir, "orders").filter(
         F.year("o_orderdate").isin(1995, 1996)
     )
-    cents = F.expr(
-        "CAST(o_totalprice AS DECIMAL(18,2)) * 100"
-    )
+    cents = F.expr(f"{ex.money('o_totalprice')} * 100")
     y = F.year("o_orderdate")
     per = o.groupBy("o_custkey").agg(
         F.sum(F.when(y == 1995, cents).otherwise(0))
@@ -1895,13 +1884,13 @@ _FRIED_C = (
     WITH per AS (
       SELECT o_custkey,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1995
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c95,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1996
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c96,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1997
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c97,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1995
                   THEN 1 ELSE 0 END) AS BIGINT) AS k95,
@@ -1967,7 +1956,7 @@ def op_ext_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").filter(
         F.year("o_orderdate").isin(1995, 1996, 1997)
     )
-    cents = F.expr("CAST(o_totalprice AS DECIMAL(18,2)) * 100")
+    cents = F.expr(f"{ex.money('o_totalprice')} * 100")
     y = F.year("o_orderdate")
     per = o.groupBy("o_custkey").agg(
         *[
@@ -2058,7 +2047,7 @@ _JT_Z = f"({_JT_NUM} / (CAST(4 AS DOUBLE) * sqrt({_JT_VAR})))"
     "op-ext-jonckheere",
     oracle=f"""
     WITH s AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      SELECT {ex.cents('o_totalprice')}
                AS v,
              year(o_orderdate) AS yr
       FROM orders WHERE year(o_orderdate) IN (1995, 1996, 1997)
@@ -2113,9 +2102,7 @@ def op_ext_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     y = F.year("o_orderdate")
     g = o.groupBy(
-        F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-        ).alias("v")
+        F.expr(ex.cents("o_totalprice")).alias("v")
     ).agg(
         *[
             F.sum(F.when(y == yr, 1).otherwise(0))
@@ -2163,13 +2150,13 @@ _PAGE_Z = (
     WITH per AS (
       SELECT o_custkey,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1995
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c95,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1996
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c96,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1997
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c97,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1995
                   THEN 1 ELSE 0 END) AS BIGINT) AS k95,
@@ -2217,7 +2204,7 @@ def op_ext_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").filter(
         F.year("o_orderdate").isin(1995, 1996, 1997)
     )
-    cents = F.expr("CAST(o_totalprice AS DECIMAL(18,2)) * 100")
+    cents = F.expr(f"{ex.money('o_totalprice')} * 100")
     y = F.year("o_orderdate")
     per = o.groupBy("o_custkey").agg(
         *[
@@ -2541,10 +2528,10 @@ _PAIRED_T = (
     WITH per AS (
       SELECT o_custkey,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1995
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c95,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1996
-                  THEN CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                  THEN {ex.money('o_totalprice')} * 100
                   ELSE 0 END) AS BIGINT) AS c96,
              CAST(SUM(CASE WHEN year(o_orderdate) = 1995
                   THEN 1 ELSE 0 END) AS BIGINT) AS n95,
@@ -2587,7 +2574,7 @@ def op_ext_paired_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").filter(
         F.year("o_orderdate").isin(1995, 1996)
     )
-    cents = F.expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
+    cents = F.expr(ex.cents("o_totalprice"))
     y95 = F.year("o_orderdate") == 1995
     per = o.groupBy("o_custkey").agg(
         F.sum(F.when(y95, cents).otherwise(0)).cast("bigint").alias("c95"),
@@ -2621,11 +2608,11 @@ def op_ext_paired_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: per-group pair count (~80²/2) is a CONSTANT w.r.t. data volume — the
 #: O(Σ n_g²) self-join is linear in |groups| and survives 100× with the
 #: same plan (more rows only make the per-cell SUMs bigger).
-_MK_PER_SQL = """
+_MK_PER_SQL = f"""
       SELECT c.c_nationkey AS nk,
              CAST(year(o.o_orderdate) * 12 + month(o.o_orderdate)
                   AS BIGINT) AS m,
-             CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100)
+             CAST(SUM({ex.money('o.o_totalprice')} * 100)
                   AS BIGINT) AS v
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY 1, 2
@@ -2651,7 +2638,7 @@ def _mk_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
         .cast("bigint")
         .alias("m"),
-        F.expr("CAST(o_totalprice AS DECIMAL(18,2)) * 100").alias("_c"),
+        F.expr(f"{ex.money('o_totalprice')} * 100").alias("_c"),
     )
     c = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"),
@@ -2862,11 +2849,11 @@ def op_ext_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (nation, month) — the inputs tau-b correlates. Same scale argument:
 #: |months| is calendar-constant, so the per-nation pair join is O(1)
 #: w.r.t. fact volume.
-_KT_PER_SQL = """
+_KT_PER_SQL = f"""
       SELECT c.c_nationkey AS nk,
              CAST(year(o.o_orderdate) * 12 + month(o.o_orderdate)
                   AS BIGINT) AS m,
-             CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100)
+             CAST(SUM({ex.money('o.o_totalprice')} * 100)
                   AS BIGINT) AS v,
              CAST(COUNT(*) AS BIGINT) AS q
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -2948,7 +2935,7 @@ def op_ext_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
         .cast("bigint")
         .alias("m"),
-        F.expr("CAST(o_totalprice AS DECIMAL(18,2)) * 100").alias("_c"),
+        F.expr(f"{ex.money('o_totalprice')} * 100").alias("_c"),
     )
     c = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"),
@@ -3099,7 +3086,7 @@ _AD_A2_MOD = (
     oracle=f"""
     WITH x AS (
       SELECT event_type AS g,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+             {ex.cents('value')} AS c
       FROM events WHERE value IS NOT NULL
     ),
     s AS (
@@ -3168,7 +3155,7 @@ def op_ext_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             F.col("event_type").alias("g"),
-            F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
+            F.expr(ex.cents("value"))
             .alias("c"),
         )
     )
@@ -3245,12 +3232,12 @@ _PSI_BIN = (
     "op-ext-psi",
     oracle=f"""
     WITH base AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      SELECT {ex.cents('o_totalprice')}
                AS c
       FROM orders WHERE year(o_orderdate) = 1995
     ),
     targ AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      SELECT {ex.cents('o_totalprice')}
                AS c
       FROM orders WHERE year(o_orderdate) = 1996
     ),
@@ -3315,7 +3302,7 @@ def op_ext_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark class; everything after is a 10-row frame."""
     o = t(spark, sf_dir, "orders").select(
         F.year("o_orderdate").alias("y"),
-        F.expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
+        F.expr(ex.cents("o_totalprice"))
         .alias("c"),
     )
     base = o.filter(F.col("y") == 1995).select("c")

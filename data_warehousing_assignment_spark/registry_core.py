@@ -19,18 +19,13 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.registry import (
     ROUND2_MEAN_EXPR,
     _ds,
-    davg,
     dec,
-    dsum,
-    o_davg,
-    o_dsum,
     o_round2_mean,
-    o_sum_cents,
     query,
-    sum_cents,
     t,
 )
 from data_warehousing_assignment_spark.functions.cleaning import (
@@ -78,11 +73,11 @@ def op_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-derive",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey, l_linenumber,
            l_discount > 0.05 AS is_discounted,
-           CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (1 - CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS net_price
+           CAST({ex.money('l_extendedprice')}
+                * (1 - {ex.money('l_discount')}) AS DOUBLE) AS net_price
     FROM lineitem
     """,
 )
@@ -333,12 +328,10 @@ def op_join_inner_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-join-inner-star",
-    oracle="""
+    oracle=f"""
     SELECT n_name, strftime(o_orderdate, '%Y-%m') AS order_month,
-           CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
-                         AS BIGINT)
-                    * (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100
-                                  AS BIGINT))) AS DOUBLE) / 10000.0
+           CAST(SUM({ex.cents('l_extendedprice')}
+                    * (100 - {ex.cents('l_discount')})) AS DOUBLE) / 10000.0
              AS revenue
     FROM lineitem
     JOIN orders   ON l_orderkey = o_orderkey
@@ -514,16 +507,16 @@ def op_agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-agg-sum-round",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-           CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                          * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE)
+           {ex.dsum('l_quantity')} AS sum_qty,
+           {ex.dsum('l_extendedprice')} AS sum_base_price,
+           CAST(ROUND(SUM({ex.money('l_extendedprice')}
+                          * (1 - {ex.money('l_discount')})), 2) AS DOUBLE)
              AS sum_disc_price,
-           CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                          * (1 - CAST(l_discount AS DECIMAL(18,2)))
-                          * (1 + CAST(l_tax AS DECIMAL(18,2)))), 2) AS DOUBLE)
+           CAST(ROUND(SUM({ex.money('l_extendedprice')}
+                          * (1 - {ex.money('l_discount')})
+                          * (1 + {ex.money('l_tax')})), 2) AS DOUBLE)
              AS sum_charge,
            COUNT(*) AS count_order
     FROM lineitem
@@ -543,8 +536,8 @@ def op_agg_sum_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc_price = dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))
     charge = disc_price * (F.lit(1) + dec("l_tax"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum("l_quantity").alias("sum_qty"),
-        dsum("l_extendedprice").alias("sum_base_price"),
+        F.expr(ex.dsum("l_quantity")).alias("sum_qty"),
+        F.expr(ex.dsum("l_extendedprice")).alias("sum_base_price"),
         F.round(F.sum(disc_price), 2).cast("double").alias("sum_disc_price"),
         F.round(F.sum(charge), 2).cast("double").alias("sum_charge"),
         F.count(F.lit(1)).alias("count_order"),
@@ -555,7 +548,7 @@ def op_agg_sum_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op-agg-avg-round",
     oracle=f"""
     WITH s AS (
-      SELECT c_mktsegment, c_nationkey, {o_sum_cents('c_acctbal')} AS _p,
+      SELECT c_mktsegment, c_nationkey, {ex.sum_cents('c_acctbal')} AS _p,
              COUNT(*) AS _c
       FROM customer GROUP BY c_mktsegment, c_nationkey
     )
@@ -575,7 +568,10 @@ def op_agg_avg_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = t(spark, sf_dir, "customer")
     return (
         cust.groupBy("c_mktsegment", "c_nationkey")
-        .agg(sum_cents("c_acctbal").alias("_p"), F.count(F.lit(1)).alias("_c"))
+        .agg(
+            F.expr(ex.sum_cents("c_acctbal")).alias("_p"),
+            F.count(F.lit(1)).alias("_c"),
+        )
         .select(
             "c_mktsegment",
             "c_nationkey",
@@ -589,7 +585,7 @@ def op_agg_avg_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op-agg-groupby-mean",
     oracle=f"""
     SELECT user_id,
-           {o_davg("value")} AS mean_value
+           {ex.davg("value")} AS mean_value
     FROM events
     GROUP BY user_id
     """,
@@ -600,7 +596,7 @@ def op_agg_groupby_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t(spark, sf_dir, "events")
         .groupBy("user_id")
-        .agg(davg("value").alias("mean_value"))
+        .agg(F.expr(ex.davg("value")).alias("mean_value"))
     )
 
 
@@ -764,9 +760,9 @@ def op_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-sort-desc",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_sales
+           {ex.dsum('o_totalprice')} AS total_sales
     FROM orders
     JOIN customer ON o_custkey = c_custkey
     JOIN nation ON c_nationkey = n_nationkey
@@ -783,7 +779,7 @@ def op_sort_desc(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("n_name")
-        .agg(dsum("o_totalprice").alias("total_sales"))
+        .agg(F.expr(ex.dsum("o_totalprice")).alias("total_sales"))
         .orderBy(F.desc("total_sales"))
     )
 
@@ -1225,9 +1221,9 @@ def op_fn_abs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-fn-round",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey,
-           CAST(ROUND(CAST(c_acctbal AS DECIMAL(18,2)), 1) AS DOUBLE)
+           CAST(ROUND({ex.money('c_acctbal')}, 1) AS DOUBLE)
              AS acctbal_rounded
     FROM customer
     """,

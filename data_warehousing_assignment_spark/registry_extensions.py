@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.registry import _TOKS, dec, query, t
 from data_warehousing_assignment_spark.operators import dedup as dd
 from data_warehousing_assignment_spark.operators import similarity as sim
@@ -218,13 +219,11 @@ def op_ext_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_oracle(bits: int = dd.SIMHASH_BITS) -> str:
     """Oracle twin of operators/dedup.simhash: one vote sum per md5 bit,
-    read per nibble through strpos (independent of the engine's packed
-    chunk parse), packed into the same int64 words
-    (dedup.simhash_word_sql)."""
+    read per nibble (independent of the engine's packed chunk parse),
+    packed into the same int64 words (dedup.simhash_word_sql)."""
     votes = ", ".join(
-        "SUM(CASE WHEN ((strpos('0123456789abcdef', "
-        f"substr(md5(tok), {j // 4 + 1}, 1)) - 1) & {1 << (j % 4)}) > 0 "
-        f"THEN 1 ELSE -1 END) AS _v{j}"
+        f"SUM(CASE WHEN ({ex.nibble('md5(tok)', j // 4 + 1)} & {1 << (j % 4)})"
+        f" > 0 THEN 1 ELSE -1 END) AS _v{j}"
         for j in range(bits)
     )
     return f"""
@@ -607,11 +606,11 @@ def op_ext_embed_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-stream-tumbling",
-    oracle="""
+    oracle=f"""
     SELECT strftime(time_bucket(INTERVAL 1 HOUR, ts), '%Y-%m-%d %H:%M:%S')
              AS window_start,
            event_type, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+           {ex.dsum('value')} AS total_value
     FROM events GROUP BY 1, 2
     """,
 )
@@ -623,7 +622,7 @@ def op_ext_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-stream-sliding",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT time_bucket(INTERVAL 1 HOUR, ts) AS ws, value FROM events
       UNION ALL
@@ -632,7 +631,7 @@ def op_ext_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+           {ex.dsum('value')} AS total_value
     FROM b GROUP BY ws
     """,
 )
@@ -644,7 +643,7 @@ def op_ext_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-stream-session",
-    oracle="""
+    oracle=f"""
     WITH seq AS (
       SELECT user_id, ts, event_id, value,
              CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -666,7 +665,7 @@ def op_ext_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
            user_id, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+           {ex.dsum('value')} AS total_value
     FROM sess GROUP BY user_id, session_no
     """,
 )
@@ -828,10 +827,10 @@ from data_warehousing_assignment_spark.streaming import stateful as st  # noqa: 
 
 @query(
     "op-ext-stream-stateful",
-    oracle="""
+    oracle=f"""
     SELECT user_id,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
+           {ex.dsum('value')} AS total_value,
            COUNT(*) AS max_batch
     FROM events GROUP BY user_id
     """,
@@ -1824,9 +1823,9 @@ def op_ext_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-rollup",
-    oracle="""
+    oracle=f"""
     SELECT n_name, o_orderpriority,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
+           {ex.dsum('o_totalprice')} AS total,
            COUNT(*) AS n_orders
     FROM orders
     JOIN customer ON o_custkey = c_custkey
@@ -1872,14 +1871,14 @@ def op_ext_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-pivot",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
            CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN
-                CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS F,
+                {ex.money('o_totalprice')} END) AS DOUBLE) AS F,
            CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN
-                CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS O,
+                {ex.money('o_totalprice')} END) AS DOUBLE) AS O,
            CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN
-                CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS P
+                {ex.money('o_totalprice')} END) AS DOUBLE) AS P
     FROM orders
     JOIN customer ON o_custkey = c_custkey
     JOIN nation ON c_nationkey = n_nationkey
@@ -2043,7 +2042,7 @@ def op_ext_dedup_best_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-range-join",
-    oracle="""
+    oracle=f"""
     WITH pts AS (
       SELECT CAST(unnest(generate_series(DATE '1995-01-01',
                                          DATE '2001-12-01',
@@ -2057,7 +2056,7 @@ def op_ext_dedup_best_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem
     )
     SELECT strftime(d, '%Y-%m-%d') AS as_of_date, COUNT(*) AS n_in_transit,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+           {ex.dsum('l_quantity')}
              AS qty_in_transit
     FROM pts JOIN iv ON iv.s <= pts.d AND pts.d < iv.e
     GROUP BY d
@@ -2093,7 +2092,7 @@ def op_ext_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         matched.groupBy("_m")
         .agg(
             F.count(F.lit(1)).alias("n_in_transit"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
+            F.sum(dec("l_quantity"))
             .cast("double")
             .alias("qty_in_transit"),
         )
@@ -2109,10 +2108,10 @@ def op_ext_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-rollup-cascade",
-    oracle="""
+    oracle=f"""
     SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+           {ex.dsum('value')} AS total_value
     FROM events GROUP BY 1, 2
     """,
 )
@@ -2132,19 +2131,7 @@ def op_ext_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB twin of text.hash_bucket (strpos-on-hex-alphabet nibbles, the
-# same portable trick as the SimHash oracle).
-def _bucket_sql(key: str, salt: str) -> str:
-    h = f"md5('{salt}' || CAST({key} AS VARCHAR))"
-    nib = (
-        "(strpos('0123456789abcdef', substring({h}, {i}, 1)) - 1)"
-    )
-    return (
-        f"({nib.format(h=h, i=1)} * 16 + {nib.format(h=h, i=2)})"
-    )
-
-
-_SPLIT_BUCKET = _bucket_sql("doc_id", tx.SPLIT_SALT)
+_SPLIT_BUCKET = tx.bucket_sql(ex.hex_int_oracle, "doc_id", tx.SPLIT_SALT)
 
 
 @query(
@@ -2170,13 +2157,16 @@ def op_ext_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_STRAT_BUCKET = tx.bucket_sql(ex.hex_int_oracle, "doc_id", "strat:")
+
+
 @query(
     "op-ext-sample-stratified",
     oracle=f"""
     SELECT doc_id, lang,
-           CAST({_bucket_sql('doc_id', 'strat:')} AS BIGINT) AS bucket
+           CAST({_STRAT_BUCKET} AS BIGINT) AS bucket
     FROM documents
-    WHERE {_bucket_sql('doc_id', 'strat:')}
+    WHERE {_STRAT_BUCKET}
           < CASE WHEN lang = 'en' THEN 192 ELSE 64 END
     """,
 )
@@ -2593,17 +2583,14 @@ def bm25_build(
         .agg(F.expr("count(1) AS tf"))
     )
     if zipf_skew:
+        coin = "md5(concat_ws(':', tok, CAST(doc_id AS STRING)))"
         tokrank = tf.select("tok").distinct().selectExpr(
             "tok",
             "CAST(row_number() OVER (ORDER BY md5(tok), tok) AS BIGINT) AS zrank",
         )
         tf = pin(
             tf.join(tokrank, "tok")
-            .filter(
-                "CAST(conv(substring(md5(concat_ws(':', tok,"
-                " CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
-                " % zrank = 0"
-            )
+            .filter(f"{ex.hex_int(coin, 1, 8)} % zrank = 0")
             .drop("zrank")
         )
         dl = tf.groupBy("doc_id").agg(F.expr("CAST(sum(tf) AS BIGINT) AS dl"))
@@ -2681,14 +2668,14 @@ def op_ext_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-gapfill",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, epoch_us(ts) // 3600000000 AS hour_id, value
       FROM events WHERE user_id < 10
     ),
     hourly AS (
       SELECT user_id, hour_id, COUNT(*) AS n_ev,
-             CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS hv
+             {ex.dsum('value')} AS hv
       FROM ev GROUP BY 1, 2
     ),
     spine AS (
@@ -2800,12 +2787,6 @@ def op_ext_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_join(docs, "doc_id", "s", threshold=0.9)
 
 
-def _cur_bucket_sql() -> str:
-    h = "md5('cur:' || CAST(d.doc_id AS VARCHAR))"
-    nib = "(strpos('0123456789abcdef', substring({h}, {i}, 1)) - 1)"
-    return f"({nib.format(h=h, i=1)} * 16 + {nib.format(h=h, i=2)})"
-
-
 @query(
     "op-ext-curation-funnel",
     oracle=f"""WITH RECURSIVE {_EDGE_CTES},
@@ -2813,7 +2794,8 @@ def _cur_bucket_sql() -> str:
       SELECT d.source,
              len({_TOKS}) >= 5 AS q,
              d.doc_id = c.cluster_id AS surv,
-             ({_cur_bucket_sql()} % 10) < 8 AS samp
+             ({tx.bucket_sql(ex.hex_int_oracle, 'd.doc_id', 'cur:')} % 10) < 8
+               AS samp
       FROM documents d JOIN comp c ON d.doc_id = c.doc_id
     )
     SELECT source,

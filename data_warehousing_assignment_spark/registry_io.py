@@ -20,6 +20,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.registry import query, t
 from data_warehousing_assignment_spark.sources.readers import read_csv
 from data_warehousing_assignment_spark.sources.xlsx import read_excel, write_xlsx
@@ -286,7 +287,7 @@ def op_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT o_custkey,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+           {ex.sum_cents('o_totalprice')}
              AS rev_cents
     FROM orders WHERE year(o_orderdate) < 1997
     GROUP BY 1
@@ -313,10 +314,7 @@ def op_ext_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderdate",
-        (
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-        ).alias("pc"),
+        F.expr(ex.cents("o_totalprice")).alias("pc"),
     )
     for version, year in enumerate((1995, 1996, 1997), start=1):
         txlog.commit(
@@ -332,10 +330,10 @@ def op_ext_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-bucket-join",
-    oracle="""
+    oracle=f"""
     SELECT c.c_mktsegment,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+           CAST(SUM({ex.money('o.o_totalprice')} * 100) AS BIGINT)
              AS rev_cents
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY 1
@@ -360,9 +358,7 @@ def op_ext_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_tbl = scratch_table(spark, "bkt_customer")
     orders = t(spark, sf_dir, "orders").select(
         "o_custkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("pc"),
+        F.expr(ex.cents("o_totalprice")).alias("pc"),
     )
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     (

@@ -15,9 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.operators import analytics as an
 from data_warehousing_assignment_spark.operators.text import tokens
-from data_warehousing_assignment_spark.registry import _TOKS, query, sum_cents, t
+from data_warehousing_assignment_spark.registry import _TOKS, query, t
 
 
 def _sdiv(a, b):
@@ -40,10 +41,10 @@ def _sdiv(a, b):
 
 @query(
     "op-ext-linreg",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT l_returnflag AS flag, l_shipdate AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
+             CAST(SUM({ex.money('l_extendedprice')} * 100)
                   AS BIGINT) AS y
       FROM lineitem GROUP BY 1, 2
     ),
@@ -96,7 +97,7 @@ def op_ext_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = li.groupBy(
         F.col("l_returnflag").alias("flag"),
         F.col("l_shipdate").alias("d"),
-    ).agg(sum_cents("l_extendedprice").alias("y"))
+    ).agg(F.expr(ex.sum_cents("l_extendedprice")).alias("y"))
     wf = Window.partitionBy("flag")
     xy = daily.select(
         "flag",
@@ -142,10 +143,10 @@ def op_ext_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-autocorr",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT l_returnflag AS flag, l_shipdate AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
+             CAST(SUM({ex.money('l_extendedprice')} * 100)
                   AS BIGINT) AS y
       FROM lineitem GROUP BY 1, 2
     ),
@@ -198,7 +199,7 @@ def op_ext_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = li.groupBy(
         F.col("l_returnflag").alias("flag"),
         F.col("l_shipdate").alias("d"),
-    ).agg(sum_cents("l_extendedprice").alias("y"))
+    ).agg(F.expr(ex.sum_cents("l_extendedprice")).alias("y"))
     m = daily.select(
         "flag",
         "d",
@@ -474,12 +475,12 @@ def op_ext_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-auc",
-    oracle="""
+    oracle=f"""
     WITH resp AS (SELECT DISTINCT o_custkey FROM orders
                   WHERE year(o_orderdate) = 1997),
     s AS (
       SELECT c.c_custkey,
-             CAST(CAST(c.c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {ex.cents('c.c_acctbal')}
                AS score,
              CASE WHEN r.o_custkey IS NOT NULL THEN 1 ELSE 0 END AS y
       FROM customer c LEFT JOIN resp r ON c.c_custkey = r.o_custkey
@@ -532,9 +533,7 @@ def op_ext_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "customer")
         .join(resp, F.col("c_custkey") == F.col("o_custkey"), "left")
         .select(
-            F.expr(
-                "CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)"
-            ).alias("score"),
+            F.expr(ex.cents("c_acctbal")).alias("score"),
             F.coalesce("_r", F.lit(0)).alias("y"),
         )
     )
@@ -567,12 +566,10 @@ def op_ext_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-ks-test",
-    oracle="""
-    WITH a AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                           AS BIGINT) AS v
+    oracle=f"""
+    WITH a AS (SELECT {ex.cents('o_totalprice')} AS v
                FROM orders WHERE year(o_orderdate) = 1995),
-    b AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                      AS BIGINT) AS v
+    b AS (SELECT {ex.cents('o_totalprice')} AS v
           FROM orders WHERE year(o_orderdate) = 1996),
     na AS (SELECT CAST(COUNT(*) AS BIGINT) AS n1 FROM a),
     nb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n2 FROM b),
@@ -610,9 +607,7 @@ def op_ext_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-value frame (an.distributed_prefix) — near-continuous
     cent values never serialize through a single-task window."""
     o = t(spark, sf_dir, "orders")
-    cents = F.expr(
-        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-    )
+    cents = F.expr(ex.cents("o_totalprice"))
     a = o.filter(F.year("o_orderdate") == 1995).select(cents.alias("v"))
     b = o.filter(F.year("o_orderdate") == 1996).select(cents.alias("v"))
     na = a.agg(F.count(F.lit(1)).alias("n1"))
@@ -670,7 +665,7 @@ _LOO_EXPR = (
     oracle=f"""
     WITH y AS (
       SELECT o_orderkey, o_orderpriority AS prio,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y_c
+             {ex.cents('o_totalprice')} AS y_c
       FROM orders
     ),
     g AS (
@@ -696,9 +691,7 @@ def op_ext_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("prio"),
-        F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-        ).alias("y_c"),
+        F.expr(ex.cents("o_totalprice")).alias("y_c"),
     )
     g = y.groupBy("prio").agg(
         F.sum("y_c").cast("bigint").alias("s"),
@@ -709,20 +702,9 @@ def op_ext_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: md5-nibble helpers shared as TEXT shape with the DuckDB twin below —
-#: content-addressed hashing is the only cross-engine-identical hash
-#: (same rule as text.hash_bucket / the SimHash oracle).
-def _fh_bucket_sql(expr: str) -> str:
-    h = f"md5('fh:' || {expr})"
-    nib = "(strpos('0123456789abcdef', substring({h}, {i}, 1)) - 1)"
-    b = f"({nib.format(h=h, i=1)} * 16 + {nib.format(h=h, i=2)})"
-    return f"({b} % 64)"
-
-
-def _fh_sign_sql(expr: str) -> str:
-    h = f"md5('fh:' || {expr})"
-    nib3 = f"(strpos('0123456789abcdef', substring({h}, 3, 1)) - 1)"
-    return f"(CASE WHEN {nib3} % 2 = 0 THEN 1 ELSE -1 END)"
+#: md5 of each feature: its first two hex digits pick the bucket (mod
+#: 64), the parity of the third the sign
+_FH_H = ex.salted_md5("fh:", "f")
 
 
 @query(
@@ -733,8 +715,9 @@ def _fh_sign_sql(expr: str) -> str:
       UNION ALL
       SELECT 'nat=' || CAST(c_nationkey AS VARCHAR) AS f FROM customer
     )
-    SELECT CAST({_fh_bucket_sql('f')} AS BIGINT) AS bucket,
-           CAST(SUM({_fh_sign_sql('f')}) AS BIGINT) AS signed_sum,
+    SELECT CAST({ex.hex_int_oracle(_FH_H, 1, 2)} % 64 AS BIGINT) AS bucket,
+           CAST(SUM(CASE WHEN {ex.hex_int_oracle(_FH_H, 3, 1)} % 2 = 0
+                         THEN 1 ELSE -1 END) AS BIGINT) AS signed_sum,
            CAST(COUNT(*) AS BIGINT) AS n_feats
     FROM feats GROUP BY 1
     """,
@@ -759,12 +742,8 @@ def op_ext_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("f")
     )
-    h = F.md5(F.concat(F.lit("fh:"), F.col("f")))
-    nib = lambda i: F.instr(  # noqa: E731
-        F.lit("0123456789abcdef"), F.substring(h, i, 1)
-    ) - F.lit(1)
-    bucket = ((nib(1) * 16 + nib(2)) % 64).cast("bigint")
-    sign = F.when(nib(3) % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
+    bucket = F.expr(f"CAST({ex.hex_int(_FH_H, 1, 2)} % 64 AS BIGINT)")
+    sign = F.expr(f"CASE WHEN {ex.hex_int(_FH_H, 3, 1)} % 2 = 0 THEN 1 ELSE -1 END")
     return feats.groupBy(bucket.alias("bucket")).agg(
         F.sum(sign).cast("bigint").alias("signed_sum"),
         F.count(F.lit(1)).cast("bigint").alias("n_feats"),

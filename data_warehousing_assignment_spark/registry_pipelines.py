@@ -15,13 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.registry import (
     ROUND2_MEAN_EXPR,
     _ds,
     o_round2_mean,
-    o_sum_cents,
     query,
-    sum_cents,
     t,
 )
 from data_warehousing_assignment_spark.plans.scd2 import merge_scd2, scd2_row_hash
@@ -218,12 +217,7 @@ def op_pipe_fact_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = li.filter(
         (F.col("l_shipdate") >= "1996-10-01") & (F.col("l_shipdate") < "1997-07-01")
     ).select("l_orderkey", "l_linenumber", "l_shipdate")
-    inserted = incremental_fact_insert(
-        existing,
-        batch,
-        ["l_orderkey", "l_linenumber", "l_shipdate"],
-        date_col="l_shipdate",
-    )
+    inserted = incremental_fact_insert(existing, batch, date_col="l_shipdate")
     return inserted.select(
         "l_orderkey", "l_linenumber", _ds("l_shipdate").alias("ship_date")
     )
@@ -279,7 +273,7 @@ _IMPUTE_ORACLE = f"""
              CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v
       FROM events
     ), sums AS (
-      SELECT grp, {o_sum_cents('v')} AS _p, COUNT(v) AS _c
+      SELECT grp, {ex.sum_cents('v')} AS _p, COUNT(v) AS _c
       FROM dirty GROUP BY grp
     ), means AS (
       SELECT grp,
@@ -308,7 +302,7 @@ def _impute(spark: SparkSession, sf_dir: str, key_expr, key_name: str) -> DataFr
     # no double is ever rounded on either side.
     means = (
         dirty.groupBy("grp")
-        .agg(sum_cents("v").alias("_p"), F.count("v").alias("_c"))
+        .agg(F.expr(ex.sum_cents("v")).alias("_p"), F.count("v").alias("_c"))
         .select(
             "grp",
             F.when(F.col("_c") > 0, F.expr(ROUND2_MEAN_EXPR)).alias("grp_mean"),
@@ -525,7 +519,7 @@ def op_kpi_resignations(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op-pipe-kpi-avg-salary",
     oracle=f"""
     WITH s AS (
-      SELECT c_mktsegment, {o_sum_cents('c_acctbal')} AS _p, COUNT(*) AS _c
+      SELECT c_mktsegment, {ex.sum_cents('c_acctbal')} AS _p, COUNT(*) AS _c
       FROM customer GROUP BY c_mktsegment
     )
     SELECT c_mktsegment AS segment, {o_round2_mean('_p', '_c')} AS avg_salary
@@ -539,11 +533,10 @@ def op_kpi_avg_salary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-pipe-kpi-gross-monthly",
-    oracle="""
+    oracle=f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
            n_name AS department, o_orderpriority AS expense_type,
-           CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                         AS BIGINT)) AS DOUBLE) / 100.0
+           CAST(SUM({ex.cents('o_totalprice')}) AS DOUBLE) / 100.0
              AS gross_amount
     FROM orders
     JOIN customer ON o_custkey = c_custkey
@@ -562,11 +555,11 @@ def op_kpi_gross_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-pipe-kpi-net-monthly-dept",
-    oracle="""
+    oracle=f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
            n_name AS department,
-           CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                          * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2)
+           CAST(ROUND(SUM({ex.money('l_extendedprice')}
+                          * (1 - {ex.money('l_discount')})), 2)
                 AS DOUBLE) AS net_amount
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
@@ -589,11 +582,11 @@ def op_kpi_net_monthly_dept(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-pipe-kpi-net-by-type",
-    oracle="""
+    oracle=f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
            o_orderpriority AS expense_type,
-           CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                          * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2)
+           CAST(ROUND(SUM({ex.money('l_extendedprice')}
+                          * (1 - {ex.money('l_discount')})), 2)
                 AS DOUBLE) AS net_amount
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
@@ -613,9 +606,9 @@ def op_kpi_net_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH s AS (
       SELECT event_type,
-             CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
+             CAST(ROUND(SUM({ex.money('value')}), 2) AS DOUBLE)
                AS total_downtime,
-             {o_sum_cents('value')} AS _p, COUNT(*) AS _c
+             {ex.sum_cents('value')} AS _p, COUNT(*) AS _c
       FROM events GROUP BY event_type
     )
     SELECT event_type AS process_name, total_downtime,
@@ -633,9 +626,9 @@ def op_kpi_downtime_process(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH s AS (
       SELECT user_id % 5 AS department_id,
-             CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
+             CAST(ROUND(SUM({ex.money('value')}), 2) AS DOUBLE)
                AS total_downtime,
-             {o_sum_cents('value')} AS _p, COUNT(*) AS _c
+             {ex.sum_cents('value')} AS _p, COUNT(*) AS _c
       FROM events GROUP BY 1
     )
     SELECT department_id, total_downtime,

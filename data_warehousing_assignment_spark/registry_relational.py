@@ -18,15 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_warehousing_assignment_spark.registry import (
-    _CENTS,
-    _TOKS,
-    _price_cents,
-    dec,
-    query,
-    sum_cents,
-    t,
-)
+from data_warehousing_assignment_spark.functions import exact as ex
+from data_warehousing_assignment_spark.registry import _TOKS, dec, query, t
 
 
 # --------------------------------------------------------------------------
@@ -77,16 +70,16 @@ def op_ext_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-join-full-outer",
-    oracle="""
+    oracle=f"""
     WITH r94 AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('o_totalprice')}
                AS p94
       FROM orders WHERE year(o_orderdate) = 1995 GROUP BY 1
     ),
     r95 AS (
       SELECT o_custkey,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('o_totalprice')}
                AS p95
       FROM orders WHERE year(o_orderdate) = 1996 GROUP BY 1
     )
@@ -109,7 +102,7 @@ def op_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             o.filter(F.year("o_orderdate") == year)
             .groupBy("o_custkey")
-            .agg(sum_cents("o_totalprice").alias(alias))
+            .agg(F.expr(ex.sum_cents("o_totalprice")).alias(alias))
         )
 
     j = rev(1995, "_p94").join(rev(1996, "_p95"), "o_custkey", "full_outer")
@@ -159,7 +152,7 @@ def op_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "op-ext-median",
     oracle=f"""
-    WITH pc AS (SELECT l_returnflag, {_CENTS} AS c FROM lineitem)
+    WITH pc AS (SELECT l_returnflag, {ex.cents('l_extendedprice')} AS c FROM lineitem)
     SELECT l_returnflag, COUNT(*) AS n_rows,
            quantile_cont(c, 0.25) / 100.0 AS p25,
            quantile_cont(c, 0.50) / 100.0 AS median_price,
@@ -175,7 +168,7 @@ def op_ext_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     end. Exact percentile is a per-group sort — the approx_percentile
     sketch is the 100 TB path, anchored by this exact twin."""
     pc = t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", _price_cents().alias("c")
+        "l_returnflag", F.expr(ex.cents("l_extendedprice")).alias("c")
     )
     return pc.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -223,10 +216,10 @@ def op_ext_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-minmax-by",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
       SELECT n_name, s_name,
-             CAST(CAST(s_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) * 1000000
+             {ex.cents('s_acctbal')} * 1000000
                + s_suppkey AS k
       FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
     )
@@ -263,10 +256,10 @@ def op_ext_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-percent-rank",
-    oracle="""
+    oracle=f"""
     WITH pc AS (
       SELECT c_custkey,
-             CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+             {ex.cents('c_acctbal')} AS c
       FROM customer
     )
     SELECT c_custkey,
@@ -573,7 +566,7 @@ def op_ext_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "op-ext-zscore-outliers",
     oracle=f"""
-    WITH pc AS (SELECT l_returnflag, {_CENTS} AS c, l_extendedprice
+    WITH pc AS (SELECT l_returnflag, {ex.cents('l_extendedprice')} AS c, l_extendedprice
                 FROM lineitem),
     s AS (
       SELECT l_returnflag, COUNT(*) AS n,
@@ -594,7 +587,7 @@ def op_ext_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) FILTER (
              WHERE abs(CAST(c AS DOUBLE) - mean) > 3.0 * std) AS BIGINT)
              AS n_outliers,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) FILTER (
+           CAST(SUM({ex.money('l_extendedprice')}) FILTER (
              WHERE abs(CAST(c AS DOUBLE) - mean) > 3.0 * std) AS DOUBLE)
              AS outlier_revenue
     FROM pc p JOIN b ON p.l_returnflag = b.l_returnflag
@@ -608,7 +601,7 @@ def op_ext_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact sums, so the |x−µ| > 3σ cut lands on identical doubles — the
     standard two-pass shape for anomaly screens at fact scale."""
     pc = t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", _price_cents().alias("c"), "l_extendedprice"
+        "l_returnflag", F.expr(ex.cents("l_extendedprice")).alias("c"), "l_extendedprice"
     )
     s = pc.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -764,12 +757,12 @@ def op_ext_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-range-frame",
-    oracle="""
+    oracle=f"""
     WITH o AS (
       SELECT o_orderkey, o_custkey,
              CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS day_no,
              strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS pc
+             {ex.cents('o_totalprice')} AS pc
       FROM orders
     )
     SELECT o_orderkey, o_custkey, order_date,
@@ -1026,7 +1019,7 @@ def op_ext_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT l_returnflag,
            CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty,
-           CAST(SUM({_CENTS} * CAST(l_quantity AS BIGINT)) AS DOUBLE)
+           CAST(SUM({ex.cents('l_extendedprice')} * CAST(l_quantity AS BIGINT)) AS DOUBLE)
              / CAST(SUM(CAST(l_quantity AS BIGINT)) * 100 AS DOUBLE)
              AS wavg_price
     FROM lineitem GROUP BY 1
@@ -1039,7 +1032,7 @@ def op_ext_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable form with ONE IEEE division at the end."""
     li = t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
-        _price_cents().alias("pc"),
+        F.expr(ex.cents("l_extendedprice")).alias("pc"),
         F.col("l_quantity").cast("bigint").alias("q"),
     )
     return li.groupBy("l_returnflag").agg(
@@ -1154,10 +1147,10 @@ def op_ext_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-share-of-total",
-    oracle="""
+    oracle=f"""
     WITH nrev AS (
       SELECT n_name,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('o_totalprice')}
                AS pc
       FROM orders o
       JOIN customer c ON o.o_custkey = c.c_custkey
@@ -1183,7 +1176,7 @@ def op_ext_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(cust, o.o_custkey == cust.c_custkey)
         .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
         .groupBy("n_name")
-        .agg(sum_cents("o_totalprice").alias("pc"))
+        .agg(F.expr(ex.sum_cents("o_totalprice")).alias("pc"))
     )
     w = Window.partitionBy()
     return nrev.select(
@@ -1317,14 +1310,14 @@ def op_ext_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-rfm",
-    oracle="""
+    oracle=f"""
     WITH mx AS (SELECT MAX(o_orderdate) AS maxd FROM orders),
     base AS (
       SELECT o_custkey,
              CAST(date_diff('day', MAX(o_orderdate), mx.maxd) AS BIGINT)
                AS recency_days,
              CAST(COUNT(*) AS BIGINT) AS frequency,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+             {ex.sum_cents('o_totalprice')}
                AS monetary_cents
       FROM orders, mx GROUP BY o_custkey, mx.maxd
     )
@@ -1366,7 +1359,7 @@ def op_ext_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("recency_days"),
             F.count(F.lit(1)).alias("frequency"),
-            sum_cents("o_totalprice").alias("monetary_cents"),
+            F.expr(ex.sum_cents("o_totalprice")).alias("monetary_cents"),
         )
     )
     out = base
@@ -1500,10 +1493,9 @@ def op_ext_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-tpch-q3",
-    oracle="""
+    oracle=f"""
     SELECT l.l_orderkey,
-           CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
-                         AS BIGINT)
+           CAST(SUM({ex.cents('l.l_extendedprice')}
                     * (100 - CAST(CAST(l.l_discount AS DECIMAL(5,2)) * 100
                               AS BIGINT))) AS BIGINT) AS revenue_c4,
            strftime(o.o_orderdate, '%Y-%m-%d') AS order_day,
@@ -1539,7 +1531,7 @@ def op_ext_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate") > "1996-03-15"
     ).select("l_orderkey", "l_extendedprice", "l_discount")
     rev = (
-        F.expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
+        F.expr(ex.cents("l_extendedprice"))
         * (
             100
             - F.expr("CAST(CAST(l_discount AS DECIMAL(5,2)) * 100 AS BIGINT)")
@@ -1562,10 +1554,9 @@ def op_ext_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-tpch-q5",
-    oracle="""
+    oracle=f"""
     SELECT n.n_name,
-           CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
-                         AS BIGINT)
+           CAST(SUM({ex.cents('l.l_extendedprice')}
                     * (100 - CAST(CAST(l.l_discount AS DECIMAL(5,2)) * 100
                               AS BIGINT))) AS BIGINT) AS revenue_c4
     FROM customer c
@@ -1602,7 +1593,7 @@ def op_ext_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r_regionkey"
     )
     rev = (
-        F.expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
+        F.expr(ex.cents("l_extendedprice"))
         * (
             100
             - F.expr("CAST(CAST(l_discount AS DECIMAL(5,2)) * 100 AS BIGINT)")
@@ -1630,7 +1621,7 @@ def op_ext_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-recursive-spine",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE m(mo) AS (
       SELECT DATE '1995-01-01'
       UNION ALL
@@ -1640,8 +1631,7 @@ def op_ext_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     a AS (
       SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mo,
              CAST(COUNT(*) AS BIGINT) AS n_orders,
-             CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                           AS BIGINT)) AS BIGINT) AS rev_c
+             CAST(SUM({ex.cents('o_totalprice')}) AS BIGINT) AS rev_c
       FROM orders
       WHERE o_orderpriority = '1-URGENT' AND o_custkey % 97 = 0
       GROUP BY 1
@@ -1666,7 +1656,7 @@ def op_ext_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     op-ext-khop's per-hop distinct joins."""
     t(spark, sf_dir, "orders").createOrReplaceTempView("_rspine_orders")
     return spark.sql(
-        """
+        f"""
         WITH RECURSIVE m(mo) AS (
           SELECT DATE '1995-01-01' AS mo
           UNION ALL
@@ -1675,8 +1665,7 @@ def op_ext_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         a AS (
           SELECT CAST(date_trunc('MONTH', o_orderdate) AS DATE) AS mo,
                  COUNT(*) AS n_orders,
-                 CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                               AS BIGINT)) AS BIGINT) AS rev_c
+                 CAST(SUM({ex.cents('o_totalprice')}) AS BIGINT) AS rev_c
           FROM _rspine_orders
           WHERE o_orderpriority = '1-URGENT' AND o_custkey % 97 = 0
           GROUP BY 1
@@ -1691,9 +1680,9 @@ def op_ext_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-offset-page",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, c_name,
-           CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+           {ex.cents('c_acctbal')}
                AS acctbal_c
     FROM customer
     ORDER BY acctbal_c DESC, c_custkey ASC
@@ -1759,9 +1748,9 @@ def op_ext_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-pandas-api",
-    oracle="""
+    oracle=f"""
     SELECT user_id,
-           (CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*))
+           {ex.davg('value')}
                AS mean_value,
            CAST(COUNT(*) AS BIGINT) AS n_events
     FROM events
@@ -1857,11 +1846,10 @@ def op_ext_seq_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-try-arith",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey, l_linenumber,
            CASE WHEN l_discount = 0.0 THEN NULL
-                ELSE CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
-                               AS BIGINT)
+                ELSE CAST({ex.cents('l_extendedprice')}
                           // CAST(CAST(l_discount AS DECIMAL(5,2)) * 100
                                   AS BIGINT) AS BIGINT)
            END AS price_per_disc_pct,
@@ -1888,7 +1876,7 @@ def op_ext_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         F.expr(
-            "CAST(try_divide(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100"
+            f"CAST(try_divide(CAST({ex.money('l_extendedprice')} * 100"
             " AS BIGINT), CAST(CAST(l_discount AS DECIMAL(5,2)) * 100 AS"
             " BIGINT)) AS BIGINT)"
         ).alias("price_per_disc_pct"),

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.operators import analytics as an
 from data_warehousing_assignment_spark.operators import sketch as sk
 from data_warehousing_assignment_spark.operators.graph import (
@@ -26,22 +27,7 @@ from data_warehousing_assignment_spark.operators.graph import (
     part_copurchase_edges,
     triangle_count,
 )
-from data_warehousing_assignment_spark.registry import query, sum_cents, t
-
-
-def _nib(h: str, i: int) -> str:
-    """DuckDB: value of hex digit ``i`` (1-based) of hash expr ``h``."""
-    return f"(strpos('0123456789abcdef', substring({h}, {i}, 1)) - 1)"
-
-
-def _slot_sql(key: str, salt_expr: str, n_hex: int) -> str:
-    """DuckDB twin of operators.sketch._hash_slot: first n_hex hex chars
-    of md5(salt || key) as an integer."""
-    h = f"md5({salt_expr} || CAST({key} AS VARCHAR))"
-    terms = [
-        f"{_nib(h, i + 1)} * {16 ** (n_hex - 1 - i)}" for i in range(n_hex)
-    ]
-    return "(" + " + ".join(terms) + ")"
+from data_warehousing_assignment_spark.registry import query, t
 
 
 # --------------------------------------------------------------------------
@@ -55,7 +41,7 @@ def _slot_sql(key: str, salt_expr: str, n_hex: int) -> str:
     WITH src AS (SELECT o_custkey AS k FROM orders),
     f AS (SELECT k, j FROM src CROSS JOIN (SELECT unnest([0,1,2,3]) AS j)),
     cells AS (
-      SELECT j, {_slot_sql("k", "'cms' || CAST(j AS VARCHAR) || ':'", 2)}
+      SELECT j, {ex.hex_int_oracle(sk.slot_md5('cms', 'k'), 1, 2)}
                AS bucket,
              CAST(COUNT(*) AS BIGINT) AS n
       FROM f GROUP BY 1, 2
@@ -64,7 +50,7 @@ def _slot_sql(key: str, salt_expr: str, n_hex: int) -> str:
              FROM src WHERE k % 50 = 0 GROUP BY 1),
     probe AS (
       SELECT k, true_count, j,
-             {_slot_sql("k", "'cms' || CAST(j AS VARCHAR) || ':'", 2)}
+             {ex.hex_int_oracle(sk.slot_md5('cms', 'k'), 1, 2)}
                AS bucket
       FROM cand CROSS JOIN (SELECT unnest([0,1,2,3]) AS j)
     )
@@ -112,11 +98,11 @@ def op_ext_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH build AS (SELECT c_custkey AS k FROM customer
                    WHERE c_mktsegment = 'BUILDING'),
     bits AS (SELECT DISTINCT
-               {_slot_sql("k", "'bf' || CAST(j AS VARCHAR) || ':'", 3)} AS pos
+               {ex.hex_int_oracle(sk.slot_md5('bf', 'k'), 1, 3)} AS pos
              FROM build CROSS JOIN (SELECT unnest([0,1,2]) AS j)),
     probe AS (SELECT DISTINCT o_custkey AS k FROM orders),
     fan AS (SELECT k,
-              {_slot_sql("k", "'bf' || CAST(j AS VARCHAR) || ':'", 3)} AS pos
+              {ex.hex_int_oracle(sk.slot_md5('bf', 'k'), 1, 3)} AS pos
             FROM probe CROSS JOIN (SELECT unnest([0,1,2]) AS j)),
     hits AS (SELECT k FROM fan JOIN bits USING (pos)
              GROUP BY k HAVING COUNT(*) = 3),
@@ -439,10 +425,10 @@ def op_ext_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-seasonal-anomaly",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT o_orderdate AS d,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+             CAST(SUM({ex.money('o_totalprice')} * 100) AS BIGINT)
                AS day_cents
       FROM orders GROUP BY 1
     ),
@@ -484,7 +470,7 @@ def op_ext_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         t(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(sum_cents("o_totalprice").alias("day_cents"))
+        .agg(F.expr(ex.sum_cents("o_totalprice")).alias("day_cents"))
     )
     dw = daily.withColumn(
         "dow",
@@ -524,23 +510,18 @@ def op_ext_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic weighted priority sample
 # --------------------------------------------------------------------------
 
-def _pri_sql() -> str:
-    u32 = " + ".join(
-        f"{_nib('md5(' + chr(39) + 'ps:' + chr(39) + ' || CAST(c_custkey AS VARCHAR))', i + 1)}"
-        f" * {16 ** (7 - i)}"
-        for i in range(8)
-    )
-    w = "(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) + 100001)"
-    return f"((({u32}) * 1000000) // {w})"
+#: content-addressed uniform of the priority sample (first 8 hex digits)
+_PS_H = ex.salted_md5("ps:", "c_custkey")
 
 
 @query(
     "op-ext-priority-sample",
     oracle=f"""
     SELECT c_custkey,
-           CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) + 100001
+           {ex.cents('c_acctbal')} + 100001
              AS weight_cents,
-           CAST({_pri_sql()} AS BIGINT) AS priority
+           CAST(({ex.hex_int_oracle(_PS_H, 1, 8)} * 1000000)
+                // ({ex.cents('c_acctbal')} + 100001) AS BIGINT) AS priority
     FROM customer
     ORDER BY priority ASC, c_custkey ASC
     LIMIT 100
@@ -559,17 +540,11 @@ def op_ext_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB exactly like any top-k."""
     cust = t(spark, sf_dir, "customer").select(
         "c_custkey",
-        (
-            F.expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            + F.lit(100001)
-        ).alias("weight_cents"),
+        (F.expr(ex.cents("c_acctbal")) + F.lit(100001)).alias("weight_cents"),
     )
     pri = cust.withColumn(
         "priority",
-        F.expr(
-            "(CAST(conv(substring(md5('ps:' || CAST(c_custkey AS STRING)),"
-            " 1, 8), 16, 10) AS BIGINT) * 1000000) div weight_cents"
-        ),
+        F.expr(f"({ex.hex_int(_PS_H, 1, 8)} * 1000000) div weight_cents"),
     )
     return pri.orderBy(F.asc("priority"), F.asc("c_custkey")).limit(100)
 
@@ -581,10 +556,10 @@ def op_ext_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-cusum",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT l_returnflag AS flag, l_shipdate AS d,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
+             CAST(SUM({ex.money('l_extendedprice')} * 100)
                   AS BIGINT) AS day_cents
       FROM lineitem GROUP BY 1, 2
     ),
@@ -627,7 +602,7 @@ def op_ext_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = li.groupBy(
         F.col("l_returnflag").alias("flag"),
         F.col("l_shipdate").alias("d"),
-    ).agg(sum_cents("l_extendedprice").alias("day_cents"))
+    ).agg(F.expr(ex.sum_cents("l_extendedprice")).alias("day_cents"))
     m = daily.select(
         "flag",
         "d",
@@ -819,14 +794,13 @@ def op_ext_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-percentile-cont",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT l_returnflag AS flag,
-             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {ex.cents('l_extendedprice')}
                AS cents,
              ROW_NUMBER() OVER (PARTITION BY l_returnflag
-                                ORDER BY CAST(CAST(l_extendedprice AS
-                                  DECIMAL(18,2)) * 100 AS BIGINT),
+                                ORDER BY {ex.cents('l_extendedprice')},
                                   l_orderkey, l_linenumber) AS rn,
              COUNT(*) OVER (PARTITION BY l_returnflag) AS n
       FROM lineitem
@@ -865,9 +839,7 @@ def op_ext_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehousing_assignment_spark.operators import analytics as an
 
     li = t(spark, sf_dir, "lineitem")
-    cents = F.expr(
-        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-    )
+    cents = F.expr(ex.cents("l_extendedprice"))
     d = (
         li.select(F.col("l_returnflag").alias("flag"), cents.alias("cents"))
         .groupBy("flag", "cents")
@@ -920,21 +892,7 @@ def op_ext_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KMV_K = 64
 _KMV_M = 16 ** 15  # hash space: 15 hex nibbles = 60 bits (stays in int64)
-
-
-def _kmv_hash_spark():
-    return F.expr(
-        "CAST(conv(substring(md5('kmv:' || CAST(o_custkey AS STRING)),"
-        " 1, 15), 16, 10) AS BIGINT)"
-    )
-
-
-def _kmv_hash_sql() -> str:
-    h = "md5('kmv:' || CAST(o_custkey AS VARCHAR))"
-    terms = " + ".join(
-        f"{_nib(h, i + 1)} * {16 ** (14 - i)}" for i in range(15)
-    )
-    return f"({terms})"
+_KMV_H = ex.salted_md5("kmv:", "o_custkey")
 
 
 @query(
@@ -945,7 +903,7 @@ def _kmv_hash_sql() -> str:
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       WHERE c.c_mktsegment IN ('BUILDING', 'MACHINERY')
     ),
-    h AS (SELECT seg, o_custkey, {_kmv_hash_sql()} AS hv FROM src),
+    h AS (SELECT seg, o_custkey, {ex.hex_int_oracle(_KMV_H, 1, 15)} AS hv FROM src),
     keep AS (
       SELECT seg, hv,
              ROW_NUMBER() OVER (PARTITION BY seg ORDER BY hv) AS rn
@@ -1002,7 +960,7 @@ def op_ext_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_mktsegment").alias("seg"), "o_custkey")
         .distinct()
     )
-    h = src.select("seg", "o_custkey", _kmv_hash_spark().alias("hv"))
+    h = src.select("seg", "o_custkey", F.expr(ex.hex_int(_KMV_H, 1, 15)).alias("hv"))
     wseg = Window.partitionBy("seg").orderBy("hv")
     sk = (
         h.withColumn("rn", F.row_number().over(wseg))
@@ -1051,7 +1009,7 @@ def op_ext_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-decile-lift",
-    oracle="""
+    oracle=f"""
     WITH resp AS (
       SELECT DISTINCT o_custkey FROM orders
       WHERE year(o_orderdate) = 1997
@@ -1060,7 +1018,7 @@ def op_ext_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT c.c_custkey,
              CASE WHEN r.o_custkey IS NOT NULL THEN 1 ELSE 0 END AS responded,
              NTILE(10) OVER (ORDER BY
-               CAST(CAST(c.c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) DESC,
+               {ex.cents('c.c_acctbal')} DESC,
                c.c_custkey) AS decile
       FROM customer c LEFT JOIN resp r ON c.c_custkey = r.o_custkey
     ),
@@ -1104,9 +1062,7 @@ def op_ext_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = t(spark, sf_dir, "customer").select(
         "c_custkey",
-        F.expr(
-            "CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)"
-        ).alias("bal"),
+        F.expr(ex.cents("c_acctbal")).alias("bal"),
     )
     joined = cust.join(
         resp, cust["c_custkey"] == resp["o_custkey"], "left"
@@ -1598,7 +1554,7 @@ def op_ext_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH src AS (SELECT user_id AS k FROM events),
     f AS (SELECT k, j FROM src CROSS JOIN (SELECT unnest([0,1,2,3]) AS j)),
     cells AS (
-      SELECT j, {_slot_sql("k", "'cms' || CAST(j AS VARCHAR) || ':'", 2)}
+      SELECT j, {ex.hex_int_oracle(sk.slot_md5('cms', 'k'), 1, 2)}
                AS bucket,
              CAST(COUNT(*) AS BIGINT) AS n
       FROM f GROUP BY 1, 2
@@ -1656,16 +1612,11 @@ _TD_ROW = " || '|' || ".join(
     for c in ("o_orderkey", "o_custkey", "o_orderstatus", "price_c",
               "o_orderpriority")
 )
-
-
-def _td_hash64() -> str:
-    # 15 hex nibbles = 60 bits — the same int64-safe md5 slice as the
-    # KMV hash; mirrors operators/diff.py:partition_digest (r8 review:
-    # the old 8-nibble/32-bit slice made offsetting-edit collisions
-    # plausible within a bucket).
-    h = f"md5({_TD_ROW})"
-    terms = [f"{_nib(h, i + 1)} * {16 ** (15 - 1 - i)}" for i in range(15)]
-    return "(" + " + ".join(terms) + ")"
+# 15 hex nibbles = 60 bits — the same int64-safe md5 slice as the KMV
+# hash; mirrors operators/diff.py:partition_digest (r8 review: the old
+# 8-nibble/32-bit slice made offsetting-edit collisions plausible within
+# a bucket).
+_TD_HASH = ex.hex_int_oracle(f"md5({_TD_ROW})", 1, 15)
 
 
 @query(
@@ -1673,7 +1624,7 @@ def _td_hash64() -> str:
     oracle=f"""
     WITH base AS (
       SELECT o_orderkey, o_custkey, o_orderstatus,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {ex.cents('o_totalprice')}
                  AS price_c,
              o_orderpriority
       FROM orders
@@ -1687,12 +1638,12 @@ def _td_hash64() -> str:
     ),
     da AS (SELECT o_orderkey - o_orderkey % 1000 AS bucket_start,
                   CAST(COUNT(*) AS BIGINT) AS n_a,
-                  CAST(SUM(CAST({_td_hash64()} AS HUGEINT))
+                  CAST(SUM(CAST({_TD_HASH} AS HUGEINT))
                        % 9223372036854775808 AS BIGINT) AS digest_a
            FROM base GROUP BY 1),
     db AS (SELECT o_orderkey - o_orderkey % 1000 AS bucket_start,
                   CAST(COUNT(*) AS BIGINT) AS n_b,
-                  CAST(SUM(CAST({_td_hash64()} AS HUGEINT))
+                  CAST(SUM(CAST({_TD_HASH} AS HUGEINT))
                        % 9223372036854775808 AS BIGINT) AS digest_b
            FROM replica GROUP BY 1)
     SELECT COALESCE(da.bucket_start, db.bucket_start) AS bucket_start,
@@ -1719,7 +1670,7 @@ def op_ext_table_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         "o_orderstatus",
-        (F.expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
+        (F.expr(ex.cents("o_totalprice")))
         .alias("price_c"),
         "o_orderpriority",
     )
@@ -1763,7 +1714,7 @@ def op_ext_table_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT DISTINCT year(o_orderdate) AS yr, o_custkey
       FROM orders WHERE year(o_orderdate) IN (1996, 1997)
     ),
-    h AS (SELECT yr, o_custkey, {_kmv_hash_sql()} AS hv FROM src),
+    h AS (SELECT yr, o_custkey, {ex.hex_int_oracle(_KMV_H, 1, 15)} AS hv FROM src),
     keep AS (
       SELECT yr, hv,
              ROW_NUMBER() OVER (PARTITION BY yr ORDER BY hv) AS rn
@@ -1815,7 +1766,7 @@ def op_ext_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.year("o_orderdate").alias("yr"), "o_custkey")
         .distinct()
     )
-    h = src.select("yr", "o_custkey", _kmv_hash_spark().alias("hv"))
+    h = src.select("yr", "o_custkey", F.expr(ex.hex_int(_KMV_H, 1, 15)).alias("hv"))
     wyr = Window.partitionBy("yr").orderBy("hv")
     sk_ = (
         h.withColumn("rn", F.row_number().over(wyr))

@@ -29,14 +29,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.registry import dec, query, t
 
 # exact integer fragments shared by every query in this module (same
 # formulation as op-ext-tpch-q3, registry_relational.py:1497)
-_PRICE_C = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+_PRICE_C = ex.cents("l_extendedprice")
 _DISC_PCT = "CAST(CAST(l_discount AS DECIMAL(5,2)) * 100 AS BIGINT)"
 _TAX_PCT = "CAST(CAST(l_tax AS DECIMAL(5,2)) * 100 AS BIGINT)"
-_QTY_C = "CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)"
+_QTY_C = ex.cents("l_quantity")
 
 _O_REV_C4 = f"({_PRICE_C} * (100 - {_DISC_PCT}))"
 _O_CHARGE_C6 = f"({_PRICE_C} * (100 - {_DISC_PCT}) * (100 + {_TAX_PCT}))"
@@ -333,7 +334,7 @@ def op_ext_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op-ext-tpch-q10",
     oracle=f"""
     SELECT c.c_custkey, c.c_name, n.n_name,
-           CAST(CAST(c.c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+           {ex.cents('c.c_acctbal')}
                AS acctbal_c,
            CAST(SUM({_O_REV_C4}) AS BIGINT) AS rev_c4
     FROM lineitem l
@@ -574,7 +575,7 @@ def op_ext_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
       HAVING CAST(SUM({_QTY_C}) AS BIGINT) > 20000)
     SELECT c.c_custkey, c.c_name, o.o_orderkey,
            strftime(o.o_orderdate, '%Y-%m-%d') AS order_day,
-           CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+           {ex.cents('o.o_totalprice')}
                AS total_c,
            b.sum_qty_c
     FROM big b
@@ -678,20 +679,20 @@ def op_ext_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-tpch-q22",
-    oracle="""
+    oracle=f"""
     WITH pos AS (
-      SELECT CAST(SUM(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
+      SELECT CAST(SUM({ex.cents('c_acctbal')}) AS BIGINT)
                  AS sum_c,
              COUNT(*) AS n
       FROM customer WHERE c_acctbal > 0.0)
     SELECT n.n_name,
            COUNT(*) AS numcust,
-           CAST(SUM(CAST(CAST(c.c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
+           CAST(SUM({ex.cents('c.c_acctbal')}) AS BIGINT)
                AS totacctbal_c
     FROM customer c
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     CROSS JOIN pos
-    WHERE CAST(CAST(c.c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) * pos.n
+    WHERE {ex.cents('c.c_acctbal')} * pos.n
               > pos.sum_c
       AND NOT EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey
@@ -810,7 +811,7 @@ def _ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_O_PS},
     eu AS (
       SELECT s.s_suppkey, s.s_name,
-             CAST(CAST(s.s_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {ex.cents('s.s_acctbal')}
                  AS acctbal_c,
              n.n_name
       FROM supplier s
@@ -884,8 +885,7 @@ def op_ext_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q9_ORACLE = f"""
     SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
            CAST(SUM({_O_REV_C4}
-                    - CAST(CAST(p.p_retailprice AS DECIMAL(18,2)) * 100
-                           AS BIGINT) * {_QTY_C}) AS BIGINT)
+                    - {ex.cents('p.p_retailprice')} * {_QTY_C}) AS BIGINT)
                AS profit_c4
     FROM lineitem l
     JOIN part p ON l.l_partkey = p.p_partkey AND p.p_type = 'ECONOMY'
@@ -909,7 +909,7 @@ def op_ext_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem⋈orders. 100 TB: same star shape as Q5/Q8."""
     p = t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select(
         "p_partkey",
-        F.expr("CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
+        F.expr(ex.cents("p_retailprice"))
         .alias("retail_c"),
     )
     s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
@@ -1415,7 +1415,7 @@ def op_ext_tpch_q9_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select(
         "p_partkey",
-        F.expr("CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
+        F.expr(ex.cents("p_retailprice"))
         .alias("retail_c"),
     )
     s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")

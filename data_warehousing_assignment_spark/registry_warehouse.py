@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.plans.kimball import (
     bridge_allocate,
     junk_dimension,
@@ -25,8 +26,6 @@ from data_warehousing_assignment_spark.plans.kimball import (
 from data_warehousing_assignment_spark.registry import query, t
 
 #: exact integer cents of a 2-dp money double (row-local, both engines)
-_OTOT = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-_LEXT = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
 
 # --------------------------------------------------------------------------
@@ -265,12 +264,12 @@ def op_ext_junk_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op-ext-bridge-alloc",
     oracle=f"""
     WITH o AS (
-      SELECT o_orderkey, {_OTOT} AS total_cents
+      SELECT o_orderkey, {ex.cents('o_totalprice')} AS total_cents
       FROM orders
       WHERE o_orderdate >= DATE '1995-01-01'
         AND o_orderdate < DATE '1995-02-01'
     ), l AS (
-      SELECT l_orderkey, l_linenumber, {_LEXT} AS w FROM lineitem
+      SELECT l_orderkey, l_linenumber, {ex.cents('l_extendedprice')} AS w FROM lineitem
     ), j AS (
       SELECT o.o_orderkey, l.l_linenumber, l.w, o.total_cents,
              CAST(SUM(l.w) OVER (PARTITION BY o.o_orderkey) AS BIGINT)
@@ -309,13 +308,13 @@ def op_ext_bridge_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "o_orderkey",
-            F.expr(_OTOT).alias("total_cents"),
+            F.expr(ex.cents("o_totalprice")).alias("total_cents"),
         )
     )
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
-        F.expr(_LEXT).alias("weight_cents"),
+        F.expr(ex.cents("l_extendedprice")).alias("weight_cents"),
     )
     fact = orders.join(li, orders["o_orderkey"] == li["l_orderkey"]).select(
         "o_orderkey", "l_linenumber", "weight_cents", "total_cents"
@@ -403,7 +402,7 @@ def op_ext_datavault_sat(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _merge_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(o_orderkey, o_orderstatus, total_cents)`` of every order."""
     return t(spark, sf_dir, "orders").selectExpr(
-        "o_orderkey", "o_orderstatus", f"{_OTOT} AS total_cents"
+        "o_orderkey", "o_orderstatus", f"{ex.cents('o_totalprice')} AS total_cents"
     )
 
 
@@ -428,7 +427,8 @@ def _merge_batch(base: DataFrame) -> DataFrame:
     "op-ext-merge-into",
     oracle=f"""
     WITH base AS (
-      SELECT o_orderkey, o_orderstatus, {_OTOT} AS total_cents FROM orders
+      SELECT o_orderkey, o_orderstatus, {ex.cents('o_totalprice')} AS total_cents
+      FROM orders
     )
     SELECT o_orderkey, o_orderstatus,
            CASE WHEN o_orderkey % 2 = 0 AND o_orderkey % 10 = 0
@@ -469,12 +469,12 @@ def op_ext_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH staged AS (
       SELECT 1995 AS batch_id, o_orderkey, o_orderstatus, o_orderdate,
-             {_OTOT} AS total_cents
+             {ex.cents('o_totalprice')} AS total_cents
       FROM orders WHERE year(o_orderdate) = 1995
       UNION ALL
       SELECT 1996, o_orderkey, o_orderstatus, o_orderdate,
-             CASE WHEN o_orderkey % 97 = 0 THEN -{_OTOT}
-                  ELSE {_OTOT} END
+             CASE WHEN o_orderkey % 97 = 0 THEN -{ex.cents('o_totalprice')}
+                  ELSE {ex.cents('o_totalprice')} END
       FROM orders WHERE year(o_orderdate) = 1996
     )
     SELECT batch_id, CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -504,7 +504,7 @@ def op_ext_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     One scan + one aggregate per batch; the audit is map-side
     combinable so it costs one pass at 100 TB."""
     orders = t(spark, sf_dir, "orders")
-    cents = F.expr(_OTOT)
+    cents = F.expr(ex.cents("o_totalprice"))
 
     def _batch(year: int, perturb: bool) -> DataFrame:
         df = orders.filter(F.year("o_orderdate") == year).select(
@@ -545,7 +545,8 @@ def op_ext_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op-ext-merge-txlog",
     oracle=f"""
     WITH base AS (
-      SELECT o_orderkey, o_orderstatus, {_OTOT} AS total_cents FROM orders
+      SELECT o_orderkey, o_orderstatus, {ex.cents('o_totalprice')} AS total_cents
+      FROM orders
     ),
     v1 AS (SELECT * FROM base WHERE o_orderkey % 2 = 0),
     v2 AS (
@@ -654,11 +655,11 @@ def op_ext_merge_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "op-ext-zonemap-prune",
     oracle=f"""    WITH z AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 1250000 AS zone_id,
+      SELECT {ex.cents('o_totalprice')} // 1250000 AS zone_id,
              CAST(COUNT(*) AS BIGINT) AS n_rows,
-             MIN(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS min_cents,
-             MAX(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS max_cents,
-             CAST(SUM(CASE WHEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) BETWEEN 40000000 AND 50000000
+             MIN({ex.cents('o_totalprice')}) AS min_cents,
+             MAX({ex.cents('o_totalprice')}) AS max_cents,
+             CAST(SUM(CASE WHEN {ex.cents('o_totalprice')} BETWEEN 40000000 AND 50000000
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_matching
       FROM orders GROUP BY 1
     )
@@ -687,9 +688,11 @@ def op_ext_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     files — same contract as the PartitionFilters plan guard
     (tests/test_plan_shapes.py) one level below partitions."""
     orders = t(spark, sf_dir, "orders")
-    cents = F.expr(_OTOT)
+    cents = F.expr(ex.cents("o_totalprice"))
     z = orders.groupBy(
-        F.expr(f"({_OTOT}) div 1250000").cast("bigint").alias("zone_id")
+        F.expr(f"({ex.cents('o_totalprice')}) div 1250000")
+        .cast("bigint")
+        .alias("zone_id")
     ).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.min(cents).alias("min_cents"),
@@ -996,10 +999,10 @@ def op_ext_crypto_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-txlog-skip",
-    oracle="""
+    oracle=f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+           CAST(SUM({ex.money('o_totalprice')} * 100) AS BIGINT)
              AS rev_cents
     FROM orders
     WHERE year(o_orderdate) = 1996
@@ -1026,7 +1029,7 @@ def op_ext_txlog_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch("op-ext-txlog-skip")
     orders = t(spark, sf_dir, "orders").select(
         "o_orderdate",
-        F.expr(_OTOT).alias("pc"),
+        F.expr(ex.cents("o_totalprice")).alias("pc"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("od_str"),
     )
     for version, year in enumerate((1995, 1996, 1997), start=1):
@@ -1060,10 +1063,10 @@ def op_ext_txlog_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-rls",
-    oracle="""
+    oracle=f"""
     SELECT n.n_name,
            CAST(COUNT(*) AS BIGINT) AS n_customers,
-           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2)) * 100) AS BIGINT)
+           CAST(SUM({ex.money('c.c_acctbal')} * 100) AS BIGINT)
              AS acctbal_cents
     FROM customer c
     JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -1104,7 +1107,7 @@ def op_ext_rls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return secured.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.expr("CAST(c_acctbal AS DECIMAL(18,2)) * 100"))
+        F.sum(F.expr(f"{ex.money('c_acctbal')} * 100"))
         .cast("bigint")
         .alias("acctbal_cents"),
     )

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from data_warehousing_assignment_spark.functions.exact import MONEY_DECIMAL
+
 STATE_SCHEMA = StructType(
     [
         StructField("n_events", LongType()),
@@ -125,7 +127,7 @@ def user_totals_batch(events: DataFrame) -> DataFrame:
         events.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
+            F.sum(F.col("value").cast(MONEY_DECIMAL))
             .cast("double")
             .alias("total_value"),
         )

@@ -46,42 +46,6 @@ def _build_calls(build, inspect=None) -> int:
     return counter.calls
 
 
-@pytest.mark.parametrize(
-    "op",
-    [
-        "op-ext-simhash",
-        "op-ext-simhash-neardup",
-        "op-ext-simhash-neardup-scaled",
-        "op-ext-mm-phash-neardup",
-        "op-ext-ann-lsh",
-        "op-ext-ann-lsh-fullprobe",
-        "op-ext-embed-neardup",
-        "op-ext-ann-ivf",
-        "op-ext-ann-ivf-pq",
-        "op-ext-ann-ivf-incremental",
-        "op-ext-ann-cell-drift",
-        "op-ext-ann-postfilter",
-        "op-ext-ann-filtered",
-        "op-ext-ann-filtered-recall",
-        "op-ext-rank-fusion",
-        "op-ext-hybrid-fusion",
-        "op-ext-fusion-gain",
-        "op-ext-fusion-baseline",
-        "op-ext-retrieval-metrics",
-        "op-ext-bm25",
-        "op-ext-bm25-blockmax",
-        "op-ext-bm25-blockmax-audit",
-        "op-ext-corr-matrix",
-    ],
-)
-def test_build_sends_few_py4j_calls(spark, op):
-    from tests.conftest import SF_SMALL
-
-    build = all_queries()[op]
-    calls = _build_calls(lambda: build(spark, SF_SMALL))
-    assert calls < BUDGET, f"{op}: {calls} py4j calls"
-
-
 def _drop_checkpoints(spark) -> None:
     """Iterative ops leave localCheckpoint RDDs behind; drop them so later
     cached-RDD accounting starts clean."""

@@ -94,24 +94,29 @@ def test_simhash_near_dups_have_small_hamming_distance(spark):
 
 def test_packed_hex_chunks_equal_per_nibble_extraction(spark):
     """The packed-chunk md5-bit parse (the SQL strings simhash emits)
-    must be value-identical to the per-bit _hex_nibble extraction (the
-    oracle-side formulation) for EVERY bit of both fingerprint widths —
-    48 (12 nibbles, one chunk) and 128 (32 nibbles, two 12-digit chunks
-    + one 8-digit tail)."""
-    hashes = spark.createDataFrame(
-        [(hashlib.md5(f"tok{i}".encode()).hexdigest(),) for i in range(64)]
-        + [("0" * 32,), ("f" * 32,), ("fedcba9876543210" * 2,)],
-        "h string",
+    must be value-identical to the per-bit ``exact.nibble`` extraction
+    (the oracle-side formulation) for EVERY bit of both fingerprint
+    widths — 48 (12 nibbles, one chunk) and 128 (32 nibbles, two 12-digit
+    chunks + one 8-digit tail) — in Spark, and the oracle forms run in
+    DuckDB must give the same chunks and bits on the same hashes."""
+    import duckdb
+
+    from data_warehousing_assignment_spark.functions import exact as ex
+
+    hs = (
+        [hashlib.md5(f"tok{i}".encode()).hexdigest() for i in range(64)]
+        + ["0" * 32, "f" * 32, "fedcba9876543210" * 2]
     )
+    hashes = spark.createDataFrame([(h,) for h in hs], "h string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE hashes AS SELECT unnest(?) AS h", [hs])
     for bits in (48, 128):
         n_nib = bits // 4
-        packed = hashes.selectExpr("h", *dd._packed_hex_chunks("h", n_nib))
+        chunks = dd._packed_hex_chunks("h", n_nib)
+        packed = hashes.selectExpr("h", *chunks)
         checks = []
         for j in range(bits):
-            old = (
-                dd._hex_nibble(F.col("h"), j // 4)
-                .bitwiseAND(F.lit(1 << (j % 4))) > 0
-            )
+            old = F.expr(f"({ex.nibble('h', j // 4 + 1)} & {1 << (j % 4)}) > 0")
             new = F.expr(f"{dd._md5_bit(j, n_nib)} > 0")
             checks.append((old == new).alias(f"b{j}"))
         bad = packed.select(checks).filter(
@@ -121,6 +126,31 @@ def test_packed_hex_chunks_equal_per_nibble_extraction(spark):
             )
         )
         assert bad.count() == 0, f"packed extraction diverges at bits={bits}"
+
+        # the same chunks and bits, read the oracle's way in DuckDB
+        starts = range(0, n_nib, 12)
+        engine = {
+            r["h"]: (
+                tuple(r[f"_p{c0 // 12}"] for c0 in starts),
+                tuple(r[f"_b{j}"] for j in range(bits)),
+            )
+            for r in packed.selectExpr(
+                "*", *[f"{dd._md5_bit(j, n_nib)} > 0 AS _b{j}" for j in range(bits)]
+            ).collect()
+        }
+        oracle_items = [
+            f"{ex.hex_int_oracle('h', c0 + 1, min(12, n_nib - c0))}" for c0 in starts
+        ] + [
+            f"({ex.nibble('h', j // 4 + 1)} & {1 << (j % 4)}) > 0" for j in range(bits)
+        ]
+        n_chunks = len(starts)
+        oracle = {
+            row[0]: (tuple(row[1:1 + n_chunks]), tuple(row[1 + n_chunks:]))
+            for row in con.execute(
+                f"SELECT h, {', '.join(oracle_items)} FROM hashes"
+            ).fetchall()
+        }
+        assert oracle == engine, f"oracle parse diverges at bits={bits}"
 
 
 def test_near_dup_clusters_equals_raw_graph_cc(spark):

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.plans.facts import (
@@ -46,13 +45,6 @@ def test_loading_same_batch_twice_is_noop(spark):
     fact = existing.unionByName(first)
     second = incremental_fact_insert(fact, batch)
     assert second.count() == 0
-
-
-def test_date_prune_requires_date_in_dedup_cols(spark):
-    existing = mk(spark, [])
-    batch = mk(spark, [(1, dt.date(2024, 1, 1), 10.0)])
-    with pytest.raises(ValueError):
-        incremental_fact_insert(existing, batch, dedup_cols=["emp_sk"], date_col="d")
 
 
 def test_date_prune_same_result_as_unpruned(spark):

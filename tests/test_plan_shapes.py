@@ -223,12 +223,7 @@ def test_incremental_fact_prune_hits_partition_filters(spark, tmp_path):
             "o_orderkey long, o_totalprice double, load_date string",
         )
     )
-    out = fc.incremental_fact_insert(
-        existing,
-        batch,
-        dedup_cols=["o_orderkey", "load_date"],
-        date_col="load_date",
-    )
+    out = fc.incremental_fact_insert(existing, batch, date_col="load_date")
     plan = plan_of(out)
     # the existing-side scan is pruned via partition METADATA: one scan's
     # PartitionFilters (not DataFilters/PushedFilters) must carry the

@@ -380,10 +380,11 @@ def test_kmv_intersect_asymmetric_unfull(spark):
     pipeline on a constructed frame where the flawed rule undercounts."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
+    from data_warehousing_assignment_spark.functions import exact as ex
     from data_warehousing_assignment_spark.registry_sketch import (
+        _KMV_H,
         _KMV_K,
         _KMV_M,
-        _kmv_hash_spark,
     )
 
     # A: 500 members (full sketch, theta_A ≈ 64/500 = 12.8% of the
@@ -393,7 +394,7 @@ def test_kmv_intersect_asymmetric_unfull(spark):
     # only the ~60·0.128 ≈ 8 survivors unscaled.
     rows = [(1, i) for i in range(500)] + [(2, i * 7) for i in range(60)]
     src = spark.createDataFrame(rows, "yr: int, o_custkey: bigint")
-    h = src.select("yr", _kmv_hash_spark().alias("hv"))
+    h = src.select("yr", F.expr(ex.hex_int(_KMV_H, 1, 15)).alias("hv"))
     wyr = Window.partitionBy("yr").orderBy("hv")
     sk = (
         h.withColumn("rn", F.row_number().over(wyr))

@@ -52,7 +52,7 @@ def test_grouped_agg_pandas_udf_matches_native(spark):
     @pandas_udf("long")
     def cents_sum_udf(v: pd.Series) -> int:
         # int64 cents: exact, order-independent — same contract as
-        # registry.sum_cents
+        # exact.sum_cents
         return int(np.sum((v * 100).round().astype("int64")))
 
     df = spark.createDataFrame(

@@ -9,10 +9,10 @@ frame sampling — runs as Arrow-batched pandas transforms via
 Python, and the batch shape (one Arrow record batch in, one out) is the
 same shape a real codec worker would consume.
 
-The actual codec step is STUBBED: this container has no image/audio
-libraries, so ``decode`` parses a deterministic FAKE payload format (see
-:func:`fake_payload`) and real-codec mode raises ``NotImplementedError``
-with the integration point documented. Everything around the stub —
+The actual codec step is STUBBED: no image/audio libraries are
+installed, so ``decode`` parses a deterministic FAKE payload format (see
+:func:`fake_payload`); a real codec plugs into the same batch loop.
+Everything around the stub —
 schemas, partitioning, UDF signatures, Arrow batching — is real and
 tested (tests/test_multimodal.py).
 
@@ -119,20 +119,15 @@ DECODE_SCHEMA = StructType(
 )
 
 
-def decode(df: DataFrame, real_codec: bool = False) -> DataFrame:
+def decode(df: DataFrame) -> DataFrame:
     """Decode payloads into a pixel array (row-major, grayscale [0,1]).
 
-    STUB: ``real_codec=True`` is the integration point for Pillow/ffmpeg
-    (not installed here) and raises ``NotImplementedError``. The fake
-    decoder maps payload bytes after the magic onto width×height pixels
-    (repeating/truncating deterministically) — downstream stages (resize,
-    embedding, dedup-by-content) behave exactly as they would on real
-    decoded frames."""
-    if real_codec:
-        raise NotImplementedError(
-            "real codecs unavailable in this environment; plug Pillow/ffmpeg "
-            "into _decode_batch here — the mapInPandas contract is unchanged"
-        )
+    STUB: the fake decoder maps payload bytes after the magic onto
+    width×height pixels (repeating/truncating deterministically) —
+    downstream stages (resize, embedding, dedup-by-content) behave
+    exactly as they would on real decoded frames. A Pillow/ffmpeg
+    decoder would replace ``decode_one``; the mapInPandas contract is
+    unchanged."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -236,27 +231,16 @@ AUDIO_ENERGY_SCHEMA = StructType(
 )
 
 
-def audio_frame_energy(
-    df: DataFrame,
-    frame_len: int = 256,
-    real_codec: bool = False,
-) -> DataFrame:
+def audio_frame_energy(df: DataFrame, frame_len: int = 256) -> DataFrame:
     """Audio feature extraction STUB: treat the payload body as 8-bit
     PCM (sample = byte − 128), frame it into ``frame_len``-sample
     windows (last window may be partial) and emit per-item energy
     features — sample count, frame count, total squared energy, and the
     peak per-frame squared energy. The framing/windowing shape is
     exactly what a real librosa/ffmpeg front-end produces; all energy
-    math is integer, so the oracle check is exact, not approximate.
-
-    ``real_codec=True`` is the documented integration point for a real
-    PCM decoder and raises ``NotImplementedError`` (no audio libs in
-    this environment)."""
-    if real_codec:
-        raise NotImplementedError(
-            "real audio codecs unavailable here; plug soundfile/ffmpeg into "
-            "the batch loop below — the mapInPandas contract is unchanged"
-        )
+    math is integer, so the oracle check is exact, not approximate. A
+    real PCM decoder (soundfile/ffmpeg) would plug into the batch loop;
+    the mapInPandas contract is unchanged."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -310,7 +294,7 @@ def average_hash(df: DataFrame) -> DataFrame:
     All integer arithmetic ⇒ the fingerprint is engine-exact — an
     oracle-checkable stand-in for DCT pHash, whose float cosines
     aren't. Real-codec swap point: feed real grayscale pixels from
-    :func:`decode`(real_codec=True) into the same bit rule; the
+    a real :func:`decode` into the same bit rule; the
     mapInPandas contract is unchanged. Arrow-batched; payload bytes
     never hit row-wise Python."""
 

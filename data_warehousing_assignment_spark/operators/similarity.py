@@ -14,6 +14,14 @@ Every vector operator (here, in ivf.py and pq.py) shares three steps:
 score text over those hoisted norms, and :func:`top_per_query` is the
 one per-query top-k cut. Each operator keeps only its own join.
 
+Each stage has one DuckDB twin here too, pasted by every vector oracle
+in the registry: :func:`oracle_vectors` (the quantized ``emb`` side,
+``idx`` over the dimensions and the ``nrms`` norms), :func:`oracle_cosine`
+(the pair dot and exact cosine over a candidate-pair CTE),
+:func:`oracle_top` (the per-query top-k cut, ties to the lower
+neighbor id) and :func:`oracle_recall` (recall@k against a ground
+truth). An oracle adds only its own candidate pairs.
+
 Scale design: brute-force top-k broadcasts the (small) query set and
 streams the corpus — one pass, no corpus shuffle except the final
 per-query top-k (shuffle keyed by query id, k rows each). The LSH path
@@ -78,6 +86,36 @@ def quantized_rows(
     ).withColumn(norm_as, norm(vec_as))
 
 
+def _oracle_dot(a: str, b: str) -> str:
+    """DuckDB SQL for the exact dot of two quantized BIGINT lists. It runs
+    in doubles, but every partial sum is an integer below 2^53 while
+    |x| < 11, so it equals the engine's int64 sum; being row-local, it
+    does not fan each pair out to one row per dimension."""
+    return (
+        f"CAST(list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
+        " AS BIGINT)"
+    )
+
+
+def oracle_vectors(keys=()) -> str:
+    """DuckDB twin of :func:`quantized_rows`, as CTE text: ``emb(vec_id,
+    *keys, v)``, the quantized vectors of ``embeddings`` (DuckDB spells
+    the quantize with ``list_transform`` and an explicit BIGINT cast);
+    ``idx(i)``, the ``PLANE_DIM`` 1-based positions of a vector; and
+    ``nrms(vec_id, nrm)``, each vector's norm as a double."""
+    cols = "".join(f"{k}, " for k in keys)
+    return f"""emb AS (
+      SELECT vec_id, {cols}list_transform(embedding, x ->
+               CAST(FLOOR(CAST(x AS DOUBLE) * {QUANT}) AS BIGINT)) AS v
+      FROM embeddings
+    ),
+    idx AS (SELECT unnest(range(1, {PLANE_DIM + 1})) AS i),
+    nrms AS (
+      SELECT vec_id, sqrt(CAST({_oracle_dot('v', 'v')} AS DOUBLE)) AS nrm
+      FROM emb
+    )"""
+
+
 def cosine_sql(a: str, b: str, na: str, nb: str) -> str:
     """SQL for the exact cosine of quantized vectors ``a`` and ``b`` with
     norms ``na`` and ``nb``: the int64 dot over the norms' product, one
@@ -85,6 +123,24 @@ def cosine_sql(a: str, b: str, na: str, nb: str) -> str:
     The norms are per-ROW quantities (:func:`quantized_rows` computes
     each once before a pair join), never re-run per pair."""
     return f"CAST({dot_sql(a, b)} AS DOUBLE) / ({na} * {nb})"
+
+
+def oracle_cosine(name: str, pairs: str) -> str:
+    """DuckDB twin of :func:`cosine_sql`, as the CTE text ``name(query_id,
+    neighbor_id, dot, score)``: the exact dot and cosine of every pair of
+    the CTE ``pairs(query_id, neighbor_id)``, over the ``emb`` and
+    ``nrms`` of :func:`oracle_vectors`."""
+    return f"""{name} AS (
+      SELECT d.query_id, d.neighbor_id, d.dot,
+             CAST(d.dot AS DOUBLE) / (na.nrm * nb.nrm) AS score
+      FROM (SELECT p.query_id, p.neighbor_id,
+                   {_oracle_dot('q.v', 'n.v')} AS dot
+            FROM {pairs} p
+            JOIN emb q ON q.vec_id = p.query_id
+            JOIN emb n ON n.vec_id = p.neighbor_id) d
+      JOIN nrms na ON na.vec_id = d.query_id
+      JOIN nrms nb ON nb.vec_id = d.neighbor_id
+    )"""
 
 
 def top_per_query(
@@ -107,6 +163,40 @@ def nearest_k(scored: DataFrame, k: int) -> DataFrame:
     return top_per_query(scored, "score DESC, neighbor_id", k).select(
         "query_id", "neighbor_id", "rank", "score"
     )
+
+
+def oracle_top(
+    src: str,
+    k: int,
+    order: str = "score DESC",
+    rank: str = "rank",
+    cols: str = "query_id, neighbor_id, rank, score",
+) -> str:
+    """DuckDB twin of :func:`top_per_query` and :func:`nearest_k`: a
+    SELECT of ``cols`` over the rows of ``src`` cut to each query's first
+    ``k`` by ``order``, ties to the lower neighbor id, with their INT
+    ``rank``. The defaults are :func:`nearest_k`'s ranking, ``ORDER BY
+    score DESC, neighbor_id``, and its output columns."""
+    return f"""SELECT {cols} FROM (
+      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                     ORDER BY {order}, neighbor_id) AS INT) AS {rank}
+      FROM {src})
+    WHERE {rank} <= {k}"""
+
+
+def oracle_recall(truth: str, found: str, k: int) -> str:
+    """DuckDB SQL for recall@k per query: of the neighbors each query has
+    in ``truth(query_id, neighbor_id)`` (its exact top ``k``), how many
+    ``found`` also returns (``n_hits``), and ``recall_ppm`` = 10⁶·hits
+    div ``k``, an exact integer."""
+    return f"""SELECT e.query_id,
+           CAST(COUNT(f.neighbor_id) AS BIGINT) AS n_hits,
+           CAST((1000000 * COUNT(f.neighbor_id)) // {k} AS BIGINT)
+             AS recall_ppm
+    FROM {truth} e
+    LEFT JOIN {found} f ON f.query_id = e.query_id
+                       AND f.neighbor_id = e.neighbor_id
+    GROUP BY 1"""
 
 
 def _scored_nearest(pairs: DataFrame, k: int) -> DataFrame:

@@ -21,6 +21,11 @@ The money fragments (``cents``, ``dsum``, ``davg``, ``sum_cents``) and the
 md5-hex ones (``salted_md5``, ``hex_int``, ``hex_int_oracle``) are one SQL
 text each in ``functions/exact.py``: the engine wraps a fragment in
 ``F.expr`` and the oracle pastes the same text, so no copy can drift.
+The stages every vector oracle shares — the quantized ``emb`` side with
+``idx`` and norms (``oracle_vectors``), the pair dot and exact cosine
+(``oracle_cosine``), the per-query top-k cut (``oracle_top``) and recall@k
+(``oracle_recall``) — are one DuckDB text each in
+``operators/similarity.py``, beside the engine stage each checks.
 * Timestamps never cross the boundary raw: queries return dates, epoch
   seconds, or formatted strings (events.parquet is nanosecond-precision,
   which Spark reads as long via ``spark.sql.legacy.parquet.nanosAsLong``).

@@ -24,6 +24,15 @@ from data_warehousing_assignment_spark.operators import graph as gr
 from data_warehousing_assignment_spark.operators import similarity as sim
 from data_warehousing_assignment_spark.operators import timeseries as ts
 from data_warehousing_assignment_spark.registry import dec, query, t
+from data_warehousing_assignment_spark.registry_extensions import (
+    _HYBRID_C0_SQL,
+    _QSAMPLE_WHERE,
+    _exact_top,
+    _hybrid_fused_ctes,
+    _ivf_cand_ctes,
+    audit_sample,
+    hybrid_fused_frame,
+)
 
 
 # --------------------------------------------------------------------------
@@ -138,9 +147,7 @@ def op_ext_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders.filter(F.year("o_orderdate") == year)
             .groupBy(F.col("o_custkey").alias("c_custkey"))
             .agg(
-                (F.sum(dec("o_totalprice")) * 100)
-                .cast("bigint")
-                .alias("rev_cents")
+                F.expr(ex.sum_cents("o_totalprice")).alias("rev_cents")
             )
         )
 
@@ -302,7 +309,7 @@ def op_ext_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy("c_nationkey", "o_custkey")
-        .agg((F.sum(dec("o_totalprice")) * 100).cast("bigint").alias("x"))
+        .agg(F.expr(ex.sum_cents("o_totalprice")).alias("x"))
     )
     w = Window.partitionBy("c_nationkey").orderBy("x", "o_custkey")
     ranked = cust.withColumn("rk", F.row_number().over(w))
@@ -389,45 +396,10 @@ def op_ext_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # kNN label voting
 # --------------------------------------------------------------------------
 
-_KNN_QUANT = (
-    "list_transform(embedding, x -> "
-    "CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
-)
-
 _KNN_ORACLE = f"""
-    WITH qv AS (
-      SELECT vec_id AS query_id, {_KNN_QUANT} AS e
-      FROM embeddings WHERE vec_id % 100 = 0
-    ), cv AS (
-      SELECT vec_id AS neighbor_id, {_KNN_QUANT} AS e FROM embeddings
-    ), idx AS (SELECT unnest(range(1, 65)) AS i),
-    dots AS (
-      SELECT q.query_id, c.neighbor_id,
-             CAST(SUM(q.e[idx.i] * c.e[idx.i]) AS BIGINT) AS dot
-      FROM qv q, cv c, idx
-      WHERE q.query_id <> c.neighbor_id
-      GROUP BY 1, 2
-    ), norms AS (
-      SELECT vec_id, CAST(SUM(p) AS BIGINT) AS nrm FROM (
-        SELECT vec_id, e[idx.i] * e[idx.i] AS p
-        FROM (SELECT vec_id, {_KNN_QUANT} AS e FROM embeddings), idx)
-      GROUP BY 1
-    ), scored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nc.nrm AS DOUBLE)))
-               AS score
-      FROM dots d
-      JOIN norms nq ON d.query_id = nq.vec_id
-      JOIN norms nc ON d.neighbor_id = nc.vec_id
-    ), top AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY score DESC, neighbor_id) AS rank
-        FROM scored)
-      WHERE rank <= 5
-    ), votes AS (
+    WITH {sim.oracle_vectors()},
+    {_exact_top("top", "vec_id % 100 = 0", 5)},
+    votes AS (
       SELECT t.query_id, e.label, COUNT(*) AS n
       FROM top t JOIN embeddings e ON t.neighbor_id = e.vec_id
       GROUP BY 1, 2
@@ -588,36 +560,8 @@ def _retrieval_metrics_over(top: DataFrame, emb: DataFrame) -> DataFrame:
 @query(
     "op-ext-retrieval-metrics",
     oracle=f"""
-    WITH qv AS (
-      SELECT vec_id AS query_id, {_KNN_QUANT} AS e
-      FROM embeddings WHERE vec_id % 100 = 0
-    ), cv AS (
-      SELECT vec_id AS neighbor_id, {_KNN_QUANT} AS e FROM embeddings
-    ), idx AS (SELECT unnest(range(1, 65)) AS i),
-    dots AS (
-      SELECT q.query_id, c.neighbor_id,
-             CAST(SUM(q.e[idx.i] * c.e[idx.i]) AS BIGINT) AS dot
-      FROM qv q, cv c, idx
-      WHERE q.query_id <> c.neighbor_id
-      GROUP BY 1, 2
-    ), norms AS (
-      SELECT vec_id, CAST(SUM(p) AS BIGINT) AS nrm FROM (
-        SELECT vec_id, e[idx.i] * e[idx.i] AS p
-        FROM (SELECT vec_id, {_KNN_QUANT} AS e FROM embeddings), idx)
-      GROUP BY 1
-    ), top AS (
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT d.query_id, d.neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY d.query_id
-                    ORDER BY CAST(d.dot AS DOUBLE)
-                      / (sqrt(CAST(nq.nrm AS DOUBLE))
-                         * sqrt(CAST(nc.nrm AS DOUBLE))) DESC,
-                      d.neighbor_id) AS rank
-        FROM dots d
-        JOIN norms nq ON d.query_id = nq.vec_id
-        JOIN norms nc ON d.neighbor_id = nc.vec_id)
-      WHERE rank <= {_RM_K}
-    ),
+    WITH {sim.oracle_vectors()},
+    {_exact_top("top", "vec_id % 100 = 0", _RM_K)},
     {_metrics_tail_sql("top")}
     """,
 )
@@ -650,28 +594,14 @@ def op_ext_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fusion evaluation: the retrieval metrics over the HYBRID ranking
 # --------------------------------------------------------------------------
 
-from data_warehousing_assignment_spark.registry_extensions import (  # noqa: E402
-    _HYBRID_C0_SQL,
-    _hybrid_fused_ctes,
-    _ivf_cand_ctes,
-    _QSAMPLE_WHERE,
-    audit_sample,
-    hybrid_fused_frame,
-)
-
 
 @query(
     "op-ext-fusion-gain",
     oracle=f"""
     {_hybrid_fused_ctes()},
-    ftop AS (
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY rrf_micro DESC, neighbor_id) AS rank
-        FROM fused)
-      WHERE rank <= {_RM_K}
-    ),
+    ftop AS ({sim.oracle_top(
+        "fused", _RM_K, "rrf_micro DESC", cols="query_id, neighbor_id, rank"
+    )}),
     {_metrics_tail_sql("ftop")}
     """,
 )
@@ -698,35 +628,8 @@ def op_ext_fusion_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op-ext-fusion-baseline",
     oracle=f"""
     {_ivf_cand_ctes(_HYBRID_C0_SQL, query_where=_QSAMPLE_WHERE)},
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    dots AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM cand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM dots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    dtop AS (
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY score DESC, neighbor_id) AS rank
-        FROM scored)
-      WHERE rank <= {_RM_K}
-    ),
+    {sim.oracle_cosine("scored", "cand")},
+    dtop AS ({sim.oracle_top("scored", _RM_K, cols="query_id, neighbor_id, rank")}),
     {_metrics_tail_sql("dtop")}
     """,
 )
@@ -2510,10 +2413,12 @@ def _coord(decode, axis: str, key: str) -> str:
     return decode(ex.salted_md5(f"{axis}:", key), 1, _GEO_BITS_HEX)
 
 
-@query(
-    "op-ext-spatial-nn",
-    oracle=f"""
-    WITH cust AS (
+#: exact integer distance² of a (customer, supplier) pair, in both engines
+_GEO_D2 = "(xc - xs) * (xc - xs) + (yc - ys) * (yc - ys)"
+
+#: the oracles' twin of :func:`_geo_pairs`: ``cand(c_custkey, s_suppkey,
+#: dist2)``, every pair in the customer's 3×3 cell neighborhood
+_GEO_CTES = f"""cust AS (
       SELECT c_custkey,
              {_coord(ex.hex_int_oracle, 'gx', 'c_custkey')} AS xc,
              {_coord(ex.hex_int_oracle, 'gy', 'c_custkey')} AS yc
@@ -2533,14 +2438,51 @@ def _coord(decode, axis: str, key: str) -> str:
                     FROM range(-1, 2) t1(dx), range(-1, 2) t2(dy)) dxy
     ),
     cand AS (
-      SELECT p.c_custkey,
-             s.s_suppkey,
-             (p.xc - s.xs) * (p.xc - s.xs)
-               + (p.yc - s.ys) * (p.yc - s.ys) AS dist2
+      SELECT p.c_custkey, s.s_suppkey, {_GEO_D2} AS dist2
       FROM probes p
       JOIN supp s ON p.pcx = (s.xs // {_GEO_CELL})
                  AND p.pcy = (s.ys // {_GEO_CELL})
-    ),
+    )"""
+
+
+def _geo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every (customer, supplier) pair in the customer's 3×3 cell
+    neighborhood, with both coordinates: the customers' nine probe cells
+    equi-joined to the suppliers' own cells — the candidate set of the
+    three spatial ops."""
+    cust = t(spark, sf_dir, "customer").selectExpr(
+        "c_custkey",
+        f"{_coord(ex.hex_int, 'gx', 'c_custkey')} AS xc",
+        f"{_coord(ex.hex_int, 'gy', 'c_custkey')} AS yc",
+    )
+    supp = t(spark, sf_dir, "supplier").selectExpr(
+        "s_suppkey",
+        f"{_coord(ex.hex_int, 'gx', 's_suppkey')} AS xs",
+        f"{_coord(ex.hex_int, 'gy', 's_suppkey')} AS ys",
+    ).selectExpr(
+        "s_suppkey", "xs", "ys",
+        f"xs div {_GEO_CELL} AS scx",
+        f"ys div {_GEO_CELL} AS scy",
+    )
+    offsets = spark.range(9).selectExpr(
+        "CAST(id div 3 AS BIGINT) - 1 AS dx",
+        "CAST(id % 3 AS BIGINT) - 1 AS dy",
+    )
+    probes = cust.crossJoin(F.broadcast(offsets)).selectExpr(
+        "c_custkey", "xc", "yc",
+        f"xc div {_GEO_CELL} + dx AS pcx",
+        f"yc div {_GEO_CELL} + dy AS pcy",
+    )
+    return probes.join(
+        supp,
+        (F.col("pcx") == F.col("scx")) & (F.col("pcy") == F.col("scy")),
+    )
+
+
+@query(
+    "op-ext-spatial-nn",
+    oracle=f"""
+    WITH {_GEO_CTES},
     ranked AS (
       SELECT c_custkey, s_suppkey, dist2,
              ROW_NUMBER() OVER (PARTITION BY c_custkey
@@ -2570,39 +2512,8 @@ def op_ext_spatial_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded join, never |cust|×|supp|; the final pick is a
     customer-partitioned top-1 (WindowGroupLimit), no global window.
     Tie-break (dist2, suppkey) keeps the pick total-ordered."""
-    cust = t(spark, sf_dir, "customer").selectExpr(
-        "c_custkey",
-        f"{_coord(ex.hex_int, 'gx', 'c_custkey')} AS xc",
-        f"{_coord(ex.hex_int, 'gy', 'c_custkey')} AS yc",
-    )
-    supp = t(spark, sf_dir, "supplier").selectExpr(
-        "s_suppkey",
-        f"{_coord(ex.hex_int, 'gx', 's_suppkey')} AS xs",
-        f"{_coord(ex.hex_int, 'gy', 's_suppkey')} AS ys",
-    ).selectExpr(
-        "s_suppkey", "xs", "ys",
-        f"xs div {_GEO_CELL} AS scx",
-        f"ys div {_GEO_CELL} AS scy",
-    )
-    offsets = spark.range(9).selectExpr(
-        "CAST(id div 3 AS BIGINT) - 1 AS dx",
-        "CAST(id % 3 AS BIGINT) - 1 AS dy",
-    )
-    probes = cust.crossJoin(F.broadcast(offsets)).selectExpr(
-        "c_custkey", "xc", "yc",
-        f"xc div {_GEO_CELL} + dx AS pcx",
-        f"yc div {_GEO_CELL} + dy AS pcy",
-    )
-    cand = probes.join(
-        supp,
-        (F.col("pcx") == F.col("scx")) & (F.col("pcy") == F.col("scy")),
-    ).select(
-        "c_custkey",
-        "s_suppkey",
-        (
-            (F.col("xc") - F.col("xs")) * (F.col("xc") - F.col("xs"))
-            + (F.col("yc") - F.col("ys")) * (F.col("yc") - F.col("ys"))
-        ).alias("dist2"),
+    cand = _geo_pairs(spark, sf_dir).select(
+        "c_custkey", "s_suppkey", F.expr(_GEO_D2).alias("dist2")
     )
     w = Window.partitionBy("c_custkey").orderBy("dist2", "s_suppkey")
     return (
@@ -2619,33 +2530,7 @@ def op_ext_spatial_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "op-ext-spatial-knn",
     oracle=f"""
-    WITH cust AS (
-      SELECT c_custkey,
-             {_coord(ex.hex_int_oracle, 'gx', 'c_custkey')} AS xc,
-             {_coord(ex.hex_int_oracle, 'gy', 'c_custkey')} AS yc
-      FROM customer
-    ),
-    supp AS (
-      SELECT s_suppkey,
-             {_coord(ex.hex_int_oracle, 'gx', 's_suppkey')} AS xs,
-             {_coord(ex.hex_int_oracle, 'gy', 's_suppkey')} AS ys
-      FROM supplier
-    ),
-    probes AS (
-      SELECT c.c_custkey, c.xc, c.yc,
-             (c.xc // {_GEO_CELL}) + dxy.dx AS pcx,
-             (c.yc // {_GEO_CELL}) + dxy.dy AS pcy
-      FROM cust c, (SELECT dx, dy
-                    FROM range(-1, 2) t1(dx), range(-1, 2) t2(dy)) dxy
-    ),
-    cand AS (
-      SELECT p.c_custkey, s.s_suppkey,
-             (p.xc - s.xs) * (p.xc - s.xs)
-               + (p.yc - s.ys) * (p.yc - s.ys) AS dist2
-      FROM probes p
-      JOIN supp s ON p.pcx = (s.xs // {_GEO_CELL})
-                 AND p.pcy = (s.ys // {_GEO_CELL})
-    ),
+    WITH {_GEO_CTES},
     ranked AS (
       SELECT c_custkey, s_suppkey, dist2,
              ROW_NUMBER() OVER (PARTITION BY c_custkey
@@ -2666,39 +2551,8 @@ def op_ext_spatial_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rank filter right after the window — only k rows per customer
     survive the stage); tie-break (dist2, suppkey) keeps ranks
     total-ordered and both engines identical."""
-    cust = t(spark, sf_dir, "customer").selectExpr(
-        "c_custkey",
-        f"{_coord(ex.hex_int, 'gx', 'c_custkey')} AS xc",
-        f"{_coord(ex.hex_int, 'gy', 'c_custkey')} AS yc",
-    )
-    supp = t(spark, sf_dir, "supplier").selectExpr(
-        "s_suppkey",
-        f"{_coord(ex.hex_int, 'gx', 's_suppkey')} AS xs",
-        f"{_coord(ex.hex_int, 'gy', 's_suppkey')} AS ys",
-    ).selectExpr(
-        "s_suppkey", "xs", "ys",
-        f"xs div {_GEO_CELL} AS scx",
-        f"ys div {_GEO_CELL} AS scy",
-    )
-    offsets = spark.range(9).selectExpr(
-        "CAST(id div 3 AS BIGINT) - 1 AS dx",
-        "CAST(id % 3 AS BIGINT) - 1 AS dy",
-    )
-    probes = cust.crossJoin(F.broadcast(offsets)).selectExpr(
-        "c_custkey", "xc", "yc",
-        f"xc div {_GEO_CELL} + dx AS pcx",
-        f"yc div {_GEO_CELL} + dy AS pcy",
-    )
-    cand = probes.join(
-        supp,
-        (F.col("pcx") == F.col("scx")) & (F.col("pcy") == F.col("scy")),
-    ).select(
-        "c_custkey",
-        "s_suppkey",
-        (
-            (F.col("xc") - F.col("xs")) * (F.col("xc") - F.col("xs"))
-            + (F.col("yc") - F.col("ys")) * (F.col("yc") - F.col("ys"))
-        ).alias("dist2"),
+    cand = _geo_pairs(spark, sf_dir).select(
+        "c_custkey", "s_suppkey", F.expr(_GEO_D2).alias("dist2")
     )
     w = Window.partitionBy("c_custkey").orderBy("dist2", "s_suppkey")
     return (
@@ -2721,33 +2575,9 @@ _GEO_R = _GEO_CELL // 2
 @query(
     "op-ext-spatial-range",
     oracle=f"""
-    WITH cust AS (
-      SELECT c_custkey,
-             {_coord(ex.hex_int_oracle, 'gx', 'c_custkey')} AS xc,
-             {_coord(ex.hex_int_oracle, 'gy', 'c_custkey')} AS yc
-      FROM customer
-    ),
-    supp AS (
-      SELECT s_suppkey,
-             {_coord(ex.hex_int_oracle, 'gx', 's_suppkey')} AS xs,
-             {_coord(ex.hex_int_oracle, 'gy', 's_suppkey')} AS ys
-      FROM supplier
-    ),
-    probes AS (
-      SELECT c.c_custkey, c.xc, c.yc,
-             (c.xc // {_GEO_CELL}) + dxy.dx AS pcx,
-             (c.yc // {_GEO_CELL}) + dxy.dy AS pcy
-      FROM cust c, (SELECT dx, dy
-                    FROM range(-1, 2) t1(dx), range(-1, 2) t2(dy)) dxy
-    )
-    SELECT p.c_custkey, s.s_suppkey,
-           CAST((p.xc - s.xs) * (p.xc - s.xs)
-                + (p.yc - s.ys) * (p.yc - s.ys) AS BIGINT) AS dist2
-    FROM probes p
-    JOIN supp s ON p.pcx = (s.xs // {_GEO_CELL})
-               AND p.pcy = (s.ys // {_GEO_CELL})
-    WHERE (p.xc - s.xs) * (p.xc - s.xs)
-          + (p.yc - s.ys) * (p.yc - s.ys) <= {_GEO_R * _GEO_R}
+    WITH {_GEO_CTES}
+    SELECT c_custkey, s_suppkey, CAST(dist2 AS BIGINT) AS dist2
+    FROM cand WHERE dist2 <= {_GEO_R * _GEO_R}
     """,
 )
 def op_ext_spatial_range(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2761,38 +2591,9 @@ def op_ext_spatial_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     most once because a supplier lives in exactly one cell. Output is
     the pair list with its exact integer distance² — the shape a
     delivery-assignment or geo-dedup pipeline consumes."""
-    cust = t(spark, sf_dir, "customer").selectExpr(
-        "c_custkey",
-        f"{_coord(ex.hex_int, 'gx', 'c_custkey')} AS xc",
-        f"{_coord(ex.hex_int, 'gy', 'c_custkey')} AS yc",
-    )
-    supp = t(spark, sf_dir, "supplier").selectExpr(
-        "s_suppkey",
-        f"{_coord(ex.hex_int, 'gx', 's_suppkey')} AS xs",
-        f"{_coord(ex.hex_int, 'gy', 's_suppkey')} AS ys",
-    ).selectExpr(
-        "s_suppkey", "xs", "ys",
-        f"xs div {_GEO_CELL} AS scx",
-        f"ys div {_GEO_CELL} AS scy",
-    )
-    offsets = spark.range(9).selectExpr(
-        "CAST(id div 3 AS BIGINT) - 1 AS dx",
-        "CAST(id % 3 AS BIGINT) - 1 AS dy",
-    )
-    probes = cust.crossJoin(F.broadcast(offsets)).selectExpr(
-        "c_custkey", "xc", "yc",
-        f"xc div {_GEO_CELL} + dx AS pcx",
-        f"yc div {_GEO_CELL} + dy AS pcy",
-    )
-    d2 = (F.col("xc") - F.col("xs")) * (F.col("xc") - F.col("xs")) + (
-        F.col("yc") - F.col("ys")
-    ) * (F.col("yc") - F.col("ys"))
+    d2 = F.expr(_GEO_D2)
     return (
-        probes.join(
-            supp,
-            (F.col("pcx") == F.col("scx"))
-            & (F.col("pcy") == F.col("scy")),
-        )
+        _geo_pairs(spark, sf_dir)
         .where(d2 <= _GEO_R * _GEO_R)
         .select(
             "c_custkey",

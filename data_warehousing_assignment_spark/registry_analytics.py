@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.operators import analytics as an
+from data_warehousing_assignment_spark.operators import similarity as sim
 from data_warehousing_assignment_spark.operators import text as tx
 from data_warehousing_assignment_spark.registry import _TOKS, dec, query, t
 
@@ -73,7 +74,7 @@ def op_ext_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(max(ts_us) - min(ts_us)) div 1000000")
         .cast("bigint")
         .alias("duration_s"),
-        F.sum(dec("value")).cast("double").alias("session_value"),
+        F.expr(ex.dsum("value")).alias("session_value"),
     )
 
 
@@ -287,7 +288,7 @@ def op_ext_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_customers"),
         F.min("c_acctbal").alias("min_bal"),
         F.max("c_acctbal").alias("max_bal"),
-        F.sum(dec("c_acctbal")).cast("double").alias("total_bal"),
+        F.expr(ex.dsum("c_acctbal")).alias("total_bal"),
     )
 
 
@@ -440,7 +441,7 @@ def op_ext_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return li.groupBy("bin").agg(
         F.count(F.lit(1)).alias("n_items"),
-        F.sum(dec("l_extendedprice")).cast("double").alias("bin_revenue"),
+        F.expr(ex.dsum("l_extendedprice")).alias("bin_revenue"),
     )
 
 
@@ -750,9 +751,9 @@ def op_ext_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero extra shuffle."""
     li = t(spark, sf_dir, "lineitem")
     s = li.groupBy("l_returnflag").agg(
-        F.sum(dec("l_quantity")).cast("double").alias("qty"),
-        F.sum(dec("l_extendedprice")).cast("double").alias("price"),
-        F.sum(dec("l_discount")).cast("double").alias("disc"),
+        F.expr(ex.dsum("l_quantity")).alias("qty"),
+        F.expr(ex.dsum("l_extendedprice")).alias("price"),
+        F.expr(ex.dsum("l_discount")).alias("disc"),
     )
     return s.select(
         "l_returnflag",
@@ -937,16 +938,11 @@ def op_ext_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-label-centroids",
-    oracle="""
-    WITH q AS (
-      SELECT label,
-             list_transform(embedding, x ->
-               CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT)) AS e
-      FROM embeddings
-    ), idx AS (SELECT unnest(range(1, 65)) AS i),
+    oracle=f"""
+    WITH {sim.oracle_vectors(["label"])},
     sums AS (
-      SELECT q.label, idx.i - 1 AS dim, CAST(SUM(q.e[idx.i]) AS BIGINT) AS sum_q
-      FROM q, idx GROUP BY 1, 2
+      SELECT emb.label, idx.i - 1 AS dim, CAST(SUM(emb.v[idx.i]) AS BIGINT) AS sum_q
+      FROM emb, idx GROUP BY 1, 2
     ), n AS (
       SELECT label, COUNT(*) AS n_vecs FROM embeddings GROUP BY label
     )
@@ -954,7 +950,7 @@ def op_ext_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n.n_vecs AS BIGINT) AS n_vecs,
            CAST(COUNT(*) AS BIGINT) AS n_dims,
            sqrt(CAST(SUM(CAST(s.sum_q AS HUGEINT) * s.sum_q) AS DOUBLE))
-             / (CAST(n.n_vecs AS DOUBLE) * 1000000.0) AS centroid_l2,
+             / (CAST(n.n_vecs AS DOUBLE) * {sim.QUANT}) AS centroid_l2,
            md5(string_agg(CAST(s.sum_q AS VARCHAR), '|' ORDER BY s.dim))
              AS centroid_digest
     FROM sums s JOIN n ON s.label = n.label

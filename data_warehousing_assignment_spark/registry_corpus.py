@@ -380,13 +380,11 @@ def _semantic_dedup_oracle() -> str:
     final assignment, within-cluster lower-id domination at
     cosine ≥ 0.5 with the one proven-stable float divide."""
     from data_warehousing_assignment_spark.registry_extensions import (
-        _QUANT_SQL,
         _ivf_lloyd_round,
     )
 
     return f"""
-    WITH emb AS (SELECT vec_id, {_QUANT_SQL} AS v FROM embeddings),
-    idx AS (SELECT unnest(range(1, 65)) AS i),
+    WITH {sim.oracle_vectors()},
     kk AS (SELECT GREATEST(8, LEAST(256, COUNT(*) // 500)) AS k
            FROM embeddings),
     c0 AS (
@@ -410,30 +408,14 @@ def _semantic_dedup_oracle() -> str:
                                   ORDER BY dd, cluster) AS rk
         FROM dfin) WHERE rk = 1
     ),
-    nrms AS (
-      SELECT emb.vec_id, sqrt(CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT))
-               AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
     pairs AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
+      SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id
       FROM cells a JOIN cells b
         ON a.cluster = b.cluster AND a.vec_id < b.vec_id
     ),
-    dots AS (
-      SELECT p.id_a, p.id_b,
-             CAST(SUM(x.v[idx.i] * y.v[idx.i]) AS BIGINT) AS dot
-      FROM pairs p
-      JOIN emb x ON x.vec_id = p.id_a
-      JOIN emb y ON y.vec_id = p.id_b, idx
-      GROUP BY 1, 2
-    ),
+    {sim.oracle_cosine("scored", "pairs")},
     dominated AS (
-      SELECT DISTINCT d.id_b AS vec_id
-      FROM dots d
-      JOIN nrms na ON d.id_a = na.vec_id
-      JOIN nrms nb ON d.id_b = nb.vec_id
-      WHERE CAST(d.dot AS DOUBLE) / (na.nrm * nb.nrm) >= 0.5
+      SELECT DISTINCT neighbor_id AS vec_id FROM scored WHERE score >= 0.5
     )
     SELECT c.vec_id, CAST(c.cluster AS BIGINT) AS cluster,
            dom.vec_id IS NULL AS kept

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.functions import exact as ex
-from data_warehousing_assignment_spark.registry import _TOKS, dec, query, t
+from data_warehousing_assignment_spark.registry import _TOKS, query, t
 from data_warehousing_assignment_spark.operators import dedup as dd
 from data_warehousing_assignment_spark.operators import similarity as sim
 from data_warehousing_assignment_spark.operators import text as tx
@@ -359,43 +359,25 @@ def op_ext_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # similarity search
 # --------------------------------------------------------------------------
 
-_QUANT_SQL = (
-    "list_transform(embedding, x -> "
-    "CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
-)
+def _exact_top(name: str, query_where: str, k: int) -> str:
+    """CTE text ``name(query_id, neighbor_id, dot, score, rank)``: the
+    exact cosine top-``k`` of every vector ``query_where`` picks over the
+    whole corpus — the brute-force ground truth (oracle twin of
+    sim.brute_force_cosine_topk), scored through ``{name}_pairs`` and
+    ``{name}_scored``."""
+    return f"""{name}_pairs AS (
+      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id
+      FROM emb q JOIN emb n ON n.vec_id <> q.vec_id
+      WHERE q.{query_where}
+    ),
+    {sim.oracle_cosine(f"{name}_scored", f"{name}_pairs")},
+    {name} AS ({sim.oracle_top(f"{name}_scored", k, cols="*")})"""
+
 
 _ANN_ORACLE = f"""
-    WITH qv AS (
-      SELECT vec_id AS query_id, {_QUANT_SQL} AS e
-      FROM embeddings WHERE vec_id % 100 = 0
-    ), cv AS (
-      SELECT vec_id AS neighbor_id, {_QUANT_SQL} AS e FROM embeddings
-    ), idx AS (SELECT unnest(range(1, 65)) AS i),
-    dots AS (
-      SELECT q.query_id, c.neighbor_id,
-             CAST(SUM(q.e[idx.i] * c.e[idx.i]) AS BIGINT) AS dot
-      FROM qv q, cv c, idx
-      WHERE q.query_id <> c.neighbor_id
-      GROUP BY 1, 2
-    ), norms AS (
-      SELECT vec_id, CAST(SUM(p) AS BIGINT) AS nrm FROM (
-        SELECT vec_id, e[idx.i] * e[idx.i] AS p
-        FROM (SELECT vec_id, {_QUANT_SQL} AS e FROM embeddings), idx) GROUP BY 1
-    ), scored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nc.nrm AS DOUBLE)))
-               AS score
-      FROM dots d
-      JOIN norms nq ON d.query_id = nq.vec_id
-      JOIN norms nc ON d.neighbor_id = nc.vec_id
-    )
-    SELECT query_id, neighbor_id, rank, score FROM (
-      SELECT query_id, neighbor_id, score,
-             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                  ORDER BY score DESC, neighbor_id) AS INT) AS rank
-      FROM scored)
-    WHERE rank <= 5
+    WITH {sim.oracle_vectors()},
+    {_exact_top("top", "vec_id % 100 = 0", 5)}
+    SELECT query_id, neighbor_id, rank, score FROM top
 """
 
 
@@ -428,8 +410,7 @@ def _planes_sql() -> str:
 #: per-vector sign-bucket id: exact int64 plane projections → bit per
 #: plane — the shared head of the LSH ANN and embed-neardup oracles
 _BUCKET_CTES = f"""
-    emb AS (SELECT vec_id, {_QUANT_SQL} AS v FROM embeddings),
-    idx AS (SELECT unnest(range(1, 65)) AS i),
+    {sim.oracle_vectors()},
     proj AS (
       SELECT emb.vec_id, planes.p,
              CAST(SUM(emb.v[idx.i] * planes.h[idx.i]) AS BIGINT) AS pr
@@ -440,10 +421,6 @@ _BUCKET_CTES = f"""
              CAST(SUM(CASE WHEN pr > 0 THEN (1::BIGINT << p)
                            ELSE 0 END) AS BIGINT) AS bucket
       FROM proj GROUP BY 1
-    ),
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
     )"""
 
 
@@ -463,28 +440,8 @@ _BUCKET_CTES = f"""
       FROM qp JOIN buck cb ON cb.bucket = qp.bucket
       WHERE cb.vec_id <> qp.query_id
     ),
-    dots AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM cand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM dots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY score DESC, neighbor_id) AS rank
-          FROM scored)
-    WHERE rank <= 5
+    {sim.oracle_cosine("scored", "cand")}
+    {sim.oracle_top("scored", 5)}
     """,
 )
 def op_ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,33 +474,23 @@ def op_ext_ann_lsh_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.lsh_cosine_topk(emb, queries, k=5, probe_all=True)
 
 
+#: the near-dup pairs (doc_a < doc_b) at cosine ≥ 0.5 of a candidate CTE
+#: ``pairs`` — the tail of both embed-neardup oracles
+_NEARDUP_TAIL = f"""{sim.oracle_cosine("scored", "pairs")}
+    SELECT query_id AS doc_a, neighbor_id AS doc_b, score AS cosine
+    FROM scored WHERE score >= 0.5"""
+
+
 @query(
     "op-ext-embed-neardup",
     oracle=f"""
     WITH {_BUCKET_CTES},
     pairs AS (
-      SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
+      SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id
       FROM buck a JOIN buck b
         ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     ),
-    dots AS (
-      SELECT p.doc_a, p.doc_b,
-             CAST(SUM(x.v[idx.i] * y.v[idx.i]) AS BIGINT) AS dot
-      FROM pairs p
-      JOIN emb x ON x.vec_id = p.doc_a
-      JOIN emb y ON y.vec_id = p.doc_b, idx
-      GROUP BY 1, 2
-    )
-    SELECT d.doc_a, d.doc_b,
-           CAST(d.dot AS DOUBLE)
-             / (sqrt(CAST(na.nrm AS DOUBLE))
-                * sqrt(CAST(nb.nrm AS DOUBLE))) AS cosine
-    FROM dots d
-    JOIN nrms na ON d.doc_a = na.vec_id
-    JOIN nrms nb ON d.doc_b = nb.vec_id
-    WHERE CAST(d.dot AS DOUBLE)
-            / (sqrt(CAST(na.nrm AS DOUBLE))
-               * sqrt(CAST(nb.nrm AS DOUBLE))) >= 0.5
+    {_NEARDUP_TAIL}
     """,
 )
 def op_ext_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -561,29 +508,12 @@ def op_ext_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _NEARDUP_EXACT_ORACLE = f"""
-    WITH e AS (SELECT vec_id, {_QUANT_SQL} AS v FROM embeddings),
-    idx AS (SELECT unnest(range(1, 65)) AS i),
-    norms AS (
-      SELECT vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM e, idx GROUP BY 1
+    WITH {sim.oracle_vectors()},
+    pairs AS (
+      SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id
+      FROM emb a JOIN emb b ON a.vec_id < b.vec_id
     ),
-    dots AS (
-      SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-             CAST(SUM(a.v[idx.i] * b.v[idx.i]) AS BIGINT) AS dot
-      FROM e a, e b, idx
-      WHERE a.vec_id < b.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           CAST(d.dot AS DOUBLE)
-             / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE)))
-             AS cosine
-    FROM dots d
-    JOIN norms na ON d.doc_a = na.vec_id
-    JOIN norms nb ON d.doc_b = nb.vec_id
-    WHERE CAST(d.dot AS DOUBLE)
-             / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE)))
-          >= 0.5
+    {_NEARDUP_TAIL}
 """
 
 
@@ -726,12 +656,11 @@ _DECODE_IDX = [8 * y + x for y in (0, 2, 4, 6) for x in (0, 2, 4, 6)]
     """,
 )
 def op_ext_mm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stubbed image decode (real codec = NotImplementedError integration
-    point) + 4×4 nearest-neighbor resize: payload bytes → grayscale pixel
-    array through the same mapInPandas contract a Pillow-backed decoder
-    would use. The oracle replays the cyclic-tile + resample arithmetic
-    on the ASCII text bytes — the pandas stages are value-verified, not
-    just shape-checked."""
+    """Stubbed image decode + 4×4 nearest-neighbor resize: payload bytes
+    → grayscale pixel array through the same mapInPandas contract a
+    Pillow-backed decoder would use. The oracle replays the cyclic-tile
+    + resample arithmetic on the ASCII text bytes — the pandas stages
+    are value-verified, not just shape-checked."""
     docs = mm.with_media_columns(docs_t(spark, sf_dir))
     decoded = mm.decode(docs)
     resized = mm.resize(decoded, 4, 4)
@@ -811,10 +740,9 @@ def op_ext_mm_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def op_ext_mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stubbed audio decode + frame-energy extraction (real codec =
-    NotImplementedError integration point): payload bytes → centered
-    8-bit PCM → 64-sample frame windows → total / peak squared energy,
-    through the same Arrow-batched mapInPandas contract a real
+    """Stubbed audio decode + frame-energy extraction: payload bytes →
+    centered 8-bit PCM → 64-sample frame windows → total / peak squared
+    energy, through the same Arrow-batched mapInPandas contract a real
     librosa/ffmpeg front-end would use. Integer-exact, value-verified."""
     docs = mm.with_media_columns(docs_t(spark, sf_dir))
     return mm.audio_frame_energy(docs, frame_len=64).select(
@@ -941,8 +869,7 @@ def _ivf_lloyd_round(src_c: str, n: int, train_src: str = "emb") -> str:
 def _ivf_cand_ctes(
     c0_sql: str,
     n_probe: int = 4,
-    query_mod: int = 100,
-    query_where: str | None = None,
+    query_where: str = "vec_id % 100 = 0",
     train_src: str = "emb",
 ) -> str:
     """The IVF candidate-generation CTE chain (seeds → 2 unrolled Lloyd
@@ -953,17 +880,14 @@ def _ivf_cand_ctes(
     drift between the exact and compressed operating points (the PQ op
     probes 8 since r12 — its measured ceiling experiment — while the
     exact-IVF anchors stay at the documented 4). ``query_where``
-    overrides the default ``vec_id % query_mod = 0`` spine — the
+    picks the queries (default the ``vec_id % 100 = 0`` spine) — the
     fixed-size audit sample (op-ext-ann-recall-sampled) injects a
     ``qsample`` CTE via ``c0_sql`` and points the probe filter at it.
     ``train_src`` routes the Lloyd rounds to a corpus slice (the
     incremental-index oracle trains on ``base``); final assignment and
     probing always cover the full ``emb``."""
-    if query_where is None:
-        query_where = f"vec_id % {query_mod} = 0"
     return f"""
-    WITH emb AS (SELECT vec_id, {_QUANT_SQL} AS v FROM embeddings),
-    idx AS (SELECT unnest(range(1, 65)) AS i),
+    WITH {sim.oracle_vectors()},
     {c0_sql},
     {_ivf_lloyd_round('c0', 0, train_src)},
     {_ivf_lloyd_round('c1', 1, train_src)},
@@ -1002,32 +926,8 @@ def _ivf_oracle(c0_sql: str, train_src: str = "emb") -> str:
     slice, assignment over everything) share one verbatim body."""
     return f"""
     {_ivf_cand_ctes(c0_sql, train_src=train_src)},
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    dots AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM cand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM dots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY score DESC, neighbor_id) AS rank
-          FROM scored)
-    WHERE rank <= 5
+    {sim.oracle_cosine("scored", "cand")}
+    {sim.oracle_top("scored", 5)}
     """
 
 
@@ -1216,10 +1116,6 @@ _PQ_ORACLE = f"""
       FROM sv s JOIN p2 c USING (m), i8
       WHERE s.vec_id % 100 = 0 GROUP BY 1, 2, 3
     ),
-    qn AS (
-      SELECT vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nq
-      FROM emb, idx WHERE vec_id % 100 = 0 GROUP BY 1
-    ),
     adc AS (
       SELECT cd.query_id, cd.neighbor_id, CAST(SUM(l.dot) AS BIGINT) AS adot
       FROM cand cd
@@ -1231,44 +1127,14 @@ _PQ_ORACLE = f"""
     pscored AS (
       SELECT a.query_id, a.neighbor_id,
              CAST(a.adot AS DOUBLE)
-               / (sqrt(CAST(q.nq AS DOUBLE))
-                  * sqrt(CAST(x.nx AS DOUBLE))) AS score
+               / (q.nrm * sqrt(CAST(x.nx AS DOUBLE))) AS score
       FROM adc a
-      JOIN qn q ON q.vec_id = a.query_id
+      JOIN nrms q ON q.vec_id = a.query_id
       JOIN xnrm x ON x.vec_id = a.neighbor_id
     ),
-    short AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY score DESC, neighbor_id) AS ar
-        FROM pscored) WHERE ar <= 100
-    ),
-    edots AS (
-      SELECT s.query_id, s.neighbor_id,
-             CAST(SUM(qv.v[idx.i] * nv.v[idx.i]) AS BIGINT) AS dot
-      FROM short s
-      JOIN emb qv ON qv.vec_id = s.query_id
-      JOIN emb nv ON nv.vec_id = s.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    enrm AS (
-      SELECT vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    escored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(n1.nrm AS DOUBLE))
-                  * sqrt(CAST(n2.nrm AS DOUBLE))) AS score
-      FROM edots d
-      JOIN enrm n1 ON d.query_id = n1.vec_id
-      JOIN enrm n2 ON d.neighbor_id = n2.vec_id
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY score DESC, neighbor_id) AS rank
-          FROM escored)
-    WHERE rank <= 5
+    short AS ({sim.oracle_top("pscored", 100, cols="query_id, neighbor_id")}),
+    {sim.oracle_cosine("escored", "short")}
+    {sim.oracle_top("escored", 5)}
     """
 
 
@@ -1312,58 +1178,42 @@ def op_ext_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RRF_ORACLE = f"""
-    {_ivf_cand_ctes(_seed16_c0('emb'))},
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    dots AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM cand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT d.query_id, d.neighbor_id, d.dot,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS cos
-      FROM dots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    ra AS (
-      SELECT query_id, neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cos DESC, neighbor_id) AS r
-      FROM scored
-    ),
-    rb AS (
-      SELECT query_id, neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY dot DESC, neighbor_id) AS r
-      FROM scored
-    ),
+def _rrf_fused_ctes(a: str, b: str) -> str:
+    """CTE text ending at ``fused(query_id, neighbor_id, rrf_micro)``: the
+    summed exact reciprocal-rank contributions 1e6 // (60 + r) of two
+    rankings ``a`` and ``b``, each a SELECT of ``(query_id, neighbor_id,
+    r)`` rows — the oracle twin of :func:`_rrf_contrib` and
+    :func:`_rrf_fused`."""
+    return f"""ra AS ({a}),
+    rb AS ({b}),
     contrib AS (
-      SELECT query_id, neighbor_id, 1000000 // (60 + r) AS c
-      FROM ra WHERE r <= 20
+      SELECT query_id, neighbor_id, 1000000 // (60 + r) AS c FROM ra
       UNION ALL
-      SELECT query_id, neighbor_id, 1000000 // (60 + r) AS c
-      FROM rb WHERE r <= 20
+      SELECT query_id, neighbor_id, 1000000 // (60 + r) AS c FROM rb
     ),
     fused AS (
       SELECT query_id, neighbor_id, CAST(SUM(c) AS BIGINT) AS rrf_micro
       FROM contrib GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, rrf_micro,
-           CAST(rank AS INT) AS fused_rank
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY rrf_micro DESC, neighbor_id) AS rank
-          FROM fused)
-    WHERE rank <= 10
+    )"""
+
+
+def _top20(src: str, order: str = "score DESC") -> str:
+    """The ``(query_id, neighbor_id, r)`` top 20 of ``src`` by ``order`` —
+    one ranking fed into :func:`_rrf_fused_ctes`."""
+    return sim.oracle_top(src, 20, order, "r", "query_id, neighbor_id, r")
+
+
+#: the fused top 10 of :func:`_fused_top10`, over the ``fused`` CTE
+_FUSED_TOP10 = sim.oracle_top(
+    "fused", 10, "rrf_micro DESC", "fused_rank",
+    "query_id, neighbor_id, rrf_micro, fused_rank",
+)
+
+_RRF_ORACLE = f"""
+    {_ivf_cand_ctes(_seed16_c0('emb'))},
+    {sim.oracle_cosine("scored", "cand")},
+    {_rrf_fused_ctes(_top20("scored"), _top20("scored", "dot DESC"))}
+    {_FUSED_TOP10}
     """
 
 
@@ -1846,7 +1696,7 @@ def op_ext_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .rollup("n_name", "o_orderpriority")
         .agg(
-            F.sum(dec("o_totalprice")).cast("double").alias("total"),
+            F.expr(ex.dsum("o_totalprice")).alias("total"),
             F.count(F.lit(1)).alias("n_orders"),
         )
     )
@@ -1897,7 +1747,7 @@ def op_ext_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.sum(dec("o_totalprice")).cast("double"))
+        .agg(F.expr(ex.dsum("o_totalprice")))
     )
 
 
@@ -2092,9 +1942,7 @@ def op_ext_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         matched.groupBy("_m")
         .agg(
             F.count(F.lit(1)).alias("n_in_transit"),
-            F.sum(dec("l_quantity"))
-            .cast("double")
-            .alias("qty_in_transit"),
+            F.expr(ex.dsum("l_quantity")).alias("qty_in_transit"),
         )
         .select(
             F.format_string(
@@ -2843,71 +2691,33 @@ def op_ext_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN index-quality monitor (r12): recall@5 of the shipped IVF cut
 # --------------------------------------------------------------------------
 
-_RECALL_SURFACE_ORACLE = f"""
-    {_ivf_cand_ctes(_seed16_c0('emb'), n_probe=8, query_mod=50)},
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    dots AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM cand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM dots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    ivf5 AS (
-      SELECT query_id, neighbor_id
-      FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY score DESC, neighbor_id) AS rank
-            FROM scored)
-      WHERE rank <= 5
-    ),
-    bdots AS (
-      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM emb q JOIN emb n ON n.vec_id <> q.vec_id, idx
-      WHERE q.vec_id % 50 = 0
-      GROUP BY 1, 2
-    ),
-    bscored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM bdots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    exact5 AS (
-      SELECT query_id, neighbor_id
-      FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY score DESC, neighbor_id) AS rank
-            FROM bscored)
-      WHERE rank <= 5
-    )
-    SELECT e.query_id,
-           CAST(COUNT(i.neighbor_id) AS BIGINT) AS n_hits,
-           CAST((1000000 * COUNT(i.neighbor_id)) // 5 AS BIGINT)
-             AS recall_ppm
-    FROM exact5 e
-    LEFT JOIN ivf5 i ON e.query_id = i.query_id
-                    AND e.neighbor_id = i.neighbor_id
-    GROUP BY 1
+
+def _recall_vs_exact_oracle(
+    c0_sql: str, query_where: str, train_src: str = "emb"
+) -> str:
+    """Recall@5-vs-brute-force oracle over the queries ``query_where``
+    picks: the IVF candidate chain (seed CTEs injected via ``c0_sql``,
+    Lloyd corpus via ``train_src``, 8 probes) → exact scoring → ivf5,
+    against the exact ground truth → per-query integer recall_ppm. ONE
+    body shared by op-ext-ann-recall-surface (the %50 spine),
+    op-ext-ann-recall-sampled (the fixed audit sample, full-corpus
+    training) and op-ext-ann-incr-recall (base-trained frozen
+    centroids), so every recall monitor is measured under literally the
+    same arithmetic, not a re-implementation."""
+    return f"""
+    {_ivf_cand_ctes(c0_sql, n_probe=8, query_where=query_where,
+                    train_src=train_src)},
+    {sim.oracle_cosine("scored", "cand")},
+    ivf5 AS ({sim.oracle_top("scored", 5)}),
+    {_exact_top("exact5", query_where, 5)}
+    {sim.oracle_recall("exact5", "ivf5", 5)}
     """
 
 
-@query("op-ext-ann-recall-surface", oracle=_RECALL_SURFACE_ORACLE)
+@query(
+    "op-ext-ann-recall-surface",
+    oracle=_recall_vs_exact_oracle(_seed16_c0("emb"), "vec_id % 50 = 0"),
+)
 def op_ext_ann_recall_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@5 of the SHIPPED IVF candidate cut (16 cells,
     n_probe=8 — the operating point the r12 measured experiment chose
@@ -3018,83 +2828,10 @@ def audit_sample(emb: DataFrame) -> DataFrame:
     )
 
 
-def _recall_vs_exact_oracle(c0_sql: str, train_src: str = "emb") -> str:
-    """Recall@5-vs-brute-force oracle over a fixed audit sample: the IVF
-    candidate chain (seed CTEs injected via ``c0_sql``, Lloyd corpus via
-    ``train_src``) → exact scoring → ivf5, against the O(100·C) exact
-    ground truth → per-query integer recall_ppm. ONE body shared by
-    op-ext-ann-recall-sampled (full-corpus training) and
-    op-ext-ann-incr-recall (base-trained frozen centroids), so the
-    drift the incremental monitor reports is measured under literally
-    the same arithmetic, not a re-implementation."""
-    return f"""
-    {_ivf_cand_ctes(c0_sql, n_probe=8, query_where=_QSAMPLE_WHERE, train_src=train_src)},
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    dots AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM cand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM dots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    ivf5 AS (
-      SELECT query_id, neighbor_id
-      FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY score DESC, neighbor_id) AS rank
-            FROM scored)
-      WHERE rank <= 5
-    ),
-    bdots AS (
-      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM emb q JOIN emb n ON n.vec_id <> q.vec_id, idx
-      WHERE q.{_QSAMPLE_WHERE}
-      GROUP BY 1, 2
-    ),
-    bscored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM bdots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    exact5 AS (
-      SELECT query_id, neighbor_id
-      FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY score DESC, neighbor_id) AS rank
-            FROM bscored)
-      WHERE rank <= 5
-    )
-    SELECT e.query_id,
-           CAST(COUNT(i.neighbor_id) AS BIGINT) AS n_hits,
-           CAST((1000000 * COUNT(i.neighbor_id)) // 5 AS BIGINT)
-             AS recall_ppm
-    FROM exact5 e
-    LEFT JOIN ivf5 i ON e.query_id = i.query_id
-                    AND e.neighbor_id = i.neighbor_id
-    GROUP BY 1
-    """
-
-
-_RECALL_SAMPLED_ORACLE = _recall_vs_exact_oracle(_FILT_C0_SQL)
-
-
-@query("op-ext-ann-recall-sampled", oracle=_RECALL_SAMPLED_ORACLE)
+@query(
+    "op-ext-ann-recall-sampled",
+    oracle=_recall_vs_exact_oracle(_FILT_C0_SQL, _QSAMPLE_WHERE),
+)
 def op_ext_ann_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION shape of the ANN recall monitor (r12 verdict #2):
     recall@5 of the shipped IVF cut (16 cells, n_probe=8) against the
@@ -3219,7 +2956,9 @@ def op_ext_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "op-ext-ann-incr-recall",
-    oracle=_recall_vs_exact_oracle(_INCR_FILT_C0_SQL, train_src="base"),
+    oracle=_recall_vs_exact_oracle(
+        _INCR_FILT_C0_SQL, _QSAMPLE_WHERE, train_src="base"
+    ),
 )
 def op_ext_ann_incr_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DRIFT MONITOR for the incrementally maintained IVF index:
@@ -3340,33 +3079,7 @@ def _hybrid_fused_ctes() -> str:
     (op-ext-fusion-gain in registry_advanced), so the two can't drift."""
     return f"""
     {_ivf_cand_ctes(_HYBRID_C0_SQL, query_where=_QSAMPLE_WHERE)},
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    ddots AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM cand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    dscored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS cos
-      FROM ddots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    dense20 AS (
-      SELECT query_id, neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cos DESC, neighbor_id) AS r
-      FROM dscored
-    ),
+    {sim.oracle_cosine("scored", "cand")},
     tf AS (
       SELECT doc_id, t.tok, CAST(COUNT(*) AS BIGINT) AS tf
       FROM (SELECT doc_id, {_TOKS} AS tk FROM documents) d,
@@ -3406,33 +3119,12 @@ def _hybrid_fused_ctes() -> str:
       SELECT query_id, neighbor_id, CAST(SUM(mu) AS BIGINT) AS bm25_micro
       FROM lterm GROUP BY 1, 2
     ),
-    lex20 AS (
-      SELECT query_id, neighbor_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY bm25_micro DESC, neighbor_id) AS r
-      FROM lexscore
-    ),
-    contrib AS (
-      SELECT query_id, neighbor_id, 1000000 // (60 + r) AS c
-      FROM dense20 WHERE r <= 20
-      UNION ALL
-      SELECT query_id, neighbor_id, 1000000 // (60 + r) AS c
-      FROM lex20 WHERE r <= 20
-    ),
-    fused AS (
-      SELECT query_id, neighbor_id, CAST(SUM(c) AS BIGINT) AS rrf_micro
-      FROM contrib GROUP BY 1, 2
-    )"""
+    {_rrf_fused_ctes(_top20("scored"), _top20("lexscore", "bm25_micro DESC"))}"""
 
 
 _HYBRID_ORACLE = f"""
     {_hybrid_fused_ctes()}
-    SELECT query_id, neighbor_id, rrf_micro,
-           CAST(rank AS INT) AS fused_rank
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY rrf_micro DESC, neighbor_id) AS rank
-          FROM fused)
-    WHERE rank <= 10
+    {_FUSED_TOP10}
     """
 
 
@@ -3848,28 +3540,19 @@ def op_ext_bm25_blockmax_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FILT_TOPK = 5
 _FILT_NPROBE = 8
 
-#: Exact-scoring SQL tail over a filtered candidate CTE ``fcand``.
-_FILT_SCORE_TAIL = """
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    fdots AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM fcand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    fscored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM fdots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
+#: the unfiltered top 20 of ``scored`` the post-filter ranking cuts from
+_UNFILTERED20 = sim.oracle_top("scored", 20, cols="query_id, neighbor_id, score")
+
+
+def _same_label(name: str, src: str) -> str:
+    """CTE text ``name``: the rows of ``src`` whose neighbor shares its
+    query's label (the ``lab`` CTE) — the predicate of the post-filtered
+    and filter-aware rankings."""
+    return f"""{name} AS (
+      SELECT t.* FROM {src} t
+      JOIN lab lq ON lq.vec_id = t.query_id
+      JOIN lab ln ON ln.vec_id = t.neighbor_id
+      WHERE ln.label = lq.label
     )"""
 
 
@@ -3905,19 +3588,9 @@ def _filtered_aware_top(
     {_ivf_cand_ctes(_FILT_C0_SQL, n_probe=_FILT_NPROBE,
                     query_where=_QSAMPLE_WHERE)},
     lab AS (SELECT vec_id, label FROM embeddings),
-    fcand AS (
-      SELECT c.query_id, c.neighbor_id
-      FROM cand c
-      JOIN lab lq ON lq.vec_id = c.query_id
-      JOIN lab ln ON ln.vec_id = c.neighbor_id
-      WHERE ln.label = lq.label
-    ),
-    {_FILT_SCORE_TAIL}
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY score DESC, neighbor_id) AS rank
-          FROM fscored)
-    WHERE rank <= {_FILT_TOPK}
+    {_same_label("fcand", "cand")},
+    {sim.oracle_cosine("scored", "fcand")}
+    {sim.oracle_top("scored", _FILT_TOPK)}
     """,
 )
 def op_ext_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3965,44 +3638,11 @@ def _postfilter_top(
     oracle=f"""
     {_ivf_cand_ctes(_FILT_C0_SQL, n_probe=_FILT_NPROBE,
                     query_where=_QSAMPLE_WHERE)},
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    dots AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(q.v[idx.i] * n.v[idx.i]) AS BIGINT) AS dot
-      FROM cand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id, idx
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM dots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    top20 AS (
-      SELECT query_id, neighbor_id, score FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY score DESC, neighbor_id) AS r
-        FROM scored)
-      WHERE r <= 20
-    ),
-    lab AS (SELECT vec_id, label FROM embeddings)
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
-    FROM (SELECT t.query_id, t.neighbor_id, t.score,
-                 ROW_NUMBER() OVER (PARTITION BY t.query_id
-                     ORDER BY t.score DESC, t.neighbor_id) AS rank
-          FROM top20 t
-          JOIN lab lq ON lq.vec_id = t.query_id
-          JOIN lab ln ON ln.vec_id = t.neighbor_id
-          WHERE ln.label = lq.label)
-    WHERE rank <= {_FILT_TOPK}
+    {sim.oracle_cosine("scored", "cand")},
+    top20 AS ({_UNFILTERED20}),
+    lab AS (SELECT vec_id, label FROM embeddings),
+    {_same_label("kept", "top20")}
+    {sim.oracle_top("kept", _FILT_TOPK)}
     """,
 )
 def op_ext_ann_postfilter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4026,60 +3666,17 @@ def op_ext_ann_postfilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_ivf_cand_ctes(_FILT_C0_SQL, n_probe=_FILT_NPROBE,
                     query_where=_QSAMPLE_WHERE)},
     lab AS (SELECT vec_id, label FROM embeddings),
-    nrms AS (
-      SELECT emb.vec_id, CAST(SUM(v[idx.i] * v[idx.i]) AS BIGINT) AS nrm
-      FROM emb, idx GROUP BY 1
-    ),
-    udots AS (
-      -- row-local exact dot (r14): quantized coords are < 2^21, so
-      -- every partial sum of the 64-term product stays < 2^53 and
-      -- list_dot_product's double is EXACT — value-identical to the
-      -- unnest-SUM idiom without the ×64 row explosion whose grouped
-      -- aggregation spill blew the sf10 temp headroom
-      SELECT c.query_id, c.neighbor_id,
-             CAST(list_dot_product(q.v, n.v) AS BIGINT) AS dot
-      FROM cand c
-      JOIN emb q ON q.vec_id = c.query_id
-      JOIN emb n ON n.vec_id = c.neighbor_id
-    ),
-    uscored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM udots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    aware5 AS (
-      -- the filter-aware candidate set is cand ∩ label-equality, and a
-      -- pair's score is pair-local — so the aware ranking is the
-      -- label-filtered slice of the ONE scored frame. Scoring once
-      -- (instead of a separate fdots pass over fcand) halved the
-      -- DuckDB spill that blew the disk at sf10 (r14).
-      SELECT query_id, neighbor_id FROM (
-        SELECT u.query_id, u.neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY u.query_id
-                   ORDER BY u.score DESC, u.neighbor_id) AS r
-        FROM uscored u
-        JOIN lab lq ON lq.vec_id = u.query_id
-        JOIN lab ln ON ln.vec_id = u.neighbor_id
-        WHERE ln.label = lq.label) WHERE r <= {_FILT_TOPK}
-    ),
-    post5 AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT t.query_id, t.neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY t.query_id
-                   ORDER BY t.score DESC, t.neighbor_id) AS rank
-        FROM (SELECT query_id, neighbor_id, score FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                           ORDER BY score DESC, neighbor_id) AS r
-                FROM uscored) WHERE r <= 20) t
-        JOIN lab lq ON lq.vec_id = t.query_id
-        JOIN lab ln ON ln.vec_id = t.neighbor_id
-        WHERE ln.label = lq.label)
-      WHERE rank <= {_FILT_TOPK}
-    ),
+    {sim.oracle_cosine("scored", "cand")},
+    -- the filter-aware candidate set is cand ∩ label-equality, and a
+    -- pair's score is pair-local — so the aware ranking is the
+    -- label-filtered slice of the ONE scored frame. Scoring once
+    -- (instead of a separate pass over fcand) halved the DuckDB spill
+    -- that blew the disk at sf10 (r14).
+    {_same_label("akept", "scored")},
+    aware5 AS ({sim.oracle_top("akept", _FILT_TOPK, cols="query_id, neighbor_id")}),
+    top20 AS ({_UNFILTERED20}),
+    {_same_label("pkept", "top20")},
+    post5 AS ({sim.oracle_top("pkept", _FILT_TOPK, cols="query_id, neighbor_id")}),
     qset AS (
       -- materialize the 100-row query set BEFORE the label join: with
       -- the filter written as WHERE q.vec_id IN qsample, DuckDB planned
@@ -4089,31 +3686,13 @@ def op_ext_ann_postfilter(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT l.vec_id, l.label FROM lab l
       JOIN qsample s ON s.vec_id = l.vec_id
     ),
-    bdots AS (
-      -- same row-local exact dot as udots (see note there)
-      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-             CAST(list_dot_product(qe.v, ne.v) AS BIGINT) AS dot
+    bpairs AS (
+      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id
       FROM qset q
       JOIN lab n ON n.label = q.label AND n.vec_id <> q.vec_id
-      JOIN emb qe ON qe.vec_id = q.vec_id
-      JOIN emb ne ON ne.vec_id = n.vec_id
     ),
-    bscored AS (
-      SELECT d.query_id, d.neighbor_id,
-             CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(nq.nrm AS DOUBLE))
-                  * sqrt(CAST(nc.nrm AS DOUBLE))) AS score
-      FROM bdots d
-      JOIN nrms nq ON d.query_id = nq.vec_id
-      JOIN nrms nc ON d.neighbor_id = nc.vec_id
-    ),
-    truth5 AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY score DESC, neighbor_id) AS rank
-        FROM bscored)
-      WHERE rank <= {_FILT_TOPK}
-    )
+    {sim.oracle_cosine("bscored", "bpairs")},
+    truth5 AS ({sim.oracle_top("bscored", _FILT_TOPK, cols="query_id, neighbor_id")})
     SELECT t.query_id,
            CAST(COUNT(*) AS BIGINT) AS n_truth,
            CAST(COUNT(a.neighbor_id) AS BIGINT) AS n_hits_aware,

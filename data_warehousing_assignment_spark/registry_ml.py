@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from data_warehousing_assignment_spark.functions import exact as ex
 from data_warehousing_assignment_spark.operators import analytics as an
+from data_warehousing_assignment_spark.operators import similarity as sim
 from data_warehousing_assignment_spark.operators.text import tokens
 from data_warehousing_assignment_spark.registry import _TOKS, query, t
 
@@ -754,17 +755,10 @@ def op_ext_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # calibration: expected-calibration-error bins (round 11)
 # --------------------------------------------------------------------------
 
-_ECE_QUANT = (
-    "list_transform(embedding, x -> "
-    "CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
-)
-
-
 @query(
     "op-ext-calibration-ece",
     oracle=f"""
-    WITH emb AS (SELECT vec_id, label, {_ECE_QUANT} AS v FROM embeddings),
-    idx AS (SELECT unnest(range(1, 65)) AS i),
+    WITH {sim.oracle_vectors(["label"])},
     cent AS (
       SELECT label, idx.i AS pos,
              CAST(SUM(v[idx.i]) AS BIGINT) AS s,

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_warehousing_assignment_spark.registry import dec
+from data_warehousing_assignment_spark.functions import exact as ex
 
 
 def with_watermark(df: DataFrame) -> DataFrame:
@@ -41,7 +41,7 @@ def _window_totals(df: DataFrame, w, keys: list[str], start_as: str) -> DataFram
         .groupBy(w.alias("w"), *keys)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec("value")).cast("double").alias("total_value"),
+            F.expr(ex.dsum("value")).alias("total_value"),
         )
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(start_as),

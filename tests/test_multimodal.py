@@ -50,11 +50,6 @@ def test_decode_fake_pixels(spark):
     assert out[2].pixels == [0.0] * 64
 
 
-def test_decode_real_codec_is_stubbed(spark):
-    with pytest.raises(NotImplementedError):
-        mm.decode(media_df(spark), real_codec=True)
-
-
 def test_resize_nearest_neighbor(spark):
     decoded = mm.decode(media_df(spark))
     out = {r.doc_id: r for r in mm.resize(decoded, 2, 2).collect()}
@@ -126,15 +121,6 @@ def test_audio_frame_energy_math(spark):
             assert r.peak_frame_sq == max(frames)
         else:
             assert (r.n_frames, r.peak_frame_sq) == (0, 0)
-
-
-def test_audio_real_codec_is_documented_stub(spark):
-    df = spark.createDataFrame(TEXTS, "doc_id long, text string")
-    try:
-        mm.audio_frame_energy(mm.with_media_columns(df), real_codec=True)
-        raise AssertionError("expected NotImplementedError")
-    except NotImplementedError:
-        pass
 
 
 def test_average_hash_identical_payloads_collide(spark):

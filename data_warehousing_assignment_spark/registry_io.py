@@ -9,7 +9,8 @@ at the repository root (idempotent: overwritten or recreated per run)
 and returns the read-back contents, which the DuckDB oracle checks
 against the parquet source of truth — so the *semantics* of
 replace/append/insert-select/incremental are what's verified, not just
-the API call.
+the API call. A sink's parquet read-back passes the schema of the frame
+it wrote, so it runs no schema-inference job.
 """
 
 from __future__ import annotations
@@ -79,7 +80,7 @@ def op_sink_jdbc_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "region")
     write_table(src, path, mode="overwrite")
     write_table(src, path, mode="overwrite")
-    return spark.read.parquet(path)
+    return spark.read.schema(src.schema).parquet(path)
 
 
 @query(
@@ -93,7 +94,7 @@ def op_sink_jdbc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "nation")
     write_table(src, path, mode="overwrite")
     write_table(src, path, mode="append")
-    return spark.read.parquet(path)
+    return spark.read.schema(src.schema).parquet(path)
 
 
 @query(
@@ -166,10 +167,10 @@ def op_materializations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # initial full-refresh over a subset (simulating an older snapshot)
     write_table(agg.filter(F.col("o_custkey") % 2 == 0), path, mode="overwrite")
     # incremental run: append only keys not yet materialized
-    existing = spark.read.parquet(path)
+    existing = spark.read.schema(agg.schema).parquet(path)
     delta = agg.join(existing.select("o_custkey"), on="o_custkey", how="left_anti")
     write_table(delta, path, mode="append")
-    return spark.read.parquet(path)
+    return spark.read.schema(agg.schema).parquet(path)
 
 
 @query(

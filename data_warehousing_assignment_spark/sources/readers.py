@@ -10,7 +10,12 @@ relational frame) is the same.
 Scale notes: `spark.read.parquet` gives splittable columnar scans with
 predicate pushdown + column pruning for free; CSV/JSON scans are splittable
 too but schema inference requires an extra pass — always pass an explicit
-schema in production (inference over 100 TB is a full read).
+schema in production (inference over 100 TB is a full read). Even a
+parquet schema is inferred by a Spark job that reads the footers, so
+``registry.t()`` memoizes each table file's schema per process, keyed by
+path, ``st_mtime_ns``, ``st_size`` and the ``nanosAsLong`` conf value,
+and passes it on every later read; a read-back of a path just written
+passes the schema of the frame it wrote.
 """
 
 from __future__ import annotations

@@ -11,20 +11,66 @@ prune is pinned to one bounds collect, the k-core peel to the jobs of
 its round checkpoints, and connected components to < 100 calls. Each
 registered query's plan also audits to exactly its ``plan_audit``
 allowance, so a new cartesian or unpartitioned window fails here, and so
-does an allowance that no longer matches its plan."""
+does an allowance that no longer matches its plan. Once each testdata
+table's schema is memoized, building a query not declared ``eager`` runs
+no Spark job unless ``BUILD_JOBS`` names it with the reason; an entry
+whose query builds without a job fails too."""
 
 from __future__ import annotations
 
 import pytest
 
 from data_warehousing_assignment_spark.caching import cache_scope, release_unscoped
-from data_warehousing_assignment_spark.registry import all_queries
+from data_warehousing_assignment_spark.registry import all_queries, t
+from data_warehousing_assignment_spark.sources import TESTDATA_TABLES
 from perfbench.trace import Py4jCounter
+from tests.conftest import SF_SMALL, count_jobs
 from tools.plan_audit import ALLOWED, audit
 
 #: every registered query, and one run_etl load (clean + DQ of three
 #: domains, 5 dim upserts, SCD2, 3 incremental facts, audit)
 BUDGET = 1000
+
+#: the queries, not declared eager, whose build runs Spark jobs on
+#: purpose, each with the reason
+BUILD_JOBS = {
+    # a driver-side scalar the plan is built from
+    "op-agg-scalar-max": "collects the 90-day watermark the scan filters on",
+    "op-pipe-fact-incr": "collects the date-window prune's min/max bounds",
+    "op-ext-semantic-dedup": "counts the corpus to size k = n/500 clusters",
+    "op-ext-hybrid-fusion": "counts the corpus to size the auto IVF k",
+    "op-ext-fusion-gain": "counts the corpus to size the auto IVF k",
+    "op-ext-fusion-baseline": "counts corpus and queries to size the auto IVF k",
+    # a checkpoint the returned plan reads
+    "op-ext-cms-join-size": "checkpoints the sketch cells both join sides read",
+    "op-ext-kcore": "checkpoints each peel round and reads its edge count",
+    # the op is a write at build; the frame it returns reads it back
+    "op-ext-merge-txlog": "commits the base and the merge versions to a log",
+    "op-ext-txlog-skip": "commits the monthly versions the skip reads",
+    "op-ext-time-travel": "commits three versions and infers their schema",
+    "op-ext-bucket-join": "writes both sides as bucketed tables",
+    "op-ext-tpch-q7-bucketed": "writes its bucketed layout (setup, not timed)",
+    "op-ext-tpch-q9-bucketed": "writes its bucketed layout (setup, not timed)",
+    "op-ext-tpch-q21-bucketed": "writes its bucketed layout (setup, not timed)",
+    "op-scan-excel": "collects region into the .xlsx it reads back",
+    "op-scan-csv-seed": "writes the CSV seed and infers its schema on purpose",
+    "op-scan-jsonl": "writes the .jsonl it reads back",
+    "op-scan-orc": "writes the ORC it reads back",
+    "op-scan-xml": "writes the XML it reads back",
+    "op-scan-merge-schema": "writes two batches and merges their schemas on purpose",
+    "op-sink-jdbc-replace": "overwrites the sink twice",
+    "op-sink-jdbc-append": "writes then appends to the sink",
+    "op-sink-insert-select": "runs two INSERT ... SELECT batches",
+    "op-materializations": "writes the table, then the incremental append",
+}
+
+
+@pytest.fixture(scope="module")
+def memoized_schemas(spark):
+    """One ``t()`` of each testdata table, events first: its read sets
+    the nanosAsLong conf that is part of every schema memo key."""
+    for name in sorted(TESTDATA_TABLES, key=lambda n: n != "events"):
+        t(spark, SF_SMALL, name)
 
 
 def _build_calls(build, inspect=None) -> int:
@@ -54,19 +100,26 @@ def _drop_checkpoints(spark) -> None:
 
 
 @pytest.mark.parametrize("op", list(all_queries()))
-def test_every_query_builds_under_registry_budget(spark, op):
-    from tests.conftest import SF_SMALL
-
+def test_every_query_builds_under_registry_budget(spark, memoized_schemas, op):
     build = all_queries()[op]
     flags: set[str] = set()
     try:
-        calls = _build_calls(
+        calls, jobs = count_jobs(spark, lambda: _build_calls(
             lambda: build(spark, SF_SMALL), lambda df: flags.update(audit(df))
-        )
+        ))
     finally:
         _drop_checkpoints(spark)
     assert calls < BUDGET, f"{op}: {calls} py4j calls"
     assert flags == ALLOWED.get(op, set()), f"{op}: plan_audit flags {sorted(flags)}"
+    if not build.eager:
+        assert (jobs > 0) == (op in BUILD_JOBS), (
+            f"{op}: {jobs} Spark jobs at build, BUILD_JOBS entry: {BUILD_JOBS.get(op)!r}"
+        )
+
+
+def test_build_jobs_names_registered_queries_not_declared_eager():
+    queries = all_queries()
+    assert [op for op in BUILD_JOBS if op not in queries or queries[op].eager] == []
 
 
 def test_run_etl_builds_in_few_py4j_calls(spark):
@@ -109,8 +162,6 @@ def test_connected_components_rounds_send_few_py4j_calls(spark):
 
 def _build_jobs(spark, op) -> int:
     """Spark jobs run while building ``op`` at sf0.001."""
-    from tests.conftest import SF_SMALL, count_jobs
-
     try:
         return count_jobs(spark, lambda: all_queries()[op](spark, SF_SMALL))[1]
     finally:
